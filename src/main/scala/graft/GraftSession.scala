@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** Session factory with the engine's scale-appropriate defaults, shared by
-  * every main (Verify / Bench / Explain / harness benches).
+  * every main (Verify / Bench / Explain / harness benches) and the test
+  * session.
   *
   * Local mode sizes `shuffle.partitions` to the core count (the driver
   * contract's local[32] → 32, not Spark's default 200: at small SF, 200
@@ -15,20 +18,35 @@ import org.apache.spark.sql.SparkSession
   * AQE stays on everywhere: runtime partition coalescing, skew-join
   * splitting, and dynamic join-strategy switches are exactly the safety
   * nets a 100 TB run needs, and they cost nothing at test SF.
+  *
+  * Streaming checkpoints on local paths are written by
+  * [[graft.streaming.LocalCheckpointFileManager]]: without libhadoop,
+  * Hadoop's local file system forks `chmod` and `readlink` for every
+  * checkpoint file, which was most of a small micro-batch's state-commit
+  * time. Other schemes keep Spark's default manager.
   */
 object GraftSession {
 
+  /** The settings every session of the engine starts from. */
+  private def settings(cores: String, aqe: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores,
+    "spark.sql.adaptive.enabled" -> aqe.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.warehouse.dir" ->
+      (sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse"),
+    "spark.ui.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName)
+
+  /** A `local[cores]` builder carrying [[settings]]. */
+  def builder(appName: String, cores: String, aqe: Boolean = true): SparkSession.Builder =
+    settings(cores, aqe).foldLeft(
+      SparkSession.builder().master(s"local[$cores]").appName(appName)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
   def local(appName: String, cores: String, aqe: Boolean = true): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = builder(appName, cores, aqe).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

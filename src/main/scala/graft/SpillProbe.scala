@@ -40,13 +40,8 @@ object SpillProbe {
   }
 
   private def session(cores: String, starved: Option[Double]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-spill-${starved.fold("normal")(f => s"starved-$f")}")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = GraftSession.builder(
+      s"graft-spill-${starved.fold("normal")(f => s"starved-$f")}", cores)
     starved.foreach { f =>
       // fraction of (heap - 300 MB reserved) usable for execution+storage;
       // collapsing it forces every buffering operator through its spill

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -65,14 +65,14 @@ final case class ReplayOffset(rows: Long) extends Offset {
 final case class ReplayRange(start: Long, end: Long) extends InputPartition
 
 final class ReplayMicroBatchStream(totalRows: Long, rowsPerBatch: Long,
-    numPartitions: Int) extends MicroBatchStream {
+    numPartitions: Int) extends MicroBatchStream with SupportsAdmissionControl {
   override def initialOffset(): Offset = ReplayOffset(0L)
-  // advance one rowsPerBatch-sized range per trigger until exhausted
-  private var planned = 0L
-  override def latestOffset(): Offset = {
-    planned = math.min(totalRows, planned + rowsPerBatch)
-    ReplayOffset(planned)
-  }
+  // advance one rowsPerBatch-sized range per trigger until exhausted, from
+  // the batch's start offset, which after a restart is the checkpoint's
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    ReplayOffset(math.min(totalRows, start.asInstanceOf[ReplayOffset].rows + rowsPerBatch))
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
   override def deserializeOffset(json: String): Offset = ReplayOffset(json.toLong)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

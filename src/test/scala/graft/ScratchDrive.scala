@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch driver for manual verification runs (not a test). */
 object ScratchDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.builder("graft-scratch", "4")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // stream user_ids from the DSv2 replay source → keyed running counters
