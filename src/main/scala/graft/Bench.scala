@@ -15,6 +15,44 @@ import org.apache.spark.sql.SparkSession
   * query.
   */
 object Bench {
+
+  /** Best-of-2 noop-sink timing of each gate, in order. A gate that throws
+    * is logged under `tag` and recorded with the single pass -1.0;
+    * `afterGate(i)` runs after the i-th gate (1-based), outside the timed
+    * region. */
+  private[graft] def timeGates(spark: SparkSession, sfDir: String,
+      gates: Seq[Q], tag: String)(afterGate: Int => Unit = _ => ())
+      : Seq[(String, Seq[Double])] =
+    gates.zipWithIndex.map { case (q, idx) =>
+      spark.sparkContext.setJobDescription(s"$tag: ${q.name}")
+      def timed(): Double = {
+        val t0 = System.nanoTime()
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val passes = try Seq(timed(), timed())
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] ${q.name} failed: ${e.getMessage}"); Seq(-1.0) }
+      spark.sparkContext.setJobDescription(null)
+      afterGate(idx + 1)
+      q.name -> passes
+    }
+
+  /** The timing fields of a bench contract line. `value` sums the best
+    * pass of the gates that ran; `failed` names every gate that threw and
+    * `complete` is false when there is one, so a crash never reads as a
+    * faster total. `queries`/`passes` keep -1.0 for a failed gate. */
+  private[graft] def timingFields(results: Seq[(String, Seq[Double])]): String = {
+    val failed = results.collect { case (k, v) if v.exists(_ < 0) => k }
+    val total = results.collect { case (_, v) if !v.exists(_ < 0) => v.min }.sum
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.min }
+      .mkString("{", ",", "}")
+    val ps = results.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s""""value":$total,"unit":"sec","queries":$qs,"passes":$ps,"failed":$fs,"complete":${failed.isEmpty}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -70,18 +108,9 @@ object Bench {
     // a degraded segment is attributable while the others stay quotable.
     val segLen = sys.env.get("SPARK_GRAFT_CAL_SEGMENT").map(_.toInt).getOrElse(40)
     val segCals = Seq.newBuilder[(Int, Double)]
-    val results = headline.zipWithIndex.map { case (q, idx) =>
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val passes = try Seq(timed(), timed())
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); Seq(-1.0) }
-      if ((idx + 1) % segLen == 0 && idx + 1 < headline.size)
-        segCals += ((idx + 1, calibrate()))
-      q.name -> passes
+    val results = timeGates(spark, sfDir, headline, "bench") { done =>
+      if (done % segLen == 0 && done < headline.size)
+        segCals += ((done, calibrate()))
     }
     // r15 established the throttle mechanism: the query passes themselves
     // drain a host burst budget that refills in ~1–2 min, so an IMMEDIATE
@@ -95,11 +124,6 @@ object Bench {
       sys.env.get("SPARK_GRAFT_CAL_COOLDOWN_S").map(_.toInt).getOrElse(0)
     if (cooldownS > 0) Thread.sleep(cooldownS * 1000L)
     val calPost = calibrate()
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.min }
-      .mkString("{", ",", "}")
-    val ps = results.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
     // Self-gate (VERDICT r14 Next #3): the probe's idle wall time on this
     // box is ~1.0 s (r11-r13 clean anchors: 1.00-1.07; every throttled r14
     // artifact: 2.15-3.02). If EITHER calibration exceeds 1.5× that idle
@@ -116,7 +140,7 @@ object Bench {
     val segs = segCals.result()
       .map { case (after, c) => s"""{"after":$after,"cal":$c}""" }
       .mkString("[", ",", "]")
-    println(s"""{"metric":"headline_total","value":$total,"unit":"sec","queries":$qs,"passes":$ps,"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"cooldown_s":$cooldownS,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},"degraded":$degraded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"headline_total",${timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"cooldown_s":$cooldownS,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},"degraded":$degraded,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

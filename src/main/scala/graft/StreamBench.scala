@@ -39,30 +39,12 @@ object StreamBench {
     val watch = BenchCal.idleWatch(spark)
     val calPre = if (watch.ran) watch.lastProbe else calibrate()
 
-    val results = gates.map { q =>
-      spark.sparkContext.setJobDescription(s"stream-bench: ${q.name}")
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val passes = try Seq(timed(), timed())
-      catch { case e: Throwable =>
-        System.err.println(s"[stream-bench] ${q.name} failed: ${e.getMessage}")
-        Seq(-1.0) }
-      q.name -> passes
-    }
-    spark.sparkContext.setJobDescription(null)
+    val results = Bench.timeGates(spark, sfDir, gates, "stream-bench")()
     val calPost = calibrate()
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.min }
-      .mkString("{", ",", "}")
-    val ps = results.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
     val calIdleRef = BenchCal.idleRef
     val degraded = math.max(calPre, calPost) > 1.5 * calIdleRef
-    println(s"""{"metric":"stream_total","value":$total,"unit":"sec","queries":$qs,"passes":$ps,"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS}},"degraded":$degraded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"stream_total",${Bench.timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS}},"degraded":$degraded,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

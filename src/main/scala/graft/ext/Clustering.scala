@@ -448,8 +448,7 @@ object Clustering {
     * featFrame qc03Impl LocalDisks — the in-heap copy is the r14-measured
     * decade-tier OOM shape. A cluster passes Reliable. */
   private[graft] def qc04Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy,
-      pinErr: Boolean = true): DataFrame = {
+      ckpt: CheckpointStrategy): DataFrame = {
     import s.implicits._
     val feats = ckpt(featFrame(s, d))
     var w: Map[Long, Long] = s.range(NumFeat)
@@ -463,11 +462,9 @@ object Clustering {
       // per-doc rollup, the step's dominant pass) re-executes for each,
       // the same multiply-referenced shape qc03Impl already checkpoints.
       // Optimization r18: one score pass per step instead of two; err is
-      // corpus-sized but thin (3 longs/doc), so the step strategy applies.
-      // pinErr = false is the pre-r18 recompute shape (OptProbe's A/B
-      // control — identical trajectory either way, spec-pinned).
-      val pin: DataFrame => DataFrame = if (pinErr) ckpt.apply else identity
-      val err = pin(feats.join(broadcast(wDF), Seq("j"))
+      // corpus-sized but thin (3 longs/doc), so the step strategy applies
+      // (AB_PROBE_r18.jsonl: 1.44× at 30×, 1.21× at 100×).
+      val err = ckpt(feats.join(broadcast(wDF), Seq("j"))
         .groupBy(col("doc_id"), col("y"))
         .agg(sum(col("x") * col("w")).as("z"))
         .select(col("doc_id"), col("y"),

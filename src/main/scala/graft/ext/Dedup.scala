@@ -46,13 +46,6 @@ object CheckpointStrategy {
   case object Reliable extends CheckpointStrategy {
     def apply(df: DataFrame): DataFrame = df.checkpoint(true)
   }
-  /** No-op: keep plain lineage (the subtree re-executes per reference).
-    * NOT a production tier — the measurement control for same-sitting
-    * A/B probes of what a checkpoint site buys (PairFilterProbe), where
-    * cross-sitting comparisons are confounded by box load. */
-  case object Off extends CheckpointStrategy {
-    def apply(df: DataFrame): DataFrame = df
-  }
 }
 
 /** Document deduplication operators for training-data pipelines:
@@ -207,19 +200,6 @@ object Dedup {
     * reintroduced the round-1 band self-join would fail that test. */
   private[graft] def lshStage(s: SparkSession, d: String): DataFrame =
     lshBuckets(withSignature(Tables.documents(s, d)))
-
-  /** Candidate pairs after the capped explode + distinct but BEFORE the two
-    * signature merge joins — the qd03 prefix StageProbe times to split
-    * "pair generation" from "verification join" cost. */
-  private[graft] def lshCandidates(s: SparkSession, d: String): DataFrame =
-    lshCandidatesFrom(withSignature(Tables.documents(s, d)))
-
-  private[graft] def lshCandidatesFrom(sigs: DataFrame): DataFrame =
-    lshBuckets(sigs)
-      .filter(size(col("ids")).between(2, BucketCap))
-      .select(explode(pairExplode).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
 
   private def qd03(s: SparkSession, d: String): DataFrame =
     qd03Impl(s, d, CheckpointStrategy.LocalDisk)
@@ -722,8 +702,7 @@ object Dedup {
     * round bound on adversarial (path-graph) inputs qd03 never produces. */
   private[graft] def components(pairFrame: DataFrame,
       maxRounds: Int = MaxPropagationRounds,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local,
-      coPart: Boolean = false): DataFrame = {
+      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     // Eager checkpoint on every per-round frame: the doubling step
     // references the propagated frame twice and the propagated frame
     // references labels twice, so WITHOUT lineage truncation the logical
@@ -732,27 +711,16 @@ object Dedup {
     // LogicalRDD; Local vs Reliable is the caller's single-JVM vs cluster
     // trade (see [[CheckpointStrategy]]).
     //
-    // Optimization r18 MEASURED ATTEMPT, declined: coPart = true
-    // materializes the loop-invariant edge list hash-partitioned by src
-    // (LogicalRDD keeps outputPartitioning) and pins the intra-round
-    // `propagated` frame so the doubling self-join reads blocks instead
-    // of re-deriving the neighbor-min chain. OptProbe's A/B measured it
-    // ~breakeven at sf0.1 (1.82 vs 1.72 s) and 30× (4.19 vs 4.35), and
-    // 1.4× WORSE at 100× (22.2 vs 15.8) — because the doubling join's
-    // two subtrees share their heavy exchanges via ReuseExchange (they
-    // are identical below the final label-keyed exchange), the presumed
-    // double execution never happens, and the extra eager materialization
-    // + per-round id re-partition are pure added cost. Default stays the
-    // plain shape; the param + probe row document the attempt.
-    val part: (DataFrame, String) => DataFrame =
-      if (coPart) (df, c) => df.repartition(col(c)) else (df, _) => df
-    val pin: DataFrame => DataFrame = if (coPart) ckpt.apply else identity
+    // No co-partitioned layout (r18, AB_PROBE_r18.jsonl): repartitioning
+    // edges/labels by key and pinning `propagated` measured breakeven at
+    // sf0.1 and 30× and 1.4× slower at 100× — the doubling join's two
+    // subtrees already share their heavy exchanges via ReuseExchange.
     val pairs = ckpt(pairFrame.select(col("doc_a"), col("doc_b")))
-    val edges = ckpt(part(pairs
+    val edges = ckpt(pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"), "src"))
-    var labels = ckpt(part(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")), "id"))
+      .toDF("src", "dst"))
+    var labels = ckpt(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
@@ -760,13 +728,13 @@ object Dedup {
       // The incoming label rides along as `old` so the convergence check
       // is a flag aggregate over the materialized round frame instead of
       // an extra join+pass against the previous labels.
-      val propagated = pin(labels.select(col("id"), col("label").as("old"))
+      val propagated = labels.select(col("id"), col("label").as("old"))
         .join(
           edges.join(labels, col("src") === col("id"))
             .groupBy(col("dst")).agg(min(col("label")).as("nbr")),
           col("id") === col("dst"), "left")
         .select(col("id"), col("old"),
-          least(col("old"), coalesce(col("nbr"), col("old"))).as("label")))
+          least(col("old"), coalesce(col("nbr"), col("old"))).as("label"))
       // (2) pointer doubling: label ← label(label). Every label value is
       // itself a node id (it started as one), so the self-join always
       // resolves; coalesce covers the already-minimal fixed points.
@@ -778,7 +746,7 @@ object Dedup {
           col("old"))
         .select(col("id"), col("label"),
           (col("label") =!= col("old")).cast("long").as("chg"))
-      val next = ckpt(part(next0, "id"))
+      val next = ckpt(next0)
       changed = next.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0)
       labels = next.select(col("id"), col("label"))
       round += 1
@@ -889,37 +857,13 @@ object Dedup {
     * doc_b) — package-private so the spec can run both checkpoint
     * strategies on the same graph.
     *
-    * coPart (optimization r19, VERDICT r18 Next #5): materialize the
-    * loop-invariant degEdges hash-partitioned by src THROUGH the
-    * checkpoint, so each round's degEdges⋈ranks join reads the edge
-    * list pre-placed instead of re-exchanging it. Only meaningful with
-    * [[CheckpointStrategy.Reliable]]: Spark 4's localCheckpoint returns
-    * UnknownPartitioning (the r18 components() finding), while
-    * `Dataset.checkpoint` preserves the physical plan's output
-    * partitioning in the LogicalRDD it produces. Measured by OptProbe
-    * (AB_PROBE_r19.jsonl); the default stays the plain shape unless the
-    * A/B won — see the probe rows / OPTIMIZATION_r19.md for the verdict. */
+    * degEdges is checkpointed unpartitioned: `Dataset.checkpoint`
+    * (Reliable) reports `UnknownPartitioning` just as localCheckpoint
+    * does, so repartitioning it by src first does not elide the
+    * per-round edge exchange (refuted by plans/r19 and
+    * AB_PROBE_r19.jsonl). */
   private[graft] def pageRank(pairFrame: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local,
-      coPart: Boolean = false): DataFrame = {
-    val (ranks, pairs, nodes) = pageRankBuild(pairFrame, ckpt, coPart)
-    // Eager checkpoint materializes the ranks in the same single pass
-    // that pins them before the inputs are unpersisted (vs the old
-    // cache()+count(), which spent a full extra job) — same pattern as
-    // qd03's sigs; executor-loss caveat only under Local (see qd03).
-    val out = ckpt(ranks)
-    pairs.unpersist(); nodes.unpersist()
-    out
-  }
-
-  /** The pageRank iteration WITHOUT the final output checkpoint —
-    * package-private so OptProbe's explain mode can dump the per-round
-    * join plan (the output checkpoint collapses it to a LogicalRDD).
-    * Returns (ranks frame, cached pairs, cached nodes); callers
-    * materialize ranks before unpersisting the two caches. */
-  private[graft] def pageRankBuild(pairFrame: DataFrame,
-      ckpt: CheckpointStrategy,
-      coPart: Boolean): (DataFrame, DataFrame, DataFrame) = {
+      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
     val pairs = pairFrame.select(col("doc_a"), col("doc_b")).cache()
     val edges = pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
@@ -929,11 +873,9 @@ object Dedup {
     // each PageRank round is then a single join with the current ranks.
     val nodes = edges.select(col("src").as("id")).distinct().cache()
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val degEdges0 = edges
+    val degEdges = ckpt(edges
       .join(outdeg.withColumnRenamed("src", "d_id"), col("src") === col("d_id"))
-      .select(col("src"), col("dst"), col("deg"))
-    val degEdges =
-      ckpt(if (coPart) degEdges0.repartition(col("src")) else degEdges0)
+      .select(col("src"), col("dst"), col("deg")))
     var ranks = nodes.select(col("id"), lit(RankScale).as("r"))
     for (_ <- 1 to RankIters) {
       val contrib = degEdges
@@ -945,26 +887,15 @@ object Dedup {
           (lit(RankTeleport) +
             expr("cast(coalesce(s, 0L) * 85 div 100 as bigint)")).as("r"))
     }
-    (ranks.select(col("id").as("doc_id"), col("r").as("rank_fp")),
-      pairs, nodes)
+    // Eager checkpoint materializes the ranks in the same single pass
+    // that pins them before the inputs are unpersisted (vs the old
+    // cache()+count(), which spent a full extra job) — same pattern as
+    // qd03's sigs; executor-loss caveat only under Local (see qd03).
+    val out = ckpt(ranks.select(col("id").as("doc_id"), col("r").as("rank_fp")))
+    pairs.unpersist(); nodes.unpersist()
+    out
   }
 
-  /** Optimization r19 MEASURED ATTEMPT (VERDICT r18 Next #5), DECLINED:
-    * the hypothesis was that `Dataset.checkpoint` (Reliable) — unlike
-    * Spark 4's localCheckpoint — preserves hash partitioning, so
-    * checkpointing degEdges repartitioned by src would elide each
-    * round's edge-side exchange. PLAN-REFUTED: the r19 dumps
-    * (plans/r19/qd09_graph_rank_{before,after}.txt, 100× tier) show the
-    * Reliable LogicalRDD also reports `UnknownPartitioning(0)` and both
-    * layouts' physical plans are node-identical (Exchange over the edge
-    * scan still inserted). The A/B read Reliable+coPart ~1.1× faster at
-    * 100× (3.98 vs 4.51 warm, 3.46 vs 3.76 cold) and ~6% slower at 30×
-    * (AB_PROBE_r19.jsonl) — a sub-second delta with NO plan mechanism
-    * (plausibly hash-clustered checkpoint blocks turning the all-to-all
-    * scatter into one-mapper-per-reducer fetches) — too weak and too
-    * unexplained to flip a default on. The coPart param + probe rows +
-    * plan dumps document the negative result; the default stays the
-    * plain Local shape. */
   private def qd09(s: SparkSession, d: String): DataFrame =
     pageRank(qd03(s, d))
 

@@ -295,8 +295,8 @@ object Embeddings {
   // whole trajectory as chained MATERIALIZED CTEs (the qc04 pattern).
   // Per-iteration Lloyd monotonicity (distortion non-increasing along
   // the trajectory, strict improvement overall) is pinned by spec; the
-  // qs07/qs08 recall ladder vs iteration count is measured in AnnProbe
-  // (BASELINE.md row).
+  // qs07/qs08 recall ladder vs iteration count is on file in
+  // ANN_PROBE_r12.json / ANN_PROBE_r13_x1000.json.
   // ---------------------------------------------------------------------
   private val PqScale = 1 << 24
   /** Lloyd iterations for the gated qe04 trainer. */
@@ -313,37 +313,21 @@ object Embeddings {
   /** One Lloyd update from the current codebooks: fixed-point means per
     * (subspace, cell, dim); a cell with no members keeps its current
     * centroid. Returns the refined per-j codebooks (4×16×16 doubles —
-    * bounded driver scalars). */
-  private[graft] def pqRefineStep(s: SparkSession, d: String,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqRefineStepOn(Tables.embeddings(s, d), cbs)
-
-  /** The same Lloyd update over an arbitrary (vec_id, embedding) frame —
-    * float or double arrays; AnnProbe trains RESIDUAL codebooks with it.
+    * bounded driver scalars).
     *
-    * singlePass = true (optimization r18, guide §6/§1.2): the update used
-    * to union FOUR per-subspace projections of the encode frame — column
-    * pruning kept the per-branch assignment compute disjoint, but each
-    * branch re-scanned the embeddings input, so one Lloyd iteration cost
-    * 4 corpus scans (13 per qe04 run: 3 iterations + the final encode).
-    * The fused shape emits all four (j, code, subvector) rows from ONE
-    * scan via an array explode — identical rows, identical exact
-    * fixed-point sums, 1 scan per iteration (4 per run). singlePass =
-    * false is the A/B control. */
-  private[graft] def pqRefineStepOn(frame: DataFrame,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      singlePass: Boolean = true): IndexedSeq[IndexedSeq[Array[Double]]] = {
-    val enc = pqEncodedWith(frame, cbs.map(cbLitD))
-    val perSub = if (singlePass)
-      enc.select(explode(expr("array(" + (0 until SubVecs).map(j =>
-          s"named_struct('j', $j, 'k', s$j.code, " +
-            s"'sub', slice(embedding, ${j * SubDim + 1}, $SubDim))")
-        .mkString(", ") + ")")).as("e"))
-        .select(col("e.j").as("j"), col("e.k").as("k"), col("e.sub").as("sub"))
-    else (0 until SubVecs).map { j =>
-      enc.select(lit(j).as("j"), col(s"s$j.code").as("k"),
-        expr(s"slice(embedding, ${j * SubDim + 1}, $SubDim)").as("sub"))
-    }.reduce(_ unionAll _)
+    * Single pass (optimization r18, guide §6/§1.2): all four (j, code,
+    * subvector) rows come from ONE scan of the encode frame via an array
+    * explode. A union of four per-subspace projections re-scans the input
+    * per branch: 13 corpus scans per qe04 run instead of 4
+    * (AB_PROBE_r18/r19.jsonl). */
+  private[graft] def pqRefineStep(s: SparkSession, d: String,
+      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): IndexedSeq[IndexedSeq[Array[Double]]] = {
+    val enc = pqEncodedWith(Tables.embeddings(s, d), cbs.map(cbLitD))
+    val perSub = enc.select(explode(expr("array(" + (0 until SubVecs).map(j =>
+        s"named_struct('j', $j, 'k', s$j.code, " +
+          s"'sub', slice(embedding, ${j * SubDim + 1}, $SubDim))")
+      .mkString(", ") + ")")).as("e"))
+      .select(col("e.j").as("j"), col("e.k").as("k"), col("e.sub").as("sub"))
     val means = perSub
       .select(col("j"), col("k"), posexplode(col("sub")).as(Seq("dim", "v")))
       .select(col("j"), col("k"), col("dim"),
@@ -365,7 +349,7 @@ object Embeddings {
   }
 
   /** `iters` Lloyd iterations from the sampled init — the full trainer
-    * (qe04 gates iters = PqIters; AnnProbe ladders recall over iters). */
+    * (qe04 gates iters = PqIters). */
   private[graft] def pqTrainedCbs(s: SparkSession, d: String,
       iters: Int): IndexedSeq[IndexedSeq[Array[Double]]] =
     (0 until iters).foldLeft(initCbs(pqSample(s, d))) { (cbs, _) =>
@@ -479,9 +463,7 @@ object Embeddings {
   private[graft] def adcExprStr(sample: Array[Array[Float]]): String =
     adcExprStrFrom((0 until SubVecs).map(j => cbLit(sample, j)))
 
-  /** ADC search with arbitrary codebooks and top-k — qs07's body, also
-    * the instrument AnnProbe ladders recall over training iterations
-    * with. */
+  /** ADC search with arbitrary codebooks and top-k — qs07's body. */
   private[graft] def adcSearch(e: DataFrame,
       cbs: IndexedSeq[IndexedSeq[Array[Double]]], topK: Int): DataFrame = {
     val lits = cbs.map(cbLitD)
@@ -535,8 +517,8 @@ object Embeddings {
   //     (qs05's bounded broadcast rerank).
   // At 100 TB the codes table is partitioned by cell id, so non-probed
   // cells are never read, and the scanned width is 4 codes, not 64
-  // floats — cell-bounded candidate counts × 32× compression (AnnProbe
-  // measures the candidate bound; BASELINE.md row). Determinism by
+  // floats — cell-bounded candidate counts × 32× compression (candidate
+  // bound measured in ANN_PROBE_r12.json; BASELINE.md row). Determinism by
   // inheritance: cell ranks are the fastCosine/cosineSql pair with c_id
   // tie-breaks (qs03), ADC is qs07's exact double fold with n_id ties,
   // rerank ties on n_id — so the composition gates hash-exactly.
@@ -761,8 +743,7 @@ object Embeddings {
   private def qs09(s: SparkSession, d: String): DataFrame =
     ivfadcSearch(s, d, pqResidualCbs(s, d), topK = 5)
 
-  /** qs09's body with arbitrary residual codebooks — AnnProbe ladders
-    * trained-residual recall with it. */
+  /** qs09's body with arbitrary residual codebooks. */
   private[graft] def ivfadcSearch(s: SparkSession, d: String,
       cbs: IndexedSeq[IndexedSeq[Array[Double]]], topK: Int): DataFrame = {
     val e = Tables.embeddings(s, d)

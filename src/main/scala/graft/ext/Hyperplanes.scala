@@ -3,7 +3,7 @@ package graft.ext
 /** Deterministic random hyperplanes for sign-projection LSH / binary codes,
   * shared by [[Similarity]] (qs02) and [[Embeddings]] (qe02).
   *
-  * Round 5's AnnProbe measured the old chained-LCG lattice drifting from
+  * Round 5's ANN probe measured the old chained-LCG lattice drifting from
   * the N/2^planes occupancy expectation as plane count grew (observed mean
   * 70.9 vs 48.8 expected at 12 planes): plane j+1's components were an
   * affine shift of plane j's, so plane SIGNS correlated. The fix is
@@ -11,7 +11,7 @@ package graft.ext
   * s_j = mix(seed + j), component value = top 16 bits of mix(s_j + i).
   * No affine relation survives the double avalanche, so plane signs
   * decorrelate and occupancy tracks N/2^planes at high plane counts
-  * (re-measured by AnnProbe, recorded in BASELINE.md).
+  * (re-measured in ANN_PROBE_r12.json, recorded in BASELINE.md).
   *
   * The raw lattice is then ORTHOGONALIZED (classical Gram–Schmidt, plane j
   * against planes 0..j−1 — prefix-stable, so plane j is the same vector
@@ -20,7 +20,7 @@ package graft.ext
   * bits enough to empty ~13% of cells at 12 planes even with perfect
   * seeds. Orthogonal normals make the per-plane dots uncorrelated for
   * centered data, so bucket occupancy tracks N/2^planes — the property
-  * AnnProbe measures. Requires planes ≤ dim (64): true of every config
+  * the ANN_PROBE artifacts record. Requires planes ≤ dim (64): true of every config
   * here and of the 20–24-plane 100 TB sizing.
   *
   * Exactness: orthogonalization runs ONCE in Scala doubles; both engines

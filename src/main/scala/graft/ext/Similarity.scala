@@ -109,15 +109,6 @@ object Similarity {
       .filter(col("rank") <= topK)
   }
 
-  /** Per-bucket corpus population of the LSH index at `numPlanes` — the
-    * occupancy evidence behind the "pick 20+ planes at 100 TB" sizing rule:
-    * expected population is N / 2^planes, so doubling planes halves the
-    * per-bucket (= per-probe) work. Consumed by [[graft.AnnProbe]]. */
-  def lshBucketStats(s: SparkSession, d: String, numPlanes: Int): DataFrame =
-    Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-      .withColumn("bucket", bucketExpr(numPlanes))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-
   private def qs02(s: SparkSession, d: String): DataFrame = lshAnn(s, d)
 
   private def qs02SqlFor(numPlanes: Int): String = {
@@ -683,45 +674,6 @@ object Similarity {
         Vectors.fastCosine(col("q_emb"), col("n_emb")).as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
-  }
-
-  /** Compaction for an append-maintained IVF index (qs13's production
-    * cadence, the SignatureStore.compact move applied to ANN serving):
-    * fold each cell directory's accumulated append files into one file
-    * per cell — content unchanged, file count bounded, so serve-side
-    * open/footer cost stays flat as appends accumulate. O(|index|) per
-    * run, amortized over the compaction cadence (IvfIngestCurve measures
-    * the trade). Write-then-swap with the compactClustered recovery
-    * discipline: a crash between the renames strands the table at
-    * `.old`, and the next run restores it before compacting. */
-  def compactIvfIndex(s: SparkSession, path: String): Unit = {
-    val tmp = path + ".compacting"
-    locally {
-      val liveIn = new java.io.File(path)
-      val oldIn = new java.io.File(path + ".old")
-      if (!liveIn.exists() && oldIn.exists() && !oldIn.renameTo(liveIn))
-        throw new java.io.IOException(
-          s"recovery rename failed: $oldIn -> $path (data preserved at $oldIn)")
-    }
-    s.read.parquet(path)
-      .repartition(col("c_id"))
-      .write.partitionBy("c_id").mode("overwrite").parquet(tmp)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-    }
-    val live = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) del(old)
-    if (!live.renameTo(old))
-      throw new java.io.IOException(
-        s"compaction swap failed: $path -> $old (live index untouched)")
-    if (!new java.io.File(tmp).renameTo(live)) {
-      val restored = old.renameTo(live)
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $path" +
-        (if (restored) " (old index restored)"
-         else s" (RESTORE FAILED — data preserved at $old)"))
-    }
-    del(old)
   }
 
   // ---------------------------------------------------------------------

@@ -65,20 +65,6 @@ object SpanDedup {
          |  i -> md5(concat_ws(' ', slice(toks, i, $SpanK))))"""
         .stripMargin.replace("\n", " "))).as(Seq("pos", "gram")))
 
-  /** StageProbe prefix 1: tokenization + positional gram explode only. */
-  private[graft] def gramStage(docs: DataFrame): DataFrame =
-    gramOccurrences(docs
-      .select(col("doc_id"), expr("split(trim(text), '\\\\s+')").as("toks"))
-      .filter(size(col("toks")) >= SpanK))
-
-  /** StageProbe prefix 2: + the duplicate-gram key set (the one gram-keyed
-    * shuffle the min≠max rewrite reduced this to). */
-  private[graft] def dupGramStage(docs: DataFrame): DataFrame =
-    gramStage(docs)
-      .groupBy(col("gram"))
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-      .filter(col("mn") =!= col("mx")).select(col("gram"))
-
   /** The qd12 coverage computation over an arbitrary (doc_id, text) frame —
     * package-private so the spec can run it on planted-span corpora. */
   private[graft] def dupSpans(docs: DataFrame): DataFrame = {
@@ -400,24 +386,10 @@ object SpanDedup {
     * stateChunks: `c, chunk, simhash`) — qd13's classification with the
     * seen side read from the store instead of recomputed. */
   private[graft] def classifyAgainstState(batch: DataFrame,
-      stateH: DataFrame, stateChunks: DataFrame): DataFrame =
-    classifyAgainstStateSigs(
-      batch.select(col("doc_id"), md5(col("text")).as("h")),
-      simhashChunks(batch)
-        .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
-      stateH, stateChunks)
-
-  /** The same classification over PRE-COMPUTED batch signature frames
-    * (batchH: `doc_id, h`; batchChunks: `doc_id, c, chunk, simhash`) —
-    * the reuseSigs = true variant of qd18's ingest loop feeds the same
-    * pinned frames to classification and the store merge instead of
-    * re-deriving the projections per consumer (an r18 measured attempt,
-    * declined as the default — see ingestSequentially). Every doc has
-    * exactly one md5 row, so `batchH.select(doc_id)` is row-identical to
-    * `batch.select(doc_id)` and the statuses are unchanged. */
-  private[graft] def classifyAgainstStateSigs(batchH: DataFrame,
-      batchChunks: DataFrame,
       stateH: DataFrame, stateChunks: DataFrame): DataFrame = {
+    val batchH = batch.select(col("doc_id"), md5(col("text")).as("h"))
+    val batchChunks = simhashChunks(batch)
+      .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
     val exact = batchH
       .join(stateH.select(col("h")).distinct().hint("merge"), Seq("h"), "left_semi")
       .select(col("doc_id")).withColumn("is_exact", lit(1L))
@@ -481,7 +453,6 @@ object SpanDedup {
     * single-JVM stand-in for a table format's replace-partition
     * commit). */
   private[graft] final case class SignatureStore(root: java.nio.file.Path,
-      compactAppends: Boolean = true,
       overlapMerge: Boolean = true) {
     import org.apache.spark.sql.types._
 
@@ -581,11 +552,10 @@ object SpanDedup {
     // per-file open/list overhead back. The dp repartition is a shuffle
     // of batch-sized signature rows (trivial next to the store reads it
     // saves); at cluster scale it is exactly Iceberg's
-    // write.distribution-mode=hash trade. compactAppends = false is the
-    // pre-r18 fanout shape (OptProbe A/B control; store contents
-    // identical either way — only file counts differ).
+    // write.distribution-mode=hash trade (AB_PROBE_r18.jsonl: 1.64× at
+    // 30× over the fanout shape).
     private def appendRows(rows: DataFrame, dir: String): Unit =
-      (if (compactAppends) rows.repartition(col("dp")) else rows)
+      rows.repartition(col("dp"))
         .write.mode("append").partitionBy("dp").parquet(dir)
 
     /** Path of the swap commit marker — ONE file at the store root (not
@@ -711,22 +681,15 @@ object SpanDedup {
     def delete(): Unit = rmTree(root)
   }
 
-  /** The qd18 ingest loop over an arbitrary (doc_id, text) frame —
-    * package-private so the spec can replay planted corpora and assert
-    * the final-batch slice equals [[classifyIncremental]] exactly. The
-    * store is LIVE (mutated in place by each merge), so each batch's
-    * classification is pinned eagerly before the next merge runs — a
-    * bounded |batch| × (doc_id, batch_id, status) frame; the store files
-    * are then deleted eagerly instead of lingering until JVM exit. */
   /** Run two independent steps concurrently (`a` on the calling thread,
     * `b` on one spawned thread) — or sequentially when `overlap = false`
-    * (the pre-r19 shape, OptProbe's A/B control). Spark's scheduler runs
-    * jobs from both threads at once, so one side's stage tail back-fills
-    * the cores the other leaves idle (guide §2.6). Both sides complete
-    * before return either way, so callers' ordering invariants (classify
-    * before mutation, stage before swap) hold; the first failure is
-    * rethrown only after BOTH sides have settled (never mutating the
-    * store concurrently with an unwinding exception). */
+    * (the reference the concurrent path is pinned against). Spark's
+    * scheduler runs jobs from both threads at once, so one side's stage
+    * tail back-fills the cores the other leaves idle (guide §2.6). Both
+    * sides complete before return either way, so callers' ordering
+    * invariants (classify before mutation, stage before swap) hold; the
+    * first failure is rethrown only after BOTH sides have settled (never
+    * mutating the store concurrently with an unwinding exception). */
   private[graft] def overlapped(overlap: Boolean)(a: => Unit, b: => Unit): Unit =
     if (!overlap) { a; b }
     else {
@@ -740,75 +703,45 @@ object SpanDedup {
       if (bErr != null) throw bErr
     }
 
-  /** Release the storage blocks behind an eagerly localCheckpointed frame
-    * once its last consumer has run. */
-  private def dropLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ => ()
-    }
-
+  /** The qd18 ingest loop over an arbitrary (doc_id, text) frame —
+    * package-private so the spec can replay planted corpora and assert
+    * the final-batch slice equals [[classifyIncremental]] exactly. The
+    * store is LIVE (mutated in place by each merge), so each batch's
+    * classification is pinned eagerly before the next merge runs — a
+    * bounded |batch| × (doc_id, batch_id, status) frame; the store files
+    * are then deleted eagerly instead of lingering until JVM exit. */
   private[graft] def ingestSequentially(s: SparkSession, docs: DataFrame,
-      reuseSigs: Boolean = false,
-      compactAppends: Boolean = true,
       overlapMerge: Boolean = true): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft-qd18-state-")
     registerTempRoot(root)
-    val store = SignatureStore(root, compactAppends, overlapMerge).init()
+    val store = SignatureStore(root, overlapMerge).init()
     val outs = (0 to IngestBatches).map { b =>
       val batch = docs.withColumn("bid", batchIdCol)
         .filter(col("bid") === b).drop("bid")
-      // reuseSigs = true pins each batch's md5 + simhash frames eagerly
-      // and reuses them across classification, the merge's existence
-      // probe, and the merge's writes — an r18 MEASURED ATTEMPT, declined
-      // as the default: OptProbe's A/B read ~1.05× faster at sf0.1
-      // (14.4 vs 15.0 s, within noise) but 1.12× SLOWER at the 30× tier
-      // (35.1 vs 31.4 s) — the BlockManager round-trip of the signature
-      // frames costs more than the columnar re-scans it saves (statuses
-      // identical either way, spec-pinned).
-      val classified = (if (reuseSigs) {
-        val bH = batch.select(col("doc_id"), md5(col("text")).as("h"))
-          .localCheckpoint(true)
-        val bC = simhashChunks(batch)
-          .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
-          .localCheckpoint(true)
-        val cls = classifyAgainstStateSigs(bH, bC,
-            store.readH(s), store.readChunks(s))
-          .withColumn("batch_id", lit(b.toLong))
-          .localCheckpoint(true)
-        if (b < IngestBatches) store.merge(s, bH, bC): Unit
-        // the merge is the last consumer of this batch's signature
-        // blocks — drop them so a full ingest doesn't accumulate one
-        // pinned pair per batch until session end (ADVICE r18). NB
-        // Dataset.unpersist() is a no-op for localCheckpointed frames
-        // (their blocks hang off the RDD, not the CacheManager), so
-        // unpersist the LogicalRDD's RDD directly.
-        dropLocalCheckpoint(bH); dropLocalCheckpoint(bC)
-        cls
-      } else {
-        val clsFrame = classifyAgainstState(batch,
-            store.readH(s), store.readChunks(s))
-          .withColumn("batch_id", lit(b.toLong))
+      // Signatures are re-derived per consumer rather than pinned once per
+      // batch: pinning measured 1.12× SLOWER at 30× (AB_PROBE_r18.jsonl) —
+      // the BlockManager round-trip costs more than the re-scans it saves.
+      val clsFrame = classifyAgainstState(batch,
+          store.readH(s), store.readChunks(s))
+        .withColumn("batch_id", lit(b.toLong))
+      if (b == IngestBatches) clsFrame.localCheckpoint(true)
+      else {
+        // classification and the merge's existence probe both read the
+        // SAME pre-merge store state and are independent — overlap them
+        // (guide §2.6; sequential when overlapMerge = false). Only the
+        // mutating half of the merge waits for the classification pin.
         val bH = batch.select(col("doc_id"), md5(col("text")).as("h"))
         var cls: DataFrame = null
-        if (b < IngestBatches) {
-          // classification and the merge's existence probe both read the
-          // SAME pre-merge store state and are independent — overlap them
-          // (guide §2.6; sequential when overlapMerge = false). Only the
-          // mutating half of the merge waits for the classification pin.
-          var touched: Seq[String] = null
-          overlapped(overlapMerge)(
-            { cls = clsFrame.localCheckpoint(true) },
-            { touched = store.probeTouched(s, bH) })
-          store.merge(s, bH,
-            simhashChunks(batch)
-              .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
-            touchedPre = Some(touched)): Unit
-        } else cls = clsFrame.localCheckpoint(true)
+        var touched: Seq[String] = null
+        overlapped(overlapMerge)(
+          { cls = clsFrame.localCheckpoint(true) },
+          { touched = store.probeTouched(s, bH) })
+        store.merge(s, bH,
+          simhashChunks(batch)
+            .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
+          touchedPre = Some(touched)): Unit
         cls
-      })
-      classified
+      }
     }
     store.delete()
     outs.reduce(_.union(_))

@@ -261,8 +261,7 @@ object TextAnalysis {
     * replaying the argmax driver-locally until a merge invalidates a
     * top-K entry. The
     * superseded snapshot's blocks are dropped by the ContextCleaner once
-    * unreferenced. `onStep` reports (step, nanos) per merge for the
-    * BpeCurve probe. */
+    * unreferenced. */
   /** Word-type row bound under which [[trainBpe]] collects the vocabulary
     * and trains DRIVER-LOCALLY. BPE training cost is driven by the
     * word-TYPE table (Heaps-law sublinear in the corpus), so after the
@@ -273,9 +272,7 @@ object TextAnalysis {
     * merges = 94.8 s distributed; the local loop runs the same merges in
     * well under a second). Above the bound the distributed fold loop
     * still applies, so the operator never assumes the vocab fits. */
-  private[graft] val LocalTrainMaxTypes: Long =
-    sys.env.get("SPARK_GRAFT_BPE_LOCAL_MAX").map(_.toLong)
-      .getOrElse(2000000L)
+  private[graft] val LocalTrainMaxTypes: Long = 2000000L
 
   /** UTF-8 binary comparison — the ordering Spark's `orderBy(pair asc)`
     * actually applies (UTF8String compares encoded bytes unsigned). Java
@@ -359,11 +356,9 @@ object TextAnalysis {
     * A pair's count can legitimately RE-FORM after being merged away
     * (later merges can recreate the adjacency); the count map handles
     * that as a plain re-increment, and zero counts are REMOVED so the
-    * exhaustion check and the argmax never see phantom pairs.
-    * `onTouched` reports (step, words recounted) for the BpeCurve probe. */
-  private[graft] def trainBpeLocal(rows: Array[(Long, String)], n: Int,
-      onStep: (Int, Long) => Unit = (_, _) => (),
-      onTouched: (Int, Int) => Unit = (_, _) => ()): Seq[(String, String, Long)] = {
+    * exhaustion check and the argmax never see phantom pairs. */
+  private[graft] def trainBpeLocal(rows: Array[(Long, String)], n: Int)
+      : Seq[(String, String, Long)] = {
     import scala.collection.mutable
     val freqs = rows.map(_._1)
     val words: Array[Array[String]] = rows.map(_._2.trim.split("  "))
@@ -399,7 +394,6 @@ object TextAnalysis {
     counts.foreach { case (k, c) => push(k, c) }
     val merges = Seq.newBuilder[(String, String, Long)]
     for (step <- 1 to n) {
-      val t0 = System.nanoTime()
       // pop until the top entry matches the live count (lazy deletion);
       // every live count has a heap entry (pushed at init or on update)
       var top: (Long, String, Array[Byte]) = null
@@ -442,9 +436,7 @@ object TextAnalysis {
           val cNow = counts.getOrElse(p, 0L)
           if (cNow <= 0L) counts.remove(p): Unit else push(p, cNow)
         }
-        onTouched(step, touched.length)
       }
-      onStep(step, System.nanoTime() - t0)
     }
     merges.result()
   }
@@ -453,21 +445,18 @@ object TextAnalysis {
     * each round-trip pays the same ~0.13 s job floor whether it returns 1
     * row or K, so the argmax is replayed driver-locally from the K-list
     * until a merge could have invalidated the next entry. */
-  private[graft] val DistTrainBatchK: Int =
-    sys.env.get("SPARK_GRAFT_BPE_BATCH_K").map(_.toInt).getOrElse(128)
+  private[graft] val DistTrainBatchK: Int = 128
 
   private[graft] def trainBpe(vocab: DataFrame, n: Int,
-      onStep: (Int, Long) => Unit = (_, _) => (),
       ckpt: CheckpointStrategy = CheckpointStrategy.LocalDisk,
-      forceDistributed: Boolean = false,
-      onRound: Int => Unit = _ => ()): Seq[(String, String, Long)] = {
+      forceDistributed: Boolean = false): Seq[(String, String, Long)] = {
     // hybrid dispatch: one distributed count decides; the collect below
     // is GUARDED by that count (CollectSiteSpec entry), so the local path
     // never assumes boundedness it didn't check
     if (!forceDistributed && vocab.count() <= LocalTrainMaxTypes) {
       val rows = vocab.select(col("freq"), col("enc")).collect()
         .map(r => (r.getLong(0), r.getString(1)))
-      return trainBpeLocal(rows, n, onStep)
+      return trainBpeLocal(rows, n)
     }
     val pairsOf =
       "transform(sequence(1, size(syms) - 1), " +
@@ -498,9 +487,8 @@ object TextAnalysis {
     //    round is simply ended there.
     // Replays stop conservatively, never speculatively: every accepted
     // merge is bit-identical to the limit(1)-per-merge loop (spec-pinned
-    // against the local trainer on real + planted vocab; BpeCurve
-    // asserts equality at its configured SPARK_GRAFT_BPE_DEPTH — the
-    // checked-in BPE_CURVE artifacts record depth-512 runs).
+    // against the local trainer on real + planted vocab; the checked-in
+    // BPE_CURVE artifacts record the same equality at depth 512).
     var cur = ckpt(vocab)
     val merges = Seq.newBuilder[(String, String, Long)]
     val seenSymbols = scala.collection.mutable.Set.empty[String]
@@ -516,9 +504,8 @@ object TextAnalysis {
         case row if row.isNullAt(0) => 0
         case row => row.getInt(0)
       }
-    val k = if (maxInitSymLen <= 1) math.max(1, DistTrainBatchK) else 1
+    val k = if (maxInitSymLen <= 1) DistTrainBatchK else 1
     var i = 1
-    var tPrev = System.nanoTime()
     while (i <= n) {
       val top = cur
         .withColumn("syms", split(trim(col("enc")), "  "))
@@ -562,14 +549,10 @@ object TextAnalysis {
             // existing lr-pairs can rise; end the round conservatively
           dirtyL += l; dirtyR += r; newSyms += lr; seenSymbols += lr
           accepted += 1
-          val now = System.nanoTime()
-          onStep(i, now - tPrev) // first acceptance carries the round's
-          tPrev = now            // shuffle cost; replays cost ~nothing
           i += 1
           j += 1
         }
       }
-      onRound(accepted)
       if (i <= n) cur = ckpt(cur) // one checkpoint per ROUND, not per merge
     }
     merges.result()
@@ -845,69 +828,33 @@ object TextAnalysis {
   // per gram order + the per-doc rollup — the same linear, partial-agg-
   // heavy shape as qt06's tf counting.
   // ---------------------------------------------------------------------
-  private def qt09(s: SparkSession, d: String): DataFrame =
-    qt09Impl(s, d, fused = false)
-
-  /** qt09 with an r18 MEASURED-ATTEMPT fused shape as a parameter,
-    * DECLINED as the default (OptProbe A/B; output identical either way,
-    * spec-pinned).
-    *
-    * fused = true explodes both gram orders from ONE tokenize pass (each
-    * gram tagged with its order n), rolls both up in one (doc_id, n, g)
-    * shuffle + one per-doc aggregation, and derives n_words from the
-    * 2-gram occurrence count (n_words = n2 + 1 exactly for every doc
-    * passing the len ≥ 3 filter) — 3 corpus passes + 2 joins → 1 pass,
-    * zero joins. MEASURED: 2.00 vs 1.70 s at sf0.1 and 9.92 vs 9.65 s at
-    * the 30× tier — the three unfused passes are individually light
-    * (split + lower; the md5 work is identical in both shapes) while the
-    * fused concat-of-struct-arrays explode pays more per row than the
-    * extra scans cost, unlike qt19 where the eliminated recompute is the
-    * dominant md5-over-distinct-5-grams projection. Default stays the
-    * three-pass shape; the param + A/B rows document the attempt. */
-  private[graft] def qt09Impl(s: SparkSession, d: String,
-      fused: Boolean): DataFrame = {
+  // r18 measured a fused shape (both gram orders from one tokenize pass,
+  // one (doc_id, n, g) shuffle, no joins) as SLOWER: 2.00 vs 1.70 s at
+  // sf0.1 and 9.92 vs 9.65 s at 30× (AB_PROBE_r18.jsonl) — the three
+  // passes here are individually light, while the fused concat-of-struct
+  // explode pays more per row than the extra scans cost.
+  private def qt09(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
       .filter(size(col("tk")) >= 3)
-    if (fused) {
-      def gramArr(n: Int) =
-        s"transform(sequence(1, size(tk) - ${n - 1}), i -> " +
-          s"named_struct('n', $n, 'g', md5(concat_ws(' ', slice(tk, i, $n)))))"
-      toks
-        .select(col("doc_id"),
-          explode(expr(s"concat(${gramArr(2)}, ${gramArr(3)})")).as("e"))
-        .select(col("doc_id"), col("e.n").as("n"), col("e.g").as("g"))
-        .groupBy(col("doc_id"), col("n"), col("g")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg(
-          max(when(col("n") === 2, col("c"))).as("top2_n"),
-          sum(when(col("n") === 2, col("c"))).as("n2"),
-          sum(when(col("n") === 3, col("c"))).as("n3"),
-          count(when(col("n") === 3, lit(1))).as("d3"))
-        .select(col("doc_id"),
-          (col("n2") + 1).cast("int").as("n_words"),
-          (col("top2_n").cast("double") / col("n2")).as("top2gram_frac"),
-          ((col("n3") - col("d3")).cast("double") / col("n3")).as("dup3gram_frac"))
-    } else { // the pre-r18 three-pass shape (A/B control)
-      def gramCounts(n: Int) = toks
-        .select(col("doc_id"), explode(expr(
-          s"transform(sequence(1, size(tk) - ${n - 1}), i -> md5(concat_ws(' ', slice(tk, i, $n))))"))
-          .as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val a2 = gramCounts(2).groupBy(col("doc_id"))
-        .agg(max(col("c")).as("top2_n"), sum(col("c")).as("n2"))
-      val a3 = gramCounts(3).groupBy(col("doc_id"))
-        .agg(sum(col("c")).as("n3"), count(lit(1)).as("d3"))
-      // merge hints: a2/a3 are per-doc aggregates — corpus-sized, never
-      // broadcast-safe; the static planner's post-explode estimates are
-      // unreliable (see Dedup qd03/qd04). PlanLint asserts no broadcast here.
-      toks.select(col("doc_id"), size(col("tk")).as("n_words"))
-        .join(a2.hint("merge"), Seq("doc_id"))
-        .join(a3.hint("merge"), Seq("doc_id"))
-        .select(col("doc_id"), col("n_words"),
-          (col("top2_n").cast("double") / col("n2")).as("top2gram_frac"),
-          ((col("n3") - col("d3")).cast("double") / col("n3")).as("dup3gram_frac"))
-    }
+    def gramCounts(n: Int) = toks
+      .select(col("doc_id"), explode(expr(
+        s"transform(sequence(1, size(tk) - ${n - 1}), i -> md5(concat_ws(' ', slice(tk, i, $n))))"))
+        .as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+    val a2 = gramCounts(2).groupBy(col("doc_id"))
+      .agg(max(col("c")).as("top2_n"), sum(col("c")).as("n2"))
+    val a3 = gramCounts(3).groupBy(col("doc_id"))
+      .agg(sum(col("c")).as("n3"), count(lit(1)).as("d3"))
+    // merge hints: a2/a3 are per-doc aggregates — corpus-sized, never
+    // broadcast-safe; the static planner's post-explode estimates are
+    // unreliable (see Dedup qd03/qd04). PlanLint asserts no broadcast here.
+    toks.select(col("doc_id"), size(col("tk")).as("n_words"))
+      .join(a2.hint("merge"), Seq("doc_id"))
+      .join(a3.hint("merge"), Seq("doc_id"))
+      .select(col("doc_id"), col("n_words"),
+        (col("top2_n").cast("double") / col("n2")).as("top2gram_frac"),
+        ((col("n3") - col("d3")).cast("double") / col("n3")).as("dup3gram_frac"))
   }
 
   private val qt09Sql =
@@ -1117,84 +1064,41 @@ object TextAnalysis {
   // corpus-sized, so every join is merge-pinned: the plan lint asserts
   // ZERO BroadcastExchange (contrast qt10's exactly-one).
   // ---------------------------------------------------------------------
-  /** Fused is the default at EVERY tier (re-adjudicated r19, VERDICT r18
-    * Next #2): r18's lone counter-row — fused 1.11× slower at 100× — did
-    * not reproduce on a clean box. This round's interleaved A/B reads
-    * fused 1.78× faster at 30× warm and, at the 100× tier, **1.29×
-    * faster warm and 1.59× faster with the OS page cache dropped before
-    * every pass** (AB_PROBE_r19.jsonl, `cold:true` rows) — i.e. exactly
-    * where the r18 row feared materialization would lose to re-scanning,
-    * fused wins by MORE cold, because the recompute shape re-reads and
-    * re-grams the corpus three times from storage. The r18 row was taken
-    * on a sitting whose post-cal hit 4.24× idle; it was noise, not a
-    * crossover. SPARK_GRAFT_QT19_FUSED=0 still flips a run to the
-    * recompute shape (OptProbe's control; spec-pinned identical). */
-  private[graft] val Qt19FusedDefault: Boolean =
-    !sys.env.get("SPARK_GRAFT_QT19_FUSED").contains("0")
-
-  private def qt19(s: SparkSession, d: String): DataFrame =
-    qt19Impl(s, d, fused = Qt19FusedDefault)
-
-  /** qt19 with the r18 fused shape as a parameter so OptProbe can A/B the
-    * two shapes in one sitting (the qd19 sizeFilter pattern — output is
-    * identical either way, spec-pinned).
-    *
-    * fused = true (the shipping shape, optimization r18, guide §1.2/§2.4):
-    * the gram projection (tokenize + per-position md5 + array_distinct +
-    * explode) is the dominant cost and the unfused shape feeds it to THREE
-    * consumers (shared, perDoc, hits) — three full executions, since their
-    * exchanges carry different columns and AQE's stage cache only reuses
-    * IDENTICAL exchanges (the qd04 caveat does not apply here). The fused
-    * shape materializes the gram frame once (LocalDisk — corpus-sized
-    * posting rows, the r14 lineage rule) and folds perDoc+hits into ONE
-    * rollup via a flag left-join: n_shared = Σ 1[g ∈ shared] over the
-    * same rows that n_grams counts. Same values, one gram pass instead
-    * of three, and the doc-keyed perDoc⋈hits join disappears. (No
+  /** One gram pass (optimization r18, guide §1.2/§2.4): the gram
+    * projection (tokenize + per-position md5 + array_distinct + explode)
+    * is the dominant cost, and a shape with separate shared / per-doc /
+    * hits consumers executes it three times (their exchanges carry
+    * different columns, and AQE's stage cache only reuses IDENTICAL
+    * exchanges). Here the gram frame is materialized once (LocalDisk —
+    * corpus-sized posting rows, the r14 lineage rule) and the per-doc
+    * count and hit count fold into ONE rollup via a flag left-join:
+    * n_shared = Σ 1[g ∈ shared] over the same rows n_grams counts. (No
     * pre-shuffle before the checkpoint: Spark 4's localCheckpoint
     * returns UnknownPartitioning, so a repartition there is a pure extra
-    * exchange — plan-verified in plans/r18.) */
-  private[graft] def qt19Impl(s: SparkSession, d: String,
-      fused: Boolean): DataFrame = {
-    def gramFrame = Tables.documents(s, d)
+    * exchange — plans/r18.) Measured against the three-consumer shape
+    * (AB_PROBE_r19.jsonl): 1.78× faster at 30× warm, 1.29× faster at
+    * 100× warm and 1.59× with the OS page cache dropped before every
+    * pass. */
+  private def qt19(s: SparkSession, d: String): DataFrame = {
+    val grams = CheckpointStrategy.LocalDisk(Tables.documents(s, d)
       .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
       .filter(size(col("tk")) >= 5)
       .select(col("doc_id"), (col("doc_id") % 2).as("side"), explode(expr(
         "array_distinct(transform(sequence(1, size(tk) - 4), i -> md5(concat_ws(' ', slice(tk, i, 5)))))"))
-        .as("g"))
-    if (fused) {
-      val grams = CheckpointStrategy.LocalDisk(gramFrame)
-      val shared = grams
-        .groupBy(col("g"))
-        .agg(min(col("side")).as("mn"), max(col("side")).as("mx"))
-        .filter(col("mn") === 0 && col("mx") === 1)
-        .select(col("g"), lit(1L).as("hit"))
-      // corpus-sized × corpus-sized → merge-pinned (the qd04 broadcast trap)
-      grams.join(shared.hint("merge"), Seq("g"), "left")
-        .groupBy(col("doc_id"), col("side"))
-        .agg(count(lit(1)).as("n_grams"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_shared"))
-        .select(col("doc_id"), col("side"), col("n_grams"), col("n_shared"),
-          (col("n_shared").cast("double") / col("n_grams")).as("shared_frac"),
-          when(col("n_shared") > 0, 1L).otherwise(0L).as("is_contaminated"))
-    } else { // the pre-r18 three-consumer shape (A/B control)
-      val grams = gramFrame
-      val shared = grams
-        .groupBy(col("g"))
-        .agg(min(col("side")).as("mn"), max(col("side")).as("mx"))
-        .filter(col("mn") === 0 && col("mx") === 1)
-        .select(col("g"))
-      val perDoc = grams.groupBy(col("doc_id"), col("side"))
-        .agg(count(lit(1)).as("n_grams"))
-      val hits = grams.join(shared.hint("merge"), Seq("g"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-      perDoc.join(hits.hint("merge"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("side"), col("n_grams"),
-          coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-          (coalesce(col("n_shared"), lit(0L)).cast("double") / col("n_grams"))
-            .as("shared_frac"),
-          when(coalesce(col("n_shared"), lit(0L)) > 0, 1L).otherwise(0L)
-            .as("is_contaminated"))
-    }
+        .as("g")))
+    val shared = grams
+      .groupBy(col("g"))
+      .agg(min(col("side")).as("mn"), max(col("side")).as("mx"))
+      .filter(col("mn") === 0 && col("mx") === 1)
+      .select(col("g"), lit(1L).as("hit"))
+    // corpus-sized × corpus-sized → merge-pinned (the qd04 broadcast trap)
+    grams.join(shared.hint("merge"), Seq("g"), "left")
+      .groupBy(col("doc_id"), col("side"))
+      .agg(count(lit(1)).as("n_grams"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_shared"))
+      .select(col("doc_id"), col("side"), col("n_grams"), col("n_shared"),
+        (col("n_shared").cast("double") / col("n_grams")).as("shared_frac"),
+        when(col("n_shared") > 0, 1L).otherwise(0L).as("is_contaminated"))
   }
 
   private val qt19Sql =
@@ -1748,14 +1652,8 @@ object TextAnalysis {
     * cheap — the prune only pays where pair volume lives (1.27–1.72×
     * at the 30×/decade tiers, AB_PROBE_r15/r16). Output is identical on
     * both sides of the threshold (spec-pinned), so this is a cost-based
-    * physical choice, not a semantic one. Env-overridable for probes. */
-  private[graft] val SizeFilterMinPostings: Long =
-    sys.env.get("SPARK_GRAFT_QD19_FILTER_MIN").map(_.toLong)
-      .getOrElse(1000000L)
-
-  /** Last auto decision: (posting rows, filter used) — probe telemetry
-    * so AB_PROBE artifacts can record which side auto took per tier. */
-  @volatile private[graft] var lastSizeFilterDecision: Option[(Long, Boolean)] = None
+    * physical choice, not a semantic one. */
+  private[graft] val SizeFilterMinPostings: Long = 1000000L
 
   private def qd19(s: SparkSession, d: String): DataFrame =
     qd19Impl(s, d, CheckpointStrategy.LocalDisk)
@@ -1767,10 +1665,8 @@ object TextAnalysis {
     * Reliable against the default's exact rows (VERDICT r14 #1).
     * `sizeFilter`: None (the default) decides from the materialized
     * posting count against [[SizeFilterMinPostings]]; Some(b) forces the
-    * pair stage — output is identical either way (spec-pinned); the
-    * forced modes exist so PairFilterProbe can A/B the two pair stages
-    * in one sitting, since cross-sitting timings are confounded by box
-    * load. */
+    * pair stage — output is identical either way, and the forced modes
+    * let the spec pin both stages at a tier where auto takes only one. */
   private[graft] def qd19Impl(s: SparkSession, d: String,
       ckpt: CheckpointStrategy,
       sizeFilter: Option[Boolean] = None): DataFrame = {
@@ -1829,11 +1725,8 @@ object TextAnalysis {
     // the count is one cheap pass over checkpoint blocks — the cost-based
     // decision reads the SAME quantity the filter prunes (pair-stage
     // input rows), not a proxy like corpus rows
-    val useFilter = sizeFilter.getOrElse {
-      val n = posting.count()
-      lastSizeFilterDecision = Some((n, n >= SizeFilterMinPostings))
-      n >= SizeFilterMinPostings
-    }
+    val useFilter =
+      sizeFilter.getOrElse(posting.count() >= SizeFilterMinPostings)
     val elig = kcnt.join(
         groups.select(col("rep").as("doc_id"), col("nf")).hint("merge"),
         Seq("doc_id"))
@@ -1854,7 +1747,7 @@ object TextAnalysis {
         .groupBy(least(col("ra"), col("rb")).as("ra"),
           greatest(col("ra"), col("rb")).as("rb"))
         .agg(max(col("shared")).as("shared"))
-    else // the pre-r15 unpruned pair stage (A/B control)
+    else // unpruned pair stage: cheaper below SizeFilterMinPostings
       posting.select(col("h"), col("doc_id").as("ra"))
         .join(posting.select(col("h"), col("doc_id").as("rb")).hint("merge"),
           Seq("h"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * always Manhattan-adjacent cells, so a contiguous curve range maps to a
   * more compact rectangle — tighter per-file min/max envelopes than Z at
   * the same file count, i.e. strictly better row-group pruning for the
-  * same layout cost (measured in LayoutProbe's hilbert row).
+  * same layout cost (the hilbert rows of LAYOUT_PROBE_r14.json).
   *
   * Why a native Expression and not Column arithmetic: each of the `bits`
   * iterations REWRITES (x, y) as a function of both previous values

@@ -878,7 +878,7 @@ object Scale {
   // CANNOT serve), aggregate — the oracle replays the same predicate over
   // the RAW table. The pruning itself (rows read off the z layout vs a
   // linear layout, both dimensions) is measured in ScaleSpec and
-  // LayoutProbe — layout changes results never, IO always.
+  // LAYOUT_PROBE_r14.json — layout changes results never, IO always.
   // ---------------------------------------------------------------------
   private def zorderDir(d: String): String =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") +
@@ -921,7 +921,7 @@ object Scale {
   // nest rotation when()-trees exponentially in bits). Same gate shape as
   // qx17: write clustered, re-read with the partkey-only range predicate,
   // aggregate; the oracle replays the predicate on the raw table — layout
-  // changes results never, IO always (pruning measured in LayoutProbe).
+  // changes results never, IO always (pruning in LAYOUT_PROBE_r14.json).
   // ---------------------------------------------------------------------
   private def qx19(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

@@ -54,7 +54,8 @@ object Layout {
     * [[graft.functions.HilbertExpression]]) in place of Morton bit
     * interleave: a contiguous curve range maps to a more compact
     * rectangle, so per-file min/max envelopes are tighter in both
-    * dimensions at the same file count (LayoutProbe measures the delta). */
+    * dimensions at the same file count (LAYOUT_PROBE_r14.json records
+    * the delta). */
   def writeHilbertOrdered(df: DataFrame, path: String, cx: String, cy: String,
                           files: Int, rankBits: Int = 12): Unit =
     curveClustered(df, cx, cy, files, rankBits,

@@ -20,16 +20,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** On-disk bytes of a driver table — the input-size signal that
-    * scale-adaptive shape selection keys on (qt19's fused-vs-recompute
-    * crossover). One filesystem content summary, no Spark job; works on
-    * any Hadoop-visible FS. */
-  def tableBytes(s: SparkSession, dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-  }
-
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = load(s, d, "customer")

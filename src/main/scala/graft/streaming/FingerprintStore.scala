@@ -137,7 +137,8 @@ private[graft] object FingerprintStore {
     * clamped fanout 16 + pushdown beat the 65536-rows/partition scaling
     * (fanout 256) by ~1.7× (SCREEN_AB_r17). Default raised 65536 →
     * 1048576 accordingly (VERDICT r17 Next #2; the r18 two-tier A/B is
-    * the measured justification) — env-overridable for A/B probes. */
+    * the measured justification) — env-overridable so a deployment can
+    * size partitions for its file system, and ScreenCurve can sweep it. */
   private[graft] val ScreenPartRows: Long =
     sys.env.get("SPARK_GRAFT_SCREEN_PART_ROWS").map(_.toLong)
       .getOrElse(1048576L)

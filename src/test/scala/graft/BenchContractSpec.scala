@@ -1,0 +1,46 @@
+package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+/** The timing fields Bench and StreamBench print on their contract line:
+  * a gate that throws must be named in `failed`, must clear `complete`,
+  * and must add nothing to `value` — so a crash can never make the total
+  * look faster. */
+class BenchContractSpec extends SparkSpec {
+
+  private def contract(results: Seq[(String, Seq[Double])]) =
+    new ObjectMapper().readTree("{" + Bench.timingFields(results) + "}")
+
+  test("a throwing gate is listed in failed, clears complete, and adds nothing to value") {
+    val ok = Q("ok_gate", (s, _) => s.range(100).toDF("id"), None)
+    // one gate throws while building its plan, one only when it executes
+    val badPlan = Q("bad_plan_gate", (_, _) => throw new IllegalStateException("boom"), None)
+    val badRun = Q("bad_run_gate",
+      (s, _) => s.range(1).selectExpr("raise_error('boom') AS x"), None)
+    val done = Seq.newBuilder[Int]
+    val results = Bench.timeGates(spark, sf, Seq(ok, badPlan, badRun),
+      "bench-spec")(done += _)
+    assert(done.result() === Seq(1, 2, 3))
+    assert(results.map(_._1) === Seq("ok_gate", "bad_plan_gate", "bad_run_gate"))
+    assert(results(0)._2.size === 2 && results(0)._2.forall(_ >= 0))
+    assert(results(1)._2 === Seq(-1.0) && results(2)._2 === Seq(-1.0))
+
+    val json = contract(results)
+    assert(!json.get("complete").asBoolean())
+    assert(json.get("failed").elements().asScala.map(_.asText()).toSeq ===
+      Seq("bad_plan_gate", "bad_run_gate"))
+    assert(json.get("value").asDouble() === results(0)._2.min)
+    // the per-gate keys keep their shape: -1.0 marks a failed gate
+    assert(json.get("queries").get("bad_run_gate").asDouble() === -1.0)
+    assert(json.get("passes").get("ok_gate").size() === 2)
+    assert(json.get("unit").asText() === "sec")
+  }
+
+  test("a run with no failures is complete and sums every gate's best pass") {
+    val json = contract(Seq("a" -> Seq(2.0, 1.5), "b" -> Seq(0.25, 0.5)))
+    assert(json.get("complete").asBoolean())
+    assert(json.get("failed").size() === 0)
+    assert(json.get("value").asDouble() === 1.75)
+  }
+}

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Broadcast-site census: every `broadcast(...)` hint in src/main is a
   * 100 TB plan decision. A hint bypasses `autoBroadcastJoinThreshold`
@@ -15,14 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * data must be left UNHINTED instead (AQE broadcasts it while it fits
   * and falls back to a shuffle join when it doesn't — the q03/q04/qysb02/
   * qst02/qst25 treatment).
-  *
-  * Manifest key = (file relative to src/main/scala/graft, the trimmed
-  * source line). Keying on line text rather than line numbers keeps the
-  * manifest stable under unrelated edits while still pinning each site.
   */
-class BroadcastSiteSpec extends AnyFunSuite {
-
-  private val root = new File("src/main/scala/graft")
+class BroadcastSiteSpec extends SiteLint {
 
   /** (file, trimmed line) -> (expected occurrences, boundedness proof). */
   private val manifest: Map[(String, String), (Int, String)] = Map(
@@ -36,11 +29,9 @@ class BroadcastSiteSpec extends AnyFunSuite {
       (1, "qst11 eval-gram set from a FIXED doc-id range (doc_id < evalN pushed to the scan) - corpus-independent"),
     ("streaming/StreamingQueries.scala", """.join(broadcast(b), Seq("event_type"))""") ->
       (1, "qst27 per-event-type quantile frame: <= |event types| rows (enum-bounded)"),
-    // ----- sinks / measurement mains -----
+    // ----- sinks -----
     ("sinks/Layout.scala", "df.crossJoin(broadcast(stats))") ->
       (1, "1-row global min/max bounds frame for Z-order ranking"),
-    ("AnnProbe.scala", """.crossJoin(broadcast(e.filter(col("vec_id") < 10)""") ->
-      (1, "fixed 10-query probe set (vec_id < 10), corpus-independent"),
     // ----- windows -----
     ("operators/Windows.scala", ".crossJoin(broadcast(bounds))") ->
       (1, "qw13 1-row global [lo,hi] hour-bounds frame"),
@@ -103,7 +94,7 @@ class BroadcastSiteSpec extends AnyFunSuite {
       (2, "fixed-K refined centroid frames (qc02 iterations)"),
     ("ext/Clustering.scala", ".crossJoin(broadcast(tot))") ->
       (1, "1-row n_docs/accuracy frame (qc03)"),
-    ("ext/Clustering.scala", """val err = pin(feats.join(broadcast(wDF), Seq("j"))""") ->
+    ("ext/Clustering.scala", """val err = ckpt(feats.join(broadcast(wDF), Seq("j"))""") ->
       (1, "weight vector: NumFeat rows (model-size constant, qc04)"),
     // ----- text analysis: 1-row stats frames, dictCap-bounded dictionaries,
     // fixed eval ranges and query sets -----
@@ -145,41 +136,10 @@ class BroadcastSiteSpec extends AnyFunSuite {
     ("ext/Embeddings.scala", """codes.join(broadcast(qCells), Seq("c_id"))""") ->
       (1, "query->probed-cell map (qs09 serve)"))
 
-  private def scalaFiles(dir: File): Seq[File] = {
-    val (dirs, files) = dir.listFiles.toSeq.partition(_.isDirectory)
-    files.filter(_.getName.endsWith(".scala")) ++ dirs.flatMap(scalaFiles)
-  }
-
-  /** All non-comment, non-import source lines containing a broadcast( call,
-    * as (relative file, trimmed line) -> count. */
-  private def scan(): Map[(String, String), Int] = {
-    val prefix = root.getPath + "/"
-    scalaFiles(root).flatMap { f =>
-      val rel = f.getPath.stripPrefix(prefix)
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().map(_.trim).filter { l =>
-        l.contains("broadcast(") && !l.startsWith("*") && !l.startsWith("//") &&
-          !l.startsWith("import ")
-      }.map(l => (rel, l)).toList
-      finally src.close()
-    }.groupBy(identity).map { case (k, v) => k -> v.size }
-  }
-
   test("every broadcast() hint in src/main is classified bounded-by-construction") {
-    val found = scan()
-    val unclassified = found.keySet -- manifest.keySet
-    assert(unclassified.isEmpty,
-      "unclassified broadcast() sites (add to the manifest with a boundedness " +
-        "proof, or remove the hint and let AQE decide):\n  " +
-        unclassified.toSeq.sorted.mkString("\n  "))
-    val stale = manifest.keySet -- found.keySet
-    assert(stale.isEmpty,
-      s"stale manifest entries (site moved or removed - update the manifest):\n  " +
-        stale.toSeq.sorted.mkString("\n  "))
-    val miscounted = found.collect {
-      case (k, n) if manifest(k)._1 != n => s"$k: found $n, manifest says ${manifest(k)._1}"
-    }
-    assert(miscounted.isEmpty, miscounted.mkString("\n"))
+    assertClassified(scan(Seq(root))(_.contains("broadcast(")), manifest,
+      "broadcast()", "add to the manifest with a boundedness proof, or " +
+        "remove the hint and let AQE decide")
   }
 
   // The five sites VERDICT r12 flagged as SF-proportional pinned broadcasts

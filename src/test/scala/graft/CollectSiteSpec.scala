@@ -1,23 +1,17 @@
 package graft
 
-import java.io.File
-import org.scalatest.funsuite.AnyFunSuite
-
 /** collect()-site census — BroadcastSiteSpec's rule applied to the other
   * driver-memory hazard: a `.collect()` on a corpus-sized frame is a
   * driver OOM at 100 TB exactly like a pinned broadcast of one. Every
   * collect in LIBRARY code (operators/ext/streaming/ysb/sinks/functions/
-  * sources — measurement mains like Bench/Soak/AnnProbe legitimately
+  * sources — measurement mains like Bench/Soak legitimately
   * collect their own summaries) must be classified here with the
   * construction that bounds what it pulls to the driver. VERDICT r12
   * audited these sites by hand ("non-findings worth recording"); this
   * lint makes that audit standing — a new unclassified collect fails the
   * suite until justified or redesigned.
   */
-class CollectSiteSpec extends AnyFunSuite {
-
-  private val roots = Seq("operators", "ext", "streaming", "ysb", "sinks",
-    "functions", "sources").map(d => new File(s"src/main/scala/graft/$d"))
+class CollectSiteSpec extends SiteLint {
 
   /** (file, trimmed line) -> (expected occurrences, boundedness proof). */
   private val manifest: Map[(String, String), (Int, String)] = Map(
@@ -63,38 +57,9 @@ class CollectSiteSpec extends AnyFunSuite {
     ("ext/TextAnalysis.scala", """val rows = vocab.select(col("freq"), col("enc")).collect()""") ->
       (1, "BPE word-type vocab: GUARDED by the preceding count() <= LocalTrainMaxTypes check, distributed fallback above it"))
 
-  private def scalaFiles(dir: File): Seq[File] =
-    if (!dir.exists()) Nil
-    else {
-      val (dirs, files) = dir.listFiles.toSeq.partition(_.isDirectory)
-      files.filter(_.getName.endsWith(".scala")) ++ dirs.flatMap(scalaFiles)
-    }
-
-  private def scan(): Map[(String, String), Int] =
-    roots.flatMap { root =>
-      scalaFiles(root).flatMap { f =>
-        val rel = f.getPath.stripPrefix("src/main/scala/graft/")
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().map(_.trim).filter { l =>
-          l.contains(".collect()") && !l.startsWith("*") && !l.startsWith("//")
-        }.map(l => (rel, l)).toList
-        finally src.close()
-      }
-    }.groupBy(identity).map { case (k, v) => k -> v.size }
-
   test("every collect() in library code is classified bounded-by-construction") {
-    val found = scan()
-    val unclassified = found.keySet -- manifest.keySet
-    assert(unclassified.isEmpty,
-      "unclassified collect() sites (add to the manifest with a boundedness " +
-        "proof, or keep the data distributed):\n  " +
-        unclassified.toSeq.sorted.mkString("\n  "))
-    val stale = manifest.keySet -- found.keySet
-    assert(stale.isEmpty,
-      s"stale manifest entries:\n  ${stale.toSeq.sorted.mkString("\n  ")}")
-    val miscounted = found.collect {
-      case (k, n) if manifest(k)._1 != n => s"$k: found $n, manifest says ${manifest(k)._1}"
-    }
-    assert(miscounted.isEmpty, miscounted.mkString("\n"))
+    assertClassified(scan(libraryRoots)(_.contains(".collect()")), manifest,
+      "collect()", "add to the manifest with a boundedness proof, or keep " +
+        "the data distributed")
   }
 }

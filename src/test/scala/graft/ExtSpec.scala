@@ -667,8 +667,8 @@ class SimilaritySpec extends SparkSpec {
       s"residual PQ should at least halve distortion on clustered data: raw $raw res $res")
     // and the serving path rides the structure: qs09's neighbors come
     // from the query's own cluster (cells align with clusters, residual
-    // ADC ranks within them; AnnProbe records the no-structure floor on
-    // the isotropic driver corpus — here recall must be high)
+    // ADC ranks within them; ANN_PROBE_r12.json records the no-structure
+    // floor on the isotropic driver corpus — here recall must be high)
     val out = Registry.byName("qs09_ivfadc_residual").run(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.nonEmpty)
@@ -935,7 +935,7 @@ class TextSpec extends SparkSpec {
         r.getLong(4))).toSet
     assert(got === expected, s"qd19 rows diverge from the mini-oracle:\n$got\nvs\n$expected")
 
-    // the A/B control (PairFilterProbe's unpruned pair stage) is
+    // the unpruned pair stage (auto's choice below the threshold) is
     // row-identical — the filter only prunes pairs that fail the gate
     val off = graft.ext.TextAnalysis.qd19Impl(spark, dir,
         graft.ext.CheckpointStrategy.LocalDisk, sizeFilter = Some(false)).collect()
@@ -1817,6 +1817,16 @@ class SpanDedupSpec extends SparkSpec {
     assert(fromLoop === fromScratch)
   }
 
+  test("persisted ingest loop: overlapMerge = false equals the overlapped default") {
+    // the sequential path is the reference the concurrent merge is pinned
+    // against: same statuses with the same multiplicity, batch by batch
+    val docs = graft.sources.Tables.documents(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(SpanDedup.ingestSequentially(spark, docs, overlapMerge = false))
+      === rows(SpanDedup.ingestSequentially(spark, docs)))
+  }
+
   test("store upsert replaces a re-ingested doc's signatures (no duplication)") {
     import spark.implicits._
     // qd18's batches are doc_id-disjoint, so this MERGE branch is dormant
@@ -2412,7 +2422,7 @@ class BpeSpec extends SparkSpec {
     // runs, re-formed pairs, and name collisions (e.g. "ab" re-created
     // by a later (a,b) re-merge or by (a,b)/(ab,·) chains) — the exact
     // cases the top-K replay's stop rules must catch. Seeded LCG, high
-    // bits (see plantVocab).
+    // bits: a power-of-two-modulus LCG's low bits have short periods.
     var x = 0x9E3779B97F4A7C15L
     def nxt(n: Int): Int = {
       x = x * 6364136223846793005L + 1442695040888963407L
@@ -2429,18 +2439,6 @@ class BpeSpec extends SparkSpec {
       val dist = TextAnalysis.trainBpe(vocab, depth, forceDistributed = true)
       assert(dist === local, s"trial $trial (depth $depth) diverged")
     }
-  }
-
-  test("BpeCurve planted vocabulary: requested type count, distinct, well-formed") {
-    // regression: drawing LCG LOW bits repeats a tiny word set and the
-    // distinctness loop never fills (caught live at 100k types)
-    val v = BpeCurve.plantVocab(5000)
-    assert(v.length === 5000)
-    assert(v.map(_._2).distinct.length === 5000)
-    assert(v.forall { case (f, e) =>
-      f >= 1L && e.startsWith(" ") && e.endsWith(" ") &&
-        e.trim.split("  ").forall(s => s.length == 1 && s(0) >= 'a' && s(0) <= 'h')
-    })
   }
 
   test("tie-break is UTF-8 byte order in every trainer (supplementary plane)") {
