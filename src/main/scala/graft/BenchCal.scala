@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Machine-load calibration shared by every timing main (Bench, the YSB
@@ -77,4 +79,26 @@ object BenchCal {
       f"attempt(s), probe $probe%.2f s")
     Watch(attempts, waitedS, probe)
   }
+
+  /** (busy, steal) jiffies of all processors, from the `cpu` line of
+    * /proc/stat: user + nice + system + irq + softirq, and steal — the
+    * formula perfbench/run.py uses. (0, 0) where /proc/stat is absent. */
+  def cpuTimes(): (Long, Long) = {
+    val stat = Paths.get("/proc/stat")
+    if (!Files.isReadable(stat)) (0L, 0L)
+    else {
+      val r = Files.newBufferedReader(stat)
+      try cpuTimes(r.readLine()) finally r.close()
+    }
+  }
+
+  private[graft] def cpuTimes(cpuLine: String): (Long, Long) = {
+    val v = cpuLine.trim.split("\\s+").drop(1).map(_.toLong)
+    (v(0) + v(1) + v(2) + v(5) + v(6), v(7))
+  }
+
+  /** Share of the CPU time between two `cpuTimes` readings that the
+    * hypervisor gave to other guests. */
+  def stealShare(t0: (Long, Long), t1: (Long, Long)): Double =
+    (t1._2 - t0._2).toDouble / math.max(1L, t1._1 - t0._1 + t1._2 - t0._2)
 }

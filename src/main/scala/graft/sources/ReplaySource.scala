@@ -1,15 +1,17 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, Dictionary, OnHeapColumnVector}
+import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ysb.Model
@@ -30,6 +32,11 @@ import graft.ysb.Model
   * half-open row range, and each range splits into `numPartitions` stripes
   * generated independently on executors — no driver data, no replay buffer,
   * scales to any rate by construction.
+  *
+  * Stripes are read as columnar batches of up to 4096 rows
+  * ([[ReplayBatchReader]]): no row object per event, and Spark's scan
+  * metrics update once per batch instead of once per row. The plan reads
+  * them through `ColumnarToRow`.
   */
 class ReplaySourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -88,33 +95,90 @@ final class ReplayMicroBatchStream(totalRows: Long, rowsPerBatch: Long,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val ReplayRange(lo, hi) = partition.asInstanceOf[ReplayRange]
-      new PartitionReader[InternalRow] {
-        private var i = lo - 1
-        override def next(): Boolean = { i += 1; i < hi }
-        override def get(): InternalRow = ReplayGen.row(i)
-        override def close(): Unit = ()
-      }
-    }
+  override def createReaderFactory(): PartitionReaderFactory = ReplayReaderFactory
 }
 
-/** Row i as a pure function of i — the same formulas as Gen.boundedEvents. */
-object ReplayGen {
-  private val baseUs = 1704067200000000L // 2024-01-01T00:00:00Z
-  private val nAds = 1000L
-  private val user = UTF8String.fromString("user0")
-  private val page = UTF8String.fromString("page0")
-  private val ip = UTF8String.fromString("255.255.255.255")
-  private val adTypes = Model.adTypes.map(UTF8String.fromString).toArray
-  private val eventTypes = Model.eventTypes.map(UTF8String.fromString).toArray
+/** Columnar-only reader factory: each stripe fills one reused batch. */
+object ReplayReaderFactory extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("the replay source reads columnar batches only")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new ReplayBatchReader(partition.asInstanceOf[ReplayRange])
+}
 
-  def row(i: Long): InternalRow = new GenericInternalRow(Array[Any](
-    user, page,
-    UTF8String.fromString("ad" + (i % nAds)),
-    adTypes((i % adTypes.length).toInt),
-    eventTypes((i % eventTypes.length).toInt),
-    baseUs + i * 1000L,
-    ip))
+/** Rows [lo, hi) of one stripe as reused batches of up to `BatchRows`
+  * rows. Row i has the same values as row i of Gen.boundedEvents: the
+  * three constant columns are constant vectors, the other string columns
+  * are dictionary ids into precomputed byte tables, and event_time is
+  * base + i ms. */
+final class ReplayBatchReader(range: ReplayRange) extends PartitionReader[ColumnarBatch] {
+  import ReplayBatchReader._
+
+  private def constant(v: String) = {
+    val c = new ConstantColumnVector(BatchRows, StringType)
+    c.setUtf8String(UTF8String.fromString(v))
+    c
+  }
+  private def encoded(values: Seq[String]) = {
+    val c = new OnHeapColumnVector(BatchRows, StringType)
+    c.setDictionary(new BytesDictionary(values))
+    c.reserveDictionaryIds(BatchRows)
+    c
+  }
+  private val adId = encoded((0 until NAds).map(a => s"ad$a"))
+  private val adType = encoded(Model.adTypes)
+  private val eventType = encoded(Model.eventTypes)
+  private val eventTime = new OnHeapColumnVector(BatchRows, TimestampType)
+  private val batch = new ColumnarBatch(Array[ColumnVector](constant("user0"),
+    constant("page0"), adId, adType, eventType, eventTime, constant("255.255.255.255")))
+  private val adIds = adId.getDictionaryIds
+  private val adTypeIds = adType.getDictionaryIds
+  private val eventTypeIds = eventType.getDictionaryIds
+  private var pos = range.start
+
+  override def next(): Boolean = {
+    if (pos >= range.end) return false
+    val n = math.min(BatchRows.toLong, range.end - pos).toInt
+    // cyclic indexes instead of a modulo per row
+    var ad = (pos % NAds).toInt
+    var at = (pos % NAdTypes).toInt
+    var et = (pos % NEventTypes).toInt
+    var r = 0
+    while (r < n) {
+      adIds.putInt(r, ad)
+      adTypeIds.putInt(r, at)
+      eventTypeIds.putInt(r, et)
+      eventTime.putLong(r, BaseUs + (pos + r) * 1000L)
+      ad += 1; if (ad == NAds) ad = 0
+      at += 1; if (at == NAdTypes) at = 0
+      et += 1; if (et == NEventTypes) et = 0
+      r += 1
+    }
+    batch.setNumRows(n)
+    pos += n
+    true
+  }
+
+  override def get(): ColumnarBatch = batch
+  override def close(): Unit = batch.close()
+}
+
+/** The formulas of Gen.boundedEvents as constants and tables. */
+object ReplayBatchReader {
+  val BatchRows = 4096
+  private val BaseUs = 1704067200000000L // 2024-01-01T00:00:00Z
+  private val NAds = 1000
+  private val NAdTypes = Model.adTypes.size
+  private val NEventTypes = Model.eventTypes.size
+
+  /** A string column's values by dictionary id. */
+  private final class BytesDictionary(values: Seq[String]) extends Dictionary {
+    private val bytes = values.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+    override def decodeToBinary(id: Int): Array[Byte] = bytes(id)
+    override def decodeToInt(id: Int): Int = throw new UnsupportedOperationException
+    override def decodeToLong(id: Int): Long = throw new UnsupportedOperationException
+    override def decodeToFloat(id: Int): Float = throw new UnsupportedOperationException
+    override def decodeToDouble(id: Int): Double = throw new UnsupportedOperationException
+  }
 }

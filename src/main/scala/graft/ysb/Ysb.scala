@@ -2,12 +2,14 @@ package graft.ysb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.Q
+import graft.functions.{HashLookup, StringDict}
 import graft.sources.Tables
 
 /** The Yahoo Streaming Benchmark query as composable DataFrame stages —
-  * filter → project → stream-static broadcast join → event-time tumbling
+  * filter → project → static campaign lookup → event-time tumbling
   * windowed count+max [ysb/benchmark/spark/SparkYahooRunner.scala:71-84;
   * ysb/benchmark/flink/YahooBenchmark.scala:214-242].
   *
@@ -16,16 +18,25 @@ import graft.sources.Tables
   * snake_case (`last_update`) rather than the reference's `lastUpdate` for
   * cross-engine alias stability.
   *
-  * Scale: `enrichCampaign` pins `broadcast()` because the canonical YSB
-  * dimension is BOUNDED BY CONSTRUCTION — the generator emits a fixed
+  * Scale: `enrichCampaign` is a hashed lookup, not a join. The canonical
+  * YSB dimension is BOUNDED BY CONSTRUCTION — the generator emits a fixed
   * ad→campaign table (1000 ads × 100 campaigns in the reference) whose
-  * size is independent of how many events stream past. That guarantee
-  * does NOT extend to corpus-derived dimensions: qysb02 builds its dim
-  * from `events.select(user_id).distinct()`, which grows with the user
-  * universe, so that join is left UNHINTED for AQE (a pinned broadcast
-  * there would bypass autoBroadcastJoinThreshold and OOM the driver at
-  * 100 TB). The windowed agg shuffles once on (window, campaign_id) with
-  * map-side partial aggregation.
+  * size is independent of how many events stream past — so it is
+  * collected to the driver ONCE, when the query is defined, and travels in
+  * the plan as a `graft.functions.HashLookup` table. That is the
+  * reference's semantics on Flink (`StaticJoinMapper`'s closure map) and
+  * StreamBox (an `unordered_map`): the dimension is a snapshot taken at
+  * definition time. It differs from a Spark stream-static join, which
+  * re-reads the static side on every micro-batch — and re-plans its
+  * broadcast, one extra job and a rebuilt hash relation per trigger. A
+  * dimension above `CampaignCap` rows, or a streaming one, is rejected.
+  * The guarantee does NOT extend to corpus-derived dimensions: qysb02
+  * builds its dim from `events.select(user_id).distinct()`, which grows
+  * with the user universe, so that join is left UNHINTED for AQE (a
+  * pinned broadcast or a driver-side table there would bypass
+  * autoBroadcastJoinThreshold and OOM the driver at 100 TB). The windowed
+  * agg shuffles once on (window, campaign_id) with map-side partial
+  * aggregation.
   */
 object Ysb {
 
@@ -38,9 +49,43 @@ object Ysb {
   def projectAdTime(events: DataFrame): DataFrame =
     events.select(col("ad_id"), col("event_time"))
 
-  /** J1: enrich with campaign_id via broadcast hash join. */
-  def enrichCampaign(events: DataFrame, campaigns: DataFrame): DataFrame =
-    events.join(broadcast(campaigns), Seq("ad_id"), "inner")
+  /** Row cap on the campaign dimension: 100× the canonical 1000 ads. */
+  val CampaignCap = 100000
+
+  /** J1: enrich with campaign_id by a hashed lookup in the campaign
+    * dimension, snapshotted here (see the object scaladoc). Same rows and
+    * columns as `events.join(broadcast(campaigns), Seq("ad_id"))`: `ad_id`,
+    * the other event columns, then `campaign_id`; events whose ad_id is
+    * null or unknown are dropped. `campaigns` must be a bounded frame of
+    * exactly (ad_id, campaign_id) strings with distinct ad_ids and no null
+    * campaign_id. */
+  def enrichCampaign(events: DataFrame, campaigns: DataFrame): DataFrame = {
+    val dict = campaignDict(campaigns)
+    val rest = events.columns.toSeq.filter(_ != "ad_id").map(col)
+    events.select(col("ad_id") +: rest :+
+        HashLookup.lookup(col("ad_id"), dict).as("campaign_id"): _*)
+      .filter(col("campaign_id").isNotNull)
+  }
+
+  private def campaignDict(campaigns: DataFrame): StringDict = {
+    require(!campaigns.isStreaming,
+      "the campaign dimension must be a bounded frame, not a stream")
+    require(campaigns.schema.map(f => f.name -> f.dataType).toSet ==
+        Set("ad_id" -> StringType, "campaign_id" -> StringType),
+      s"the campaign dimension must be exactly (ad_id string, campaign_id string), got ${campaigns.schema.simpleString}")
+    val rows = campaigns.select(col("ad_id"), col("campaign_id")).limit(CampaignCap + 1).collect()
+    require(rows.length <= CampaignCap,
+      s"the campaign dimension has more than $CampaignCap rows; join a larger dimension instead")
+    // a null ad_id never matches an inner join, so it is left out
+    val pairs = rows.collect { case r if !r.isNullAt(0) => r.getString(0) -> r.getString(1) }
+    val repeated = pairs.groupBy(_._1).collect { case (k, v) if v.length > 1 => k }
+    require(repeated.isEmpty, "the campaign dimension repeats ad_id " +
+      repeated.toSeq.sorted.take(3).mkString(", ") +
+      "; a join would emit one event row per matching campaign")
+    require(pairs.forall(_._2 != null),
+      "the campaign dimension has a null campaign_id, which a lookup cannot tell from a miss")
+    new StringDict(pairs.toSeq)
+  }
 
   /** A1/W1: tumbling event-time window per campaign — count + max(event_time),
     * window keyed by epoch millis of its start [SparkYahooRunner.scala:75-76]. */

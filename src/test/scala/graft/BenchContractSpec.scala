@@ -42,5 +42,7 @@ class BenchContractSpec extends SparkSpec {
     assert(json.get("complete").asBoolean())
     assert(json.get("failed").size() === 0)
     assert(json.get("value").asDouble() === 1.75)
+    assert(BenchCal.stealShare(BenchCal.cpuTimes("cpu  90 5 5 700 9 2 3 10 0 0"),
+      BenchCal.cpuTimes("cpu  310 5 25 900 9 2 3 90 0 0")) === 0.25)
   }
 }

@@ -19,9 +19,6 @@ class BroadcastSiteSpec extends SiteLint {
 
   /** (file, trimmed line) -> (expected occurrences, boundedness proof). */
   private val manifest: Map[(String, String), (Int, String)] = Map(
-    // ----- YSB -----
-    ("ysb/Ysb.scala", """events.join(broadcast(campaigns), Seq("ad_id"), "inner")""") ->
-      (1, "canonical YSB dimension: fixed generator table (1000 ads x 100 campaigns), size independent of stream length"),
     // ----- streaming -----
     ("streaming/StreamingQueries.scala", ".join(broadcast(bad),") ->
       (1, "qst10 poisoned-bucket frame: bounded by the chunk keyspace (<= 4*2^12 rows), not the corpus"),

@@ -15,6 +15,10 @@ class CollectSiteSpec extends SiteLint {
 
   /** (file, trimmed line) -> (expected occurrences, boundedness proof). */
   private val manifest: Map[(String, String), (Int, String)] = Map(
+    ("ysb/Ysb.scala", """val rows = campaigns.select(col("ad_id"), col("campaign_id")).limit(CampaignCap + 1).collect()""") ->
+      (1, "YSB campaign dimension, collected once per query definition: explicit " +
+        "limit(cap + 1) over a fixed generator table (1000 ads by construction); " +
+        "over the cap the query is rejected"),
     ("ext/Clustering.scala", """.select(col("id").as("j"), wOf(col("id")).as("w")).collect()""") ->
       (1, "model weight vector: exactly NumFeat rows (model-size constant)"),
     ("ext/Clustering.scala", ".collect()(0)") ->

@@ -40,6 +40,26 @@ class SourcesSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("replay source rows equal Gen.boundedEvents row for row across batch and stripe edges") {
+    // 3333-row micro-batches in 3 stripes of 1111, and one 10001-row batch
+    // in 2 stripes that each cross the 4096-row columnar batch
+    for ((perBatch, parts) <- Seq((3333, 3), (10001, 2))) {
+      val name = s"replay_rows_${perBatch}_$parts"
+      val q = spark.readStream.format("graft.sources.ReplaySourceProvider")
+        .option("totalRows", "10001").option("rowsPerBatch", perBatch.toString)
+        .option("numPartitions", parts.toString).load()
+        .writeStream.format("memory").queryName(name).start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table(name).orderBy("event_time").collect()
+        val want = graft.ysb.Gen.boundedEvents(spark, 10001L).orderBy("event_time").collect()
+        assert(spark.table(name).schema === graft.ysb.Model.eventSchema)
+        assert(got.length === 10001)
+        assert(got.toSeq === want.toSeq)
+      } finally q.stop()
+    }
+  }
+
   test("events nanos timestamps truncate to DuckDB-equal micros") {
     // Tables.events must expose ts as TimestampType (micros)
     val ev = Tables.events(spark, sf)

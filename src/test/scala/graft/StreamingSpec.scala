@@ -2,7 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -173,6 +179,48 @@ class StreamingSpec extends SparkSpec {
       assert(got.exceptAll(want).count() === 0)
       assert(want.exceptAll(got).count() === 0)
     } finally q.stop()
+  }
+
+  test("YSB on the replay source runs one job per data batch, with no broadcast and a columnar scan") {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val marker = s"ysb-jobs-marker-${System.nanoTime()}"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        jobs.add((String.valueOf(p.getProperty("sql.streaming.queryId")),
+          String.valueOf(p.getProperty("streaming.sql.batchId"))))
+        if (p.getProperty("spark.job.description") == marker) jobs.add((marker, ""))
+      }
+    }
+    val events = spark.readStream.format("graft.sources.ReplaySourceProvider")
+      .option("totalRows", "30000").option("rowsPerBatch", "10000")
+      .option("numPartitions", "2").load()
+    val out = Ysb.query(events, Gen.campaigns(spark))
+    spark.sparkContext.addSparkListener(listener)
+    val q = out.writeStream.outputMode("complete").format("memory")
+      .queryName("ysb_jobs").start()
+    try {
+      q.processAllAvailable()
+      // events reach a listener in order: once the marker job is seen,
+      // every job of the query has been seen
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!jobs.contains((marker, "")) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      val perBatch = jobs.asScala.toSeq.filter(_._1 == q.id.toString)
+        .groupBy(_._2).map { case (b, js) => b -> js.size }
+      assert(perBatch === Map("0" -> 1, "1" -> 1, "2" -> 1))
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.toString)
+      // whole-stage codegen puts an InputAdapter between the two
+      assert(plan.collect { case c: ColumnarToRowExec => c.child }.exists {
+        case InputAdapter(s) => s.isInstanceOf[MicroBatchScanExec]
+        case s => s.isInstanceOf[MicroBatchScanExec]
+      }, plan.toString)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("rate-source generator stream starts and produces YSB-shaped rows") {

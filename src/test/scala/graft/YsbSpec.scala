@@ -1,8 +1,14 @@
 package graft
 
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.ysb.{Gen, Ysb}
+import graft.functions.{HashLookup, StringDict}
+import graft.ysb.{CampaignAd, Event, Gen, Ysb}
 
 class YsbSpec extends SparkSpec {
 
@@ -48,5 +54,82 @@ class YsbSpec extends SparkSpec {
     val out = Ysb.query(Gen.boundedEvents(spark, 5000L), Gen.campaigns(spark), "10 seconds")
     val misaligned = out.filter(pmod(col("time_window"), lit(10000L)) =!= 0).count()
     assert(misaligned === 0)
+  }
+
+  /** The bounded generator plus events the dimension does not resolve: an
+    * unknown ad_id and a null one, each a view. */
+  private def eventsWithMisses(s: SparkSession): DataFrame = {
+    import s.implicits._
+    val t = new Timestamp(1704067200000L)
+    Gen.boundedEvents(s, 3000L).union(Seq(
+      Event("user0", "page0", "ad-unknown", "banner", "view", t, "255.255.255.255"),
+      Event("user0", "page0", null, "banner", "view", t, "255.255.255.255"),
+      Event("user0", "page0", "ad7", "banner", "view", t, "255.255.255.255")).toDF())
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.count() === b.count())
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
+  }
+
+  test("campaign lookup equals the broadcast join it replaces, unknown and null ad_ids included") {
+    val ev = eventsWithMisses(spark)
+    val dim = Gen.campaigns(spark)
+    for (events <- Seq(ev, Ysb.projectAdTime(ev))) {
+      val got = Ysb.enrichCampaign(events, dim)
+      val want = events.join(broadcast(dim), Seq("ad_id"))
+      assert(got.schema.map(f => f.name -> f.dataType) === want.schema.map(f => f.name -> f.dataType))
+      sameRows(got, want)
+    }
+    assert(Ysb.enrichCampaign(ev, dim).count() === 3001) // every generated row, plus ad7
+  }
+
+  test("campaign dimension with a repeated ad_id is rejected") {
+    import spark.implicits._
+    val dim = Gen.campaigns(spark).union(Seq(("ad5", "camp99")).toDF("ad_id", "campaign_id"))
+    val e = intercept[IllegalArgumentException](Ysb.enrichCampaign(Gen.boundedEvents(spark, 10L), dim))
+    assert(e.getMessage.contains("repeats ad_id ad5"))
+  }
+
+  test("campaign dimension that is a stream, or over the row cap, is rejected") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val events = Gen.boundedEvents(spark, 10L)
+    val stream = MemoryStream[CampaignAd].toDF()
+    assert(intercept[IllegalArgumentException](Ysb.enrichCampaign(events, stream))
+      .getMessage.contains("not a stream"))
+    val big = spark.range(Ysb.CampaignCap + 1L)
+      .select(concat(lit("ad"), col("id")).as("ad_id"), lit("camp0").as("campaign_id"))
+    assert(intercept[IllegalArgumentException](Ysb.enrichCampaign(events, big))
+      .getMessage.contains(s"more than ${Ysb.CampaignCap} rows"))
+  }
+
+  test("campaign lookup: interpreted and generated code agree") {
+    def enriched(conf: Map[String, String]): Set[(String, Long, String)] = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      Ysb.enrichCampaign(Ysb.projectAdTime(eventsWithMisses(s)), Gen.campaigns(s))
+        .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getString(2))).toSet
+    }
+    val interpreted = enriched(Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false"))
+    val generated = enriched(Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    assert(interpreted.size === 3001)
+    assert(interpreted === generated)
+    val dict = new StringDict(Seq("ad1" -> "camp0", "ad2" -> "camp0"))
+    assert(HashLookup(Literal("ad2"), dict).eval() === org.apache.spark.unsafe.types.UTF8String.fromString("camp0"))
+    assert(HashLookup(Literal("ad3"), dict).eval() === null)
+    assert(HashLookup(Literal.create(null, org.apache.spark.sql.types.StringType), dict).eval() === null)
+  }
+
+  test("campaign lookup prints its entry count, not its entries") {
+    val out = Ysb.enrichCampaign(Gen.boundedEvents(spark, 10L), Gen.campaigns(spark))
+    val lookup = out.queryExecution.optimizedPlan.expressions
+      .flatMap(_.collect { case h: HashLookup => h }).head
+    assert(lookup.toString === s"hash_lookup(${lookup.child}, 1000 entries)")
+    assert(lookup.sql === s"hash_lookup(${lookup.child.sql})")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("1000 entries") && !plan.contains("camp99"))
   }
 }
