@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.streaming.LocalCheckpointFileManager
+import graft.fs.{NioLocalFileSystem, NioLocalFs}
 
 /** Session factory with the engine's scale-appropriate defaults, shared by
   * every main (Verify / Bench / Explain / harness benches) and the test
@@ -19,11 +19,12 @@ import graft.streaming.LocalCheckpointFileManager
   * splitting, and dynamic join-strategy switches are exactly the safety
   * nets a 100 TB run needs, and they cost nothing at test SF.
   *
-  * Streaming checkpoints on local paths are written by
-  * [[graft.streaming.LocalCheckpointFileManager]]: without libhadoop,
-  * Hadoop's local file system forks `chmod` and `readlink` for every
-  * checkpoint file, which was most of a small micro-batch's state-commit
-  * time. Other schemes keep Spark's default manager.
+  * `file:` paths go through [[graft.fs.RawNioFileSystem]] under both
+  * Hadoop file APIs: without libhadoop, Hadoop's own local file system
+  * forks `chmod` for every file and directory it creates and `readlink`
+  * for every `FileContext` rename. `FileSystem` (parquet, the persisted
+  * stores) stays checksummed; `FileContext` (Spark's streaming
+  * checkpoints) stays raw, so checkpoints carry no Hadoop `.crc`.
   */
 object GraftSession {
 
@@ -35,8 +36,8 @@ object GraftSession {
     "spark.sql.warehouse.dir" ->
       (sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse"),
     "spark.ui.enabled" -> "false",
-    "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[LocalCheckpointFileManager].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   /** A `local[cores]` builder carrying [[settings]]. */
   def builder(appName: String, cores: String, aqe: Boolean = true): SparkSession.Builder =

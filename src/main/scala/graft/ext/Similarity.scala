@@ -477,7 +477,9 @@ object Similarity {
         Seq("q_id", "n_id"), "left_anti")
       val wMmr = Window.partitionBy(col("q_id"))
         .orderBy(col("mmr").desc, col("n_id").asc)
-      rem.join(selected.select(col("q_id"), col("s_emb")), Seq("q_id"))
+      // selected is <= |Q|·(t-1) rows: broadcast it, so the strategy is not
+      // left to whichever AQE shuffle stage happens to finish first
+      rem.join(broadcast(selected.select(col("q_id"), col("s_emb"))), Seq("q_id"))
         .groupBy(col("q_id"), col("n_id"))
         .agg(first(col("cos_sim")).as("cos_sim"),
           first(col("n_emb")).as("n_emb"),

@@ -13,9 +13,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * null from `get` always means a miss. Two dictionaries are equal when
   * their entries are, and one prints as its entry count, so a plan that
   * carries a 1000-entry table stays one readable line.
+  *
+  * Every micro-batch serializes the plan's copy for the closure check and
+  * the task binary, and every task deserializes one. So a dictionary
+  * travels as one packed array: per string (key 0, value 0, key 1, ...)
+  * its varint byte length, then its UTF-8 bytes, about a third of a
+  * serialized `HashMap` of `UTF8String`s. A copy packs once and keeps the
+  * array; a deserialized copy rebuilds its table once, over the array.
   */
 final class StringDict(entries: Seq[(String, String)]) extends Serializable {
-  private val table = new java.util.HashMap[UTF8String, UTF8String](entries.size * 2)
+  @transient private var table = new java.util.HashMap[UTF8String, UTF8String](entries.size * 2)
+  @transient private var packed: Array[Byte] = _
   entries.foreach { case (k, v) =>
     require(k != null && v != null, "StringDict keys and values must be non-null")
     require(table.put(UTF8String.fromString(k), UTF8String.fromString(v)) == null,
@@ -32,8 +40,39 @@ final class StringDict(entries: Seq[(String, String)]) extends Serializable {
     case d: StringDict => table.equals(d.table)
     case _ => false
   }
-  override val hashCode: Int = table.hashCode
+  @transient override lazy val hashCode: Int = table.hashCode
   override def toString: String = s"$size entries"
+
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    if (packed == null) {
+      val b = new java.io.ByteArrayOutputStream
+      table.forEach { (k, v) =>
+        for (s <- Seq(k, v)) {
+          var n = s.numBytes
+          while (n >= 0x80) { b.write(n & 0x7f | 0x80); n >>>= 7 }
+          b.write(n)
+          s.writeTo(b)
+        }
+      }
+      packed = b.toByteArray
+    }
+    out.writeInt(packed.length)
+    out.write(packed)
+  }
+
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    packed = new Array[Byte](in.readInt())
+    in.readFully(packed)
+    table = new java.util.HashMap[UTF8String, UTF8String]()
+    var pos = 0
+    def next(): UTF8String = {
+      var (n, shift) = (0, 0)
+      while ({ val b = packed(pos); pos += 1; n |= (b & 0x7f) << shift; shift += 7; b < 0 }) ()
+      pos += n
+      UTF8String.fromBytes(packed, pos - n, n)
+    }
+    while (pos < packed.length) table.put(next(), next())
+  }
 }
 
 /** Hashed dictionary lookup: `dict[child]`, null when the key is absent or

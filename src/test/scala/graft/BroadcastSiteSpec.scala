@@ -76,6 +76,8 @@ class BroadcastSiteSpec extends SiteLint {
       (1, "fixed query-code frame restricted to probed cells (qs05)"),
     ("ext/Similarity.scala", "val cands = corpus.crossJoin(broadcast(queries))") ->
       (1, "fixed query set (qs06 MMR candidate pass)"),
+    ("ext/Similarity.scala", """rem.join(broadcast(selected.select(col("q_id"), col("s_emb"))), Seq("q_id"))""") ->
+      (1, "MMR selected set (qs06): |queries| * (t - 1) rows, t <= 3 selection rounds"),
     ("ext/Similarity.scala", """corpus.join(broadcast(queries), Seq("label", "bucket"))""") ->
       (1, "fixed query set, label+bucket keyed (qs11 filtered ANN)"),
     ("ext/Similarity.scala", """index.join(broadcast(queryCells), Seq("c_id"))""") ->

@@ -1,32 +1,34 @@
 package graft
 
 import java.net.URI
-import java.nio.file.{Files, Path => NioPath}
+import java.nio.file.{Files, Paths, Path => NioPath}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, CommitLog, CommitMetadata, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.LocalCheckpointFileManager
+import graft.fs.{NioLocalFileSystem, NioLocalFs, RawNioFileSystem}
 import graft.ysb.{Gen, Ysb}
 
-/** [[LocalCheckpointFileManager]]: the atomic-write contract Spark's
-  * checkpoint logs and state stores rely on, crash points included;
-  * checkpoints moving between it and Spark's default manager; and the
-  * session wiring that turns it on. */
+/** Streaming checkpoints over [[graft.fs.RawNioFileSystem]]: the session
+  * wiring of both Hadoop file APIs, the atomic-write contract Spark's
+  * checkpoint logs and state stores rely on (crash points included), and
+  * restarts, also from a checkpoint written before the file system
+  * existed. */
 class CheckpointFileManagerSpec extends SparkSpec {
   import CheckpointFileManagerSpec._
 
   private def tempDir(): NioPath = Files.createTempDirectory("graft-cfm-")
+  private def hadoopConf = spark.sessionState.newHadoopConf()
   private def manager(dir: NioPath): CheckpointFileManager =
-    CheckpointFileManager.create(new Path(dir.toUri), spark.sessionState.newHadoopConf())
+    CheckpointFileManager.create(new Path(dir.toUri), hadoopConf)
   private def hpath(p: NioPath): Path = new Path(p.toUri)
   private def write(fm: CheckpointFileManager, p: NioPath, bytes: Array[Byte],
       overwrite: Boolean): Unit = {
@@ -42,16 +44,35 @@ class CheckpointFileManagerSpec extends SparkSpec {
     val s = Files.list(dir)
     try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
   }
-  private def listed(fm: CheckpointFileManager, dir: NioPath): Set[String] =
-    fm.list(hpath(dir)).map(_.getPath.getName).toSet
+  /** A temp file Spark's checkpoint manager writes before publishing `name`. */
+  private def isTemp(name: String, file: String): Boolean =
+    file.matches(s"\\.${java.util.regex.Pattern.quote(name)}\\.[0-9a-f-]{36}\\.tmp")
   private def bytes(n: Int, seed: Long): Array[Byte] = {
     val b = new Array[Byte](n)
     new Random(seed).nextBytes(b)
     b
   }
 
-  test("the session routes local checkpoints to LocalCheckpointFileManager") {
-    assert(manager(tempDir()).isInstanceOf[LocalCheckpointFileManager])
+  test("GraftSession's FileSystem and FileContext for file: resolve to the nio file system") {
+    val fs = FileSystem.get(URI.create("file:///"), hadoopConf)
+    assert(fs.isInstanceOf[NioLocalFileSystem])
+    assert(fs.asInstanceOf[NioLocalFileSystem].getRaw.isInstanceOf[RawNioFileSystem])
+    val fc = FileContext.getFileContext(URI.create("file:///"), hadoopConf)
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    assert(manager(tempDir()).isInstanceOf[FileContextBasedCheckpointFileManager])
+  }
+
+  test("a parquet write keeps Hadoop's .crc sidecars and file modes") {
+    val out = tempDir().resolve("t")
+    spark.range(100).repartition(2).write.parquet(out.toString)
+    val names = rawNames(out)
+    val parts = names.filter(_.startsWith("part-"))
+    assert(parts.size === 2)
+    assert(parts.forall(p => names(s".$p.crc")), names)
+    // Hadoop's default file mode under the default umask 022
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(out.resolve(parts.head)))
+      === "rw-r--r--")
+    assert(spark.read.parquet(out.toString).count() === 100)
   }
 
   test("createAtomic then close publishes the whole file, and only it") {
@@ -85,25 +106,46 @@ class CheckpointFileManagerSpec extends SparkSpec {
       write(fm, target, bytes(2000, 4), overwrite = false)
     }
     assert(Files.readAllBytes(target) sameElements first)
-    assert(rawNames(dir) === Set("7"))
+    // Spark's rename stream rethrows without deleting its temp file, as on
+    // any Hadoop file system: one temp is left beside the target
+    val leftover = rawNames(dir) - "7"
+    assert(leftover.size === 1 && leftover.forall(isTemp("7", _)), rawNames(dir))
+    // the rename itself: no overwrite fails and leaves both files as they were
+    val fc = FileContext.getFileContext(URI.create("file:///"), hadoopConf)
+    val src = dir.resolve("src")
+    Files.write(src, bytes(10, 17))
+    intercept[FileAlreadyExistsException] {
+      fc.rename(hpath(src), hpath(target), Options.Rename.NONE)
+    }
+    assert(Files.readAllBytes(target) sameElements first)
+    assert(Files.readAllBytes(src) sameElements bytes(10, 17))
+    fc.rename(hpath(src), hpath(target), Options.Rename.OVERWRITE)
+    assert(Files.readAllBytes(target) sameElements bytes(10, 17))
     val second = bytes(3000, 5)
     write(fm, target, second, overwrite = true)
     assert(read(fm, target) sameElements second)
-    assert(rawNames(dir) === Set("7"))
+    assert(rawNames(dir) === leftover + "7")
   }
 
   test("temp files never show in list, in flight or left by a crash") {
     val dir = tempDir()
-    val fm = manager(dir)
-    write(fm, dir.resolve("0"), bytes(10, 6), overwrite = false)
-    val out = fm.createAtomic(hpath(dir.resolve("1")), overwriteIfPossible = false)
+    new CommitLog(spark, dir.toString).add(0, CommitMetadata())
+    // batch 1's commit is in flight: written and flushed, not yet renamed
+    val out = manager(dir).createAtomic(hpath(dir.resolve("1")), overwriteIfPossible = false)
     out.write(bytes(100, 7))
     out.flush()
     assert(rawNames(dir).size === 2, "the temp file exists on disk")
-    assert(listed(fm, dir) === Set("0"))
-    assert(fm.list(hpath(dir), (_: Path) => true).map(_.getPath.getName).toSet === Set("0"))
-    out.close()
-    assert(listed(fm, dir) === Set("0", "1"))
+    // Spark's manager lists it; the commit log skips it by name
+    assert(manager(dir).list(hpath(dir)).map(_.getPath.getName).toSet === rawNames(dir))
+    def batches(log: CommitLog): Seq[Long] = log.get(None, None).map(_._1).toSeq
+    assert(batches(new CommitLog(spark, dir.toString)) === Seq(0L))
+    // the process dies: the temp file stays behind, and a restart sees batch 0
+    out.getWrappedStream.close()
+    val restarted = new CommitLog(spark, dir.toString)
+    assert(batches(restarted) === Seq(0L))
+    assert(restarted.getLatestBatchId() === Some(0L))
+    assert(restarted.add(1, CommitMetadata()))
+    assert(batches(restarted) === Seq(0L, 1L))
   }
 
   test("a crash after the temp write and before the rename leaves the pre-write state") {
@@ -122,75 +164,18 @@ class CheckpointFileManagerSpec extends SparkSpec {
     val restarted = manager(dir)
     assert(read(restarted, dir.resolve("3.delta")) sameElements before)
     assert(!restarted.exists(hpath(dir.resolve("4"))))
-    assert(listed(restarted, dir) === Set("3.delta"))
+    // Spark's manager lists the crash's temp files; its logs and state
+    // stores skip them by name
+    val listed = restarted.list(hpath(dir)).map(_.getPath.getName).toSet
+    assert(listed.filterNot(_.startsWith(".")) === Set("3.delta"))
+    assert(listed.filter(_.startsWith(".")).toSeq.sorted.zip(Seq("3.delta", "4"))
+      .forall { case (t, name) => isTemp(name, t) } && listed.size === 3, listed)
     // the interrupted writes can be redone
     val after = bytes(600, 10)
     write(restarted, dir.resolve("3.delta"), after, overwrite = true)
     write(restarted, dir.resolve("4"), after, overwrite = false)
     assert(read(restarted, dir.resolve("3.delta")) sameElements after)
     assert(read(restarted, dir.resolve("4")) sameElements after)
-  }
-
-  test("a non-file path is handled by Spark's default manager class") {
-    val conf = spark.sessionState.newHadoopConf()
-    conf.set("fs.grafttest.impl", classOf[TestSchemeFs].getName)
-    conf.setBoolean("fs.grafttest.impl.disable.cache", true)
-    val dir = tempDir()
-    val root = new Path(s"grafttest://${dir.toUri.getPath}")
-    def sparkPick(c: Configuration): Class[_] = {
-      val plain = new Configuration(c)
-      plain.unset(CheckpointFileManagerClassKey)
-      CheckpointFileManager.create(root, plain).getClass
-    }
-    // with and without a FileContext binding for the scheme: Spark picks
-    // FileContextBased- and FileSystemBasedCheckpointFileManager
-    val withAfs = new Configuration(conf)
-    withAfs.set("fs.AbstractFileSystem.grafttest.impl", classOf[TestSchemeAfs].getName)
-    for (c <- Seq(withAfs, conf)) {
-      val fm = CheckpointFileManager.create(root, c).asInstanceOf[LocalCheckpointFileManager]
-      assert(fm.sparkDefault.getClass === sparkPick(c))
-      val out = fm.createAtomic(new Path(root, "0"), overwriteIfPossible = false)
-      assert(out.getClass.getSimpleName === "RenameBasedFSDataOutputStream")
-      out.write(Array[Byte](1, 2, 3))
-      out.close()
-      val in = fm.open(new Path(root, "0"))
-      try assert(in.readAllBytes().toSeq === Seq[Byte](1, 2, 3)) finally in.close()
-      fm.delete(new Path(root, "0"))
-    }
-    assert(sparkPick(withAfs).getSimpleName === "FileContextBasedCheckpointFileManager")
-    assert(sparkPick(conf).getSimpleName === "FileSystemBasedCheckpointFileManager")
-  }
-
-  test("a stale Hadoop .crc sidecar never fails a later read") {
-    val dir = tempDir()
-    val plainConf = spark.sessionState.newHadoopConf()
-    plainConf.unset(CheckpointFileManagerClassKey)
-    val sparkFm = CheckpointFileManager.create(hpath(dir), plainConf)
-    assert(!sparkFm.isInstanceOf[LocalCheckpointFileManager])
-    val fm = manager(dir)
-    val hadoopFs = FileSystem.getLocal(plainConf) // verifies sidecars on read
-    def hadoopRead(p: NioPath): Array[Byte] = {
-      val in = hadoopFs.open(hpath(p))
-      try in.readAllBytes() finally in.close()
-    }
-    // overwrite: Spark's manager leaves `.3.delta.crc`, the new bytes replace it
-    write(sparkFm, dir.resolve("3.delta"), bytes(300, 11), overwrite = true)
-    assert(Files.exists(dir.resolve(".3.delta.crc")))
-    val replaced = bytes(400, 12)
-    write(fm, dir.resolve("3.delta"), replaced, overwrite = true)
-    assert(hadoopRead(dir.resolve("3.delta")) sameElements replaced)
-    assert(read(sparkFm, dir.resolve("3.delta")) sameElements replaced)
-    // no overwrite: a sidecar whose file is gone (a commit lost in a crash)
-    write(sparkFm, dir.resolve("2"), bytes(50, 13), overwrite = false)
-    Files.delete(dir.resolve("2"))
-    val redone = bytes(60, 14)
-    write(fm, dir.resolve("2"), redone, overwrite = false)
-    assert(hadoopRead(dir.resolve("2")) sameElements redone)
-    // the reverse: Spark's manager over a file written without a sidecar
-    val back = bytes(70, 15)
-    write(sparkFm, dir.resolve("3.delta"), back, overwrite = true)
-    assert(read(fm, dir.resolve("3.delta")) sameElements back)
-    assert(hadoopRead(dir.resolve("3.delta")) sameElements back)
   }
 
   /** YSB on the replay source, update mode, into a batch-keyed sink. */
@@ -208,49 +193,53 @@ class CheckpointFileManagerSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
   }
 
-  /** Runs the first half of the replay under `first`, loses the last commit
-    * as a crash would (its Hadoop sidecar, if any, stays), and finishes
-    * under `second`. */
-  private def switchManagers(first: SparkSession, second: SparkSession): Unit = {
-    val ckpt = tempDir()
-    val sink = mutable.Map.empty[Long, Seq[Row]]
-    ysbRun(first, ckpt.toString, TotalRows / 2, sink)
-    assert(sink.keySet === Set(0L, 1L, 2L))
-    Files.delete(ckpt.resolve("commits/2"))
-    ysbRun(second, ckpt.toString, TotalRows, sink)
-    assert(sink.keySet === (0L to 5L).toSet)
-
+  /** Finishes the replay on a checkpoint that lost its last commit (batch
+    * 2) as a crash would, and returns each (window, campaign)'s final
+    * (count, last update) over every batch in `sink`: each one equals its
+    * closed form, and the state store holds every view. */
+  private def finishAfterLostCommit(ckpt: NioPath,
+      sink: mutable.Map[Long, Seq[Row]]): Map[(Long, String), (Long, Long)] = {
+    assert(!Files.exists(ckpt.resolve("commits/2")) && Files.exists(ckpt.resolve("offsets/2")))
+    ysbRun(spark.newSession(), ckpt.toString, TotalRows, sink)
     // update mode: a key's final value is its row in the latest batch
     val finals = sink.toSeq.sortBy(_._1).flatMap(_._2).map { r =>
       (r.getAs[Long]("time_window"), r.getAs[String]("campaign_id")) ->
         (r.getAs[Long]("count"), r.getAs[java.sql.Timestamp]("last_update").getTime)
     }.toMap
-    assert(finals === closedForm(TotalRows))
-    // every state version reads back, through the checksum-verifying reader
+    assert(finals === closedForm(TotalRows).filter { case (k, _) => finals.contains(k) })
     val state = spark.read.format("statestore").load(ckpt.toString)
       .select(col("value.count").as("n")).agg(sum("n")).head().getLong(0)
     assert(state === (0L until TotalRows).count(_ % 3 == 0))
-    val hadoopFs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
-    val files = Files.walk(ckpt).iterator().asScala.filter(Files.isRegularFile(_))
-      .filterNot(p => p.getFileName.toString.startsWith(".")).toSeq
-    files.foreach { p =>
-      val in = hadoopFs.open(hpath(p))
-      try in.readAllBytes() finally in.close()
+    finals
+  }
+
+  test("restart: YSB on the replay source resumes after its last commit is lost, exactly once") {
+    val ckpt = tempDir()
+    val sink = mutable.Map.empty[Long, Seq[Row]]
+    ysbRun(spark.newSession(), ckpt.toString, TotalRows / 2, sink)
+    assert(sink.keySet === Set(0L, 1L, 2L))
+    Files.delete(ckpt.resolve("commits/2"))
+    assert(finishAfterLostCommit(ckpt, sink) === closedForm(TotalRows))
+    assert(sink.keySet === (0L to 5L).toSet)
+  }
+
+  test("restart: a checkpoint in the layout written before the nio file system (no .crc) resumes exactly once") {
+    // The fixture is the first half of the same replay (3 batches of
+    // RowsPerBatch rows, 4 state partitions) written by the streaming
+    // checkpoint manager GraftSession used before the file system, with
+    // commits/2 deleted as a crash would; it has no Hadoop .crc sidecar.
+    val fixture = Paths.get(getClass.getResource("/ysb-replay-checkpoint-no-crc").toURI)
+    val ckpt = tempDir()
+    Files.walk(fixture).iterator().asScala.foreach { p =>
+      val to = ckpt.resolve(fixture.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
     }
-  }
-
-  private def sparkDefaultSession(): SparkSession = {
-    val s = spark.newSession()
-    s.conf.unset(CheckpointFileManagerClassKey)
-    s
-  }
-
-  test("restart: Spark's default manager, then this one, exactly once across the switch") {
-    switchManagers(sparkDefaultSession(), spark.newSession())
-  }
-
-  test("restart: this manager, then Spark's default, exactly once across the switch") {
-    switchManagers(spark.newSession(), sparkDefaultSession())
+    assert(!Files.walk(ckpt).iterator().asScala.exists(_.getFileName.toString.startsWith(".")))
+    val sink = mutable.Map.empty[Long, Seq[Row]]
+    val finals = finishAfterLostCommit(ckpt, sink)
+    assert(sink.keySet === (2L to 5L).toSet)
+    // batch 2 onwards touch the second and third windows only
+    assert(finals.keySet === closedForm(TotalRows).keySet.filter(_._1 > BaseMs))
   }
 
   test("a GraftSession query leaves no Hadoop .crc sidecar in its checkpoint") {
@@ -278,7 +267,6 @@ class CheckpointFileManagerSpec extends SparkSpec {
 }
 
 object CheckpointFileManagerSpec {
-  val CheckpointFileManagerClassKey = "spark.sql.streaming.checkpointFileManagerClass"
   val TotalRows = 30000L
   val RowsPerBatch = 5000L
   private val BaseMs = 1704067200000L // the replay source's event-time origin
@@ -290,14 +278,4 @@ object CheckpointFileManagerSpec {
     (0L until total).filter(_ % 3 == 0)
       .groupBy(i => (BaseMs + i / 10000 * 10000, s"camp${i % 1000 / 10}"))
       .map { case (k, is) => k -> (is.size.toLong, BaseMs + is.max) }
-
-  /** A `RawLocalFileSystem` under another scheme. */
-  class TestSchemeFs extends RawLocalFileSystem {
-    override def getUri: URI = URI.create("grafttest:///")
-    override def getScheme: String = "grafttest"
-  }
-
-  /** The `FileContext` binding of [[TestSchemeFs]]. */
-  class TestSchemeAfs(uri: URI, conf: Configuration)
-      extends DelegateToFileSystem(uri, new TestSchemeFs, conf, "grafttest", false)
 }

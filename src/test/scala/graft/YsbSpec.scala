@@ -1,11 +1,15 @@
 package graft
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{HashLookup, StringDict}
 import graft.ysb.{CampaignAd, Event, Gen, Ysb}
@@ -131,5 +135,41 @@ class YsbSpec extends SparkSpec {
     assert(lookup.sql === s"hash_lookup(${lookup.child.sql})")
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("1000 entries") && !plan.contains("camp99"))
+  }
+
+  test("campaign dictionary: a serialized copy keeps every entry in at most half a HashMap's bytes") {
+    def serialize(o: AnyRef): Array[Byte] = {
+      val b = new ByteArrayOutputStream
+      val out = new ObjectOutputStream(b)
+      try out.writeObject(o) finally out.close()
+      b.toByteArray
+    }
+    def copy(d: StringDict): StringDict =
+      new ObjectInputStream(new ByteArrayInputStream(serialize(d))).readObject().asInstanceOf[StringDict]
+    def u(s: String) = UTF8String.fromString(s)
+    val pairs = Gen.campaigns(spark).collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    val dict = new StringDict(pairs)
+    val back = copy(dict)
+    assert(back.size === 1000)
+    pairs.foreach { case (k, v) => assert(back.get(u(k)) === u(v), k) }
+    assert(back.get(u("ad1000")) === null)
+    assert(HashLookup(Literal.create(null, StringType), back).eval() === null)
+    assert(back === dict && back.hashCode === dict.hashCode)
+    assert(back !== new StringDict(pairs.tail))
+    assert(back !== new StringDict(pairs.updated(0, pairs.head._1 -> "camp-x")))
+    assert(back.toString === "1000 entries")
+    // Spark's closure serializer, which ships the task binary
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    assert(ser.deserialize[StringDict](ser.serialize(dict)) === dict)
+    // empty, multi-byte and long (multi-byte length) strings
+    val odd = Seq("" -> "empty", "ad\u00e9" -> "\u00fc" * 200, "k" * 300 -> "")
+    val oddBack = copy(new StringDict(odd))
+    odd.foreach { case (k, v) => assert(oddBack.get(u(k)) === u(v)) }
+    assert(oddBack === new StringDict(odd))
+    // the form it replaced: a Java-serialized HashMap of UTF8Strings
+    val map = new java.util.HashMap[UTF8String, UTF8String]()
+    pairs.foreach { case (k, v) => map.put(u(k), u(v)) }
+    assert(serialize(dict).length * 2 <= serialize(map).length,
+      s"${serialize(dict).length} bytes vs ${serialize(map).length}")
   }
 }
