@@ -277,7 +277,6 @@ object Similarity {
   private def qs03(s: SparkSession, d: String): DataFrame = ivfAnn(s, d)
 
   private val qs03Sql = {
-    val qcos = Vectors.cosineSql("v.embedding", "c.embedding")
     val cos = Vectors.cosineSql("q.q_emb", "n.n_emb")
     s"""WITH cents AS (
        |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
@@ -433,7 +432,6 @@ object Similarity {
   // penalty set), matching the published formulation.
   // ---------------------------------------------------------------------
   private val MmrC = 8      // relevance candidates per query
-  private val MmrK = 3      // results selected per query
   private val MmrLambda = 0.7
 
   private def qs06(s: SparkSession, d: String): DataFrame =

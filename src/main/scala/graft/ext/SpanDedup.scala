@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.sources.Tables
+import graft.store.{FileOps, PartitionedStore}
+import graft.store.PartitionedStore.Replace
 
 /** Substring-level and incremental deduplication over `documents` — the two
   * dedup faces qd01–qd11 don't cover:
@@ -358,7 +360,7 @@ object SpanDedup {
   // the batch's ids hash to). Snapshot expiry falls out of the design:
   // there are no retained versions to expire — appended files accumulate
   // until compact() folds each partition, the amortized O(|store|/C)
-  // move IngestCurve times separately. The partition key is the DOC id,
+  // move of the log-structured trade. The partition key is the DOC id,
   // not the content hash: upsert-by-doc must locate a re-ingested doc's
   // OLD rows, and a content-keyed layout (substr(h,1,1)) cannot —
   // changed text moves the row to an unrelated partition, forcing a full
@@ -369,9 +371,10 @@ object SpanDedup {
   // bands × BucketCap) compares, both joins merge-pinned, the store is
   // never broadcast. State never lives in executor memory: it is a
   // parquet table like any other, so the loop scales to a store far
-  // larger than the cluster. At cluster scale the partition swap is a
-  // transactional-table-format commit (Iceberg/Delta replace-partition);
-  // here the same file layout is swapped with filesystem moves.
+  // larger than the cluster. Each merge is one commit of both tables
+  // through graft.store.PartitionedStore (its scaladoc holds the commit
+  // and recovery protocol); at cluster scale that commit is a table
+  // format's replace-partition transaction (Iceberg/Delta).
   // ---------------------------------------------------------------------
 
   /** Seen-corpus ingest batch count (the final classify is batch
@@ -428,36 +431,16 @@ object SpanDedup {
     * See the layout note above for why the key is the DOC id. */
   private def dpCol = substring(md5(col("doc_id").cast("string")), 1, 1)
 
-  /** One qd18 temp-root cleanup hook per JVM (ADVICE r11: a hook per
-    * invocation accumulated across bench iterations and SF sweeps). */
-  private val tempRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(p.toFile)
-  }
-  private lazy val tempRootHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempRoots.forEach(p => rmTree(p))
-    })): Unit
-  }
-  private[graft] def registerTempRoot(p: java.nio.file.Path): Unit = {
-    tempRootHook; tempRoots.add(p): Unit
-  }
-
   /** The hash-prefix-partitioned live signature store — see the layout
-    * note above. All paths are plain parquet directories with `dp=X`
-    * partition subdirs; partition swaps are filesystem moves (the
-    * single-JVM stand-in for a table format's replace-partition
-    * commit). */
-  private[graft] final case class SignatureStore(root: java.nio.file.Path,
-      overlapMerge: Boolean = true) {
+    * note above: tables `h` and `chunks` under `root`, `dp=X` partition
+    * directories, every change committed through [[PartitionedStore]]
+    * (whose scaladoc holds the commit and recovery protocol). Opening the
+    * store recovers an interrupted change. */
+  private[graft] final class SignatureStore(s: SparkSession, root: String,
+      overlapMerge: Boolean, ops: FileOps) {
     import org.apache.spark.sql.types._
 
-    private val hDir = s"$root/h"
-    private val cDir = s"$root/chunks"
+    private val store = new PartitionedStore(s, root, Seq("h", "chunks"), ops)
     private val hSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("h", StringType),
       StructField("dp", StringType)))
@@ -466,19 +449,10 @@ object SpanDedup {
       StructField("chunk", LongType), StructField("simhash", LongType),
       StructField("dp", StringType)))
 
-    def init(): this.type = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(hDir))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cDir))
-      recoverSwap() // recover a crashed swap (roll back or forward)
-      this
-    }
-
-    def readH(s: SparkSession): DataFrame =
-      s.read.schema(hSchema).parquet(hDir)
-        .select(col("doc_id"), col("h"))
-    def readChunks(s: SparkSession): DataFrame =
-      s.read.schema(cSchema).parquet(cDir)
-        .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
+    def readH: DataFrame =
+      store.read("h", hSchema).select(col("doc_id"), col("h"))
+    def readChunks: DataFrame = store.read("chunks", cSchema)
+      .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
 
     /** Read-only half of [[merge]]: which dp partitions hold doc ids the
       * batch replaces (empty → the merge is a pure append). Split out
@@ -487,14 +461,14 @@ object SpanDedup {
       * pre-merge store state and neither mutates anything, so the
       * overlap is semantics-free; only the mutating half must wait for
       * the classification to be pinned. */
-    def probeTouched(s: SparkSession, batchH: DataFrame): Seq[String] = {
+    def probeTouched(batchH: DataFrame): Seq[String] = {
       val bH = batchH.withColumn("dp", dpCol)
       val batchDocs = bH.select(col("dp"), col("doc_id")).distinct()
       // partition-pruned existence probe: read doc_id from ONLY the
       // partitions the batch's ids hash to; ≤ 16 dp keys come back
       val batchDps = batchDocs.select(col("dp")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
-      val replaceDocs = s.read.schema(hSchema).parquet(hDir)
+      val replaceDocs = store.read("h", hSchema)
         .filter(col("dp").isin(batchDps: _*)).select(col("doc_id"))
         .join(batchDocs.select(col("doc_id")).hint("merge"),
           Seq("doc_id"), "left_semi")
@@ -502,183 +476,54 @@ object SpanDedup {
         .collect().map(_.getString(0)).toSeq.sorted
     }
 
-    /** MERGE one batch's signatures in. Returns the dp keys that needed
-      * a partition REWRITE (empty for the pure-append case of all-new
-      * doc ids — then the only work is writing O(|batch|) new files).
-      * `touchedPre`: a [[probeTouched]] result computed by the caller
-      * (possibly overlapped with other read-only work) — MUST come from
-      * the same batch against the current store state. */
-    def merge(s: SparkSession, batchH: DataFrame, batchC: DataFrame,
+    /** MERGE one batch's signatures in, as one change to both tables.
+      * Returns the dp keys whose partitions were REWRITTEN (upsertByDoc of
+      * the batch slice into the store slice); the batch's rows for every
+      * other dp are appended as one new file per partition — for the
+      * pure-append case of all-new doc ids that is the only work,
+      * O(|batch|). `touchedPre`: a [[probeTouched]] result computed by the
+      * caller (possibly overlapped with other read-only work) — MUST come
+      * from the same batch against the current store state.
+      *
+      * The h and chunks stagings are INDEPENDENT jobs (different inputs,
+      * different output dirs), overlapped from a second thread (guide
+      * §2.6, optimization r19) so one side's tail back-fills the cores the
+      * other leaves idle; the commit waits for both. */
+    def merge(batchH: DataFrame, batchC: DataFrame,
         touchedPre: Option[Seq[String]] = None): Seq[String] = {
-      val bH = batchH.withColumn("dp", dpCol)
-      val bC = batchC.withColumn("dp", dpCol)
-      val touched = touchedPre.getOrElse(probeTouched(s, batchH))
-      if (touched.nonEmpty) {
-        // rewrite ONLY the touched partitions: upsert the batch slice
-        // into the store slice, stage to a sibling dir, swap dirs in.
-        // Both tables stage (the actions that drain every read of the
-        // live slices) before either swaps. The h and chunks sides of
-        // each step are INDEPENDENT jobs (different inputs, different
-        // output dirs) run sequentially only by driver-code ordering —
-        // overlapped from a second thread (guide §2.6, optimization
-        // r19) so one side's stage/append tail back-fills the cores the
-        // other leaves idle. The swap itself stays sequential: it is
-        // the filesystem transaction both sides must reach first.
-        var hStage: String = null
-        var cStage: String = null
-        inParallel(
-          { hStage = stageTouched(s, hDir, hSchema, touched,
-              bH.filter(col("dp").isin(touched: _*))) },
-          { cStage = stageTouched(s, cDir, cSchema, touched,
-              bC.filter(col("dp").isin(touched: _*))) })
-        swapPartitions(Seq(hStage -> hDir, cStage -> cDir), touched)
-        inParallel(
-          appendRows(bH.filter(!col("dp").isin(touched: _*)), hDir),
-          appendRows(bC.filter(!col("dp").isin(touched: _*)), cDir))
-      } else {
-        inParallel(appendRows(bH, hDir), appendRows(bC, cDir))
+      val touched = touchedPre.getOrElse(probeTouched(batchH))
+      def rows(table: String, schema: StructType, batch: DataFrame) = {
+        val b = batch.withColumn("dp", dpCol)
+        if (touched.isEmpty) b
+        else upsertByDoc(
+            store.read(table, schema).filter(col("dp").isin(touched: _*)).drop("dp"),
+            b.filter(col("dp").isin(touched: _*)).drop("dp"))
+          .withColumn("dp", dpCol)
+          .union(b.filter(!col("dp").isin(touched: _*)))
+      }
+      store.transact(Replace.Entries(touched.map(x => s"dp=$x").toSet)) {
+        overlapped(overlapMerge)(
+          store.stage("h", rows("h", hSchema, batchH), "dp"),
+          store.stage("chunks", rows("chunks", cSchema, batchC), "dp"))
       }
       touched
     }
 
-    private def inParallel(a: => Unit, b: => Unit): Unit =
-      overlapped(overlapMerge)(a, b)
-
-    // One file per touched dp partition per append (optimization r18,
-    // guide §6 small files): an un-repartitioned partitionBy write fans
-    // each batch into (write tasks × dp keys) tiny files — at 32 local
-    // tasks × 16 prefixes that is up to 512 files per append per table,
-    // and EVERY later batch's classify + existence probe pays the
-    // per-file open/list overhead back. The dp repartition is a shuffle
-    // of batch-sized signature rows (trivial next to the store reads it
-    // saves); at cluster scale it is exactly Iceberg's
-    // write.distribution-mode=hash trade (AB_PROBE_r18.jsonl: 1.64× at
-    // 30× over the fanout shape).
-    private def appendRows(rows: DataFrame, dir: String): Unit =
-      rows.repartition(col("dp"))
-        .write.mode("append").partitionBy("dp").parquet(dir)
-
-    /** Path of the swap commit marker — ONE file at the store root (not
-      * per-table), written by [[swapPartitions]] only after EVERY staged
-      * partition of EVERY table in the swap has been placed. A single
-      * root-level marker is what makes hard-crash recovery transactional
-      * ACROSS the h and chunks tables: per-table markers would let a
-      * crash between two marker writes roll one table forward and the
-      * other back (ADVICE r14). */
-    private val swapMarker = java.nio.file.Paths.get(s"$root/SWAP_COMMITTED")
-
-    /** Hard-crash recovery (ADVICE r13/r14). Decides ONCE, from the
-      * root-level commit marker, whether a crashed swap rolls FORWARD
-      * (marker present: every placement finished, the asides are
-      * superseded old copies — drop them) or BACK (marker absent: the
-      * crash landed mid-aside-move or mid-placement — delete any
-      * partially-placed new copy and restore the aside original), then
-      * applies that one decision to BOTH tables. Either way the h and
-      * chunks tables land on the same side of the swap. Idempotent: a
-      * crash inside recovery re-enters the same branch. Called at store
-      * open ([[init]]) and at swap entry as a backstop. */
-    private def recoverSwap(): Unit = {
-      import java.nio.file._
-      val forward = Files.exists(swapMarker)
-      Seq(hDir, cDir).foreach { dir =>
-        val aside = Paths.get(s"$dir.aside")
-        if (Files.exists(aside)) {
-          if (!forward) {
-            // roll back: aside holds the pre-swap original; any live
-            // dp= dir that coexists with an aside entry is a partially
-            // placed new copy — remove it and put the original back.
-            Option(aside.toFile.listFiles()).getOrElse(Array.empty)
-              .filter(_.getName.startsWith("dp=")).foreach { orphan =>
-                val live = Paths.get(dir, orphan.getName)
-                if (Files.exists(live)) rmTree(live)
-                Files.move(orphan.toPath, live): Unit
-              }
-          }
-          rmTree(aside)
-        }
-      }
-      Files.deleteIfExists(swapMarker): Unit
-    }
-
-    private def stageTouched(s: SparkSession, dir: String,
-        schema: org.apache.spark.sql.types.StructType, touched: Seq[String],
-        batchSlice: DataFrame): String = {
-      val stage = s"$root/stage_${new java.io.File(dir).getName}"
-      val slice = s.read.schema(schema).parquet(dir)
-        .filter(col("dp").isin(touched: _*))
-      upsertByDoc(slice.drop("dp"), batchSlice.drop("dp"))
-        .withColumn("dp", dpCol)
-        .write.mode("overwrite").partitionBy("dp").parquet(stage)
-      stage
-    }
-
-    /** Replace `dp=X` dirs for every touched X with the staged versions,
-      * across ALL the given (stage, dir) tables under ONE restore scope.
-      * Every live partition moves ASIDE first, then all staged partitions
-      * move in, then the root-level [[swapMarker]] commits the swap, and
-      * only then are the asides deleted — any in-process failure puts
-      * every moved partition of every table back, and a HARD crash at any
-      * point is resolved transactionally by [[recoverSwap]]: marker
-      * absent → every table rolls back to its aside originals; marker
-      * present → every table keeps the placed copies. So a mid-swap crash
-      * can neither lose a partition nor leave the h and chunks tables
-      * desynchronized (ADVICE r12/r14; a table format would commit this
-      * atomically — this is the filesystem approximation). */
-    private def swapPartitions(swaps: Seq[(String, String)],
-        touched: Seq[String]): Unit = {
-      import java.nio.file._
-      // (live, aside, staged) across every table, same touched keys
-      val moves = for ((stage, dir) <- swaps; x <- touched) yield
-        (Paths.get(dir, s"dp=$x"), Paths.get(s"$dir.aside", s"dp=$x"),
-          Paths.get(stage, s"dp=$x"))
-      var movedAside: List[(Path, Path)] = Nil // (aside, live) to restore
-      var placed: List[Path] = Nil             // staged dirs now live
-      try {
-        recoverSwap() // backstop; init() already ran this at open
-        swaps.foreach { case (_, dir) =>
-          Files.createDirectories(Paths.get(s"$dir.aside")): Unit
-        }
-        moves.foreach { case (live, aside, _) =>
-          if (Files.exists(live)) {
-            Files.move(live, aside); movedAside ::= (aside, live)
-          }
-        }
-        moves.foreach { case (live, _, staged) =>
-          if (Files.exists(staged)) { Files.move(staged, live); placed ::= live }
-        }
-        Files.createFile(swapMarker): Unit // commit point (all placed)
-      } catch {
-        case e: Throwable =>
-          placed.foreach(rmTree)          // undo half-placed stages
-          movedAside.foreach { case (aside, live) =>
-            if (Files.exists(live)) rmTree(live)
-            Files.move(aside, live): Unit // originals back, both tables
-          }
-          swaps.foreach { case (_, dir) => rmTree(Paths.get(s"$dir.aside")) }
-          throw e
-      }
-      swaps.foreach { case (_, dir) => rmTree(Paths.get(s"$dir.aside")) }
-      Files.deleteIfExists(swapMarker): Unit
-      swaps.foreach { case (stage, _) => rmTree(Paths.get(stage)) }
-    }
-
     /** Fold each partition's accumulated append files into one file —
       * the amortized O(|store|/C) compaction move of the log-structured
-      * trade. Partition-parallel; IngestCurve times it separately. */
-    def compact(s: SparkSession): Unit = {
-      Seq((hDir, hSchema), (cDir, cSchema)).foreach { case (dir, schema) =>
-        val stage = s"$root/compact_${new java.io.File(dir).getName}"
-        s.read.schema(schema).parquet(dir)
-          .repartition(col("dp"))
-          .write.mode("overwrite").partitionBy("dp").parquet(stage)
-        val touched = new java.io.File(dir).listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("dp="))
-          .map(_.getName.stripPrefix("dp=")).toSeq
-        swapPartitions(Seq(stage -> dir), touched)
-      }
+      * trade, one change to both tables. */
+    def compact(): Unit = store.transact(Replace.All) {
+      store.stage("h", store.read("h", hSchema), "dp")
+      store.stage("chunks", store.read("chunks", cSchema), "dp")
     }
 
-    def delete(): Unit = rmTree(root)
+    def delete(): Unit = store.delete()
+  }
+
+  private[graft] object SignatureStore {
+    def open(s: SparkSession, root: String,
+        overlapMerge: Boolean = true): SignatureStore =
+      new SignatureStore(s, root, overlapMerge, FileOps(s, root))
   }
 
   /** Run two independent steps concurrently (`a` on the calling thread,
@@ -712,9 +557,8 @@ object SpanDedup {
     * are then deleted eagerly instead of lingering until JVM exit. */
   private[graft] def ingestSequentially(s: SparkSession, docs: DataFrame,
       overlapMerge: Boolean = true): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-qd18-state-")
-    registerTempRoot(root)
-    val store = SignatureStore(root, overlapMerge).init()
+    val store = SignatureStore.open(s,
+      PartitionedStore.tempRoot("graft-qd18-state-").toString, overlapMerge)
     val outs = (0 to IngestBatches).map { b =>
       val batch = docs.withColumn("bid", batchIdCol)
         .filter(col("bid") === b).drop("bid")
@@ -722,7 +566,7 @@ object SpanDedup {
       // batch: pinning measured 1.12× SLOWER at 30× (AB_PROBE_r18.jsonl) —
       // the BlockManager round-trip costs more than the re-scans it saves.
       val clsFrame = classifyAgainstState(batch,
-          store.readH(s), store.readChunks(s))
+          store.readH, store.readChunks)
         .withColumn("batch_id", lit(b.toLong))
       if (b == IngestBatches) clsFrame.localCheckpoint(true)
       else {
@@ -735,8 +579,8 @@ object SpanDedup {
         var touched: Seq[String] = null
         overlapped(overlapMerge)(
           { cls = clsFrame.localCheckpoint(true) },
-          { touched = store.probeTouched(s, bH) })
-        store.merge(s, bH,
+          { touched = store.probeTouched(bH) })
+        store.merge(bH,
           simhashChunks(batch)
             .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
           touchedPre = Some(touched)): Unit

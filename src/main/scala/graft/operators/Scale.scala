@@ -51,14 +51,7 @@ object Scale {
     // dirs in the warehouse from previous JVMs — clear both catalog + dir
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val dir = new java.io.File(wh, table)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(wh, table)): Unit
     df.write
       .bucketBy(buckets, key)
       .sortBy(key)

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.{FileOps, PartitionedStore}
+
 /** Storage-layout helpers for the 100 TB path:
   *
   *  - [[writeDatePartitioned]]: hive-style `dt=YYYY-MM-DD` partition layout,
@@ -137,46 +139,22 @@ object Layout {
     * key space — a predicate pays its pruning fraction once per batch and
     * the file count grows with ingest. Compacting re-clusters across
     * batches: same content (spec-pinned), bounded file count, one set of
-    * envelopes. Write-then-swap: the new table lands beside the old and
-    * replaces it only after a successful write (a failed compaction
-    * leaves the ingest table untouched). */
+    * envelopes. The new table is staged beside the old and replaces all
+    * of it in one [[graft.store.PartitionedStore]] commit (its scaladoc
+    * holds the protocol): a failed compaction is rolled back at once,
+    * and after a crash the next compaction restores the table before it
+    * reads it. */
   def compactClustered(spark: SparkSession, path: String,
-      cx: String, cy: String, files: Int, rankBits: Int = 12): Unit = {
-    val tmp = path + ".compacting"
-    // Restart recovery (ADVICE r13): a HARD crash between the two renames
-    // below leaves no dir at `path` and the only copy under `.old` —
-    // restore it before reading (and before the del(old) below can
-    // destroy it). If live exists, any `.old` is a superseded leftover.
-    locally {
-      val liveIn = new java.io.File(path)
-      val oldIn = new java.io.File(path + ".old")
-      if (!liveIn.exists() && oldIn.exists() && !oldIn.renameTo(liveIn))
-        throw new java.io.IOException(
-          s"recovery rename failed: $oldIn -> $path (data preserved at $oldIn)")
+      cx: String, cy: String, files: Int, rankBits: Int = 12): Unit =
+    compactClusteredWith(FileOps(spark, path))(spark, path, cx, cy, files, rankBits)
+
+  private[graft] def compactClusteredWith(ops: FileOps)(spark: SparkSession,
+      path: String, cx: String, cy: String, files: Int, rankBits: Int): Unit = {
+    val store = new PartitionedStore(spark, path, Seq(""), ops)
+    store.transact(PartitionedStore.Replace.All) {
+      writeZOrdered(spark.read.parquet(path).drop("batch_id"),
+        store.stageDir(""), cx, cy, files, rankBits)
     }
-    writeZOrdered(spark.read.parquet(path).drop("batch_id"),
-      tmp, cx, cy, files, rankBits)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-    }
-    // swap order keeps a complete copy of the data on disk at every
-    // instant (ADVICE r12 — delete-then-rename had a window where a crash
-    // lost the table): live moves ASIDE first, the compacted dir renames
-    // in, and only then is the old copy deleted; a failed second rename
-    // restores the aside copy.
-    val live = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    if (old.exists()) del(old)
-    if (!live.renameTo(old))
-      throw new java.io.IOException(
-        s"compaction swap failed: $path -> $old (live table untouched)")
-    if (!new java.io.File(tmp).renameTo(live)) {
-      val restored = old.renameTo(live)
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $path" +
-        (if (restored) " (old table restored)"
-         else s" (RESTORE FAILED — data preserved at $old)"))
-    }
-    del(old)
   }
 
   private def idempotentOverwrite(batch: DataFrame, batchId: Long,

@@ -85,8 +85,7 @@ object StreamingQueries {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/$table.parquet")
     val src = if (table == "events") Tables.normalizeEvents(raw) else raw
-    val root = Files.createTempDirectory(s"graft-tsbatches-")
-    graft.ext.SpanDedup.registerTempRoot(root)
+    val root = graft.store.PartitionedStore.tempRoot("graft-tsbatches-")
     val bounds = src.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi")).collect()(0) // 2 scalars
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -734,8 +733,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckptPath = java.nio.file.Files.createTempDirectory("graft-qst23-ckpt-")
-      deleteOnExit(ckptPath)
+      val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst23-ckpt-")
       val ckpt = ckptPath.toString
       val path = s"$d/documents.parquet"
       val schema: StructType = s.read.parquet(path).schema
@@ -841,17 +839,8 @@ object StreamingQueries {
     * checkpoint LAZILY, so the dir must outlive the query's
     * materialization — but repeated gate runs must not accumulate
     * state-store files under /tmp. */
-  private def deleteOnExit(dir: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file._
-      try Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Exception => () } // best-effort cleanup
-    }))
-
   private def qst20(s: SparkSession, d: String): DataFrame = {
-    val ckptPath = java.nio.file.Files.createTempDirectory("graft-qst20-ckpt-")
-    deleteOnExit(ckptPath)
+    val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst20-ckpt-")
     val ckpt = ckptPath.toString
     val path = s"$d/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1139,8 +1128,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckptPath = java.nio.file.Files.createTempDirectory("graft-qst26-ckpt-")
-      deleteOnExit(ckptPath)
+      val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst26-ckpt-")
       val ckpt = ckptPath.toString
       val path = s"$d/events.parquet"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1317,8 +1305,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckptPath = java.nio.file.Files.createTempDirectory("graft-qst28-ckpt-")
-      deleteOnExit(ckptPath)
+      val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst28-ckpt-")
       val ckpt = ckptPath.toString
       val path = s"$d/events.parquet"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1721,15 +1708,9 @@ object StreamingQueries {
   /** Build the persisted content-keyed fingerprint index for `seen` at
     * `idxDir` in one shot ([[FingerprintStore.write]]). */
   private[graft] def writeFingerprintIndex(seen: DataFrame, idxDir: String): Unit =
-    writeFingerprintIndexFromH(
+    FingerprintStore.write(
       graft.ext.TextAnalysis.winnowedFingerprints(seen)
         .select(col("h")).distinct(), idxDir)
-
-  /** [[writeFingerprintIndex]] over an already-built h frame (the
-    * ScreenCurve probe feeds salted tiers directly); distinctness is
-    * enforced inside [[FingerprintStore.write]]. */
-  private[graft] def writeFingerprintIndexFromH(hRows: DataFrame, idxDir: String): Unit =
-    FingerprintStore.write(hRows, idxDir)
 
   /** The recorded fanout of a fingerprint index (from its meta sidecar). */
   private[graft] def readIndexFanout(s: SparkSession, idxDir: String): Int =
@@ -1777,7 +1758,7 @@ object StreamingQueries {
   private def screenIncomingStream(s: SparkSession, d: String,
       idxDir: String, censusKey: String): DataFrame = {
     val outs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-$censusKey-ckpt-")
+    val ckpt = graft.store.PartitionedStore.tempRoot(s"graft-$censusKey-ckpt-")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     val src = streamTable(s, d, "documents", schema)
@@ -1795,14 +1776,12 @@ object StreamingQueries {
       .start()
     q.processAllAvailable()
     q.stop()
-    deleteOnExit(ckpt)
     import scala.jdk.CollectionConverters._
     outs.asScala.toSeq.reduce(_.union(_))
   }
 
   private def qst43(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-qst43-idx-")
-    graft.ext.SpanDedup.registerTempRoot(root)
+    val root = graft.store.PartitionedStore.tempRoot("graft-qst43-idx-")
     val idxDir = s"$root/fp"
     writeFingerprintIndex(
       Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0), idxDir)
@@ -1825,15 +1804,14 @@ object StreamingQueries {
   // broadcast-served screen, all hash-identical. 100 TB shape: each
   // append touches O(batch) store bytes, compaction is partition-
   // parallel and paid every CompactEvery batches, and fanout re-derives
-  // from live row count as the store grows (ScreenIngestCurve measures
+  // from live row count as the store grows (SCREEN_INGEST_r20.jsonl:
   // per-batch append+screen cost ~flat across store growth).
   // ---------------------------------------------------------------------
   private[graft] val IngestAppendBatches = 6
 
   private def qst44(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-qst44-idx-")
-    graft.ext.SpanDedup.registerTempRoot(root)
+    val root = graft.store.PartitionedStore.tempRoot("graft-qst44-idx-")
     val idxDir = s"$root/fp"
     val store = FingerprintStore.create(s, idxDir)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1864,7 +1842,7 @@ object StreamingQueries {
     }
     require(placed.size == IngestAppendBatches,
       s"ingest split produced ${placed.size}/$IngestAppendBatches slices")
-    val ckpt = Files.createTempDirectory("graft-qst44-ingest-ckpt-")
+    val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst44-ingest-ckpt-")
     val iq = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(streamDir)
       .writeStream.option("checkpointLocation", ckpt.toString)
@@ -1875,7 +1853,6 @@ object StreamingQueries {
     iq.processAllAvailable()
     val dataBatches = iq.recentProgress.count(_.numInputRows > 0)
     iq.stop()
-    deleteOnExit(ckpt)
     require(dataBatches >= 2,
       s"ingest ran $dataBatches data-carrying micro-batches; need ≥2 " +
         "for the append path to be provably incremental")
@@ -1972,21 +1949,14 @@ object StreamingQueries {
   // pinned in LayoutSpec.
   // ---------------------------------------------------------------------
   private def qst36(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-qst36-${Integer.toHexString(d.hashCode)}" +
-        s"-p${ProcessHandle.current().pid()}")
     // fresh table per invocation: a previous run with MORE batches would
     // leave stale batch_id partitions that dynamic overwrite never touches
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(base.toFile)
+    val base = graft.store.PartitionedStore.tempRoot("graft-qst36-")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$d/events.parquet").schema
     val src = Tables.normalizeEvents(streamTable(s, d, "events", schema))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-qst36-ckpt-")
+    val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst36-ckpt-")
     val q = src.writeStream
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (b: DataFrame, id: Long) =>
@@ -1996,8 +1966,6 @@ object StreamingQueries {
       .start()
     q.processAllAvailable()
     q.stop()
-    deleteOnExit(ckpt)
-    deleteOnExit(base)
     s.read.parquet(base.toString).drop("batch_id")
   }
 

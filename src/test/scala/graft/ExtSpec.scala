@@ -1848,9 +1848,8 @@ class SpanDedupSpec extends SparkSpec {
     // (pure append); a re-ingest must rewrite exactly the partitions its
     // doc ids hash to, replacing (never duplicating) those docs' rows
     // while every other partition's files are left untouched
-    val root = java.nio.file.Files.createTempDirectory("graft-store-spec-")
-    SpanDedup.registerTempRoot(root)
-    val store = SpanDedup.SignatureStore(root).init()
+    val root = graft.store.PartitionedStore.tempRoot("graft-store-spec-")
+    val store = SpanDedup.SignatureStore.open(spark, root.toString)
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
@@ -1860,8 +1859,8 @@ class SpanDedupSpec extends SparkSpec {
     val texts = (1L to 8L).map(i =>
       i -> (1 to 30).map(j => s"d${i}w$j").mkString(" "))
     val (h1, c1) = sigs(texts)
-    assert(store.merge(spark, h1, c1).isEmpty) // all new → pure append
-    val before = store.readH(spark).collect()
+    assert(store.merge(h1, c1).isEmpty) // all new → pure append
+    val before = store.readH.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(before.keySet === (1L to 8L).toSet)
 
@@ -1873,9 +1872,9 @@ class SpanDedupSpec extends SparkSpec {
     val dp3 = java.security.MessageDigest.getInstance("MD5")
       .digest("3".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(1)
     val (h2, c2) = sigs(Seq(3L -> (1 to 30).map(j => s"NEW$j").mkString(" ")))
-    val touched = store.merge(spark, h2, c2)
+    val touched = store.merge(h2, c2)
     assert(touched === Seq(dp3))
-    val after = store.readH(spark).collect()
+    val after = store.readH.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(after.keySet === (1L to 8L).toSet) // replaced, not duplicated
     assert(after(3L) !== before(3L))
@@ -1889,9 +1888,8 @@ class SpanDedupSpec extends SparkSpec {
 
   test("partitioned store: compact() folds append files without changing content") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-compact-spec-")
-    SpanDedup.registerTempRoot(root)
-    val store = SpanDedup.SignatureStore(root).init()
+    val root = graft.store.PartitionedStore.tempRoot("graft-compact-spec-")
+    val store = SpanDedup.SignatureStore.open(spark, root.toString)
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
@@ -1902,16 +1900,16 @@ class SpanDedupSpec extends SparkSpec {
     (0 until 5).foreach { b =>
       val (h, c) = sigs((1L to 6L).map(i =>
         (b * 10 + i) -> (1 to 30).map(j => s"d${b}_${i}w$j").mkString(" ")))
-      store.merge(spark, h, c): Unit
+      store.merge(h, c): Unit
     }
-    val before = store.readH(spark).collect()
+    val before = store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val hDir = new java.io.File(s"$root/h")
     def fileCount() = hDir.listFiles().filter(_.isDirectory)
       .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
     val filesBefore = fileCount()
-    store.compact(spark)
-    assert(store.readH(spark).collect()
+    store.compact()
+    assert(store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet === before)
     assert(fileCount() < filesBefore,
       s"compact did not reduce files: $filesBefore -> ${fileCount()}")
@@ -1920,12 +1918,11 @@ class SpanDedupSpec extends SparkSpec {
 
   test("partitioned store: init() restores partitions orphaned in .aside (crash recovery)") {
     import spark.implicits._
-    // ADVICE r13: a hard crash inside the swap, between the aside-move
+    // ADVICE r13: a hard crash inside the commit, between the aside-move
     // and the staged-move, leaves the ONLY copy of a partition under
-    // `h.aside` — re-opening the store must restore it, not destroy it.
-    val root = java.nio.file.Files.createTempDirectory("graft-recover-spec-")
-    SpanDedup.registerTempRoot(root)
-    val store = SpanDedup.SignatureStore(root).init()
+    // `_txn/old` — re-opening the store must restore it, not destroy it.
+    val root = graft.store.PartitionedStore.tempRoot("graft-recover-spec-")
+    val store = SpanDedup.SignatureStore.open(spark, root.toString)
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
@@ -1934,22 +1931,26 @@ class SpanDedupSpec extends SparkSpec {
     }
     val (h1, c1) = sigs((1L to 8L).map(i =>
       i -> (1 to 30).map(j => s"d${i}w$j").mkString(" ")))
-    store.merge(spark, h1, c1): Unit
-    val before = store.readH(spark).collect()
+    store.merge(h1, c1): Unit
+    val before = store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    // simulate the crash window: one live partition exists only in .aside
+    // simulate the crash window: one live partition exists only under
+    // _txn/old, named by the commit's plan
     val hDir = new java.io.File(s"$root/h")
     val victim = hDir.listFiles().filter(_.isDirectory)
       .filter(_.getName.startsWith("dp=")).head
-    val aside = new java.io.File(s"$root/h.aside")
+    val txn = new java.io.File(s"$root/_txn")
+    val aside = new java.io.File(txn, "old/h")
     assert(aside.mkdirs())
+    java.nio.file.Files.writeString(new java.io.File(txn, "plan").toPath,
+      s"replace h/${victim.getName}")
     assert(victim.renameTo(new java.io.File(aside, victim.getName)))
     // restart: re-open the store at the same root
-    val reopened = SpanDedup.SignatureStore(root).init()
+    val reopened = SpanDedup.SignatureStore.open(spark, root.toString)
     assert(new java.io.File(hDir, victim.getName).exists(),
-      "orphaned partition not restored from .aside")
-    assert(!aside.exists(), ".aside not cleared after restore")
-    assert(reopened.readH(spark).collect()
+      "orphaned partition not restored from _txn/old")
+    assert(!txn.exists(), "_txn not cleared after restore")
+    assert(reopened.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet === before,
       "content changed across crash recovery")
     store.delete()
@@ -1958,27 +1959,29 @@ class SpanDedupSpec extends SparkSpec {
   test("partitioned store: torn mid-placement crash rolls BOTH tables back; commit marker rolls both forward") {
     import spark.implicits._
     // ADVICE r14: a hard crash landing mid-placement (some staged dp=
-    // dirs placed, others still only in .aside) must not leave a torn
-    // new/old mix across the h and chunks tables. The root-level
-    // SWAP_COMMITTED marker decides ONCE for both tables: absent → roll
-    // back everything; present → keep every placed copy.
-    val root = java.nio.file.Files.createTempDirectory("graft-torn-spec-")
-    SpanDedup.registerTempRoot(root)
-    val store = SpanDedup.SignatureStore(root).init()
+    // dirs placed, others still only in _txn/old) must not leave a torn
+    // new/old mix across the h and chunks tables. The one commit marker
+    // _txn/COMMITTED decides ONCE for both tables: absent → roll back
+    // everything the plan names; present → keep every placed copy.
+    val root = graft.store.PartitionedStore.tempRoot("graft-torn-spec-")
+    val store = SpanDedup.SignatureStore.open(spark, root.toString)
     val docs = (1L to 8L).map(i =>
       i -> (1 to 30).map(j => s"d${i}w$j").mkString(" ")).toDF("doc_id", "text")
-    store.merge(spark,
+    store.merge(
       docs.select(col("doc_id"), md5(col("text")).as("h")),
       SpanDedup.simhashChunks(docs)
         .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))): Unit
-    val beforeH = store.readH(spark).collect()
+    val beforeH = store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    val beforeC = store.readChunks(spark).count()
+    val beforeC = store.readChunks.count()
     def dpDirs(t: String) = new java.io.File(s"$root/$t").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("dp=")).sortBy(_.getName)
     val victim = dpDirs("h").head.getName // same dp key exists in chunks
+    val txn = new java.io.File(s"$root/_txn")
     def tear(table: String, placeFake: Boolean): Unit = {
-      val aside = new java.io.File(s"$root/$table.aside"); assert(aside.mkdirs())
+      val aside = new java.io.File(txn, s"old/$table"); assert(aside.mkdirs())
+      java.nio.file.Files.writeString(new java.io.File(txn, "plan").toPath,
+        s"replace h/$victim\nreplace chunks/$victim")
       val live = new java.io.File(s"$root/$table/$victim")
       assert(live.renameTo(new java.io.File(aside, victim)))
       // a "placed" new copy: an empty dp= dir (content loss is observable)
@@ -1986,21 +1989,21 @@ class SpanDedupSpec extends SparkSpec {
     }
     // crash window 1: h placed its new copy, chunks has not — NO marker.
     tear("h", placeFake = true); tear("chunks", placeFake = false)
-    SpanDedup.SignatureStore(root).init()
-    assert(store.readH(spark).collect()
+    SpanDedup.SignatureStore.open(spark, root.toString)
+    assert(store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet === beforeH,
       "h not rolled back to pre-swap content (torn placement kept)")
-    assert(store.readChunks(spark).count() === beforeC,
+    assert(store.readChunks.count() === beforeC,
       "chunks not rolled back to pre-swap content")
     // crash window 2: both tables fully placed, marker written, crash
     // before aside cleanup — recovery must keep the NEW copies.
     tear("h", placeFake = true); tear("chunks", placeFake = true)
-    val marker = new java.io.File(s"$root/SWAP_COMMITTED")
+    val marker = new java.io.File(txn, "COMMITTED")
     assert(marker.createNewFile())
-    SpanDedup.SignatureStore(root).init()
+    SpanDedup.SignatureStore.open(spark, root.toString)
     assert(!marker.exists(), "commit marker not cleared after recovery")
-    assert(!new java.io.File(s"$root/h.aside").exists())
-    val afterH = store.readH(spark).collect()
+    assert(!new java.io.File(txn, "old").exists())
+    val afterH = store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(afterH.size < beforeH.size && afterH.subsetOf(beforeH),
       "marker present: placed (empty) copies must be kept, asides dropped")
@@ -2008,9 +2011,10 @@ class SpanDedupSpec extends SparkSpec {
   }
 
   test("compactClustered: restart recovery restores a table stranded at .old") {
-    // ADVICE r13: a hard crash between the two swap renames leaves no dir
-    // at `path` and the only copy at `path.old`; the next compaction must
-    // rename it back instead of failing (or worse, deleting .old).
+    // ADVICE r13: a hard crash after the commit moved the live batch
+    // partitions aside leaves the only copy under `path/_txn/old`; the
+    // next compaction must restore it instead of failing (or worse,
+    // deleting it).
     val path = s"/tmp/graft-layout-recover-p${ProcessHandle.current().pid()}"
     val ev = sources.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -2018,18 +2022,19 @@ class SpanDedupSpec extends SparkSpec {
     sinks.Layout.writeClusteredBatch(ev, 0, path, "user_id", "event_id", files = 4)
     val before = spark.read.parquet(path).drop("batch_id")
       .collect().map(_.toSeq).sortBy(_.toString)
-    // simulate the crash window: live gone, data only under .old
-    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
+    // simulate the crash window: live gone, data only under _txn/old
+    val txn = new java.io.File(path, "_txn")
+    assert(new java.io.File(txn, "old").mkdirs())
+    java.nio.file.Files.writeString(new java.io.File(txn, "plan").toPath,
+      "remove batch_id=0")
+    assert(new java.io.File(path, "batch_id=0")
+      .renameTo(new java.io.File(txn, "old/batch_id=0")))
     sinks.Layout.compactClustered(spark, path, "user_id", "event_id", files = 2)
     val after = spark.read.parquet(path)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(after === before, "recovery + compaction changed table content")
-    assert(!new java.io.File(path + ".old").exists(),
-      ".old not cleaned up after successful swap")
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(new java.io.File(path))
+    assert(!txn.exists(), "_txn not cleaned up after successful commit")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(path)): Unit
   }
 
   test("persisted ingest loop: arrival order decides status (planted)") {

@@ -10,11 +10,8 @@ import graft.streaming.{FingerprintStore, StreamingQueries}
   * composed screen-then-ingest-accepted production loop. */
 class FingerprintStoreSpec extends SparkSpec {
 
-  private def tmpRoot(tag: String) = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft-fpstore-$tag-")
-    graft.ext.SpanDedup.registerTempRoot(p)
-    p
-  }
+  private def tmpRoot(tag: String) =
+    graft.store.PartitionedStore.tempRoot(s"graft-fpstore-$tag-")
 
   private def hFrame(hs: Seq[Long]) = {
     import spark.implicits._
@@ -109,20 +106,33 @@ class FingerprintStoreSpec extends SparkSpec {
     val dir = s"$root/fp"
     val st = FingerprintStore.create(spark, dir)
     st.append(hFrame(Seq(1L, 2L, 3L))): Unit
-    // crash AFTER the aside move, BEFORE the stage place: dir missing,
-    // aside holds the only copy → recover restores it
-    Files.move(Paths.get(dir), Paths.get(s"$dir.aside"))
-    FingerprintStore.recover(dir)
-    assert(Files.exists(Paths.get(dir)) && !Files.exists(Paths.get(s"$dir.aside")))
-    assert(storeH(FingerprintStore.open(spark, dir)) === Seq(1L, 2L, 3L))
-    // crash AFTER the stage place: dir is the complete new layout, the
-    // aside is the superseded old one → recover drops the aside
-    val asideDir = Paths.get(s"$dir.aside")
-    Files.createDirectories(asideDir)
-    Files.writeString(asideDir.resolve("stale.txt"), "old layout")
-    FingerprintStore.recover(dir)
-    assert(!Files.exists(asideDir))
-    assert(storeH(FingerprintStore.open(spark, dir)) === Seq(1L, 2L, 3L))
+    val parts = new java.io.File(dir).list().filter(_.startsWith("hp=")).sorted
+    val txn = Paths.get(s"$dir/_txn")
+    def plan(): Unit = {
+      Files.createDirectories(txn.resolve("old"))
+      Files.writeString(txn.resolve("plan"),
+        (parts.map(p => s"replace $p") :+ "replace _graft_index_meta.json")
+          .mkString("\n"))
+    }
+    // crash AFTER the aside moves, BEFORE the stage placement: the live
+    // partitions and meta exist only under _txn/old → open restores them
+    plan()
+    (parts :+ "_graft_index_meta.json").foreach(p =>
+      Files.move(Paths.get(s"$dir/$p"), txn.resolve(s"old/$p")))
+    val restored = FingerprintStore.open(spark, dir)
+    assert(!Files.exists(txn))
+    assert(parts.forall(p => Files.exists(Paths.get(s"$dir/$p"))))
+    assert(storeH(restored) === Seq(1L, 2L, 3L))
+    assert(restored.meta === FingerprintStore.Meta(16, 3L))
+    // crash AFTER the commit marker: the placed layout is the new one, the
+    // old copies under _txn/old are superseded → open drops them
+    plan()
+    Files.createDirectories(txn.resolve("old/hp=99"))
+    Files.writeString(txn.resolve("old/hp=99/stale.txt"), "old layout")
+    Files.createFile(txn.resolve("COMMITTED"))
+    val reopened = FingerprintStore.open(spark, dir)
+    assert(!Files.exists(txn))
+    assert(storeH(reopened) === Seq(1L, 2L, 3L))
   }
 
   test("screenAndIngest: accepted docs join the store, later duplicates get flagged") {

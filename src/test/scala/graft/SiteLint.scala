@@ -4,7 +4,7 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared machinery of the source-site lints (BroadcastSiteSpec,
-  * CollectSiteSpec, EnvKnobSiteSpec): scan the source tree for lines that
+  * CollectSiteSpec, EnvKnobSiteSpec, MoveSiteSpec): scan the source tree for lines that
   * contain a hazard, and hold every hit against a manifest that classifies
   * it with a written reason.
   *
@@ -20,7 +20,7 @@ trait SiteLint extends AnyFunSuite {
     * the measurement and driver mains at the top of the package. */
   protected val libraryRoots: Seq[File] =
     Seq("operators", "ext", "streaming", "ysb", "sinks", "functions",
-      "sources").map(new File(root, _))
+      "sources", "store", "fs").map(new File(root, _))
 
   private def scalaFiles(dir: File): Seq[File] =
     if (!dir.exists()) Nil

@@ -1236,8 +1236,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getBoolean(4)))).toMap
 
-    val root = java.nio.file.Files.createTempDirectory("graft-qst43-spec-")
-    graft.ext.SpanDedup.registerTempRoot(root)
+    val root = graft.store.PartitionedStore.tempRoot("graft-qst43-spec-")
     val idxDir = s"$root/fp"
     StreamingQueries.writeFingerprintIndex(
       all.filter(col("doc_id") % 5 =!= 0), idxDir)
@@ -1294,8 +1293,7 @@ class StreamingSpec extends SparkSpec {
         (if (i == 1L) " " + run else ""))
     }
     val d5 = (5L, run + " " + (1 to 15).map(i => s"x$i").mkString(" "))
-    val root = java.nio.file.Files.createTempDirectory("graft-qst43-cap-spec-")
-    graft.ext.SpanDedup.registerTempRoot(root)
+    val root = graft.store.PartitionedStore.tempRoot("graft-qst43-cap-spec-")
     val idxDir = s"$root/fp"
     StreamingQueries.writeFingerprintIndex(seenDocs.toDF("doc_id", "text"), idxDir)
     val b = Seq(d5).toDF("doc_id", "text")
