@@ -33,9 +33,12 @@ object BenchCal {
   /** Idle reference: a property of the BOX (idle probe wall time at this
     * core count), not of the engine — overridable on different hardware /
     * SPARK_GRAFT_CPUS, and emitted in artifacts so the threshold each was
-    * judged against is recorded in it (ADVICE r15). */
+    * judged against is recorded in it (ADVICE r15). The default, 4.2 s, is
+    * the median of seven calm probes on a 4-vCPU VM at SPARK_GRAFT_CPUS=4
+    * (`nproc` = 4, one untimed probe first, then one a minute: 4.98, 4.10,
+    * 4.16, 4.14, 4.40, 4.20, 4.20 s; CPU steal ≤ 4.3%). */
   val idleRef: Double =
-    sys.env.get("SPARK_GRAFT_CAL_IDLE_REF").map(_.toDouble).getOrElse(1.0)
+    sys.env.get("SPARK_GRAFT_CAL_IDLE_REF").map(_.toDouble).getOrElse(4.2)
 
   /** One timed calibration probe. Callers run one UNTIMED probe first so
     * pre/post measure machine load, not the probe's own codegen/JIT. */

@@ -19,7 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * travels as one packed array: per string (key 0, value 0, key 1, ...)
   * its varint byte length, then its UTF-8 bytes, about a third of a
   * serialized `HashMap` of `UTF8String`s. A copy packs once and keeps the
-  * array; a deserialized copy rebuilds its table once, over the array.
+  * array. A deserialized copy takes its table from [[StringDict.unpack]],
+  * which builds a table once per JVM for each packed array: every task of
+  * every micro-batch deserializes the same dictionary, and a rebuild of a
+  * 1000-entry table costs ~0.1 ms. The shared table is never written.
   */
 final class StringDict(entries: Seq[(String, String)]) extends Serializable {
   @transient private var table = new java.util.HashMap[UTF8String, UTF8String](entries.size * 2)
@@ -61,17 +64,45 @@ final class StringDict(entries: Seq[(String, String)]) extends Serializable {
   }
 
   private def readObject(in: java.io.ObjectInputStream): Unit = {
-    packed = new Array[Byte](in.readInt())
-    in.readFully(packed)
-    table = new java.util.HashMap[UTF8String, UTF8String]()
-    var pos = 0
-    def next(): UTF8String = {
-      var (n, shift) = (0, 0)
-      while ({ val b = packed(pos); pos += 1; n |= (b & 0x7f) << shift; shift += 7; b < 0 }) ()
-      pos += n
-      UTF8String.fromBytes(packed, pos - n, n)
+    val bytes = new Array[Byte](in.readInt())
+    in.readFully(bytes)
+    val (p, t) = StringDict.unpack(bytes)
+    packed = p
+    table = t
+  }
+
+  /** Whether this copy and `o` look up in one and the same table. */
+  private[graft] def sharesTable(o: StringDict): Boolean = table eq o.table
+}
+
+object StringDict {
+  private type Table = java.util.HashMap[UTF8String, UTF8String]
+
+  /** Tables built from packed arrays, least recently used first, keyed by
+    * the array's content: a hit compares every byte. */
+  private val shared = new java.util.LinkedHashMap[java.nio.ByteBuffer, (Array[Byte], Table)](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[java.nio.ByteBuffer, (Array[Byte], Table)]): Boolean = size > 16
+  }
+
+  /** The table packed in `bytes`, with the array it was built over (whose
+    * bytes equal `bytes`): built on the first call for these bytes, shared
+    * by later calls while it stays among the 16 most recently used. */
+  private def unpack(bytes: Array[Byte]): (Array[Byte], Table) = {
+    val key = java.nio.ByteBuffer.wrap(bytes)
+    shared.synchronized(Option(shared.get(key))).getOrElse {
+      val table = new Table()
+      var pos = 0
+      def next(): UTF8String = {
+        var (n, shift) = (0, 0)
+        while ({ val b = bytes(pos); pos += 1; n |= (b & 0x7f) << shift; shift += 7; b < 0 }) ()
+        pos += n
+        UTF8String.fromBytes(bytes, pos - n, n)
+      }
+      while (pos < bytes.length) table.put(next(), next())
+      shared.synchronized(Option(shared.putIfAbsent(key, (bytes, table))).getOrElse((bytes, table)))
     }
-    while (pos < packed.length) table.put(next(), next())
   }
 }
 

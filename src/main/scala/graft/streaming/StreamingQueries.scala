@@ -31,10 +31,12 @@ object StreamingQueries {
     * driver's testdata keeps one parquet FILE per table (the file stream
     * source needs a directory, so stream the sf dir glob-filtered to that
     * file), while Spark-written corpora (soak tiers) are DIRECTORIES of
-    * part files, streamed directly. */
+    * part files, streamed directly. The schema is the batch read's
+    * ([[Tables.schemaOf]]), under the session's current parquet confs. */
   private[graft] def streamTable(spark: SparkSession, dir: String,
-      table: String, schema: StructType): DataFrame = {
+      table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
+    val schema = Tables.schemaOf(spark, path)
     if (new java.io.File(path).isDirectory)
       spark.readStream.schema(schema).parquet(path)
     else
@@ -46,10 +48,8 @@ object StreamingQueries {
     * in a memory sink, return it as a batch DataFrame. */
   def runBounded(spark: SparkSession, dir: String, table: String,
       mode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    val path = s"$dir/$table.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: StructType = spark.read.parquet(path).schema
-    val raw = streamTable(spark, dir, table, schema)
+    val raw = streamTable(spark, dir, table)
     val src = if (table == "events") Tables.normalizeEvents(raw) else raw
     val name = s"graft_${table}_${counter.incrementAndGet()}"
     val q = transform(src).writeStream
@@ -83,7 +83,7 @@ object StreamingQueries {
       transform: DataFrame => DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$table.parquet")
+    val raw = Tables.load(spark, dir, table)
     val src = if (table == "events") Tables.normalizeEvents(raw) else raw
     val root = graft.store.PartitionedStore.tempRoot("graft-tsbatches-")
     val bounds = src.agg(min(unix_micros(col("ts"))).as("lo"),
@@ -111,7 +111,7 @@ object StreamingQueries {
     }
     require(placed.size >= 2 && placed.size <= numBatches,
       s"ts-split produced ${placed.size} slices (need 2..$numBatches, one file each)")
-    val schema = spark.read.parquet(placed.head.getPath).schema
+    val schema = Tables.schemaOf(spark, placed.head.getPath)
     val name = s"graft_${table}_${counter.incrementAndGet()}"
     val q = transform(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -295,11 +295,9 @@ object StreamingQueries {
   // shuffles both sides on user_id.
   // ---------------------------------------------------------------------
   private def qst07(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: StructType = s.read.parquet(path).schema
     def stream(): DataFrame = Tables.normalizeEvents(
-      streamTable(s, d, "events", schema))
+      streamTable(s, d, "events"))
     val clicks = stream().filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("l_user"),
         col("ts").as("l_ts"))
@@ -336,11 +334,9 @@ object StreamingQueries {
   // ms-truncated) to have expired their match window.
   // ---------------------------------------------------------------------
   private def qst09(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: StructType = s.read.parquet(path).schema
     def stream(): DataFrame = Tables.normalizeEvents(
-      streamTable(s, d, "events", schema))
+      streamTable(s, d, "events"))
     val clicks = stream().filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("l_user"),
         col("ts").as("l_ts"))
@@ -401,10 +397,8 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val path = s"$d/events.parquet"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema: StructType = s.read.parquet(path).schema
-      val keys = streamTable(s, d, "events", schema)
+      val keys = streamTable(s, d, "events")
         .select(col("user_id")).as(org.apache.spark.sql.Encoders.scalaLong)
       val name = s"graft_counters_${counter.incrementAndGet()}"
       val q = RunningCounters.countByKey(keys).toDF()
@@ -448,9 +442,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val path = s"$d/documents.parquet"
-      val schema: StructType = s.read.parquet(path).schema
-      val docs = streamTable(s, d, "documents", schema)
+      val docs = streamTable(s, d, "documents")
       val sim = graft.ext.Dedup.withSimhash(docs)
       val name = s"graft_neardup_${counter.incrementAndGet()}"
       val acc = s.sparkContext.longAccumulator("qst10_neardup_evictions")
@@ -526,10 +518,9 @@ object StreamingQueries {
     // trigger is pure waste (the qst34 census lesson). Local tier —
     // bounded frame.
     val evalGrams = graft.ext.CheckpointStrategy.Local(gramsOf(
-      s.read.parquet(s"$d/documents.parquet").filter(col("doc_id") < evalN))
+      Tables.documents(s, d).filter(col("doc_id") < evalN))
       .select(col("g")).distinct().withColumn("hit", lit(1L)))
-    val schema: StructType = s.read.parquet(s"$d/documents.parquet").schema
-    val stream = streamTable(s, d, "documents", schema)
+    val stream = streamTable(s, d, "documents")
       .filter(col("doc_id") >= evalN)
     val name = s"graft_contam_${counter.incrementAndGet()}"
     val q = gramsOf(stream)
@@ -550,10 +541,8 @@ object StreamingQueries {
   }
 
   /** Documents as a bounded file stream (schema from the batch read). */
-  private def docStream(s: SparkSession, d: String): DataFrame = {
-    val schema: StructType = s.read.parquet(s"$d/documents.parquet").schema
-    streamTable(s, d, "documents", schema)
-  }
+  private def docStream(s: SparkSession, d: String): DataFrame =
+    streamTable(s, d, "documents")
 
   /** Run a STATELESS per-row transform of the document stream to a memory
     * sink (append mode — no state, no watermark) and return the sink table:
@@ -649,9 +638,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val path = s"$d/documents.parquet"
-      val schema: StructType = s.read.parquet(path).schema
-      val docs = streamTable(s, d, "documents", schema)
+      val docs = streamTable(s, d, "documents")
       val name = s"graft_blockdedup_${counter.incrementAndGet()}"
       val q = BlockDedup.flagBlocks(docs, ttl)
         .writeStream.outputMode("update").format("memory").queryName(name).start()
@@ -665,7 +652,7 @@ object StreamingQueries {
         // completion instead: the file source puts the whole bounded
         // corpus in batch 0, so once the sink holds a flag for every
         // document the data is fully absorbed and we stop the query.
-        val expectDocs = s.read.parquet(path).count()
+        val expectDocs = Tables.documents(s, d).count()
         val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
         while (s.table(name).select(col("docId")).distinct().count() < expectDocs
             && System.nanoTime() < deadline) Thread.sleep(200)
@@ -735,9 +722,7 @@ object StreamingQueries {
     try {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst23-ckpt-")
       val ckpt = ckptPath.toString
-      val path = s"$d/documents.parquet"
-      val schema: StructType = s.read.parquet(path).schema
-      val docs = streamTable(s, d, "documents", schema)
+      val docs = streamTable(s, d, "documents")
       val name = s"graft_statereader_${counter.incrementAndGet()}"
       val q = BlockDedup.flagBlocks(docs)
         .writeStream.outputMode("update").format("memory").queryName(name)
@@ -842,10 +827,8 @@ object StreamingQueries {
   private def qst20(s: SparkSession, d: String): DataFrame = {
     val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst20-ckpt-")
     val ckpt = ckptPath.toString
-    val path = s"$d/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema: StructType = s.read.parquet(path).schema
-    val ev = Tables.normalizeEvents(streamTable(s, d, "events", schema))
+    val ev = Tables.normalizeEvents(streamTable(s, d, "events"))
     val name = s"graft_events_${counter.incrementAndGet()}"
     val q = ev.groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("uid_sum"))
@@ -1130,10 +1113,8 @@ object StreamingQueries {
     try {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst26-ckpt-")
       val ckpt = ckptPath.toString
-      val path = s"$d/events.parquet"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema: StructType = s.read.parquet(path).schema
-      val ev = streamTable(s, d, "events", schema)
+      val ev = streamTable(s, d, "events")
       val name = s"graft_hh_${counter.incrementAndGet()}"
       val q = graft.streaming.HeavyHitters
         .sketch(ev.select(hhKey.as("key")), HhShards, HhCapacity)
@@ -1307,10 +1288,8 @@ object StreamingQueries {
     try {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst28-ckpt-")
       val ckpt = ckptPath.toString
-      val path = s"$d/events.parquet"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema: StructType = s.read.parquet(path).schema
-      val ev = streamTable(s, d, "events", schema)
+      val ev = streamTable(s, d, "events")
       val name = s"graft_bloom_${counter.incrementAndGet()}"
       val q = graft.streaming.BloomDedup
         .sketch(ev.select((col("event_id") % HhShards).cast("int").as("shard"),
@@ -1760,8 +1739,7 @@ object StreamingQueries {
     val outs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     val ckpt = graft.store.PartitionedStore.tempRoot(s"graft-$censusKey-ckpt-")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val src = streamTable(s, d, "documents", schema)
+    val src = streamTable(s, d, "documents")
       .filter(col("doc_id") % 5 === 0)
     val q = src.writeStream.option("checkpointLocation", ckpt.toString)
       .foreachBatch { (b: DataFrame, _: Long) =>
@@ -1815,13 +1793,13 @@ object StreamingQueries {
     val idxDir = s"$root/fp"
     val store = FingerprintStore.create(s, idxDir)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables.schemaOf(s, s"$d/documents.parquet")
     // Ingest phase: replay the SEEN corpus in IngestAppendBatches
     // doc_id-sliced micro-batches (the runBoundedTsBatches file-per-
     // trigger mechanism; documents carry no event time, so the slice key
     // is pmod(doc_id, N) — deterministic, every slice non-empty at any
     // SF). Each trigger appends its batch's novel fingerprints.
-    val seen = s.read.schema(schema).parquet(s"$d/documents.parquet")
+    val seen = Tables.documents(s, d)
       .filter(col("doc_id") % 5 =!= 0)
     val staging = s"$root/staging"
     seen.withColumn("__slice",
@@ -1953,8 +1931,7 @@ object StreamingQueries {
     // leave stale batch_id partitions that dynamic overwrite never touches
     val base = graft.store.PartitionedStore.tempRoot("graft-qst36-")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    val src = Tables.normalizeEvents(streamTable(s, d, "events", schema))
+    val src = Tables.normalizeEvents(streamTable(s, d, "events"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst36-ckpt-")
     val q = src.writeStream

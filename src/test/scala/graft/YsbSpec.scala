@@ -172,4 +172,27 @@ class YsbSpec extends SparkSpec {
     assert(serialize(dict).length * 2 <= serialize(map).length,
       s"${serialize(dict).length} bytes vs ${serialize(map).length}")
   }
+
+  test("campaign dictionary: deserialized copies share one table per JVM, equal dictionaries only") {
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    def copy[T: scala.reflect.ClassTag](o: T): T = ser.deserialize[T](ser.serialize(o))
+    val pairs = Gen.campaigns(spark).collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    val dict = new StringDict(pairs)
+    val (a, b) = (copy(dict), copy(dict))
+    assert(a.sharesTable(b) && !a.sharesTable(dict))
+    assert(copy(a).sharesTable(a)) // a re-serialized copy packs the same bytes
+    val other = copy(new StringDict(pairs.updated(0, pairs.head._1 -> "camp-x")))
+    assert(!other.sharesTable(a))
+    assert(other !== a)
+    assert(a === dict && b === dict && a.hashCode === dict.hashCode)
+    pairs.foreach { case (k, v) =>
+      assert(a.get(UTF8String.fromString(k)) === UTF8String.fromString(v), k) }
+    // the expression and the plan it prints in are those of the original
+    val out = Ysb.enrichCampaign(Gen.boundedEvents(spark, 10L), Gen.campaigns(spark))
+    val lookup = out.queryExecution.optimizedPlan.expressions
+      .flatMap(_.collect { case h: HashLookup => h }).head
+    val back = copy(lookup)
+    assert(back === lookup && back.hashCode === lookup.hashCode)
+    assert(back.toString === lookup.toString)
+  }
 }
