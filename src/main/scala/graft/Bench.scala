@@ -108,12 +108,12 @@ object Bench {
     // a degraded segment is attributable while the others stay quotable.
     val segLen = sys.env.get("SPARK_GRAFT_CAL_SEGMENT").map(_.toInt).getOrElse(40)
     val segCals = Seq.newBuilder[(Int, Double)]
-    val cpu0 = BenchCal.cpuTimes()
+    val r0 = BenchCal.reading()
     val results = timeGates(spark, sfDir, headline, "bench") { done =>
       if (done % segLen == 0 && done < headline.size)
         segCals += ((done, calibrate()))
     }
-    val steal = BenchCal.stealShare(cpu0, BenchCal.cpuTimes())
+    val region = BenchCal.regionFields(r0, BenchCal.reading())
     // r15 established the throttle mechanism: the query passes themselves
     // drain a host burst budget that refills in ~1–2 min, so an IMMEDIATE
     // post-calibration reads the run's own exhaust, not ambient load
@@ -142,7 +142,7 @@ object Bench {
     val segs = segCals.result()
       .map { case (after, c) => s"""{"after":$after,"cal":$c}""" }
       .mkString("[", ",", "]")
-    println(s"""{"metric":"headline_total",${timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"cooldown_s":$cooldownS,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},"cpu_steal_share":$steal,"degraded":$degraded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"headline_total",${timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"cooldown_s":$cooldownS,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},$region,"degraded":$degraded,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

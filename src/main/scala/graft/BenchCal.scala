@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Machine-load calibration shared by every timing main (Bench, the YSB
   * streaming bench, probe mains that want a clean window).
@@ -104,4 +106,21 @@ object BenchCal {
     * hypervisor gave to other guests. */
   def stealShare(t0: (Long, Long), t1: (Long, Long)): Double =
     (t1._2 - t0._2).toDouble / math.max(1L, t1._1 - t0._1 + t1._2 - t0._2)
+
+  /** The state a timed region is measured from: `cpuTimes`, and Spark's
+    * code generation so far in this JVM, as Janino compiles (each one a
+    * miss in Spark's compiled-class cache, `CodegenMetrics`) and their
+    * nanoseconds (`CodeGenerator.compileTime`, an exact sum; the metric's
+    * histogram only samples the times). */
+  final case class Reading(cpu: (Long, Long), compiles: Long, compileNs: Long)
+
+  def reading(): Reading = Reading(cpuTimes(),
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** The machine fields of a contract line for the region between two
+    * readings: `cpu_steal_share`, `codegen_compiles`, `codegen_compile_ms`.
+    * A working set of generated classes larger than Spark's cache
+    * recompiles on every pass, and shows here as compiles. */
+  def regionFields(r0: Reading, r1: Reading): String =
+    s""""cpu_steal_share":${stealShare(r0.cpu, r1.cpu)},"codegen_compiles":${r1.compiles - r0.compiles},"codegen_compile_ms":${(r1.compileNs - r0.compileNs) / 1e6}"""
 }

@@ -25,8 +25,40 @@ import graft.fs.{NioLocalFileSystem, NioLocalFs}
   * for every `FileContext` rename. `FileSystem` (parquet, the persisted
   * stores) stays checksummed; `FileContext` (Spark's streaming
   * checkpoints) stays raw, so checkpoints carry no Hadoop `.crc`.
+  *
+  * Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+  * least-recently-used, Spark's default 100) holds [[CodegenCacheEntries]]
+  * generated classes. The size comes from a census of distinct generated
+  * classes (Janino compiles, `CodegenMetrics`, with the cache unbounded;
+  * sf0.01, `local[4]`):
+  *  - perfbench `gates_read`: ~168 over the 14 headline gates, the same
+  *    set for its parquet check pass and its noop timed passes. Each pass
+  *    walks the whole set in a cycle, so under 100 entries every pass
+  *    missed on every class: 166 compiles and 0.8-1.0 s of compiling per
+  *    2.5-3.6 s pass, against 0 compiles and 1.4-1.8 s passes at 400.
+  *  - BENCH_ALL: 2,207 over 163 gates. A gate's two passes run back to
+  *    back, so the set cycled is one gate's, at most 137 (qd18, which
+  *    under 100 entries recompiled ~210 classes in each pass). A run
+  *    compiles 3,490 classes at 100 (483 in second passes), 2,422 at 400
+  *    (50) and 2,207 unbounded (61: code that is new on every run).
+  *  - StreamBench: 1,771 over 44 gates, at most 71 per gate (qst44); 630
+  *    are new code on every run, which no cache size keeps.
+  * 400 is the smallest round size with about 2× headroom over the largest
+  * cycled set (168); the headroom also covers Guava splitting the cache
+  * into four LRU segments (its default concurrency level). Each entry
+  * keeps ~29 KB of heap and ~3.5 KB of metaspace alive (after a full GC:
+  * 168 cached gate classes against a cache of one);
+  * small single-projection classes keep ~22 KB and ~5 KB. A long-running
+  * stream whose plans generate new code every batch (YSB's state-eviction
+  * predicate) fills the cache to the cap, so the cap's worst case is
+  * ~400 × 35 KB ≈ 14 MB. It is a static conf: the code generator sizes
+  * its cache once per JVM, when it first loads, so the first session in a
+  * JVM fixes it (`SessionSiteSpec` keeps every session built here).
   */
 object GraftSession {
+
+  /** Entries of Spark's compiled-class cache; derivation above. */
+  val CodegenCacheEntries = 400
 
   /** The settings every session of the engine starts from. */
   private def settings(cores: String, aqe: Boolean): Seq[(String, String)] = Seq(
@@ -36,6 +68,7 @@ object GraftSession {
     "spark.sql.warehouse.dir" ->
       (sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse"),
     "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 

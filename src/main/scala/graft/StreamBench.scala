@@ -39,14 +39,14 @@ object StreamBench {
     val watch = BenchCal.idleWatch(spark)
     val calPre = if (watch.ran) watch.lastProbe else calibrate()
 
-    val cpu0 = BenchCal.cpuTimes()
+    val r0 = BenchCal.reading()
     val results = Bench.timeGates(spark, sfDir, gates, "stream-bench")()
-    val steal = BenchCal.stealShare(cpu0, BenchCal.cpuTimes())
+    val region = BenchCal.regionFields(r0, BenchCal.reading())
     val calPost = calibrate()
 
     val calIdleRef = BenchCal.idleRef
     val degraded = math.max(calPre, calPost) > 1.5 * calIdleRef
-    println(s"""{"metric":"stream_total",${Bench.timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS}},"cpu_steal_share":$steal,"degraded":$degraded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"stream_total",${Bench.timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS}},$region,"degraded":$degraded,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

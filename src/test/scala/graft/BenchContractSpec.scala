@@ -3,10 +3,12 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
-/** The timing fields Bench and StreamBench print on their contract line:
-  * a gate that throws must be named in `failed`, must clear `complete`,
-  * and must add nothing to `value` — so a crash can never make the total
-  * look faster. */
+/** The fields Bench and StreamBench print on their contract line: a gate
+  * that throws must be named in `failed`, must clear `complete`, and must
+  * add nothing to `value` — so a crash can never make the total look
+  * faster; and the timed region reports its CPU steal share and its code
+  * generation, so a working set that outgrows Spark's compiled-class cache
+  * shows in the artifact. */
 class BenchContractSpec extends SparkSpec {
 
   private def contract(results: Seq[(String, Seq[Double])]) =
@@ -44,5 +46,17 @@ class BenchContractSpec extends SparkSpec {
     assert(json.get("value").asDouble() === 1.75)
     assert(BenchCal.stealShare(BenchCal.cpuTimes("cpu  90 5 5 700 9 2 3 10 0 0"),
       BenchCal.cpuTimes("cpu  310 5 25 900 9 2 3 90 0 0")) === 0.25)
+  }
+
+  test("the region fields carry the steal share and the codegen compiles and ms") {
+    val r0 = BenchCal.reading()
+    // the inlined literal is used nowhere else, so this compiles a new class
+    spark.range(0, 4, 1, 1).selectExpr("id * 1234567891 AS x")
+      .write.format("noop").mode("overwrite").save()
+    val json = new ObjectMapper().readTree("{" + BenchCal.regionFields(r0, BenchCal.reading()) + "}")
+    assert(json.fieldNames().asScala.toSet ===
+      Set("cpu_steal_share", "codegen_compiles", "codegen_compile_ms"))
+    assert(json.get("codegen_compiles").asLong() >= 1)
+    assert(json.get("codegen_compile_ms").asDouble() > 0)
   }
 }

@@ -1,16 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path => NioPath, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
@@ -29,32 +26,6 @@ class TablesSpec extends SparkSpec {
     val dir = tempDir()
     Files.copy(java.nio.file.Paths.get(s"$sf/$table.parquet"), dir.resolve(s"$table.parquet"))
     dir
-  }
-
-  /** Jobs started by `body` on this thread, seen by a listener. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables-spec-${System.nanoTime()}"
-    val marker = s"$tag-end"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(tag)
-      try body finally sc.setJobDescription(null)
-      // events reach a listener in order: once the marker job is seen,
-      // every job `body` started has been seen
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 10000
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker))
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def withConf[T](k: String, v: String)(body: => T): T = {

@@ -41,6 +41,15 @@ class YsbSpec extends SparkSpec {
     val h2 = Gen.boundedEvents(spark, 3000L)
       .agg(sum(hash(col("ad_id"), col("event_time")))).collect()(0).getLong(0)
     assert(h1 === h2)
+    // one split per core by default; the rows do not depend on the split
+    assert(ev.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+    val h32 = Gen.boundedEvents(spark, 3000L, partitions = 32)
+      .agg(sum(hash(col("ad_id"), col("event_time")))).collect()(0).getLong(0)
+    assert(h32 === h1)
+  }
+
+  test("defining a YSB query runs no Spark job: the campaign dimension is a local relation") {
+    assert(jobsStartedBy(Ysb.query(Gen.boundedEvents(spark, 1000L), Gen.campaigns(spark))) === 0)
   }
 
   test("YSB query: window totals equal filtered-join input size") {
