@@ -113,7 +113,7 @@ object Bench {
       if (done % segLen == 0 && done < headline.size)
         segCals += ((done, calibrate()))
     }
-    val region = BenchCal.regionFields(r0, BenchCal.reading())
+    val region = BenchCal.regionFields(spark, r0, BenchCal.reading())
     // r15 established the throttle mechanism: the query passes themselves
     // drain a host burst budget that refills in ~1–2 min, so an IMMEDIATE
     // post-calibration reads the run's own exhaust, not ambient load

@@ -1,10 +1,12 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.util.SerializableConfiguration
 
 /** Machine-load calibration shared by every timing main (Bench, the YSB
   * streaming bench, probe mains that want a clean window).
@@ -117,10 +119,25 @@ object BenchCal {
   def reading(): Reading = Reading(cpuTimes(),
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
+  /** Keys and Java-serialized bytes of the Hadoop conf Spark copies into
+    * every parquet scan and state-store RDD of `spark`. */
+  def hadoopConfSize(spark: SparkSession): (Int, Int) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val bytes = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bytes)
+    try out.writeObject(new SerializableConfiguration(conf)) finally out.close()
+    (conf.size, bytes.size)
+  }
+
   /** The machine fields of a contract line for the region between two
-    * readings: `cpu_steal_share`, `codegen_compiles`, `codegen_compile_ms`.
-    * A working set of generated classes larger than Spark's cache
-    * recompiles on every pass, and shows here as compiles. */
-  def regionFields(r0: Reading, r1: Reading): String =
-    s""""cpu_steal_share":${stealShare(r0.cpu, r1.cpu)},"codegen_compiles":${r1.compiles - r0.compiles},"codegen_compile_ms":${(r1.compileNs - r0.compileNs) / 1e6}"""
+    * readings: `cpu_steal_share`, `codegen_compiles`, `codegen_compile_ms`,
+    * and the session's `hadoop_conf_keys` and `hadoop_conf_bytes` at its
+    * end. A working set of generated classes larger than Spark's cache
+    * recompiles on every pass, and shows here as compiles; Hadoop's
+    * default properties coming back into the session's conf show as
+    * ~1,100 keys and ~113 KB. */
+  def regionFields(spark: SparkSession, r0: Reading, r1: Reading): String = {
+    val (keys, bytes) = hadoopConfSize(spark)
+    s""""cpu_steal_share":${stealShare(r0.cpu, r1.cpu)},"codegen_compiles":${r1.compiles - r0.compiles},"codegen_compile_ms":${(r1.compileNs - r0.compileNs) / 1e6},"hadoop_conf_keys":$keys,"hadoop_conf_bytes":$bytes"""
+  }
 }

@@ -39,19 +39,16 @@ object SpillProbe {
     }
   }
 
-  private def session(cores: String, starved: Option[Double]): SparkSession = {
-    val b = GraftSession.builder(
-      s"graft-spill-${starved.fold("normal")(f => s"starved-$f")}", cores)
-    starved.foreach { f =>
-      // fraction of (heap - 300 MB reserved) usable for execution+storage;
-      // collapsing it forces every buffering operator through its spill
-      // path without shrinking the JVM (the data-structure sizes stay
-      // production-shaped, only the budget moves)
-      b.config("spark.memory.fraction", f.toString)
-        .config("spark.memory.storageFraction", "0.1")
-    }
-    b.getOrCreate()
-  }
+  // fraction of (heap - 300 MB reserved) usable for execution+storage;
+  // collapsing it forces every buffering operator through its spill path
+  // without shrinking the JVM (the data-structure sizes stay
+  // production-shaped, only the budget moves)
+  private def session(cores: String, starved: Option[Double]): SparkSession =
+    GraftSession.local(
+      s"graft-spill-${starved.fold("normal")(f => s"starved-$f")}", cores,
+      conf = starved.toSeq.flatMap(f => Seq(
+        "spark.memory.fraction" -> f.toString,
+        "spark.memory.storageFraction" -> "0.1")))
 
   /** Order-insensitive result fingerprint: decimal sum of per-row xxhash64
     * over every column (decimal so ANSI mode cannot overflow-throw), so

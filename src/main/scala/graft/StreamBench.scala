@@ -41,7 +41,7 @@ object StreamBench {
 
     val r0 = BenchCal.reading()
     val results = Bench.timeGates(spark, sfDir, gates, "stream-bench")()
-    val region = BenchCal.regionFields(r0, BenchCal.reading())
+    val region = BenchCal.regionFields(spark, r0, BenchCal.reading())
     val calPost = calibrate()
 
     val calIdleRef = BenchCal.idleRef

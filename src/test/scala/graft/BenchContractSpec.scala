@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 /** The fields Bench and StreamBench print on their contract line: a gate
   * that throws must be named in `failed`, must clear `complete`, and must
   * add nothing to `value` — so a crash can never make the total look
-  * faster; and the timed region reports its CPU steal share and its code
-  * generation, so a working set that outgrows Spark's compiled-class cache
-  * shows in the artifact. */
+  * faster; and the timed region reports its CPU steal share, its code
+  * generation and the size of the session's Hadoop conf, so a working set
+  * that outgrows Spark's compiled-class cache, or Hadoop's defaults coming
+  * back into the conf, shows in the artifact. */
 class BenchContractSpec extends SparkSpec {
 
   private def contract(results: Seq[(String, Seq[Double])]) =
@@ -53,10 +54,14 @@ class BenchContractSpec extends SparkSpec {
     // the inlined literal is used nowhere else, so this compiles a new class
     spark.range(0, 4, 1, 1).selectExpr("id * 1234567891 AS x")
       .write.format("noop").mode("overwrite").save()
-    val json = new ObjectMapper().readTree("{" + BenchCal.regionFields(r0, BenchCal.reading()) + "}")
-    assert(json.fieldNames().asScala.toSet ===
-      Set("cpu_steal_share", "codegen_compiles", "codegen_compile_ms"))
+    val json = new ObjectMapper().readTree(
+      "{" + BenchCal.regionFields(spark, r0, BenchCal.reading()) + "}")
+    assert(json.fieldNames().asScala.toSet === Set("cpu_steal_share",
+      "codegen_compiles", "codegen_compile_ms", "hadoop_conf_keys", "hadoop_conf_bytes"))
     assert(json.get("codegen_compiles").asLong() >= 1)
     assert(json.get("codegen_compile_ms").asDouble() > 0)
+    assert(json.get("hadoop_conf_keys").asInt() ===
+      spark.sessionState.newHadoopConf().size)
+    assert(json.get("hadoop_conf_bytes").asInt() > 0)
   }
 }

@@ -3,10 +3,9 @@ package graft
 /** Scratch driver for manual verification runs (not a test). */
 object ScratchDrive {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("graft-scratch", "4")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = GraftSession.local("graft-scratch", "4", conf = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // stream user_ids from the DSv2 replay source → keyed running counters

@@ -6,9 +6,10 @@ import java.io.File
   * once per JVM, from the first session (`spark.sql.codegen.cache.maxEntries`
   * sizes the compiled-class cache when the code generator first loads), so
   * every engine JVM, the forked test JVM included, must build its first
-  * session from `GraftSession.settings`. A session or context built any
-  * other way could start a JVM without them. The only builder is
-  * `GraftSession.builder`; everything else calls it or `GraftSession.local`.
+  * session from `GraftSession.settings`, and every session must have its
+  * Hadoop conf trimmed (`GraftSession.trimHadoopConf`). A session or
+  * context built any other way could miss both. The only builder is
+  * `GraftSession.local`; everything else calls it.
   */
 class SessionSiteSpec extends SiteLint {
 
@@ -18,7 +19,7 @@ class SessionSiteSpec extends SiteLint {
     * why it may build a session). */
   private val manifest: Map[(String, String), (Int, String)] = Map(
     ("GraftSession.scala", """SparkSession.builder().master(s"local[$cores]").appName(appName)) {""") ->
-      (1, "the engine's one session builder: applies GraftSession.settings"))
+      (1, "the engine's one session builder: applies GraftSession.settings, trims the Hadoop conf"))
 
   test("SparkSession.builder appears only in GraftSession") {
     val found = scanChains(roots)(_.contains("Spark")) { chain =>
@@ -29,6 +30,6 @@ class SessionSiteSpec extends SiteLint {
         c.contains("newSparkContext(") || c.contains("SparkContext.getOrCreate(")
     }
     assertClassified(found, manifest, "session-builder",
-      "build the session with GraftSession.local or GraftSession.builder")
+      "build the session with GraftSession.local")
   }
 }
