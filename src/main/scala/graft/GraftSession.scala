@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import graft.fs.{NioLocalFileSystem, NioLocalFs}
 
 /** Session factory with the engine's scale-appropriate defaults, shared by
-  * every main (Verify / Bench / Explain / harness benches) and the test
+  * every main (Verify / Bench / StreamBench / Explain / Tiers) and the test
   * session.
   *
   * Local mode sizes `shuffle.partitions` to the core count (the driver

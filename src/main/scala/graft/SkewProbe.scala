@@ -40,6 +40,10 @@ import graft.sources.Tables
   * its default — the skew RATIO is scale-invariant and is what's being
   * demonstrated.
   *
+  * Run: `sbt "runMain graft.SkewProbe [MULT]"` (default 30) over the
+  * events of `SPARK_GRAFT_SF_DIR`; the fact side is exploded ×MULT in
+  * memory, so no grown tier is read.
+  *
   * Output: one JSON line per variant {variant, sec, skew_marks, rows} plus
   * a summary line; recorded in BASELINE.md.
   */
@@ -169,7 +173,8 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SOAK_MULT", "30").toInt
+    val mult = args.headOption.fold(30)(_.toInt)
+    require(mult >= 1, s"MULT must be at least 1, got $mult")
     val spark = GraftSession.local("graft-skew-probe",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spill-pressure probe: the "spill-aware" claim measured instead of
-  * argued. Runs a gated query on a soak corpus twice in one process —
-  * first under deliberately starved execution memory
+  * argued. Runs a gated query on a grown tier (graft.Tiers) twice in one
+  * process — first under deliberately starved execution memory
   * (`spark.memory.fraction` collapsed so sorts/aggregates/joins cannot
   * hold their buffers), then under the normal session — and asserts the
   * starved run (a) actually spilled (task-metrics `diskBytesSpilled` > 0;
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * memory, no OOM — rather than requiring partition sizes to be tuned
   * exactly right in advance.
   *
-  * Env: SPARK_GRAFT_SPILL_DIR (corpus; default target/soak/x30 — generate
-  * via graft.Soak), SPARK_GRAFT_SPILL_QUERY (default qd03),
+  * Env: SPARK_GRAFT_SPILL_DIR (corpus; default the 30× uniform tier of
+  * sf0.1, `Tiers.dir("sf0.1", 30, zipf = false)` — generate it with
+  * `runMain graft.Tiers <sf0.1 dir> 30`), SPARK_GRAFT_SPILL_QUERY (default qd03),
   * SPARK_GRAFT_SPILL_FRACTION (default 0.02), SPARK_GRAFT_CPUS.
   *
   * Output: one JSON line per run with wall seconds + spill bytes.
@@ -64,7 +65,8 @@ object SpillProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SPILL_DIR", "target/soak/x30")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SPILL_DIR",
+      Tiers.dir("sf0.1", 30, zipf = false))
     val qName = sys.env.getOrElse("SPARK_GRAFT_SPILL_QUERY", "qd03_minhash_lsh_pairs")
     val fraction = sys.env.getOrElse("SPARK_GRAFT_SPILL_FRACTION", "0.02").toDouble
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

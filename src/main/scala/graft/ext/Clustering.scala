@@ -209,9 +209,10 @@ object Clustering {
 
   /** Scale-aware cluster count for the SemDeDup family: K = max(16, ⌈√N⌉).
     * Total cost = assignment O(N·K) + within-cluster pairs O(N²/K), a
-    * U-curve whose measured minimum is K ≈ √N (Soak's semdedup_k_sizing:
-    * 8× faster than the old fixed K = 16 at 30×, and ~linear under corpus
-    * growth where fixed K is quadratic). The corpus count is one
+    * U-curve whose measured minimum is K ≈ √N (the semdedup_k_sizing rows
+    * of SOAK_FULL_r12–r14.jsonl and BASELINE.md's K-curve: 8× faster than
+    * the old fixed K = 16 at 30×, and ~linear under corpus growth where
+    * fixed K is quadratic). The corpus count is one
     * driver-side long — the legitimate single-value read (qd08's
     * convergence-check pattern); everything downstream stays distributed,
     * and the oracle derives the identical K in-query (count(*) OVER (),
@@ -222,15 +223,11 @@ object Clustering {
     math.max(Similarity.IvfK, math.ceil(math.sqrt(n.toDouble)).toInt)
   }
 
-  /** qd11's (vec_id, c_id, is_dup) flags at the scale-derived K — the
-    * default every caller (qp02, Soak) gets. Package-visible so the qp02
-    * curation pipeline composes the identical semantic-dedup stage. */
+  /** qd11's (vec_id, c_id, is_dup) flags at the scale-derived K.
+    * Package-visible so the qp02 curation pipeline composes the identical
+    * semantic-dedup stage. */
   private[graft] def semDedupFlags(s: SparkSession, d: String): DataFrame =
     qd11(s, d, scaleAwareK(s, d))
-
-  /** Explicit-K variant, for the Soak U-curve measurement only. */
-  private[graft] def semDedupFlags(s: SparkSession, d: String, k: Int): DataFrame =
-    qd11(s, d, k)
 
   /** `ckpt` defaults to the single-JVM corpus-sized tier; a cluster
     * passes [[CheckpointStrategy.Reliable]] (VERDICT r14 #1). */

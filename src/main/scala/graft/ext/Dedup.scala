@@ -416,8 +416,9 @@ object Dedup {
     * saturates under corpus growth exactly like SimHash's 4×12 did (30×
     * soak: 60k docs / 16 buckets ≈ 3.7k per bucket ≫ BucketCap — nearly
     * every bucket dropped). As with [[BandScheme]], the scale remedy is
-    * WIDER bands at the same band count, never a bigger cap; Soak
-    * measures the oversized-bucket drain gate vs wide on the same corpus.
+    * WIDER bands at the same band count, never a bigger cap. The
+    * `soak_emb_band_width` rows of SOAK_FULL_r12–r14.jsonl record the
+    * oversized-bucket drain, gate vs wide, on the same 30× corpus.
     */
   final case class EmbScheme(bands: Int, width: Int) {
     val planes: Int = bands * width
@@ -451,13 +452,6 @@ object Dedup {
       .select(col("vec_id"), col("b.j").as("j"), col("b.key").as("key"))
       .groupBy(col("j"), col("key"))
       .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-
-  /** Buckets the candidate stage skips (> BucketCap members) — qd05b's
-    * "logged drops" channel, printed by Soak alongside qd03's. */
-  def embLshOversizedBuckets(s: SparkSession, d: String,
-      sc: EmbScheme = EmbGateScheme): DataFrame =
-    embLshBuckets(Tables.embeddings(s, d), sc)
-      .filter(size(col("ids")) > BucketCap)
 
   private[graft] def embLshPairs(e: DataFrame, sc: EmbScheme): DataFrame = {
     val cand = embLshBuckets(e, sc)
@@ -520,8 +514,9 @@ object Dedup {
     * keyspace saturating under corpus growth (pipeline_oversized_buckets
     * 1810, flat from 30× to 100×), and the remedy at scale is WIDER BANDS,
     * not bigger caps (a bigger cap re-admits quadratic pair work exactly
-    * where the corpus is densest). Soak measures the drain: the same 100×
-    * corpus under [[WideScheme]] vs [[GateScheme]].
+    * where the corpus is densest). The `soak_band_width` rows of
+    * SOAK_FULL_r12–r14.jsonl record the drain: the same 30× corpus under
+    * [[WideScheme]] vs [[GateScheme]].
     */
   final case class BandScheme(simBits: Int, bands: Int, width: Int, hammingMax: Int) {
     require(bands * width <= simBits && simBits <= 60,
@@ -638,15 +633,6 @@ object Dedup {
       .filter(size(col("ids")).between(2, BucketCap))
       .agg(coalesce(sum(expr("size(ids) * (size(ids) - 1) div 2")), lit(0L)))
       .collect()(0).getLong(0)
-
-  /** Buckets a scheme's candidate stage skips (> BucketCap members) — the
-    * per-scheme drop channel; Soak prints GateScheme vs WideScheme so the
-    * wider bands' drain of the saturated keyspace is measured. */
-  def simhashOversizedBuckets(s: SparkSession, d: String,
-      scheme: BandScheme = GateScheme): DataFrame =
-    simhashBucketsRaw(Tables.documents(s, d), scheme)
-      .filter(size(col("ids")) > BucketCap)
-      .select(col("c"), col("chunk"), size(col("ids")).as("n_docs"))
 
   private def qd07(s: SparkSession, d: String): DataFrame =
     // Same capped-bucket shape as qd03, but the bucket members carry

@@ -53,12 +53,12 @@ object Pipeline {
 
   /** Near-dup candidate buckets over the dedup survivors, BEFORE the cap
     * filter: one groupBy(chunk-key) shuffle carrying sorted (doc_id,
-    * simhash) structs — identical shape to Dedup.simhashBucketStage. Band
-    * layout is a parameter (gate = Dedup.GateScheme; Soak also probes
-    * Dedup.WideScheme to show the wider keyspace draining the saturated
-    * oversized-bucket channel). */
-  private def nearDupBuckets(dedup: DataFrame,
-      scheme: Dedup.BandScheme = Dedup.GateScheme): DataFrame =
+    * simhash) structs — identical shape to Dedup.simhashBucketStage, in
+    * the gate band layout. The wide layout's drain of the saturated
+    * oversized-bucket channel is on file in SOAK_FULL_r12–r14.jsonl
+    * (`soak_band_width`). */
+  private def nearDupBuckets(dedup: DataFrame): DataFrame = {
+    val scheme = Dedup.GateScheme
     Dedup.withSimhash(dedup.select(col("doc_id"), col("text")), scheme.simBits)
       .select(col("doc_id"), col("simhash"),
         explode(array((0 until scheme.bands).map(c =>
@@ -67,13 +67,14 @@ object Pipeline {
       .select(col("ck"), struct(col("doc_id"), col("simhash")).as("ds"))
       .groupBy(col("ck"))
       .agg(sort_array(collect_list(col("ds"))).as("ids")) // sorts by doc_id
+  }
 
   /** Buckets the pipeline's near-dup stage skips (> BucketCap members) —
     * the observable-drops channel, symmetric to Dedup.oversizedLshBuckets;
-    * asserted empty in the soak's linearity preconditions. */
-  def oversizedBuckets(s: SparkSession, d: String,
-      scheme: Dedup.BandScheme = Dedup.GateScheme): DataFrame =
-    nearDupBuckets(dedupSurvivors(s, d), scheme)
+    * TiersSpec asserts it reads 0 on the fixtures and adds no bucket from
+    * a 3× to a 5× uniform tier. */
+  def oversizedBuckets(s: SparkSession, d: String): DataFrame =
+    nearDupBuckets(dedupSurvivors(s, d))
       .filter(size(col("ids")) > Dedup.BucketCap)
       .select(col("ck"), size(col("ids")).as("n"))
 

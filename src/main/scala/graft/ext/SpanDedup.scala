@@ -157,8 +157,9 @@ object SpanDedup {
     * members): an incoming near-dup whose ONLY match lives in one of these
     * classifies as 'new' — a recall loss, capped by design. This is the
     * observable-drops channel for that cap, symmetric to
-    * [[Dedup.oversizedLshBuckets]]; Soak prints its count so the loss is
-    * measured rather than silent as the seen corpus grows. */
+    * [[Dedup.oversizedLshBuckets]]. TiersSpec asserts it empty on a
+    * uniform grown tier; the `qd13_seen_bucket_drops` field of
+    * SOAK_FULL_r12–r14.jsonl records it at 30×. */
   def incrementalDroppedBuckets(s: SparkSession, d: String): DataFrame =
     simhashChunks(Tables.documents(s, d))
       .filter(col("doc_id") % NewMod =!= 0)

@@ -50,8 +50,9 @@ import org.apache.spark.util.LongAccumulator
   * AT-LEAST signal of poisoned-bucket traffic, not an exact dropped-entry
   * count: the poisoning trigger adds nPrior + batch, every later batch
   * routed to the dead bucket adds again, and Spark may re-add on task
-  * retry. Nonzero ⇔ the cap engaged somewhere — which is all Soak's drop
-  * channel reads from it (mirroring Dedup.oversizedLshBuckets).
+  * retry. Nonzero ⇔ the cap engaged somewhere (mirroring
+  * Dedup.oversizedLshBuckets); SOAK_FULL_r12–r14.jsonl's
+  * `soak_stream_neardup` rows record it on a 30× corpus.
   *
   * `ttl` additionally bounds state by a processing-time dedup horizon
   * (RocksDB-native expiry) — a wall-clock trade, deliberately NOT part of

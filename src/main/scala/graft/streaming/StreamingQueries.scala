@@ -431,11 +431,9 @@ object StreamingQueries {
   // streaming query is restricted). The poisoned-bucket frame is bounded
   // by the chunk keyspace (≤ 4·2^12 rows) → its broadcast is the
   // legitimate inverse-rule side; the corpus-sized dup set stays
-  // merge-pinned. Evictions land in an accumulator Soak reads.
+  // merge-pinned. The eviction channel's 30× reading is on file in
+  // SOAK_FULL_r12–r14.jsonl (`soak_stream_neardup`).
   // ---------------------------------------------------------------------
-  /** The gated qst10 run's eviction accumulator — read by Soak after the
-    * query completes (the streaming drop channel, like Dedup's counters). */
-  @volatile private[graft] var lastNearDupEvictions: Option[org.apache.spark.util.LongAccumulator] = None
 
   private def qst10(s: SparkSession, d: String): DataFrame = {
     val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -445,10 +443,8 @@ object StreamingQueries {
       val docs = streamTable(s, d, "documents")
       val sim = graft.ext.Dedup.withSimhash(docs)
       val name = s"graft_neardup_${counter.incrementAndGet()}"
-      val acc = s.sparkContext.longAccumulator("qst10_neardup_evictions")
-      lastNearDupEvictions = Some(acc)
       val q = NearDupDedup.flagNearDuplicates(sim,
-          bucketCap = graft.ext.Dedup.BucketCap, evictions = Some(acc))
+          bucketCap = graft.ext.Dedup.BucketCap)
         .writeStream.outputMode("update").format("memory").queryName(name).start()
       q.processAllAvailable()
       q.stop()
@@ -688,7 +684,8 @@ object StreamingQueries {
   // rule — oracle verbatim (exactly how qst18 gates WithinWatermark with
   // a batch-DISTINCT oracle). The expiry/re-keep semantics at the horizon
   // boundary are pinned by a dedicated small-TTL StreamingSpec case, and
-  // the bounded-state claim is a measured StateCurves plateau.
+  // the bounded-state claim is the measured plateau of the
+  // qst19_blockdedup_ttl curve in STATE_CURVES_r08.jsonl.
   // ---------------------------------------------------------------------
   private def qst19(s: SparkSession, d: String): DataFrame =
     blockDedup(s, d,

@@ -4,7 +4,7 @@ package graft
   * driver-memory hazard: a `.collect()` on a corpus-sized frame is a
   * driver OOM at 100 TB exactly like a pinned broadcast of one. Every
   * collect in LIBRARY code (operators/ext/streaming/ysb/sinks/functions/
-  * sources/store/fs — measurement mains like Bench/Soak legitimately
+  * sources/store/fs — measurement mains like Bench/Tiers legitimately
   * collect their own summaries) must be classified here with the
   * construction that bounds what it pulls to the driver. VERDICT r12
   * audited these sites by hand ("non-findings worth recording"); this

@@ -7,14 +7,58 @@ package graft
   * operators/ext/streaming/ysb/sinks/functions/sources/store/fs must be listed
   * below with the reason it stays a knob rather than a constant. The
   * measurement mains at the top of the package read their own run
-  * settings and are out of scope. A probe that needs a different value
-  * passes it as a parameter; a knob with no deployment reason becomes a
-  * constant.
+  * settings; a second manifest lists every `SPARK_GRAFT_*` name read
+  * anywhere under src/main, so a new knob in a main fails until it is
+  * classified and a removed one shows as a manifest diff. A probe that
+  * needs a different value passes it as a parameter; a knob with no
+  * deployment reason becomes a constant.
   */
 class EnvKnobSiteSpec extends SiteLint {
 
   /** (file, trimmed line) -> (expected occurrences, why it stays a knob). */
   private val manifest: Map[(String, String), (Int, String)] = Map()
+
+  /** Every `SPARK_GRAFT_*` name read under src/main -> why a run sets it. */
+  private val names: Map[String, String] = Map(
+    "SPARK_GRAFT_SF_DIR" -> ("the fixture dir or graft.Tiers tier a " +
+      "measurement main reads: the one switch between sf0.01, sf0.1 and a grown tier"),
+    "SPARK_GRAFT_CPUS" -> "local[N] cores: the host's core count",
+    "SPARK_GRAFT_ONLY" -> ("gate subset for Verify, Bench, StreamBench and " +
+      "PlanCensus: re-running one gate without the suite"),
+    "SPARK_GRAFT_BENCH_ALL" -> ("Bench times every batch gate instead of the " +
+      "14-query headline set the driver contract parses"),
+    "SPARK_GRAFT_CAL_SEGMENT" -> ("gates between BenchCal checkpoints, so a " +
+      "load burst in a long BENCH_ALL run is pinned to its segment"),
+    "SPARK_GRAFT_CAL_COOLDOWN_S" -> ("idle pause before each calibration " +
+      "segment on a host whose CPU credit refills between bursts"),
+    "SPARK_GRAFT_CAL_IDLE_REF" -> "BenchCal's calm probe time on this host",
+    "SPARK_GRAFT_IDLE_WATCH" -> ("wait for a calm probe before the timed " +
+      "passes: a quotable artifact on a shared host"),
+    "SPARK_GRAFT_IDLE_WATCH_MAX" -> "bound on the idle watch's attempts",
+    "SPARK_GRAFT_IDLE_WATCH_POLL_S" -> "seconds between idle-watch probes",
+    "SPARK_GRAFT_CENSUS_BASELINE" -> ("the checked-in census PlanCensus " +
+      "diffs against (tools/close.sh sets it)"),
+    "SPARK_GRAFT_SKEW_DEBUG" -> ("SkewProbe prints each variant's plan; " +
+      "goes when the probe folds into the profile collector"),
+    "SPARK_GRAFT_SPILL_DIR" -> ("SpillProbe's corpus; goes when the probe " +
+      "folds into the profile collector"),
+    "SPARK_GRAFT_SPILL_QUERY" -> ("SpillProbe's gate; goes when the probe " +
+      "folds into the profile collector"),
+    "SPARK_GRAFT_SPILL_FRACTION" -> ("SpillProbe's starved memory fraction; " +
+      "goes when the probe folds into the profile collector"))
+
+  test("every SPARK_GRAFT_* name read under src/main is listed with its reason") {
+    val name = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val found = scan(Seq(root))(_.contains("SPARK_GRAFT_")).keySet
+      .flatMap { case (_, l) => name.findAllIn(l) }
+    val unlisted = found -- names.keySet
+    assert(unlisted.isEmpty, "SPARK_GRAFT_* names with no reason (make the " +
+      "value a main argument or a constant, or list it with the reason a run " +
+      "sets it):\n  " + unlisted.toSeq.sorted.mkString("\n  "))
+    val stale = names.keySet -- found
+    assert(stale.isEmpty, "listed names no longer read under src/main:\n  " +
+      stale.toSeq.sorted.mkString("\n  "))
+  }
 
   test("every SPARK_GRAFT_* env read in library code is classified") {
     val found = scan(libraryRoots) { l =>
