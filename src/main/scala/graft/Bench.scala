@@ -2,19 +2,59 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}}. Each query is forced
-  * through the `noop` sink — FULL row production with no serialization cost.
-  * NOT `.count()`: under count, Catalyst legally eliminates work that
-  * doesn't change cardinality (a left join whose right key is unique, any
-  * pure projection), so count-timing silently measured only the scan for
-  * that query class — caught in round 5 when qd11's "2.4 s at 30×" pair
-  * join turned out to be an eliminated join (true cost ~38 s; the per-row
-  * projections qt11/qt14/qe01/qm02 were similarly under-measured). A
-  * warmup action runs first so JIT/codegen setup isn't billed to the first
-  * query.
+/** The timing main: times one gate suite on SPARK_GRAFT_SF_DIR and prints
+  * ONE JSON line {"metric":...,"queries":{...}}.
+  *
+  * {{{
+  * sbt "runMain graft.Bench [headline|batch|stream]"
+  * }}}
+  *  - `headline` (the default): the 14 headline gates, as the
+  *    `headline_total` contract line;
+  *  - `batch`: every gate except the streaming `qst*` gates and the
+  *    deliberate O(N²) small-SF-only baselines, which must never run above
+  *    test scale; also `headline_total`;
+  *  - `stream`: the `qst*` gates, as `stream_total`. Their timed region is
+  *    the gate's `run` (which starts the stream and blocks until it has
+  *    drained) plus the noop save of the returned memory-sink table. Each
+  *    pass runs a fresh streaming query into a fresh sink, so pass 2 is a
+  *    warm-JVM re-execution, not a cached result.
+  * `SPARK_GRAFT_ONLY` narrows any suite.
+  *
+  * Each gate is forced through the `noop` sink — FULL row production with
+  * no serialization cost. NOT `.count()`: under count, Catalyst legally
+  * eliminates work that doesn't change cardinality (a left join whose
+  * right key is unique, any pure projection), so count-timing silently
+  * measured only the scan for that query class — caught in round 5 when
+  * qd11's "2.4 s at 30×" pair join turned out to be an eliminated join
+  * (true cost ~38 s; the per-row projections qt11/qt14/qe01/qm02 were
+  * similarly under-measured). A warmup action runs first so JIT/codegen
+  * setup isn't billed to the first gate.
   */
 object Bench {
+
+  private[graft] val usage = "usage: graft.Bench [headline|batch|stream]"
+
+  /** The O(N²) baselines the `batch` suite leaves out. */
+  private val smallSfOnly = Set("qd05_embedding_dup", "qs01_knn_brute")
+
+  /** Gates between calibration checkpoints (see `main`). */
+  private val segmentLen = 40
+
+  /** The contract metric and the gates, in registry order, of the suite
+    * `args` names, narrowed to the gates `only` keeps. */
+  private[graft] def suite(args: Seq[String],
+      only: String => Boolean = Registry.only): (String, Seq[Q]) = {
+    def stream(q: Q) = q.name.startsWith("qst")
+    val (metric, gates) = args match {
+      case Seq() | Seq("headline") => "headline_total" -> Registry.all.filter(_.headline)
+      case Seq("batch") =>
+        "headline_total" -> Registry.all.filterNot(q => stream(q) || smallSfOnly(q.name))
+      case Seq("stream") => "stream_total" -> Registry.all.filter(stream)
+      case _ => throw new IllegalArgumentException(
+        s"unknown arguments ${args.mkString(" ")}; $usage")
+    }
+    metric -> gates.filter(q => only(q.name))
+  }
 
   /** Best-of-2 noop-sink timing of each gate, in order. A gate that throws
     * is logged under `tag` and recorded with the single pass -1.0;
@@ -54,9 +94,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val (metric, gates) = suite(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local("graft-bench", cpus)
+    val spark = GraftSession.local("graft-bench", GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
 
     // warmup: small scan+agg to absorb codegen/JIT/IO-pool startup
@@ -64,85 +104,42 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
 
-    // Driver contract times the headline set; SPARK_GRAFT_BENCH_ALL=1 times
-    // every gated batch query (local telemetry for finding regressions the
-    // 14-query headline set wouldn't surface). The all mode still excludes
-    // the streaming run-to-completion queries (they time Structured
-    // Streaming machinery, not a batch plan) and the deliberate O(N²)
-    // small-SF-only baselines, which must never run above test scale.
-    val smallSfOnly = Set("qd05_embedding_dup", "qs01_knn_brute")
-    // SPARK_GRAFT_ONLY=qa,qb: restrict to a subset for fast local iteration
-    // (Verify/PlanCensus's knob; the driver never sets it — full set there).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val headline =
-      (if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1"))
-        Registry.all.filterNot(q =>
-          q.name.startsWith("qst") || smallSfOnly(q.name))
-      else Registry.all.filter(_.headline))
-        .filter(q => only.forall(_.contains(q.name)))
-    // Fixed-cost calibration probe + idle-watch, shared machinery in
-    // [[BenchCal]] (factored out r18 so the YSB streaming bench runs the
-    // same watch — VERDICT r17 Next #4).
     def calibrate(): Double = BenchCal.calibrate(spark)
     calibrate() // untimed: absorb the probe's own codegen/JIT so pre/post
                 // measure machine load, not first-pass warmup
+    // The watch's last probe IS the pre-calibration: an immediate
+    // re-probe would read that probe's own exhaust (probes closer than a
+    // refill window interfere — ADVICE r17).
     val watch = BenchCal.idleWatch(spark)
-    // When the watch fired, its successful probe IS the pre-calibration:
-    // an immediate re-probe would read that probe's own exhaust (probes
-    // closer than a refill window interfere — ADVICE r17), so a clean
-    // watch hit could yield an inflated calPre and a falsely degraded
-    // artifact.
-    val calPre = if (watch.ran) watch.lastProbe else calibrate()
-    // Best-of-2 per query: a single cold pass bills one-time JVM/codegen/
-    // page-cache effects to whichever query hits them first (round-1 driver
-    // run measured 23.7 s where warm local runs measured 14.5 s). Two timed
-    // passes, keep the faster — still honest end-to-end plan execution. Both
-    // pass times are emitted (`passes`) so inter-pass variance is visible in
-    // the artifact.
-    // Segmented calibration (VERDICT r17 Next #6): the pre/post pair
-    // brackets the WHOLE suite, so one mid-run burst taints the whole
-    // artifact (r17's BENCH_ALL post-cal hit 7.04 for a 152 s run). A
-    // calibration checkpoint every SPARK_GRAFT_CAL_SEGMENT queries
-    // (default 40 — never fires on the 14-query headline set) localizes
-    // a burst to its segment: per-segment cals land in the artifact, so
-    // a degraded segment is attributable while the others stay quotable.
-    val segLen = sys.env.get("SPARK_GRAFT_CAL_SEGMENT").map(_.toInt).getOrElse(40)
+    val calPre = watch.lastProbe
+    // Best-of-2 per gate: a single cold pass bills one-time JVM/codegen/
+    // page-cache effects to whichever gate hits them first (a round-1 cold
+    // run measured 23.7 s where warm runs measured 14.5 s). Both
+    // pass times are emitted (`passes`) so inter-pass variance is visible.
+    // A calibration checkpoint every `segmentLen` gates (never on the
+    // 14-gate headline set) pins a mid-run load burst to its segment, so
+    // one burst does not taint the whole of a long run (r17's BENCH_ALL
+    // post-cal hit 7.04 for a 152 s run).
     val segCals = Seq.newBuilder[(Int, Double)]
     val r0 = BenchCal.reading()
-    val results = timeGates(spark, sfDir, headline, "bench") { done =>
-      if (done % segLen == 0 && done < headline.size)
+    val results = timeGates(spark, sfDir, gates, "bench") { done =>
+      if (done % segmentLen == 0 && done < gates.size)
         segCals += ((done, calibrate()))
     }
     val region = BenchCal.regionFields(spark, r0, BenchCal.reading())
-    // r15 established the throttle mechanism: the query passes themselves
-    // drain a host burst budget that refills in ~1–2 min, so an IMMEDIATE
-    // post-calibration reads the run's own exhaust, not ambient load
-    // (every r15 post-cal was degraded while pre-cals minutes later read
-    // clean). An optional cooldown lets one sitting produce both
-    // calibrations clean when the box itself is idle; the seconds slept
-    // are recorded in the artifact so the gap is disclosed, not hidden
-    // (VERDICT r15 #4).
-    val cooldownS =
-      sys.env.get("SPARK_GRAFT_CAL_COOLDOWN_S").map(_.toInt).getOrElse(0)
-    if (cooldownS > 0) Thread.sleep(cooldownS * 1000L)
     val calPost = calibrate()
-    // Self-gate (VERDICT r14 Next #3): the probe's idle wall time on this
-    // box is ~1.0 s (r11-r13 clean anchors: 1.00-1.07; every throttled r14
-    // artifact: 2.15-3.02). If EITHER calibration exceeds 1.5× that idle
-    // reference, the artifact stamps itself degraded so downstream tooling
-    // never quotes its timings unqualified — the load was present during
-    // (post) or before (pre) the query passes either way.
-    // calIdleRef is a property of the BOX (idle probe wall time at this
-    // core count), not of the engine — overridable via env on different
-    // hardware / SPARK_GRAFT_CPUS, and emitted in the JSON so the
-    // threshold each artifact was judged against is recorded in it
-    // (ADVICE r15).
+    // Self-gate (VERDICT r14 Next #3): if EITHER calibration exceeds 1.5×
+    // the host's idle reference, the artifact stamps itself degraded so
+    // its timings are never quoted unqualified — the load was present
+    // during (post) or before (pre) the gate passes either way. The
+    // reference is emitted, so the threshold each artifact was judged
+    // against is recorded in it (ADVICE r15).
     val calIdleRef = BenchCal.idleRef
     val degraded = math.max(calPre, calPost) > 1.5 * calIdleRef
     val segs = segCals.result()
       .map { case (after, c) => s"""{"after":$after,"cal":$c}""" }
       .mkString("[", ",", "]")
-    println(s"""{"metric":"headline_total",${timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"cooldown_s":$cooldownS,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},$region,"degraded":$degraded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"$metric",${timingFields(results)},"calibration":{"pre":$calPre,"post":$calPost,"idle_ref":$calIdleRef,"idle_watch_attempts":${watch.attempts},"idle_watch_waited_s":${watch.waitedS},"segments":$segs},$region,"degraded":$degraded,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

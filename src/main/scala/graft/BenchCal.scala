@@ -8,8 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.util.SerializableConfiguration
 
-/** Machine-load calibration shared by every timing main (Bench, the YSB
-  * streaming bench, probe mains that want a clean window).
+/** Machine-load calibration for the timing main, [[Bench]].
   *
   * The probe is a fixed-cost SF-independent CPU+shuffle job: its wall
   * time depends only on the machine, so on an idle box it is stable
@@ -19,18 +18,17 @@ import org.apache.spark.util.SerializableConfiguration
   * idle rerun could not reproduce — the pre/post fields adjudicate that
   * case without a rerun).
   *
-  * Idle-watch (VERDICT r16 Next #3, extended to the streaming bench in
-  * r18 per VERDICT r17 Next #4): nine manual clean-window attempts
-  * failed in r16 — a loop should hunt the window, not a human. The
-  * watch polls the probe every `SPARK_GRAFT_IDLE_WATCH_POLL_S` seconds
-  * (default 120 — the host burst budget refills in ~1-2 min, so polling
-  * faster reads the probe's OWN exhaust) and reports ready when a probe
-  * reads < 1.15× the idle reference, giving up after
-  * `SPARK_GRAFT_IDLE_WATCH_MAX` attempts (default 45, ~1.5 h) so an
-  * artifact is always produced. The successful probe's reading is
-  * returned so callers can REUSE it as their pre-calibration instead of
-  * probing again immediately — two probes closer than a refill window
-  * read each other's exhaust, which would defeat the watch (ADVICE r17).
+  * Idle watch (VERDICT r16 Next #3): nine manual clean-window attempts
+  * failed in r16 — a loop should hunt the window, not a human. Every run
+  * probes up to `WatchAttempts` times, `WatchPollS` seconds apart (the
+  * host burst budget refills in ~1-2 min, so polling faster reads the
+  * probe's OWN exhaust), and fires once a probe reads < 1.15× the idle
+  * reference or the attempts run out, so an artifact is always produced
+  * and waits at most 2 minutes. The last probe's reading is returned so
+  * the caller REUSES it as its pre-calibration instead of probing again
+  * immediately — two probes closer than a refill window read each
+  * other's exhaust, which would defeat the watch (ADVICE r17). A calm
+  * run therefore pays nothing beyond the pre-calibration it always took.
   */
 object BenchCal {
 
@@ -54,31 +52,25 @@ object BenchCal {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** `(attempts, waitedSeconds, lastProbeSeconds)`; attempts == 0 when the
-    * watch is disabled (SPARK_GRAFT_IDLE_WATCH unset) and the caller
-    * should take its own pre-calibration. */
-  final case class Watch(attempts: Int, waitedS: Long, lastProbe: Double) {
-    def ran: Boolean = attempts > 0
-  }
+  /** Idle-watch probes at most, and seconds between them: the values
+    * every checked-in BENCH_ALL and STREAM_BENCH run row was taken with. */
+  private val WatchAttempts = 3
+  private val WatchPollS = 60
 
-  /** Poll until a probe reads < 1.15× idleRef or attempts run out; no-op
-    * unless SPARK_GRAFT_IDLE_WATCH=1. */
+  /** `(attempts, waitedSeconds, lastProbeSeconds)` of one idle watch. */
+  final case class Watch(attempts: Int, waitedS: Long, lastProbe: Double)
+
+  /** Poll until a probe reads < 1.15× idleRef or attempts run out. */
   def idleWatch(spark: SparkSession): Watch = {
-    if (!sys.env.get("SPARK_GRAFT_IDLE_WATCH").contains("1"))
-      return Watch(0, 0L, -1.0)
-    val pollS =
-      sys.env.get("SPARK_GRAFT_IDLE_WATCH_POLL_S").map(_.toInt).getOrElse(120)
-    val maxTries =
-      sys.env.get("SPARK_GRAFT_IDLE_WATCH_MAX").map(_.toInt).getOrElse(45)
     var probe = calibrate(spark)
     var attempts = 1
     var waitedS = 0L
-    while (probe >= 1.15 * idleRef && attempts < maxTries) {
+    while (probe >= 1.15 * idleRef && attempts < WatchAttempts) {
       System.err.println(
         f"[bench] idle-watch attempt $attempts: probe $probe%.2f s >= " +
-          f"${1.15 * idleRef}%.2f — sleeping $pollS s")
-      Thread.sleep(pollS * 1000L)
-      waitedS += pollS
+          f"${1.15 * idleRef}%.2f — sleeping $WatchPollS s")
+      Thread.sleep(WatchPollS * 1000L)
+      waitedS += WatchPollS
       probe = calibrate(spark)
       attempts += 1
     }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.local("graft-explain", "4")
+    val spark = GraftSession.local("graft-explain", GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     val wanted =
       if (args.nonEmpty) Registry.all.filter(q => args.contains(q.name))

@@ -10,15 +10,14 @@ import org.apache.spark.sql.SparkSession
 import graft.fs.{NioLocalFileSystem, NioLocalFs}
 
 /** Session factory with the engine's scale-appropriate defaults, shared by
-  * every main (Verify / Bench / StreamBench / Explain / Tiers) and the test
-  * session.
+  * every main (Verify / Bench / PlanCensus / Explain / Tiers), the test
+  * session and perfbench. The mains size it with [[cores]].
   *
-  * Local mode sizes `shuffle.partitions` to the core count (the driver
-  * contract's local[32] → 32, not Spark's default 200: at small SF, 200
-  * near-empty shuffle partitions cost more scheduling than they buy in
-  * parallelism). On a real cluster the same knob should be ~2–3× total
-  * executor cores, or left to AQE coalescing — see README "Running at
-  * 100 TB".
+  * Local mode sizes `shuffle.partitions` to the core count (local[4] → 4,
+  * not Spark's default 200: at small SF, 200 near-empty shuffle
+  * partitions cost more scheduling than they buy in parallelism). On a
+  * real cluster the same knob should be ~2–3× total executor cores, or
+  * left to AQE coalescing — see README "Running at 100 TB".
   *
   * AQE stays on everywhere: runtime partition coalescing, skew-join
   * splitting, and dynamic join-strategy switches are exactly the safety
@@ -46,8 +45,8 @@ import graft.fs.{NioLocalFileSystem, NioLocalFs}
   *    under 100 entries recompiled ~210 classes in each pass). A run
   *    compiles 3,490 classes at 100 (483 in second passes), 2,422 at 400
   *    (50) and 2,207 unbounded (61: code that is new on every run).
-  *  - StreamBench: 1,771 over 44 gates, at most 71 per gate (qst44); 630
-  *    are new code on every run, which no cache size keeps.
+  *  - the stream suite: 1,771 over 44 gates, at most 71 per gate
+  *    (qst44); 630 are new code on every run, which no cache size keeps.
   * 400 is the smallest round size with about 2× headroom over the largest
   * cycled set (168); the headroom also covers Guava splitting the cache
   * into four LRU segments (its default concurrency level). Each entry
@@ -81,6 +80,11 @@ import graft.fs.{NioLocalFileSystem, NioLocalFs}
   * interleaved pairs, 4-vCPU VM).
   */
 object GraftSession {
+
+  /** The `local[N]` cores of every main: `SPARK_GRAFT_CPUS`, else the
+    * host's processor count. */
+  def cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** Entries of Spark's compiled-class cache; derivation above. */
   val CodegenCacheEntries = 400

@@ -144,13 +144,11 @@ object PlanCensus {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.local("graft-plan-census",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.local("graft-plan-census", GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_ONLY=qa,qb: restrict to a subset for fast local iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = Registry.only
     val rows = Registry.all.filterNot(q => skip(q.name))
-      .filter(q => only.forall(_.contains(q.name))).sortBy(_.name).map { q =>
+      .filter(q => only(q.name)).sortBy(_.name).map { q =>
       val isStream = q.name.startsWith("qst")
       // begin() inside the try (ADVICE r16 #2): it throws on streams a
       // PREVIOUS failed gate leaked — that must read as THIS gate's -1

@@ -50,4 +50,9 @@ object Registry {
       graft.ext.Pipeline.queries
 
   def byName: Map[String, Q] = all.map(q => q.name -> q).toMap
+
+  /** The gates every main is narrowed to: `SPARK_GRAFT_ONLY=qa,qb` re-runs
+    * some gates without their suite; unset keeps every gate. */
+  def only: String => Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").fold((_: String) => true)(_.split(",").toSet)
 }

@@ -10,7 +10,8 @@ import graft.sources.Tables
 /** Grown tiers: an N× copy of a fixture directory, for timing the gates
   * at a scale the fixtures do not reach. A tier is timed like any fixture
   * directory, by pointing `SPARK_GRAFT_SF_DIR` at it for `graft.Bench`
-  * (`SPARK_GRAFT_BENCH_ALL=1` for every batch gate) or `graft.StreamBench`.
+  * (`graft.Bench batch` for every batch gate, `graft.Bench stream` for the
+  * streaming ones).
   *
   * {{{
   * sbt "runMain graft.Tiers BASE MULT [uniform|zipf]"
@@ -134,8 +135,7 @@ object Tiers {
       s"shape must be uniform or zipf, got $shape; $usage")
     val zipf = shape == "zipf"
     val out = dir(base, mult, zipf)
-    val spark = GraftSession.local("graft-tiers", sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
+    val spark = GraftSession.local("graft-tiers", GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     System.err.println(s"[tiers] writing the ${mult}x $shape tier of $base to $out")
     val t0 = System.nanoTime()

@@ -6,14 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local("graft-verify", cpus)
+    val spark = GraftSession.local("graft-verify", GraftSession.cores)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=qa,qb: restrict to a subset for fast local iteration
-    // (the driver never sets it — full dump there).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = Registry.only
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -575,11 +575,11 @@ object Scale {
   // replicates the single matching dim row per split, preserving exact
   // join semantics (which is why the oracle is the plain join). At gate
   // SF the dim broadcasts and there is nothing to split — correct too;
-  // SkewProbe stages the fact-scale version (dim above the broadcast
-  // threshold) and records the skew-split firing + wall time vs both the
-  // unsplit baseline and the targeted-salting rewrite.
+  // ScaleSpec pins the split firing on a shuffle join, and BASELINE.md's
+  // round-8/9 skewed-join sections hold the fact-scale timings vs both
+  // the unsplit baseline and the targeted-salting rewrite.
   // ---------------------------------------------------------------------
-  /** Attach the deterministic Zipf hot key (shared by qx11 and SkewProbe). */
+  /** Attach the deterministic Zipf hot key. */
   private[graft] def zipfKeyed(ev: DataFrame, domain: Int): DataFrame =
     ev.withColumn("hot_key",
       expr(s"cast(floor($domain/(1 + (event_id % $domain))) as bigint)"))
@@ -604,7 +604,7 @@ object Scale {
 
   // ---------------------------------------------------------------------
   // qx12: AQE-rebalanced output layout — the WRITE-side skew primitive.
-  // qx11/SkewProbe cover the skewed shuffle JOIN; this covers the other
+  // qx11 covers the skewed shuffle JOIN; this covers the other
   // place skew kills a 100 TB run: the final write. Partitioning output
   // by a low-cardinality/skewed column (here event_type — the layout
   // consumers want to prune on) makes one writer task own the hot

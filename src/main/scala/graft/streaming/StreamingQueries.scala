@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Q
@@ -51,15 +52,40 @@ object StreamingQueries {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = streamTable(spark, dir, table)
     val src = if (table == "events") Tables.normalizeEvents(raw) else raw
-    val name = s"graft_${table}_${counter.incrementAndGet()}"
-    val q = transform(src).writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    toMemorySink(transform(src), table, mode)()
+  }
+
+  /** Runs `out` into a fresh memory sink named `graft_<tag>_<n>` (with
+    * its checkpoint at `checkpoint` if given), waits with `await` — by
+    * default until the bounded input is drained — and returns the sink's
+    * rows as a batch frame. Whether or not `await` throws, the query is
+    * stopped and the sink's temp view dropped: the returned frame holds
+    * the rows, so nothing of the run stays live in the session or pins
+    * the sink on the driver heap after the frame is gone. */
+  private[graft] def toMemorySink[T](out: Dataset[T], tag: String, mode: String,
+      checkpoint: Option[String] = None)(
+      await: StreamingQuery => Unit = _.processAllAvailable()): DataFrame = {
+    val name = s"graft_${tag}_${counter.incrementAndGet()}"
+    val writer = out.writeStream.outputMode(mode).format("memory").queryName(name)
+    val q = checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    try { await(q); out.sparkSession.table(name) }
+    finally {
+      q.stop()
+      out.sparkSession.catalog.dropTempView(name): Unit
+    }
+  }
+
+  /** Runs `body` with the session's state store set to RocksDB, restoring
+    * the previous provider after. */
+  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
   }
 
   /** Stream `table` through `transform` in `numBatches` EVENT-TIME-ORDERED
@@ -112,18 +138,15 @@ object StreamingQueries {
     require(placed.size >= 2 && placed.size <= numBatches,
       s"ts-split produced ${placed.size} slices (need 2..$numBatches, one file each)")
     val schema = Tables.schemaOf(spark, placed.head.getPath)
-    val name = s"graft_${table}_${counter.incrementAndGet()}"
-    val q = transform(
+    toMemorySink(transform(
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(streamDir))
-      .writeStream.outputMode(mode).format("memory").queryName(name).start()
-    q.processAllAvailable()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    q.stop()
-    require(dataBatches >= 2,
-      s"replay ran $dataBatches data-carrying micro-batches; need ≥2 " +
-        "for the cross-batch state-carry contract to be non-vacuous")
-    spark.table(name)
+          .parquet(streamDir)), table, mode) { q =>
+      q.processAllAvailable()
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches >= 2,
+        s"replay ran $dataBatches data-carrying micro-batches; need ≥2 " +
+          "for the cross-batch state-carry contract to be non-vacuous")
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -225,12 +248,7 @@ object StreamingQueries {
       .option("numPartitions", "8")
       .load()
     val out = graft.ysb.Ysb.query(stream, graft.ysb.Gen.campaigns(s), "10 seconds")
-    val name = s"graft_replay_${counter.incrementAndGet()}"
-    val q = out.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+    toMemorySink(out, "replay", "complete")()
   }
 
   private val qst05Sql = // identical generation arithmetic to qysb01's oracle
@@ -304,16 +322,12 @@ object StreamingQueries {
     val purchases = stream().filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("r_user"),
         col("ts").as("r_ts"))
-    val name = s"graft_sjoin_${counter.incrementAndGet()}"
-    val q = StreamJoin.intervalJoin(clicks, purchases,
+    toMemorySink(StreamJoin.intervalJoin(clicks, purchases,
       "l_user", "l_ts", "r_user", "r_ts",
       lowerSec = 0L, upperSec = 86400L, watermark = "1 day")
       .select(col("click_id"), col("purchase_id"),
-        (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+        (unix_micros(col("r_ts")) - unix_micros(col("l_ts"))).as("gap_us")),
+      "sjoin", "append")()
   }
 
   private val qst07Sql =
@@ -343,22 +357,17 @@ object StreamingQueries {
     val purchases = stream().filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("r_user"),
         col("ts").as("r_ts"))
-    val name = s"graft_sjoin_outer_${counter.incrementAndGet()}"
     val joined = clicks.withWatermark("l_ts", "1 day")
       .join(
         purchases.withWatermark("r_ts", "1 day"),
         expr("""l_user = r_user AND
                 r_ts >= l_ts AND r_ts <= l_ts + INTERVAL 1 DAY"""),
         "left_outer")
-    val q = joined
+    toMemorySink(joined
       .select(col("click_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(unix_micros(col("r_ts")) - unix_micros(col("l_ts")), lit(-1L))
-          .as("gap_us"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+          .as("gap_us")), "sjoin_outer", "append")()
   }
 
   private val qst09Sql =
@@ -393,22 +402,12 @@ object StreamingQueries {
   // key, which equals the batch count whatever the batch split was.
   // ---------------------------------------------------------------------
   private def qst08(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val keys = streamTable(s, d, "events")
         .select(col("user_id")).as(org.apache.spark.sql.Encoders.scalaLong)
-      val name = s"graft_counters_${counter.incrementAndGet()}"
-      val q = RunningCounters.countByKey(keys).toDF()
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      s.table(name).groupBy(col("key")).agg(max(col("total")).as("n"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      toMemorySink(RunningCounters.countByKey(keys).toDF(), "counters", "update")()
+        .groupBy(col("key")).agg(max(col("total")).as("n"))
     }
   }
 
@@ -436,19 +435,11 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
 
   private def qst10(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val docs = streamTable(s, d, "documents")
       val sim = graft.ext.Dedup.withSimhash(docs)
-      val name = s"graft_neardup_${counter.incrementAndGet()}"
-      val q = NearDupDedup.flagNearDuplicates(sim,
-          bucketCap = graft.ext.Dedup.BucketCap)
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      val t = s.table(name)
+      val t = toMemorySink(NearDupDedup.flagNearDuplicates(sim,
+        bucketCap = graft.ext.Dedup.BucketCap), "neardup", "update")()
       // renamed join keys on the derived sides: all three frames descend
       // from the same memory-sink view, and same-attribute self-joins on a
       // View fail reference resolution
@@ -462,9 +453,6 @@ object StreamingQueries {
         .select(col("docId"), col("simhash")).distinct()
         .join(dup.hint("merge"), col("docId") === col("dup_id"), "left_anti")
         .select(col("docId").as("doc_id"), col("simhash"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -518,16 +506,12 @@ object StreamingQueries {
       .select(col("g")).distinct().withColumn("hit", lit(1L)))
     val stream = streamTable(s, d, "documents")
       .filter(col("doc_id") >= evalN)
-    val name = s"graft_contam_${counter.incrementAndGet()}"
-    val q = gramsOf(stream)
+    toMemorySink(gramsOf(stream)
       .join(broadcast(evalGrams), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
-      .writeStream.outputMode("update").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+        sum(coalesce(col("hit"), lit(0L))).as("n_contaminated")),
+      "contam", "update")()
       .groupBy(col("doc_id"))
       .agg(max(col("n_grams")).as("n_grams"),
         max(col("n_contaminated")).as("n_contaminated"))
@@ -548,12 +532,7 @@ object StreamingQueries {
     * batch/stream consistency is worth pinning with the same hash gate. */
   private def statelessStreamed(s: SparkSession, d: String, tag: String)(
       transform: DataFrame => DataFrame): DataFrame = {
-    val name = s"graft_${tag}_${counter.incrementAndGet()}"
-    val q = transform(docStream(s, d))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(name)
+    toMemorySink(transform(docStream(s, d)), tag, "append")()
   }
 
   // qst12: streaming PII redaction — qt11's projection applied at ingest
@@ -630,42 +609,34 @@ object StreamingQueries {
 
   private def blockDedup(s: SparkSession, d: String,
       ttl: org.apache.spark.sql.streaming.TTLConfig): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // TTL'd state forces TimeMode.ProcessingTime, where
+    // TransformWithStateExec.shouldRunAnotherBatch is always true: the
+    // query keeps scheduling no-data ticks (they drive TTL expiry), so
+    // processAllAvailable — and even Trigger.AvailableNow — never see
+    // a "drained" stream (verified empirically: both wedge). Bounded
+    // completion instead: the file source puts the whole bounded
+    // corpus in batch 0, so once the sink holds a flag for every
+    // document the data is fully absorbed and we stop the query.
+    def absorbAll(q: StreamingQuery): Unit = {
+      val expectDocs = Tables.documents(s, d).count()
+      val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+      def absorbed() = s.table(q.name).select(col("docId")).distinct().count()
+      while (absorbed() < expectDocs && System.nanoTime() < deadline) Thread.sleep(200)
+      require(absorbed() >= expectDocs,
+        s"qst19: sink did not absorb all $expectDocs docs within 180s")
+    }
+    withRocksDb(s) {
       val docs = streamTable(s, d, "documents")
-      val name = s"graft_blockdedup_${counter.incrementAndGet()}"
-      val q = BlockDedup.flagBlocks(docs, ttl)
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      if (ttl == org.apache.spark.sql.streaming.TTLConfig.NONE) q.processAllAvailable()
-      else {
-        // TTL'd state forces TimeMode.ProcessingTime, where
-        // TransformWithStateExec.shouldRunAnotherBatch is always true: the
-        // query keeps scheduling no-data ticks (they drive TTL expiry), so
-        // processAllAvailable — and even Trigger.AvailableNow — never see
-        // a "drained" stream (verified empirically: both wedge). Bounded
-        // completion instead: the file source puts the whole bounded
-        // corpus in batch 0, so once the sink holds a flag for every
-        // document the data is fully absorbed and we stop the query.
-        val expectDocs = Tables.documents(s, d).count()
-        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-        while (s.table(name).select(col("docId")).distinct().count() < expectDocs
-            && System.nanoTime() < deadline) Thread.sleep(200)
-        require(s.table(name).select(col("docId")).distinct().count() >= expectDocs,
-          s"qst19: sink did not absorb all $expectDocs docs within 180s")
-      }
-      q.stop()
-      s.table(name)
+      val await: StreamingQuery => Unit =
+        if (ttl == org.apache.spark.sql.streaming.TTLConfig.NONE) _.processAllAvailable()
+        else absorbAll
+      toMemorySink(BlockDedup.flagBlocks(docs, ttl), "blockdedup", "update")(await)
         .groupBy(col("docId"), col("blk"))
         .agg(min(col("kept")).as("kept"))
         .filter(col("kept") === 1)
         .groupBy(col("docId"))
         .agg(count(lit(1)).as("kept_blocks"))
         .select(col("docId").as("doc_id"), col("kept_blocks"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -713,21 +684,14 @@ object StreamingQueries {
   // partition-parallel DSv2 scan; no driver-side state download.
   // ---------------------------------------------------------------------
   private def qst23(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst23-ckpt-")
       val ckpt = ckptPath.toString
       val docs = streamTable(s, d, "documents")
-      val name = s"graft_statereader_${counter.incrementAndGet()}"
-      val q = BlockDedup.flagBlocks(docs)
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
+      toMemorySink(BlockDedup.flagBlocks(docs), "statereader", "update",
+        Some(ckpt))(): Unit
       // per-doc keeper counts from the CHECKPOINT, not the sink.
-      // NOTE: this DataFrame is lazy and executes after the finally block
+      // NOTE: this DataFrame is lazy and executes after withRocksDb
       // restores the provider conf — that is safe because the statestore
       // reader resolves the provider from the checkpoint's OperatorStateMetadata,
       // not from the session conf at execution time (the conf only needs to
@@ -736,9 +700,6 @@ object StreamingQueries {
         .select(col("value._1").as("doc_id"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("kept_blocks"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -753,10 +714,7 @@ object StreamingQueries {
   // batch consistency contract, stated by construction.
   // ---------------------------------------------------------------------
   private def qst17(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val flags = runBounded(s, d, "events", "update") { ev =>
         CohortRetention.flagCohorts(
           ev.select(col("user_id"), to_date(col("ts")).as("day"))).toDF()
@@ -770,9 +728,6 @@ object StreamingQueries {
             "yyyy-MM-dd").as("cohort"),
           col("week_idx"))
         .agg(countDistinct(col("userId")).as("n_active"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -826,17 +781,9 @@ object StreamingQueries {
     val ckpt = ckptPath.toString
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = Tables.normalizeEvents(streamTable(s, d, "events"))
-    val name = s"graft_events_${counter.incrementAndGet()}"
-    val q = ev.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("uid_sum"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    toMemorySink(ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("uid_sum")),
+      "events", "complete", Some(ckpt))(): Unit
     // the result comes from the CHECKPOINT, not the sink: streaming-agg
     // state stores the grouping key in `key` and the evaluation buffer in
     // `value` (field names from the agg functions: count, sum)
@@ -1104,26 +1051,19 @@ object StreamingQueries {
     .otherwise(col("event_id"))
 
   private def qst26(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst26-ckpt-")
       val ckpt = ckptPath.toString
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = streamTable(s, d, "events")
-      val name = s"graft_hh_${counter.incrementAndGet()}"
-      val q = graft.streaming.HeavyHitters
-        .sketch(ev.select(hhKey.as("key")), HhShards, HhCapacity)
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
+      toMemorySink(graft.streaming.HeavyHitters
+        .sketch(ev.select(hhKey.as("key")), HhShards, HhCapacity),
+        "hh", "update", Some(ckpt))(): Unit
       // Materialize the statestore scan HERE, while the RocksDB provider
       // conf is still held — the returned DataFrame is lazy and would
-      // otherwise execute after the finally block restores the conf.
+      // otherwise execute after withRocksDb restores the conf.
       // (The reader resolves the provider from checkpoint metadata, but
-      // relying on that would make the try/finally misleading.) The
+      // relying on that would make the scoped conf misleading.) The
       // summary is ≤ shards×capacity rows by construction, so localizing
       // it is constant-size, not a data-path collect.
       val candRows = s.read.format("statestore")
@@ -1147,9 +1087,6 @@ object StreamingQueries {
           col("est").isNotNull.as("tracked"),
           (col("est").isNotNull && col("est") >= col("n") &&
             col("est") - col("err") <= col("n")).as("bound_ok"))
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1279,22 +1216,15 @@ object StreamingQueries {
   // the output size is the state bound made visible.
   // ---------------------------------------------------------------------
   private def qst28(s: SparkSession, d: String): DataFrame = {
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst28-ckpt-")
       val ckpt = ckptPath.toString
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = streamTable(s, d, "events")
-      val name = s"graft_bloom_${counter.incrementAndGet()}"
-      val q = graft.streaming.BloomDedup
+      toMemorySink(graft.streaming.BloomDedup
         .sketch(ev.select((col("event_id") % HhShards).cast("int").as("shard"),
-          col("event_id").as("key")))
-        .writeStream.outputMode("update").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable()
-      q.stop()
+          col("event_id").as("key"))),
+        "bloom", "update", Some(ckpt))(): Unit
       // byte-explode the per-shard bit arrays; materialize (cache+count)
       // while the RocksDB provider conf is still held (qst26's pattern —
       // 65,536 small rows, bounded by the sketch size, not the corpus)
@@ -1310,9 +1240,6 @@ object StreamingQueries {
         .cache()
       bytes.count()
       bytes
-    } finally prevProvider match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -3,17 +3,50 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
-/** The fields Bench and StreamBench print on their contract line: a gate
-  * that throws must be named in `failed`, must clear `complete`, and must
-  * add nothing to `value` — so a crash can never make the total look
-  * faster; and the timed region reports its CPU steal share, its code
-  * generation and the size of the session's Hadoop conf, so a working set
-  * that outgrows Spark's compiled-class cache, or Hadoop's defaults coming
-  * back into the conf, shows in the artifact. */
+/** The suites `graft.Bench` times and the fields it prints on their
+  * contract line: each argument selects a fixed gate set in registry
+  * order; a gate that throws must be named in `failed`, must clear
+  * `complete`, and must add nothing to `value` — so a crash can never
+  * make the total look faster; and the timed region reports its CPU
+  * steal share, its code generation and the size of the session's Hadoop
+  * conf, so a working set that outgrows Spark's compiled-class cache, or
+  * Hadoop's defaults coming back into the conf, shows in the artifact. */
 class BenchContractSpec extends SparkSpec {
 
   private def contract(results: Seq[(String, Seq[Double])]) =
     new ObjectMapper().readTree("{" + Bench.timingFields(results) + "}")
+
+  private def names(args: String*)(only: String => Boolean): (String, Seq[String]) = {
+    val (metric, gates) = Bench.suite(args, only)
+    metric -> gates.map(_.name)
+  }
+
+  test("each suite selects its gates in registry order, and SPARK_GRAFT_ONLY narrows it") {
+    val all = Registry.all.map(_.name)
+    val stream = all.filter(_.startsWith("qst"))
+    val headline = Registry.all.filter(_.headline).map(_.name)
+    val every = (_: String) => true
+    assert(headline.size === 14)
+    assert(names()(every) === ("headline_total" -> headline))
+    assert(names("headline")(every) === ("headline_total" -> headline))
+    assert(names("batch")(every) === ("headline_total" ->
+      all.filterNot(n => stream.contains(n) ||
+        n == "qd05_embedding_dup" || n == "qs01_knn_brute")))
+    assert(stream.size === 44)
+    assert(names("stream")(every) === ("stream_total" -> stream))
+    // the narrowing keeps registry order and drops names outside the suite
+    val only = Set("qst09_stream_outer_join", "q02_filter_project",
+      "q01_pricing_summary", "qd05_embedding_dup")
+    assert(names()(only)._2 === Seq("q01_pricing_summary", "q02_filter_project"))
+    assert(names("batch")(only)._2 === Seq("q01_pricing_summary", "q02_filter_project"))
+    assert(names("stream")(only)._2 === Seq("qst09_stream_outer_join"))
+  }
+
+  test("an unknown suite argument throws with the usage message") {
+    for (args <- Seq(Seq("all"), Seq("stream", "batch"), Seq("")))
+      assert(intercept[IllegalArgumentException](Bench.suite(args, _ => true))
+        .getMessage.contains(Bench.usage))
+  }
 
   test("a throwing gate is listed in failed, clears complete, and adds nothing to value") {
     val ok = Q("ok_gate", (s, _) => s.range(100).toDF("id"), None)

@@ -22,30 +22,12 @@ class EnvKnobSiteSpec extends SiteLint {
   private val names: Map[String, String] = Map(
     "SPARK_GRAFT_SF_DIR" -> ("the fixture dir or graft.Tiers tier a " +
       "measurement main reads: the one switch between sf0.01, sf0.1 and a grown tier"),
-    "SPARK_GRAFT_CPUS" -> "local[N] cores: the host's core count",
-    "SPARK_GRAFT_ONLY" -> ("gate subset for Verify, Bench, StreamBench and " +
-      "PlanCensus: re-running one gate without the suite"),
-    "SPARK_GRAFT_BENCH_ALL" -> ("Bench times every batch gate instead of the " +
-      "14-query headline set the driver contract parses"),
-    "SPARK_GRAFT_CAL_SEGMENT" -> ("gates between BenchCal checkpoints, so a " +
-      "load burst in a long BENCH_ALL run is pinned to its segment"),
-    "SPARK_GRAFT_CAL_COOLDOWN_S" -> ("idle pause before each calibration " +
-      "segment on a host whose CPU credit refills between bursts"),
+    "SPARK_GRAFT_CPUS" -> "local[N] cores when they should differ from the host's",
+    "SPARK_GRAFT_ONLY" -> ("gate subset for Verify, Bench and PlanCensus: " +
+      "re-running one gate without the suite"),
     "SPARK_GRAFT_CAL_IDLE_REF" -> "BenchCal's calm probe time on this host",
-    "SPARK_GRAFT_IDLE_WATCH" -> ("wait for a calm probe before the timed " +
-      "passes: a quotable artifact on a shared host"),
-    "SPARK_GRAFT_IDLE_WATCH_MAX" -> "bound on the idle watch's attempts",
-    "SPARK_GRAFT_IDLE_WATCH_POLL_S" -> "seconds between idle-watch probes",
     "SPARK_GRAFT_CENSUS_BASELINE" -> ("the checked-in census PlanCensus " +
-      "diffs against (tools/close.sh sets it)"),
-    "SPARK_GRAFT_SKEW_DEBUG" -> ("SkewProbe prints each variant's plan; " +
-      "goes when the probe folds into the profile collector"),
-    "SPARK_GRAFT_SPILL_DIR" -> ("SpillProbe's corpus; goes when the probe " +
-      "folds into the profile collector"),
-    "SPARK_GRAFT_SPILL_QUERY" -> ("SpillProbe's gate; goes when the probe " +
-      "folds into the profile collector"),
-    "SPARK_GRAFT_SPILL_FRACTION" -> ("SpillProbe's starved memory fraction; " +
-      "goes when the probe folds into the profile collector"))
+      "diffs against (tools/close.sh sets it)"))
 
   test("every SPARK_GRAFT_* name read under src/main is listed with its reason") {
     val name = "SPARK_GRAFT_[A-Z0-9_]+".r

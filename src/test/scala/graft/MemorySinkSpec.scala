@@ -1,0 +1,49 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+import graft.streaming.StreamingQueries
+
+/** The run path of every memory-sink streaming gate
+  * (`StreamingQueries.toMemorySink`): the sink's temp view is dropped once
+  * its rows are in the returned frame, and the query is stopped even when
+  * waiting on it throws, so no gate leaves a live stream or a driver-heap
+  * sink behind for the next one. */
+class MemorySinkSpec extends SparkSpec {
+
+  private def graftViews(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_")).toSet
+
+  test("a qst gate leaves no graft_ view, and its frame still holds the sink's rows") {
+    val before = graftViews()
+    val ids = StreamingQueries.runBounded(spark, sf, "events", "append")(
+      _.select(col("event_id")))
+    assert(graftViews() === before)
+    assert(ids.collect().map(_.getLong(0)).sorted.toSeq ===
+      graft.sources.Tables.events(spark, sf).select(col("event_id"))
+        .collect().map(_.getLong(0)).sorted.toSeq)
+    val gate = Registry.byName("qst01_stream_tumbling").run(spark, sf)
+    assert(graftViews() === before)
+    val rows = gate.collect().map(_.toString).sorted.toSeq
+    assert(rows.nonEmpty && gate.collect().map(_.toString).sorted.toSeq === rows)
+  }
+
+  test("a stream whose wait throws is stopped and its view dropped") {
+    val before = graftViews()
+    val active = spark.streams.active.map(_.id).toSet
+    def docs() = StreamingQueries.streamTable(spark, sf, "documents")
+      .select(col("doc_id"))
+    // the wait fails while the stream is still live
+    val e = intercept[IllegalStateException](
+      StreamingQueries.toMemorySink(docs(), "throwing_wait", "append") { _ =>
+        throw new IllegalStateException("boom")
+      })
+    assert(e.getMessage === "boom")
+    assert(spark.streams.active.map(_.id).toSet === active)
+    // the stream itself fails
+    intercept[Exception](StreamingQueries.toMemorySink(
+      docs().select(raise_error(lit("boom"))), "throwing_stream", "append")())
+    assert(spark.streams.active.map(_.id).toSet === active)
+    assert(graftViews() === before)
+  }
+}

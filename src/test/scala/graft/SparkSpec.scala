@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,25 +22,43 @@ trait SparkSpec extends AnyFunSuite {
   def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext
     val tag = s"jobs-started-by-${System.nanoTime()}"
-    val marker = s"$tag-end"
     val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
+    withListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
+        description(e).foreach(seen.add)
+    }) {
       sc.setJobDescription(tag)
       try body finally sc.setJobDescription(null)
-      // events reach a listener in order: once the marker job is seen,
-      // every job `body` started has been seen
+    }
+    seen.asScala.count(_ == tag)
+  }
+
+  /** Runs `body` with `listener` registered, and returns once `listener`
+    * has seen every event of the jobs `body` ran. */
+  def withListener[A](listener: SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    val marker = s"listener-marker-${System.nanoTime()}"
+    val markerSeen = new CountDownLatch(1)
+    val markerListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (description(e).contains(marker)) markerSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(markerListener)
+    try {
+      val out = body
+      // both listeners sit on the same queue and get its events in order:
+      // once the marker job is seen, `listener` has seen every earlier one
       sc.setJobDescription(marker)
       try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 10000
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker))
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
+      assert(markerSeen.await(10, TimeUnit.SECONDS))
+      out
+    } finally {
+      sc.removeSparkListener(markerListener)
+      sc.removeSparkListener(listener)
+    }
   }
+
+  private def description(e: SparkListenerJobStart): Option[String] =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
 }
