@@ -23,6 +23,11 @@ import graft.fs.{NioLocalFileSystem, NioLocalFs}
   * splitting, and dynamic join-strategy switches are exactly the safety
   * nets a 100 TB run needs, and they cost nothing at test SF.
   *
+  * `spark.sql.legacy.parquet.nanosAsLong` is on in every session: older
+  * fixtures stored events' `ts` as INT64 TIMESTAMP(NANOS), which Spark 4
+  * rejects outright unless it reads the column as a long
+  * ([[graft.sources.Tables.events]] then truncates it to microseconds).
+  *
   * `file:` paths go through [[graft.fs.RawNioFileSystem]] under both
   * Hadoop file APIs: without libhadoop, Hadoop's own local file system
   * forks `chmod` for every file and directory it creates and `readlink`
@@ -90,10 +95,11 @@ object GraftSession {
   val CodegenCacheEntries = 400
 
   /** The settings every session of the engine starts from. */
-  private def settings(cores: String, aqe: Boolean): Seq[(String, String)] = Seq(
+  private def settings(cores: String): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores,
-    "spark.sql.adaptive.enabled" -> aqe.toString,
+    "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.warehouse.dir" ->
       (sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse"),
     "spark.ui.enabled" -> "false",
@@ -103,9 +109,9 @@ object GraftSession {
 
   /** A `local[cores]` session carrying [[settings]], then `conf`, with its
     * Hadoop conf trimmed. The engine's only way to a session. */
-  def local(appName: String, cores: String, aqe: Boolean = true,
+  def local(appName: String, cores: String,
       conf: Seq[(String, String)] = Nil): SparkSession = {
-    val spark = (settings(cores, aqe) ++ conf).foldLeft(
+    val spark = (settings(cores) ++ conf).foldLeft(
       SparkSession.builder().master(s"local[$cores]").appName(appName)) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

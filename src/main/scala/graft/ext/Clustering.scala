@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Q
 import graft.functions.Vectors
@@ -229,10 +230,7 @@ object Clustering {
   private[graft] def semDedupFlags(s: SparkSession, d: String): DataFrame =
     qd11(s, d, scaleAwareK(s, d))
 
-  /** `ckpt` defaults to the single-JVM corpus-sized tier; a cluster
-    * passes [[CheckpointStrategy.Reliable]] (VERDICT r14 #1). */
-  private[graft] def qd11(s: SparkSession, d: String, k: Int,
-      ckpt: CheckpointStrategy = CheckpointStrategy.LocalDisk): DataFrame = {
+  private[graft] def qd11(s: SparkSession, d: String, k: Int): DataFrame = {
     val cents1 = refinedCentroids(s, d, k).select(col("c_id"), col("ms"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("c_id").asc)
@@ -244,10 +242,9 @@ object Clustering {
       .filter(col("r") === 1)
       .select(col("vec_id"), col("embedding"), col("c_id"))
       // read 3× (both dup self-join sides + the final flag join): the
-      // corpus × K assignment cross re-executed per reference. LocalDisk:
-      // corpus-sized with the embedding column (the qd19/qt22 r14 rule —
-      // in-heap copies of corpus-sized frames OOM grown tiers).
-      .transform(ckpt(_))
+      // corpus × K assignment cross re-executed per reference. On disk:
+      // corpus-sized with the embedding column.
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val dup = members.alias("a")
       .join(members.alias("b").hint("merge"),
         col("a.c_id") === col("b.c_id") && col("a.vec_id") < col("b.vec_id"))
@@ -341,19 +338,13 @@ object Clustering {
       .groupBy(col("doc_id"), col("y"), col("j"))
       .agg(count(lit(1)).as("x"))
 
-  private def qc03(s: SparkSession, d: String): DataFrame =
-    qc03Impl(s, d, CheckpointStrategy.LocalDisk)
-
-  /** qc03 with the lineage-checkpoint strategy as a parameter (the qd19
-    * treatment, VERDICT r14 #8): without it the design matrix — the
-    * dominant token-explode subtree — executes 3× (once under `scored`
-    * feeding `tot`, once under the gradient join's `err` side, once as
-    * the gradient join's feature side), the same multiply-referenced
-    * shape qc04 already checkpoints. LocalDisk is the single-JVM default;
-    * a cluster passes Reliable (see [[CheckpointStrategy]]). */
-  private[graft] def qc03Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy): DataFrame = {
-    val feats = ckpt(featFrame(s, d))
+  /** The design matrix is checkpointed to disk (the qd19 treatment,
+    * VERDICT r14 #8): without it the dominant token-explode subtree
+    * executes 3× (once under `scored` feeding `tot`, once under the
+    * gradient join's `err` side, once as the gradient join's feature
+    * side), the same multiply-referenced shape qc04 checkpoints. */
+  private def qc03(s: SparkSession, d: String): DataFrame = {
+    val feats = featFrame(s, d).localCheckpoint(true, StorageLevel.DISK_ONLY)
     val scored = feats
       .groupBy(col("doc_id"), col("y"))
       .agg(sum(col("x") * wOf(col("j"))).as("z"))
@@ -362,9 +353,10 @@ object Clustering {
           lit(500L) + floor(col("z") / 4000.0))).as("p"))
     // err is read twice (tot + the gradient join); checkpointing it stops
     // the score aggregation re-running — corpus-sized but thin (1 row/doc)
-    val err = ckpt(scored.select(col("doc_id"),
+    val err = scored.select(col("doc_id"),
       (col("p") - lit(1000L) * col("y")).as("e"),
-      when((col("p") >= 500) === (col("y") === 1), 1L).otherwise(0L).as("ok")))
+      when((col("p") >= 500) === (col("y") === 1), 1L).otherwise(0L).as("ok"))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val tot = err.agg(count(lit(1)).as("n_docs"), sum(col("ok")).as("n_correct"))
     val grads = feats.join(err.select(col("doc_id"), col("e")).hint("merge"),
         Seq("doc_id"))
@@ -437,17 +429,11 @@ object Clustering {
   // ---------------------------------------------------------------------
   private val TrainSteps = 3
 
-  private def qc04(s: SparkSession, d: String): DataFrame =
-    qc04Impl(s, d, CheckpointStrategy.LocalDisk)
-
-  /** qc04 with the lineage-checkpoint strategy as a parameter (VERDICT
-    * r15 #1 retrofit): the design matrix is the SAME corpus-sized
-    * featFrame qc03Impl LocalDisks — the in-heap copy is the r14-measured
-    * decade-tier OOM shape. A cluster passes Reliable. */
-  private[graft] def qc04Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy): DataFrame = {
+  /** The design matrix is the same corpus-sized featFrame qc03
+    * checkpoints to disk. */
+  private def qc04(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val feats = ckpt(featFrame(s, d))
+    val feats = featFrame(s, d).localCheckpoint(true, StorageLevel.DISK_ONLY)
     var w: Map[Long, Long] = s.range(NumFeat)
       .select(col("id").as("j"), wOf(col("id")).as("w")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -457,11 +443,11 @@ object Clustering {
       // err is read twice per step (the accuracy total + the gradient
       // join) — without pinning, the score aggregation (the feats join +
       // per-doc rollup, the step's dominant pass) re-executes for each,
-      // the same multiply-referenced shape qc03Impl already checkpoints.
+      // the same multiply-referenced shape qc03 already checkpoints.
       // Optimization r18: one score pass per step instead of two; err is
-      // corpus-sized but thin (3 longs/doc), so the step strategy applies
+      // corpus-sized but thin (3 longs/doc), so it goes to disk too
       // (AB_PROBE_r18.jsonl: 1.44× at 30×, 1.21× at 100×).
-      val err = ckpt(feats.join(broadcast(wDF), Seq("j"))
+      val err = feats.join(broadcast(wDF), Seq("j"))
         .groupBy(col("doc_id"), col("y"))
         .agg(sum(col("x") * col("w")).as("z"))
         .select(col("doc_id"), col("y"),
@@ -469,7 +455,8 @@ object Clustering {
             lit(500L) + floor(col("z") / 4000.0))).as("p"))
         .select(col("doc_id"),
           (col("p") - lit(1000L) * col("y")).as("e"),
-          when((col("p") >= 500) === (col("y") === 1), 1L).otherwise(0L).as("ok")))
+          when((col("p") >= 500) === (col("y") === 1), 1L).otherwise(0L).as("ok"))
+        .localCheckpoint(true, StorageLevel.DISK_ONLY)
       val totRow = err.agg(count(lit(1)).as("n"), sum(col("ok")).as("c"))
         .collect()(0)
       val (nDocs, nCorrect) = (totRow.getLong(0), totRow.getLong(1))

@@ -2,51 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Q
 import graft.functions.Vectors
 import graft.sources.Tables
-
-/** Lineage-truncation strategy for the iterative operators (connected
-  * components, PageRank) and for the multiply-referenced subtrees the r14
-  * lineage fixes checkpoint once (qd19/qt22/qt23/qd11/qs06): each such
-  * frame MUST be checkpointed or the plan re-executes per reference (or,
-  * for the iterative ops, grows exponentially — see [[Dedup.components]]).
-  *
-  *  - [[CheckpointStrategy.Local]] — `localCheckpoint(eager)`: RDD blocks
-  *    on executors at the default MEMORY_AND_DISK tier, no filesystem
-  *    round-trip. The single-JVM default for BOUNDED frames; an executor
-  *    loss at cluster scale kills the lineage-less blocks.
-  *  - [[CheckpointStrategy.LocalDisk]] — `localCheckpoint(eager,
-  *    DISK_ONLY)`: the single-JVM default for CORPUS-SIZED frames — the
-  *    deserialized in-heap copy of a corpus-sized checkpoint OOMed the
-  *    1000×-doc tier (r14 measured, qd19), while DISK_ONLY blocks stream
-  *    back per use at a cost the scale ratios absorb. Same executor-loss
-  *    caveat as Local.
-  *  - [[CheckpointStrategy.Reliable]] — `checkpoint(eager)`: frames are
-  *    written to the SparkContext checkpoint dir (HDFS/object store at
-  *    cluster scale — survives executor loss and stays recomputable-free
-  *    across the whole query). Requires `sparkContext.setCheckpointDir`
-  *    first; this is the 100 TB story and the CLUSTER DEFAULT — on a real
-  *    cluster every Local/LocalDisk site below should run Reliable, which
-  *    is why each site takes the strategy as a parameter (VERDICT r14 #1)
-  *    rather than hardcoding the single-JVM choice.
-  */
-sealed trait CheckpointStrategy {
-  def apply(df: DataFrame): DataFrame
-}
-object CheckpointStrategy {
-  case object Local extends CheckpointStrategy {
-    def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)
-  }
-  case object LocalDisk extends CheckpointStrategy {
-    def apply(df: DataFrame): DataFrame =
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-  }
-  case object Reliable extends CheckpointStrategy {
-    def apply(df: DataFrame): DataFrame = df.checkpoint(true)
-  }
-}
 
 /** Document deduplication operators for training-data pipelines:
   *
@@ -70,6 +30,17 @@ object CheckpointStrategy {
   * standard linear-scale near-dup path (vs the quadratic all-pairs joins,
   * which are only enabled here for oracle-checkable small-SF runs; at
   * scale qd03's candidate generation replaces them).
+  *
+  * Lineage checkpoints, here and in every other ext/ and streaming/
+  * operator: an iterative operator (components, PageRank, BPE training)
+  * and a frame read more than once are eagerly local-checkpointed, or the
+  * plan re-executes per reference (or, iterated, grows exponentially).
+  * A bounded frame stays in memory (`localCheckpoint(true)`); a frame the
+  * size of the corpus goes to disk (`localCheckpoint(true,
+  * StorageLevel.DISK_ONLY)`), because a copy kept in the heap ran out of
+  * memory at the 1000× tier (qd19, r14). A cluster build would call
+  * `checkpoint(true)` after `setCheckpointDir` instead, so that an
+  * executor loss recomputes rather than kills the query.
   */
 object Dedup {
 
@@ -201,22 +172,15 @@ object Dedup {
   private[graft] def lshStage(s: SparkSession, d: String): DataFrame =
     lshBuckets(withSignature(Tables.documents(s, d)))
 
-  private def qd03(s: SparkSession, d: String): DataFrame =
-    qd03Impl(s, d, CheckpointStrategy.LocalDisk)
-
-  /** qd03 with the lineage-checkpoint strategy as a parameter (the
-    * engine rule from [[CheckpointStrategy]]: corpus-sized ⇒ LocalDisk on
-    * a single JVM, Reliable on a cluster — VERDICT r15 #1 retrofit). */
-  private[graft] def qd03Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy): DataFrame = {
+  private def qd03(s: SparkSession, d: String): DataFrame = {
     // checkpoint (not cache): sigs is read three times below, so it is
     // materialized once either way, but the checkpoint's lifetime is owned
     // by the GC/ContextCleaner instead of leaking a session-lifetime cache
     // entry per invocation (bench best-of-2 / repeated tests). sigs is
-    // CORPUS-SIZED (one row per doc carrying a 128-hash signature array):
-    // the in-heap deserialized copy is the exact shape whose 1000×-doc
-    // tier OOM r14 measured on qd19, hence LocalDisk, not Local.
-    val sigs = ckpt(withSignature(Tables.documents(s, d)))
+    // corpus-sized (one row per doc carrying a 128-hash signature array),
+    // so it goes to disk.
+    val sigs = withSignature(Tables.documents(s, d))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val cand = lshBuckets(sigs)
       .filter(size(col("ids")).between(2, BucketCap))
       .select(explode(pairExplode).as("p"))
@@ -687,26 +651,24 @@ object Dedup {
     * minimum. Exposed (package-private) so DedupSpec can pin the O(log d)
     * round bound on adversarial (path-graph) inputs qd03 never produces. */
   private[graft] def components(pairFrame: DataFrame,
-      maxRounds: Int = MaxPropagationRounds,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+      maxRounds: Int = MaxPropagationRounds): DataFrame = {
     // Eager checkpoint on every per-round frame: the doubling step
     // references the propagated frame twice and the propagated frame
     // references labels twice, so WITHOUT lineage truncation the logical
     // plan triples per round — exponential analyze/plan cost that OOMs the
     // driver near round 10. Checkpointing pins each round to a constant-size
-    // LogicalRDD; Local vs Reliable is the caller's single-JVM vs cluster
-    // trade (see [[CheckpointStrategy]]).
+    // LogicalRDD.
     //
     // No co-partitioned layout (r18, AB_PROBE_r18.jsonl): repartitioning
     // edges/labels by key and pinning `propagated` measured breakeven at
     // sf0.1 and 30× and 1.4× slower at 100× — the doubling join's two
     // subtrees already share their heavy exchanges via ReuseExchange.
-    val pairs = ckpt(pairFrame.select(col("doc_a"), col("doc_b")))
-    val edges = ckpt(pairs
+    val pairs = pairFrame.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+    val edges = pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")))
+      .toDF("src", "dst").localCheckpoint(true)
+    var labels = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")).localCheckpoint(true)
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
@@ -732,7 +694,7 @@ object Dedup {
           col("old"))
         .select(col("id"), col("label"),
           (col("label") =!= col("old")).cast("long").as("chg"))
-      val next = ckpt(next0)
+      val next = next0.localCheckpoint(true)
       changed = next.agg(coalesce(sum(col("chg")), lit(0L))).collect()(0).getLong(0)
       labels = next.select(col("id"), col("label"))
       round += 1
@@ -840,16 +802,13 @@ object Dedup {
   private val RankIters = 3
 
   /** Fixed-point PageRank over undirected pair edges (columns doc_a,
-    * doc_b) — package-private so the spec can run both checkpoint
-    * strategies on the same graph.
+    * doc_b).
     *
-    * degEdges is checkpointed unpartitioned: `Dataset.checkpoint`
-    * (Reliable) reports `UnknownPartitioning` just as localCheckpoint
-    * does, so repartitioning it by src first does not elide the
-    * per-round edge exchange (refuted by plans/r19 and
-    * AB_PROBE_r19.jsonl). */
-  private[graft] def pageRank(pairFrame: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.Local): DataFrame = {
+    * degEdges is checkpointed unpartitioned: `localCheckpoint` (and
+    * `checkpoint` too) reports `UnknownPartitioning`, so repartitioning it
+    * by src first does not elide the per-round edge exchange (refuted by
+    * plans/r19 and AB_PROBE_r19.jsonl). */
+  private def pageRank(pairFrame: DataFrame): DataFrame = {
     val pairs = pairFrame.select(col("doc_a"), col("doc_b")).cache()
     val edges = pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
@@ -859,9 +818,9 @@ object Dedup {
     // each PageRank round is then a single join with the current ranks.
     val nodes = edges.select(col("src").as("id")).distinct().cache()
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val degEdges = ckpt(edges
+    val degEdges = edges
       .join(outdeg.withColumnRenamed("src", "d_id"), col("src") === col("d_id"))
-      .select(col("src"), col("dst"), col("deg")))
+      .select(col("src"), col("dst"), col("deg")).localCheckpoint(true)
     var ranks = nodes.select(col("id"), lit(RankScale).as("r"))
     for (_ <- 1 to RankIters) {
       val contrib = degEdges
@@ -876,8 +835,9 @@ object Dedup {
     // Eager checkpoint materializes the ranks in the same single pass
     // that pins them before the inputs are unpersisted (vs the old
     // cache()+count(), which spent a full extra job) — same pattern as
-    // qd03's sigs; executor-loss caveat only under Local (see qd03).
-    val out = ckpt(ranks.select(col("id").as("doc_id"), col("r").as("rank_fp")))
+    // qd03's sigs.
+    val out = ranks.select(col("id").as("doc_id"), col("r").as("rank_fp"))
+      .localCheckpoint(true)
     pairs.unpersist(); nodes.unpersist()
     out
   }
@@ -1051,28 +1011,22 @@ object Dedup {
   //     near-miss blocks: oversized blocks are excluded from pairing.
   private val EditBlockCap = 64
 
-  private def qd17(s: SparkSession, d: String): DataFrame =
-    qd17Impl(s, d, CheckpointStrategy.LocalDisk)
-
-  /** qd17 with the lineage-checkpoint strategy as a parameter (VERDICT
-    * r15 #1 retrofit — see [[CheckpointStrategy]]). */
-  private[graft] def qd17Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy): DataFrame = {
+  private def qd17(s: SparkSession, d: String): DataFrame = {
     // checkpoint (qd03's treatment): `blocked` feeds the cap groupBy
     // AND both self-join sides — without it the double-regex norm pass
     // over the full corpus re-executes 4×, which measured as the entire
     // cost at the Zipf 1000× tier. The reps frame is one row per DISTINCT
     // normalized text — on a dup-free corpus that IS corpus-sized, each
-    // row carrying the full normalized text, so LocalDisk (the r14 qd19
-    // OOM shape), not in-heap Local.
+    // row carrying the full normalized text, so it goes to disk.
     // AsciiNormalize = the regex chain's codegen'd single-pass equivalent
     // (spec-pinned equality); Java regex measured as qd17's entire cost
-    val blocked = ckpt(Tables.documents(s, d).select(col("doc_id"),
+    val blocked = Tables.documents(s, d).select(col("doc_id"),
       graft.functions.TextNorm.asciiNormalize(col("text")).as("n"))
       .groupBy(col("n")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("n"),
         expr(s"length(n) div $EditBlockBand").as("lb"),
-        substring(col("n"), 1, EditPrefix).as("pfx")))
+        substring(col("n"), 1, EditPrefix).as("pfx"))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val small = blocked.groupBy(col("lb"), col("pfx"))
       .agg(count(lit(1)).as("bn")).filter(col("bn") <= EditBlockCap)
       .select(col("lb"), col("pfx"))

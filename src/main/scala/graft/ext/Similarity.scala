@@ -434,16 +434,7 @@ object Similarity {
   private val MmrC = 8      // relevance candidates per query
   private val MmrLambda = 0.7
 
-  private def qs06(s: SparkSession, d: String): DataFrame =
-    qs06Impl(s, d, graft.ext.CheckpointStrategy.Local)
-
-  /** qs06 with the lineage-checkpoint strategy as a parameter: the
-    * checkpointed frames here are BOUNDED (|Q|·C = 80 rows), so in-memory
-    * Local is the single-JVM default; a cluster passes
-    * [[graft.ext.CheckpointStrategy.Reliable]] — even a bounded local
-    * checkpoint is non-recomputable after executor loss (VERDICT r14 #1). */
-  private[graft] def qs06Impl(s: SparkSession, d: String,
-      ckpt: graft.ext.CheckpointStrategy): DataFrame = {
+  private def qs06(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val queries = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -461,7 +452,7 @@ object Similarity {
       // (r14 census: qs06 was the registry's Exchange maximum at 40).
       // The frame is |Q|·C = 80 rows by construction — eager in-memory
       // checkpoint, the qd19 lineage fix on a bounded frame.
-      .transform(ckpt(_))
+      .localCheckpoint(true)
 
     val sel1 = cands
       .withColumn("rn", row_number().over(wRel))
@@ -493,8 +484,8 @@ object Similarity {
     // each selection round reads the previous one 3× (anti-join, penalty
     // join, union) — checkpoint the ≤|Q|·t-row frames so each round's
     // windows compute once (same rationale as cands above)
-    val sel1c = ckpt(sel1)
-    val sel2 = ckpt(sel1c.union(pick(sel1c, 2)))
+    val sel1c = sel1.localCheckpoint(true)
+    val sel2 = sel1c.union(pick(sel1c, 2)).localCheckpoint(true)
     val sel3 = sel2.union(pick(sel2, 3))
     sel3.select(col("q_id"), col("sel_rank"), col("n_id"), col("mmr"))
   }

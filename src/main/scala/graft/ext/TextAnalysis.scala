@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 import graft.Q
 import graft.sources.Tables
@@ -240,8 +241,8 @@ object TextAnalysis {
   /** N merge rules (lhs, rhs, weighted pair count at selection time) from
     * a (freq, enc) vocabulary. Exposed for the spec.
     *
-    * Each iteration CHECKPOINTS the merged vocabulary (eager, via
-    * `ckpt` — plan truncated to the materialized RDD), so
+    * Each iteration CHECKPOINTS the merged vocabulary (eager, to disk —
+    * plan truncated to the materialized RDD), so
     * iteration i's plan is always "one replace over a materialized
     * table". Without this, `cur`'s lineage grows by one replace per
     * merge: iteration i re-applies all i−1 prior merges (O(n²) replace
@@ -251,9 +252,7 @@ object TextAnalysis {
     * 11). Checkpointing keeps plan size O(1) in i, so cost per merge is
     * one pair-count shuffle + one O(vocab) replace — flat in i (measured
     * at 30×: see BASELINE.md BPE row) and depth is bounded by wall-clock
-    * budget, not plan growth. On a cluster pass
-    * [[CheckpointStrategy.Reliable]] for fault tolerance; local mode
-    * needs no recovery. Driver-loop bound (measured at depth 512,
+    * budget, not plan growth. Driver-loop bound (measured at depth 512,
     * BPE_CURVE_r16.json): each merge is one limit(1).collect() argmax
     * job with a ~0.13 s fixed floor — corpus-independent, so 30k
     * production merges ≈ 65 min of job overhead; if that ever binds,
@@ -448,7 +447,6 @@ object TextAnalysis {
   private[graft] val DistTrainBatchK: Int = 128
 
   private[graft] def trainBpe(vocab: DataFrame, n: Int,
-      ckpt: CheckpointStrategy = CheckpointStrategy.LocalDisk,
       forceDistributed: Boolean = false): Seq[(String, String, Long)] = {
     // hybrid dispatch: one distributed count decides; the collect below
     // is GUARDED by that count (CollectSiteSpec entry), so the local path
@@ -463,9 +461,8 @@ object TextAnalysis {
         "i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))"
     // The fold-chain frame is one row per WORD TYPE carrying the full
     // encoded form — Heap's-law sublinear in the corpus but still
-    // hundreds of millions of rows at 100 TB, so it takes the corpus-
-    // sized default (LocalDisk; a cluster passes Reliable — VERDICT r15
-    // #1 retrofit, see [[CheckpointStrategy]]).
+    // hundreds of millions of rows at 100 TB, so it is checkpointed to
+    // disk like a corpus-sized frame.
     //
     // BATCHED ARGMAX REPLAY (VERDICT r16 Next #5): each round collects
     // the top-K pair counts, then accepts entries off the sorted list
@@ -489,7 +486,7 @@ object TextAnalysis {
     // merge is bit-identical to the limit(1)-per-merge loop (spec-pinned
     // against the local trainer on real + planted vocab; the checked-in
     // BPE_CURVE artifacts record the same equality at depth 512).
-    var cur = ckpt(vocab)
+    var cur = vocab.localCheckpoint(true, StorageLevel.DISK_ONLY)
     val merges = Seq.newBuilder[(String, String, Long)]
     val seenSymbols = scala.collection.mutable.Set.empty[String]
     // The collision rule above can only see symbols created by THIS call;
@@ -553,7 +550,8 @@ object TextAnalysis {
           j += 1
         }
       }
-      if (i <= n) cur = ckpt(cur) // one checkpoint per ROUND, not per merge
+      // one checkpoint per ROUND, not per merge
+      if (i <= n) cur = cur.localCheckpoint(true, StorageLevel.DISK_ONLY)
     }
     merges.result()
   }
@@ -1069,8 +1067,8 @@ object TextAnalysis {
     * is the dominant cost, and a shape with separate shared / per-doc /
     * hits consumers executes it three times (their exchanges carry
     * different columns, and AQE's stage cache only reuses IDENTICAL
-    * exchanges). Here the gram frame is materialized once (LocalDisk —
-    * corpus-sized posting rows, the r14 lineage rule) and the per-doc
+    * exchanges). Here the gram frame is materialized once (on disk —
+    * corpus-sized posting rows) and the per-doc
     * count and hit count fold into ONE rollup via a flag left-join:
     * n_shared = Σ 1[g ∈ shared] over the same rows n_grams counts. (No
     * pre-shuffle before the checkpoint: Spark 4's localCheckpoint
@@ -1080,12 +1078,13 @@ object TextAnalysis {
     * 100× warm and 1.59× with the OS page cache dropped before every
     * pass. */
   private def qt19(s: SparkSession, d: String): DataFrame = {
-    val grams = CheckpointStrategy.LocalDisk(Tables.documents(s, d)
+    val grams = Tables.documents(s, d)
       .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
       .filter(size(col("tk")) >= 5)
       .select(col("doc_id"), (col("doc_id") % 2).as("side"), explode(expr(
         "array_distinct(transform(sequence(1, size(tk) - 4), i -> md5(concat_ws(' ', slice(tk, i, 5)))))"))
-        .as("g")))
+        .as("g"))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val shared = grams
       .groupBy(col("g"))
       .agg(min(col("side")).as("mn"), max(col("side")).as("mx"))
@@ -1566,16 +1565,13 @@ object TextAnalysis {
 
   /** The qt22 computation over an arbitrary (doc_id, text) frame —
     * package-private so the spec can plant shared runs across the
-    * seen/incoming split. `ckpt` defaults to the single-JVM corpus-sized
-    * tier; a cluster runs [[CheckpointStrategy.Reliable]] so executor
-    * loss recomputes instead of killing the query (VERDICT r14 #1). */
-  private[graft] def fingerprintContamination(docs: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.LocalDisk): DataFrame = {
+    * seen/incoming split. */
+  private[graft] def fingerprintContamination(docs: DataFrame): DataFrame = {
     // fps feeds the seen index AND both uses of the incoming slice — with
     // plain lineage the winnowing selection (the dominant cost) executes
-    // 3×. Eager checkpoint runs it once (qd19's r14 fix, same subtree).
-    // LocalDisk: corpus-sized — in-heap caching OOMs the decade tier.
-    val fps = ckpt(winnowedFingerprints(docs))
+    // 3×. Eager checkpoint runs it once (qd19's r14 fix, same subtree),
+    // on disk: corpus-sized.
+    val fps = winnowedFingerprints(docs).localCheckpoint(true, StorageLevel.DISK_ONLY)
     val seenH = fps.filter(col("doc_id") % 5 =!= 0)
       .select(col("h")).distinct()
     val inc = fps.filter(col("doc_id") % 5 === 0)
@@ -1655,42 +1651,35 @@ object TextAnalysis {
     * physical choice, not a semantic one. */
   private[graft] val SizeFilterMinPostings: Long = 1000000L
 
-  private def qd19(s: SparkSession, d: String): DataFrame =
-    qd19Impl(s, d, CheckpointStrategy.LocalDisk)
+  private def qd19(s: SparkSession, d: String): DataFrame = qd19Impl(s, d)
 
-  /** qd19 with the lineage-checkpoint strategy as a parameter: LocalDisk
-    * is the single-JVM default (see [[CheckpointStrategy]]); a cluster
-    * passes Reliable so executor loss recomputes the checkpointed frames
-    * instead of killing the query. Package-private so the spec can gate
-    * Reliable against the default's exact rows (VERDICT r14 #1).
-    * `sizeFilter`: None (the default) decides from the materialized
+  /** `sizeFilter`: None (the default) decides from the materialized
     * posting count against [[SizeFilterMinPostings]]; Some(b) forces the
     * pair stage — output is identical either way, and the forced modes
     * let the spec pin both stages at a tier where auto takes only one. */
   private[graft] def qd19Impl(s: SparkSession, d: String,
-      ckpt: CheckpointStrategy,
       sizeFilter: Option[Boolean] = None): DataFrame = {
     // fps feeds docSig AND (via repFps) both sides of the pair join: with
     // plain lineage the whole winnowing projection re-executes per
     // reference — the r13 census counted 64 Exchanges here, the registry
     // maximum. Eagerly checkpoint the three multiply-referenced frames
-    // (the qc04/qd08 lineage lesson).
-    // LocalDisk, not in-heap Local: under UNIFORM (dup-free) data these
-    // frames are corpus-sized — at the 1000×-doc tier the deserialized
-    // in-heap copy OOMed the single JVM (r14 measured), while disk blocks
-    // stream back per use at a cost the 30× ratio absorbs.
-    val fps = ckpt(winnowedFingerprints(Tables.documents(s, d))
-      .select(col("doc_id"), col("h")).distinct())
+    // (the qc04/qd08 lineage lesson), on disk: under UNIFORM (dup-free)
+    // data these frames are corpus-sized (the rule is in the Dedup
+    // scaladoc).
+    val fps = winnowedFingerprints(Tables.documents(s, d))
+      .select(col("doc_id"), col("h")).distinct()
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     // one doc-keyed shuffle computes nf AND the set signature together
     val docSig = fps.groupBy(col("doc_id")).agg(
       count(lit(1)).as("nf"),
       expr("md5(cast(sort_array(collect_list(h)) as string))").as("sig"))
     // one row per DISTINCT set — corpus-sized when nothing duplicates
-    val groups = ckpt(docSig.groupBy(col("sig")).agg(
+    val groups = docSig.groupBy(col("sig")).agg(
       min(col("doc_id")).as("rep"),
       sort_array(collect_list(col("doc_id"))).as("members"),
       count(lit(1)).as("m"),
-      first(col("nf")).as("nf"))) // identical sets ⇒ identical nf
+      first(col("nf")).as("nf")) // identical sets ⇒ identical nf
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val repFps = fps.join(
       groups.select(col("rep").as("doc_id")).hint("merge"),
       Seq("doc_id"), "left_semi")
@@ -1701,11 +1690,13 @@ object TextAnalysis {
       .groupBy(col("h")).agg(sum(col("m")).as("n"))
       .filter(col("n").between(2, Dedup.BucketCap)).select(col("h"))
     // read 3×: both pair-join sides (left via postElig) + kcnt
-    val posting = ckpt(repFps.join(kept.hint("merge"), Seq("h"), "left_semi"))
+    val posting = repFps.join(kept.hint("merge"), Seq("h"), "left_semi")
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     // kept-fingerprint count per rep — feeds the size filter AND the
     // within-group shared count (identical sets ⇒ shared = |kept ∩ set|);
     // checkpointed so the posting scan + agg runs once, not per reference
-    val kcnt = ckpt(posting.groupBy(col("doc_id")).agg(count(lit(1)).as("kc")))
+    val kcnt = posting.groupBy(col("doc_id")).agg(count(lit(1)).as("kc"))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     // Size filter (Bayardo et al., "Scaling Up All Pairs Similarity
     // Search", WWW'07 — the min-overlap bound, adapted to containment):
     // a pair passes shared / min(nf_a, nf_b) >= 0.8 only if its MIN-nf
@@ -1721,7 +1712,7 @@ object TextAnalysis {
     // the same double division as the output filter; for a qualifying
     // pair shared <= kc_m and IEEE division by a fixed positive nf is
     // monotone, so kc_m/nf_m >= shared/nf_m >= 0.8 — no false prune.
-    // auto mode: posting is already materialized (eager ckpt above), so
+    // auto mode: posting is already materialized (eager checkpoint above), so
     // the count is one cheap pass over checkpoint blocks — the cost-based
     // decision reads the SAME quantity the filter prunes (pair-stage
     // input rows), not a proxy like corpus rows
@@ -1871,16 +1862,14 @@ object TextAnalysis {
       .select(col("token"), ((col("trank") - 1) % 3 + 1).as("query_id"))
 
   /** Per-(query, doc) BM25 scores in micro-units — the distributed tf
-    * path (qt23 ranks it; the streaming face gates against it). `ckpt`
-    * defaults to the single-JVM corpus-sized tier; a cluster passes
-    * [[CheckpointStrategy.Reliable]] (VERDICT r14 #1). */
-  private[graft] def bm25Scores(docs: DataFrame,
-      ckpt: CheckpointStrategy = CheckpointStrategy.LocalDisk): DataFrame = {
+    * path (qt23 ranks it; the streaming face gates against it). */
+  private[graft] def bm25Scores(docs: DataFrame): DataFrame = {
     // tf (the token explode + count, the dominant cost) feeds dl, qterms
     // AND matched — 3 executions without a checkpoint; dl feeds stats and
-    // the score join. Corpus-sized ⇒ LocalDisk (the r14 lineage rule).
-    val tf = ckpt(bm25Tf(docs))
-    val dl = ckpt(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+    // the score join. Corpus-sized ⇒ on disk.
+    val tf = bm25Tf(docs).localCheckpoint(true, StorageLevel.DISK_ONLY)
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
     val qterms = bm25QTerms(tf)

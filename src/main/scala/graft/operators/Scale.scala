@@ -622,7 +622,7 @@ object Scale {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .hint("rebalance", col("event_type"))
 
-  private val qx12Sql =
+  private[graft] val qx12Sql =
     "SELECT event_id, user_id, event_type, value FROM events"
 
   // ---------------------------------------------------------------------

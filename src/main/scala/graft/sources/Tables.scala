@@ -78,18 +78,16 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** events.parquet has stored `ts` as INT64 TIMESTAMP(NANOS) (which Spark 4
-    * rejects outright — read nanos as long via the legacy flag and truncate
-    * to microseconds, DuckDB's own coercion) and, in later driver
-    * generations, as timestamp[us] WITHOUT timezone (Spark's TIMESTAMP_NTZ —
-    * unusable for event-time watermarks and unix_* functions). Both forms
-    * normalize to plain TimestampType; the session timezone is pinned UTC
+  /** events.parquet has stored `ts` as INT64 TIMESTAMP(NANOS) (read as a
+    * long, see [[graft.GraftSession]], and truncated to microseconds,
+    * DuckDB's own coercion) and, in later driver generations, as
+    * timestamp[us] WITHOUT timezone (Spark's TIMESTAMP_NTZ — unusable for
+    * event-time watermarks and unix_* functions). Both forms normalize to
+    * plain TimestampType; the session timezone is pinned UTC
     * (GraftSession), so the NTZ cast is value-identical to DuckDB's naive
     * reading. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEvents(load(s, d, "events"))
-  }
 
   /** Coerce the `ts` column to TimestampType (micros) from whichever
     * physical form the driver generated (nanos-as-long or TIMESTAMP_NTZ).

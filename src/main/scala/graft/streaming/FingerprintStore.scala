@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.store.{FileOps, PartitionedStore}
 import graft.store.PartitionedStore.Replace
@@ -205,10 +206,11 @@ private[graft] object FingerprintStore {
     * store's content. */
   private[graft] def write(hRows: DataFrame, dir: String): Unit = {
     val s = hRows.sparkSession
-    // corpus-sized distinct-fingerprint frame: materialize once (LocalDisk
-    // strategy) so the fanout count and the write don't recompute the
-    // winnowing regex pass twice
-    val fps = graft.ext.CheckpointStrategy.LocalDisk(hRows.distinct())
+    // corpus-sized distinct-fingerprint frame: materialize once, on disk,
+    // so the fanout count and the write don't recompute the winnowing
+    // regex pass twice
+    val fps = hRows.distinct()
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val f = fanoutFor(fps.count())
     // rows = -1 self-heals at first compact; the one-shot build path never
     // appends, so -1 is only ever read by a store later OPENED for ingest

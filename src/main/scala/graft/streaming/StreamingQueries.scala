@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.Q
 import graft.sources.Tables
@@ -49,7 +50,6 @@ object StreamingQueries {
     * in a memory sink, return it as a batch DataFrame. */
   def runBounded(spark: SparkSession, dir: String, table: String,
       mode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = streamTable(spark, dir, table)
     val src = if (table == "events") Tables.normalizeEvents(raw) else raw
     toMemorySink(transform(src), table, mode)()
@@ -88,44 +88,25 @@ object StreamingQueries {
     }
   }
 
-  /** Stream `table` through `transform` in `numBatches` EVENT-TIME-ORDERED
-    * micro-batches (VERDICT r14 #2: a single-batch replay makes a
-    * cross-batch state-carry contract hold vacuously — this states it in
-    * the gate). One distributed pass slices the corpus into even-WIDTH
-    * `ts` ranges — the split predicate is on the ts VALUE, so equal-ts
-    * rows can never straddle a batch boundary, which is exactly the
-    * StreamPit delivery contract (equal-ts feature/observation pairs in
-    * the same micro-batch) holding by construction — writes exactly one
-    * parquet file per non-empty slice (partitionBy keeps a slice in one
-    * task, so one file) with strictly increasing modification times, then
-    * replays them through the file source at `maxFilesPerTrigger=1`:
-    * slice i IS micro-batch i, batches arrive in event-time order.
-    * Requires ≥2 data-carrying micro-batches, so the state-carry path is
-    * provably exercised. The even-width (not even-count) split is fine
-    * for a gate — skew across batches changes nothing the contract cares
-    * about; a production ingest replaces this replay with real arrival. */
-  private[graft] def runBoundedTsBatches(spark: SparkSession, dir: String,
-      table: String, mode: String, numBatches: Int)(
-      transform: DataFrame => DataFrame): DataFrame = {
+  /** Replays `df` as one micro-batch per value of `slice` (an int in
+    * 0 until `n`): one distributed pass writes exactly one parquet file
+    * per non-empty slice (partitionBy keeps a slice in one task, so one
+    * file), places slice i's file in a fresh directory with strictly
+    * increasing modification times, and returns a file stream over it at
+    * `maxFilesPerTrigger=1` — slice i IS micro-batch i — with the number
+    * of files placed. Test-data replay only; a production ingest replaces
+    * it with real arrival. */
+  private def replaySlices(spark: SparkSession, df: DataFrame, slice: Column,
+      n: Int): (DataFrame, Int) = {
     import java.nio.file.{Files, Paths}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.load(spark, dir, table)
-    val src = if (table == "events") Tables.normalizeEvents(raw) else raw
-    val root = graft.store.PartitionedStore.tempRoot("graft-tsbatches-")
-    val bounds = src.agg(min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi")).collect()(0) // 2 scalars
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    // pure Long arithmetic: (ts-lo) ≤ range ≪ Long.Max/numBatches, so no
-    // overflow; equal ts → identical slice; monotone in ts; max = n-1
-    val slice = ((unix_micros(col("ts")) - lit(lo)) * numBatches
-      / lit(hi - lo + 1)).cast("int")
+    val root = graft.store.PartitionedStore.tempRoot("graft-slices-")
     val staging = s"$root/staging"
-    src.withColumn("__slice", slice)
-      .repartition(numBatches, col("__slice"))
+    df.withColumn("__slice", slice)
+      .repartition(n, col("__slice"))
       .write.partitionBy("__slice").parquet(staging)
     val streamDir = s"$root/stream"
     Files.createDirectories(Paths.get(streamDir))
-    val placed = (0 until numBatches).flatMap { i =>
+    val placed = (0 until n).flatMap { i =>
       Option(new java.io.File(s"$staging/__slice=$i").listFiles()).toSeq
         .flatMap(_.filter(_.getName.endsWith(".parquet")).toSeq)
         .map { f =>
@@ -135,12 +116,42 @@ object StreamingQueries {
           dst
         }
     }
-    require(placed.size >= 2 && placed.size <= numBatches,
-      s"ts-split produced ${placed.size} slices (need 2..$numBatches, one file each)")
+    require(placed.nonEmpty, s"slicing produced no files under $staging")
     val schema = Tables.schemaOf(spark, placed.head.getPath)
-    toMemorySink(transform(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(streamDir)), table, mode) { q =>
+    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(streamDir)
+    (stream, placed.size)
+  }
+
+  /** Stream `table` through `transform` in `numBatches` EVENT-TIME-ORDERED
+    * micro-batches (VERDICT r14 #2: a single-batch replay makes a
+    * cross-batch state-carry contract hold vacuously — this states it in
+    * the gate). The corpus is sliced into even-WIDTH `ts` ranges — the
+    * split predicate is on the ts VALUE, so equal-ts rows can never
+    * straddle a batch boundary, which is exactly the StreamPit delivery
+    * contract (equal-ts feature/observation pairs in the same
+    * micro-batch) holding by construction — and replayed by
+    * [[replaySlices]], so batches arrive in event-time order.
+    * Requires ≥2 data-carrying micro-batches, so the state-carry path is
+    * provably exercised. The even-width (not even-count) split is fine
+    * for a gate — skew across batches changes nothing the contract cares
+    * about. */
+  private[graft] def runBoundedTsBatches(spark: SparkSession, dir: String,
+      table: String, mode: String, numBatches: Int)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val raw = Tables.load(spark, dir, table)
+    val src = if (table == "events") Tables.normalizeEvents(raw) else raw
+    val bounds = src.agg(min(unix_micros(col("ts"))).as("lo"),
+      max(unix_micros(col("ts"))).as("hi")).collect()(0) // 2 scalars
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    // pure Long arithmetic: (ts-lo) ≤ range ≪ Long.Max/numBatches, so no
+    // overflow; equal ts → identical slice; monotone in ts; max = n-1
+    val slice = ((unix_micros(col("ts")) - lit(lo)) * numBatches
+      / lit(hi - lo + 1)).cast("int")
+    val (stream, files) = replaySlices(spark, src, slice, numBatches)
+    require(files >= 2 && files <= numBatches,
+      s"ts-split produced $files slices (need 2..$numBatches, one file each)")
+    toMemorySink(transform(stream), table, mode) { q =>
       q.processAllAvailable()
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       require(dataBatches >= 2,
@@ -167,34 +178,13 @@ object StreamingQueries {
       |FROM events GROUP BY 1, 2""".stripMargin
 
   // ---------------------------------------------------------------------
-  // qst02: streaming YSB — stream-static broadcast join + windowed count
-  // over the streaming source (same semantics as Ysb.qysb02).
+  // qst02: streaming YSB — stream-static join + windowed count over the
+  // streaming source: qysb02's pipeline and oracle.
   // ---------------------------------------------------------------------
   private def qst02(s: SparkSession, d: String): DataFrame = {
-    val dim = Tables.events(s, d).select(col("user_id")).distinct()
-      .select(col("user_id"),
-        concat(lit("c"), pmod(col("user_id"), lit(20))).as("campaign_id"))
-    runBounded(s, d, "events", "complete") { ev =>
-      // dim is corpus-derived (distinct users) — unhinted, AQE decides;
-      // a pinned broadcast here is the 100 TB driver-OOM pattern
-      ev.filter(col("event_type") === "view")
-        .join(dim, Seq("user_id"), "inner")
-        .groupBy(window(col("ts"), "6 hours"), col("campaign_id"))
-        .agg(count(lit(1)).as("count"), max(col("ts")).as("last_update"))
-        .select(unix_millis(col("window.start")).as("time_window"),
-          col("campaign_id"), col("count"), col("last_update"))
-    }
+    val table = Tables.events(s, d)
+    runBounded(s, d, "events", "complete")(graft.ysb.Ysb.userCampaignWindows(_, table))
   }
-
-  private val qst02Sql =
-    """WITH dim AS (
-      |  SELECT DISTINCT user_id, 'c' || CAST(user_id % 20 AS VARCHAR) AS campaign_id
-      |  FROM events)
-      |SELECT epoch_ms(make_timestamp(epoch_us(ts) // 21600000000 * 21600000000)) AS time_window,
-      |  campaign_id, count(*) AS count, max(ts) AS last_update
-      |FROM events JOIN dim USING (user_id)
-      |WHERE event_type = 'view'
-      |GROUP BY 1, 2""".stripMargin
 
   // ---------------------------------------------------------------------
   // qst03: streaming deduplication (dropDuplicates state op, append mode) —
@@ -251,22 +241,6 @@ object StreamingQueries {
     toMemorySink(out, "replay", "complete")()
   }
 
-  private val qst05Sql = // identical generation arithmetic to qysb01's oracle
-    """WITH ev AS (
-      |  SELECT 'ad' || CAST(i % 1000 AS VARCHAR) AS ad_id,
-      |         ['view','click','purchase'][CAST(i % 3 AS INT) + 1] AS event_type,
-      |         make_timestamp(1704067200000000 + i * 1000) AS event_time
-      |  FROM range(0, 100000) t(i)),
-      |dim AS (
-      |  SELECT 'ad' || CAST(a AS VARCHAR) AS ad_id,
-      |         'camp' || CAST(a // 10 AS VARCHAR) AS campaign_id
-      |  FROM range(0, 1000) t(a))
-      |SELECT epoch_ms(make_timestamp(epoch_us(event_time) // 10000000 * 10000000)) AS time_window,
-      |  campaign_id, count(*) AS count, max(event_time) AS last_update
-      |FROM ev JOIN dim USING (ad_id)
-      |WHERE event_type = 'view'
-      |GROUP BY 1, 2""".stripMargin
-
   // ---------------------------------------------------------------------
   // qst06: streaming session windows (merging session state) — append mode
   // emits each session once its end (last event + gap) is at or below the
@@ -313,7 +287,6 @@ object StreamingQueries {
   // shuffles both sides on user_id.
   // ---------------------------------------------------------------------
   private def qst07(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def stream(): DataFrame = Tables.normalizeEvents(
       streamTable(s, d, "events"))
     val clicks = stream().filter(col("event_type") === "click")
@@ -348,7 +321,6 @@ object StreamingQueries {
   // ms-truncated) to have expired their match window.
   // ---------------------------------------------------------------------
   private def qst09(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def stream(): DataFrame = Tables.normalizeEvents(
       streamTable(s, d, "events"))
     val clicks = stream().filter(col("event_type") === "click")
@@ -403,7 +375,6 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   private def qst08(s: SparkSession, d: String): DataFrame = {
     withRocksDb(s) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val keys = streamTable(s, d, "events")
         .select(col("user_id")).as(org.apache.spark.sql.Encoders.scalaLong)
       toMemorySink(RunningCounters.countByKey(keys).toDF(), "counters", "update")()
@@ -499,11 +470,12 @@ object StreamingQueries {
     // checkpointed: the static side re-executes per micro-batch, and
     // while the eval benchmark is bounded by construction (doc_id <
     // EvalDocCount), rebuilding its gram explode + distinct every
-    // trigger is pure waste (the qst34 census lesson). Local tier —
+    // trigger is pure waste (the qst34 census lesson). In memory —
     // bounded frame.
-    val evalGrams = graft.ext.CheckpointStrategy.Local(gramsOf(
+    val evalGrams = gramsOf(
       Tables.documents(s, d).filter(col("doc_id") < evalN))
-      .select(col("g")).distinct().withColumn("hit", lit(1L)))
+      .select(col("g")).distinct().withColumn("hit", lit(1L))
+      .localCheckpoint(true)
     val stream = streamTable(s, d, "documents")
       .filter(col("doc_id") >= evalN)
     toMemorySink(gramsOf(stream)
@@ -740,9 +712,9 @@ object StreamingQueries {
   // key arrival rate × the horizon. The trade is re-emission: a duplicate
   // arriving after its key's state expired is emitted again. The gated
   // bounded file arrives as ONE batch (no intra-batch expiry), so the
-  // output here is exactly the distinct key set and the oracle is batch
-  // DISTINCT; the expiry/re-emission semantics are pinned by a dedicated
-  // two-batch MemoryStream test in StreamingSpec. Keys only in the output
+  // output here is exactly the distinct key set and the oracle is qst03's
+  // batch DISTINCT; the expiry/re-emission semantics are pinned by a
+  // dedicated two-batch MemoryStream test in StreamingSpec. Keys only in the output
   // (the first-arrival row's other columns are arrival-order dependent).
   // ---------------------------------------------------------------------
   private def qst18(s: SparkSession, d: String): DataFrame =
@@ -752,9 +724,6 @@ object StreamingQueries {
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
     }
-
-  private val qst18Sql =
-    "SELECT DISTINCT user_id, event_type FROM events"
 
   // ---------------------------------------------------------------------
   // qst20: state store reader — a checkpointed streaming aggregation's
@@ -779,7 +748,6 @@ object StreamingQueries {
   private def qst20(s: SparkSession, d: String): DataFrame = {
     val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst20-ckpt-")
     val ckpt = ckptPath.toString
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = Tables.normalizeEvents(streamTable(s, d, "events"))
     toMemorySink(ev.groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("uid_sum")),
@@ -1054,7 +1022,6 @@ object StreamingQueries {
     withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst26-ckpt-")
       val ckpt = ckptPath.toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = streamTable(s, d, "events")
       toMemorySink(graft.streaming.HeavyHitters
         .sketch(ev.select(hhKey.as("key")), HhShards, HhCapacity),
@@ -1219,7 +1186,6 @@ object StreamingQueries {
     withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst28-ckpt-")
       val ckpt = ckptPath.toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = streamTable(s, d, "events")
       toMemorySink(graft.streaming.BloomDedup
         .sketch(ev.select((col("event_id") % HhShards).cast("int").as("shard"),
@@ -1546,18 +1512,17 @@ object StreamingQueries {
     * and re-executes per micro-batch, so an un-checkpointed seenH would
     * re-run the corpus-sized winnowing selection EVERY trigger (the
     * qst34 census lesson — and qt22's at-rest index argument, made
-    * physical). `ckpt` defaults to the single-JVM corpus-sized tier;
-    * a cluster passes Reliable. The per-trigger broadcast of seenH is
-    * the small-SF gate plan only — at 100 TB the screen joins the
+    * physical); corpus-sized, so on disk. The per-trigger broadcast of
+    * seenH is the small-SF gate plan only — at 100 TB the screen joins the
     * PERSISTED hash-prefix store instead, which is no longer a claim:
     * qst43 ([[screenAgainstStore]]) gates exactly that shape against the
     * same qt22 oracle. */
-  private[graft] def fingerprintScreen(seen: DataFrame,
-      ckpt: graft.ext.CheckpointStrategy = graft.ext.CheckpointStrategy.LocalDisk)(
+  private[graft] def fingerprintScreen(seen: DataFrame)(
       incoming: DataFrame): DataFrame = {
     import graft.ext.TextAnalysis
-    val seenH = ckpt(TextAnalysis.winnowedFingerprints(seen)
-      .select(col("h")).distinct().withColumn("hit", lit(1L)))
+    val seenH = TextAnalysis.winnowedFingerprints(seen)
+      .select(col("h")).distinct().withColumn("hit", lit(1L))
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     TextAnalysis.winnowedFingerprints(incoming)
       .join(seenH, Seq("h"), "left")
       .select(col("doc_id"), coalesce(col("hit"), lit(0L)).as("hit"))
@@ -1662,7 +1627,6 @@ object StreamingQueries {
       idxDir: String, censusKey: String): DataFrame = {
     val outs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     val ckpt = graft.store.PartitionedStore.tempRoot(s"graft-$censusKey-ckpt-")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = streamTable(s, d, "documents")
       .filter(col("doc_id") % 5 === 0)
     val q = src.writeStream.option("checkpointLocation", ckpt.toString)
@@ -1712,42 +1676,22 @@ object StreamingQueries {
   private[graft] val IngestAppendBatches = 6
 
   private def qst44(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = graft.store.PartitionedStore.tempRoot("graft-qst44-idx-")
     val idxDir = s"$root/fp"
     val store = FingerprintStore.create(s, idxDir)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.schemaOf(s, s"$d/documents.parquet")
     // Ingest phase: replay the SEEN corpus in IngestAppendBatches
-    // doc_id-sliced micro-batches (the runBoundedTsBatches file-per-
-    // trigger mechanism; documents carry no event time, so the slice key
-    // is pmod(doc_id, N) — deterministic, every slice non-empty at any
-    // SF). Each trigger appends its batch's novel fingerprints.
+    // doc_id-sliced micro-batches ([[replaySlices]]; documents carry no
+    // event time, so the slice key is pmod(doc_id, N) — deterministic,
+    // every slice non-empty at any SF). Each trigger appends its batch's
+    // novel fingerprints.
     val seen = Tables.documents(s, d)
       .filter(col("doc_id") % 5 =!= 0)
-    val staging = s"$root/staging"
-    seen.withColumn("__slice",
-        pmod(col("doc_id"), lit(IngestAppendBatches)).cast("int"))
-      .repartition(IngestAppendBatches, col("__slice"))
-      .write.partitionBy("__slice").parquet(staging)
-    val streamDir = s"$root/ingest"
-    Files.createDirectories(Paths.get(streamDir))
-    val placed = (0 until IngestAppendBatches).flatMap { i =>
-      Option(new java.io.File(s"$staging/__slice=$i").listFiles()).toSeq
-        .flatMap(_.filter(_.getName.endsWith(".parquet")).toSeq)
-        .map { f =>
-          val dst = new java.io.File(streamDir, f"batch_$i%05d.parquet")
-          require(f.renameTo(dst), s"move failed: $f")
-          require(dst.setLastModified((i + 1) * 60000L)) // replay order
-          dst
-        }
-    }
-    require(placed.size == IngestAppendBatches,
-      s"ingest split produced ${placed.size}/$IngestAppendBatches slices")
+    val (ingest, files) = replaySlices(s, seen,
+      pmod(col("doc_id"), lit(IngestAppendBatches)).cast("int"), IngestAppendBatches)
+    require(files == IngestAppendBatches,
+      s"ingest split produced $files/$IngestAppendBatches slices")
     val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst44-ingest-ckpt-")
-    val iq = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-      .writeStream.option("checkpointLocation", ckpt.toString)
+    val iq = ingest.writeStream.option("checkpointLocation", ckpt.toString)
       .foreachBatch { (b: DataFrame, _: Long) =>
         store.append(graft.ext.TextAnalysis.winnowedFingerprints(b)): Unit
       }
@@ -1846,15 +1790,14 @@ object StreamingQueries {
   // the growing table keeps tight per-file min/max envelopes in BOTH keys
   // and range predicates prune row groups inside EVERY batch partition.
   // The gate is the ingest contract: the landed table's content is
-  // exactly one replay of the stream (oracle = identity projection over
-  // events); the clustering/pruning property and replay idempotence are
-  // pinned in LayoutSpec.
+  // exactly one replay of the stream (oracle = qx12's identity projection
+  // over events); the clustering/pruning property and replay idempotence
+  // are pinned in LayoutSpec.
   // ---------------------------------------------------------------------
   private def qst36(s: SparkSession, d: String): DataFrame = {
     // fresh table per invocation: a previous run with MORE batches would
     // leave stale batch_id partitions that dynamic overwrite never touches
     val base = graft.store.PartitionedStore.tempRoot("graft-qst36-")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = Tables.normalizeEvents(streamTable(s, d, "events"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst36-ckpt-")
@@ -1870,15 +1813,12 @@ object StreamingQueries {
     s.read.parquet(base.toString).drop("batch_id")
   }
 
-  private val qst36Sql =
-    "SELECT event_id, user_id, event_type, value FROM events"
-
   def queries: Seq[Q] = Seq(
     Q("qst01_stream_tumbling", qst01, Some(qst01Sql)),
-    Q("qst02_stream_ysb", qst02, Some(qst02Sql)),
+    Q("qst02_stream_ysb", qst02, Some(graft.ysb.Ysb.qysb02Sql)),
     Q("qst03_stream_dedup", qst03, Some(qst03Sql)),
     Q("qst04_stream_watermark_append", qst04, Some(qst04Sql)),
-    Q("qst05_replay_source_ysb", qst05, Some(qst05Sql)),
+    Q("qst05_replay_source_ysb", qst05, Some(graft.ysb.Ysb.qysb01Sql)),
     Q("qst06_stream_session", qst06, Some(qst06Sql)),
     Q("qst07_stream_interval_join", qst07, Some(qst07Sql)),
     Q("qst08_stream_running_counters", qst08, Some(qst08Sql)),
@@ -1896,7 +1836,7 @@ object StreamingQueries {
     // same semantics, same oracle as batch qw08 — streaming/batch
     // consistency by construction
     Q("qst17_stream_cohorts", qst17, Some(graft.operators.Windows.qw08Sql)),
-    Q("qst18_stream_dedup_ttl", qst18, Some(qst18Sql)),
+    Q("qst18_stream_dedup_ttl", qst18, Some(qst03Sql)),
     // same keeper rule, same oracle as qst16: the 1 h horizon cannot bind
     // inside a seconds-long bounded replay (see qst19 scaladoc)
     Q("qst19_stream_block_dedup_ttl", qst19, Some(qst16Sql)),
@@ -1958,7 +1898,7 @@ object StreamingQueries {
       Some(graft.ext.Multimodal.qm02Sql)),
     // identity oracle (the qx12 pattern): the clustered idempotent sink's
     // table content must be exactly one replay of the stream
-    Q("qst36_stream_clustered_sink", qst36, Some(qst36Sql)),
+    Q("qst36_stream_clustered_sink", qst36, Some(graft.operators.Scale.qx12Sql)),
     // qw13's oracle verbatim: the CUSUM monitor over the streamed hourly
     // aggregate must equal the batch closed form
     Q("qst37_stream_cusum", qst37, Some(graft.operators.Windows.qw13Sql)),

@@ -112,7 +112,7 @@ object Ysb {
   private def qysb01(s: SparkSession, d: String): DataFrame =
     query(Gen.boundedEvents(s, 100000L), Gen.campaigns(s))
 
-  private val qysb01Sql =
+  private[graft] val qysb01Sql =
     """WITH ev AS (
       |  SELECT 'ad' || CAST(i % 1000 AS VARCHAR) AS ad_id,
       |         ['view','click','purchase'][CAST(i % 3 AS INT) + 1] AS event_type,
@@ -134,12 +134,20 @@ object Ysb {
   // ---------------------------------------------------------------------
   private def qysb02(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val dim = ev.select(col("user_id")).distinct()
+    userCampaignWindows(ev, ev)
+  }
+
+  /** qysb02's pipeline over `events`, batch or stream: view events joined
+    * to the campaign dimension derived from the bounded `table`'s distinct
+    * user_ids, then counted per campaign in 6 h tumbling windows. The
+    * streaming face (qst02) passes its stream and the batch table. */
+  private[graft] def userCampaignWindows(events: DataFrame, table: DataFrame): DataFrame = {
+    val dim = table.select(col("user_id")).distinct()
       .select(col("user_id"),
         concat(lit("c"), pmod(col("user_id"), lit(20))).as("campaign_id"))
     // dim grows with the user universe (corpus-derived distinct) — unhinted,
     // AQE broadcasts at small SF and shuffles at scale (see object scaladoc)
-    ev.filter(col("event_type") === "view")
+    events.filter(col("event_type") === "view")
       .join(dim, Seq("user_id"), "inner")
       .groupBy(window(col("ts"), "6 hours"), col("campaign_id"))
       .agg(count(lit(1)).as("count"), max(col("ts")).as("last_update"))
@@ -147,7 +155,7 @@ object Ysb {
         col("campaign_id"), col("count"), col("last_update"))
   }
 
-  private val qysb02Sql =
+  private[graft] val qysb02Sql =
     """WITH dim AS (
       |  SELECT DISTINCT user_id, 'c' || CAST(user_id % 20 AS VARCHAR) AS campaign_id
       |  FROM events)

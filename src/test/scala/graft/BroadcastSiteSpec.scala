@@ -93,7 +93,7 @@ class BroadcastSiteSpec extends SiteLint {
       (2, "fixed-K refined centroid frames (qc02 iterations)"),
     ("ext/Clustering.scala", ".crossJoin(broadcast(tot))") ->
       (1, "1-row n_docs/accuracy frame (qc03)"),
-    ("ext/Clustering.scala", """val err = ckpt(feats.join(broadcast(wDF), Seq("j"))""") ->
+    ("ext/Clustering.scala", """val err = feats.join(broadcast(wDF), Seq("j"))""") ->
       (1, "weight vector: NumFeat rows (model-size constant, qc04)"),
     // ----- text analysis: 1-row stats frames, dictCap-bounded dictionaries,
     // fixed eval ranges and query sets -----

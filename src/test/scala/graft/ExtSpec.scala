@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.{CheckpointStrategy, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.functions.Vectors
 import graft.sources.Tables
 
@@ -115,26 +115,6 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 100)
     assert(comp.values.forall(_ == 0L), "path graph must collapse to min id 0")
-  }
-
-  test("reliable checkpoint strategy matches localCheckpoint (components + pagerank)") {
-    // The 100 TB story for the iterative ops is checkpoint() to a reliable
-    // store (survives executor loss) — selectable as a parameter, exercised
-    // here end-to-end against the Local default on the same graph.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    // two components: a path and a triangle
-    val pairs = ((0L until 20L).map(i => (i, i + 1)) ++
-      Seq((100L, 101L), (101L, 102L), (100L, 102L))).toDF("doc_a", "doc_b")
-    val local = Dedup.components(pairs, ckpt = CheckpointStrategy.Local)
-    val reliable = Dedup.components(pairs, ckpt = CheckpointStrategy.Reliable)
-    assert(local.exceptAll(reliable).count() === 0)
-    assert(reliable.exceptAll(local).count() === 0)
-    val rLocal = Dedup.pageRank(pairs, CheckpointStrategy.Local)
-    val rReliable = Dedup.pageRank(pairs, CheckpointStrategy.Reliable)
-    assert(rLocal.exceptAll(rReliable).count() === 0)
-    assert(rReliable.exceptAll(rLocal).count() === 0)
   }
 
   test("identical docs get identical simhash; different docs differ") {
@@ -937,65 +917,16 @@ class TextSpec extends SparkSpec {
 
     // the unpruned pair stage (auto's choice below the threshold) is
     // row-identical — the filter only prunes pairs that fail the gate
-    val off = graft.ext.TextAnalysis.qd19Impl(spark, dir,
-        graft.ext.CheckpointStrategy.LocalDisk, sizeFilter = Some(false)).collect()
+    val off = graft.ext.TextAnalysis.qd19Impl(spark, dir, sizeFilter = Some(false)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4))).toSet
     assert(off === expected, "sizeFilter=false control diverges")
     // the forced-ON side too: below the auto threshold the registry run
     // above took the unpruned stage, so pin the pruned stage explicitly
-    val on = graft.ext.TextAnalysis.qd19Impl(spark, dir,
-        graft.ext.CheckpointStrategy.LocalDisk, sizeFilter = Some(true)).collect()
+    val on = graft.ext.TextAnalysis.qd19Impl(spark, dir, sizeFilter = Some(true)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4))).toSet
     assert(on === expected, "sizeFilter=true forced mode diverges")
-  }
-
-  test("CheckpointStrategy.Reliable: qd19 and qt23's bm25 produce the exact default-strategy rows") {
-    // VERDICT r14 #1: the eager-checkpoint sites take the strategy as a
-    // parameter — on a cluster, Reliable survives executor loss where
-    // local checkpoint blocks are non-recomputable. The contract: the
-    // strategy changes ONLY fault-tolerance, never a row.
-    import graft.ext.{CheckpointStrategy, TextAnalysis}
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt-")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
-    try {
-      def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toString).sorted.toSeq
-      val qd19Default = canon(Registry.byName("qd19_containment_dup").run(spark, sf))
-      val qd19Reliable = canon(TextAnalysis.qd19Impl(spark, sf, CheckpointStrategy.Reliable))
-      assert(qd19Reliable === qd19Default, "qd19 rows differ under Reliable")
-      assert(qd19Default.nonEmpty)
-      val docs = graft.sources.Tables.documents(spark, sf)
-      assert(canon(TextAnalysis.bm25Scores(docs, CheckpointStrategy.Reliable))
-        === canon(TextAnalysis.bm25Scores(docs)), "bm25 rows differ under Reliable")
-      assert(canon(graft.ext.Clustering.qc03Impl(spark, sf, CheckpointStrategy.Reliable))
-        === canon(Registry.byName("qc03_classifier_step").run(spark, sf)),
-        "qc03 rows differ under Reliable")
-      // r15 #1 retrofit sites: the four legacy corpus-sized checkpoint
-      // frames now take the strategy too — same row-invariance contract.
-      assert(canon(graft.ext.Dedup.qd03Impl(spark, sf, CheckpointStrategy.Reliable))
-        === canon(Registry.byName("qd03_minhash_lsh_pairs").run(spark, sf)),
-        "qd03 rows differ under Reliable")
-      assert(canon(graft.ext.Clustering.qc04Impl(spark, sf, CheckpointStrategy.Reliable))
-        === canon(Registry.byName("qc04_classifier_train").run(spark, sf)),
-        "qc04 rows differ under Reliable")
-      assert(canon(graft.ext.Dedup.qd17Impl(spark, sf, CheckpointStrategy.Reliable))
-        === canon(Registry.byName("qd17_edit_distance_dup").run(spark, sf)),
-        "qd17 rows differ under Reliable")
-      // trainBpe's per-round checkpoint takes the strategy too (ADVICE
-      // r16 #5): same merges under Reliable, forced through the
-      // distributed loop where the checkpoint actually runs
-      assert(TextAnalysis.trainBpe(TextAnalysis.bpeVocab(spark, sf), 5,
-          ckpt = CheckpointStrategy.Reliable, forceDistributed = true)
-        === TextAnalysis.trainBpe(TextAnalysis.bpeVocab(spark, sf), 5),
-        "trainBpe merges differ under Reliable")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(ckptDir.toFile)
-    }
   }
 
   test("qt20 bigram model: both the hit and backoff paths are exercised") {

@@ -17,9 +17,9 @@ class MoveSiteSpec extends SiteLint {
         "signature store, the fingerprint store and the clustered sink's " +
         "compaction goes through it"),
     ("streaming/StreamingQueries.scala", """require(f.renameTo(dst), s"move failed: $f")""") ->
-      (2, "test-data replay (runBoundedTsBatches, qst44's ingest staging): " +
-        "places each staged slice file in the stream's input directory " +
-        "before the query starts; no persisted state is replaced"),
+      (1, "test-data replay (replaySlices, behind runBoundedTsBatches and " +
+        "qst44's ingest): places each staged slice file in the stream's " +
+        "input directory before the query starts; no persisted state is replaced"),
     ("fs/NioLocalFileSystem.scala", """if (!Files.isRegularFile(from, LinkOption.NOFOLLOW_LINKS)) super.rename(src, dst, options: _*)""") ->
       (1, "the file system's own rename primitive (directories: Hadoop's)"),
     ("fs/NioLocalFileSystem.scala", """notFound(to.getParent)(Files.move(from, to, StandardCopyOption.ATOMIC_MOVE))""") ->

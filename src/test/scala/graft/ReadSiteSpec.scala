@@ -27,10 +27,8 @@ class ReadSiteSpec extends SiteLint {
       (1, "stream source with explicit schema (from Tables.schemaOf)"),
     ("streaming/StreamingQueries.scala", """spark.readStream.schema(schema)""") ->
       (1, "stream source with explicit schema (from Tables.schemaOf)"),
-    ("streaming/StreamingQueries.scala", """spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")""") ->
-      (1, "test-data replay directory: stream source with explicit schema"),
-    ("streaming/StreamingQueries.scala", """val iq = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")""") ->
-      (1, "test-data replay directory: stream source with explicit schema"),
+    ("streaming/StreamingQueries.scala", """val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")""") ->
+      (1, "test-data replay directory (replaySlices): stream source with explicit schema"),
     ("streaming/StreamingQueries.scala", """s.read.parquet(base.toString).drop("batch_id")""") ->
       (1, "reads the clustered sink's own output, written by this gate"),
     ("streaming/FingerprintStore.scala", """s.read.schema(StructType(Seq(""") ->

@@ -10,6 +10,11 @@ import java.io.File
   * Hadoop conf trimmed (`GraftSession.trimHadoopConf`). A session or
   * context built any other way could miss both. The only builder is
   * `GraftSession.local`; everything else calls it.
+  *
+  * Library code also never sets a checkpoint directory on that session
+  * nor calls `Dataset.checkpoint`: every lineage checkpoint is a
+  * `localCheckpoint`, in memory or on disk (the rule is in the `Dedup`
+  * scaladoc), so no query depends on a directory no main configures.
   */
 class SessionSiteSpec extends SiteLint {
 
@@ -31,5 +36,14 @@ class SessionSiteSpec extends SiteLint {
     }
     assertClassified(found, manifest, "session-builder",
       "build the session with GraftSession.local")
+  }
+
+  test("no library line calls .checkpoint( or setCheckpointDir") {
+    val found = scan(libraryRoots) { l =>
+      l.contains(".checkpoint(") || l.contains("setCheckpointDir")
+    }
+    assertClassified(found, Map.empty, "reliable-checkpoint",
+      "use localCheckpoint(true) for a bounded frame, " +
+        "localCheckpoint(true, StorageLevel.DISK_ONLY) for a corpus-sized one")
   }
 }

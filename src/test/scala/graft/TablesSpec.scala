@@ -46,7 +46,6 @@ class TablesSpec extends SparkSpec {
   }
 
   test("every fixture table loads with the schema and the plan of a bare read") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // as Tables.events sets it
     Tables.all.foreach { t =>
       val memo = Tables.load(spark, sf, t)
       val bare = spark.read.parquet(s"$sf/$t.parquet")
