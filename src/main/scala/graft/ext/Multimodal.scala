@@ -432,9 +432,7 @@ object Multimodal {
   // storage and only the gated READ path is the operator.)
   // ---------------------------------------------------------------------
   private def wavDir(d: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-wavfiles-" + Integer.toHexString(d.hashCode) +
-      "-p" + ProcessHandle.current().pid()
+    graft.store.PartitionedStore.scratchDir("wavfiles", d)
 
   private def qm06(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -587,9 +585,7 @@ object Multimodal {
   // the source partitions by files; decode is per-file executor work.
   // ---------------------------------------------------------------------
   private def pngDir(d: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-pngfiles-" + Integer.toHexString(d.hashCode) +
-      "-p" + ProcessHandle.current().pid()
+    graft.store.PartitionedStore.scratchDir("pngfiles", d)
 
   private def qm08(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

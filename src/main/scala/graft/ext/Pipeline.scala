@@ -37,7 +37,6 @@ import graft.sources.Tables
 object Pipeline {
 
   private val MinTokens = 10
-  private val HammingMax = 12
 
   /** Quality-gate + exact-dedup survivors with (doc_id, text, source, nt). */
   private def dedupSurvivors(s: SparkSession, d: String): DataFrame = {
@@ -51,32 +50,15 @@ object Pipeline {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  /** Near-dup candidate buckets over the dedup survivors, BEFORE the cap
-    * filter: one groupBy(chunk-key) shuffle carrying sorted (doc_id,
-    * simhash) structs — identical shape to Dedup.simhashBucketStage, in
-    * the gate band layout. The wide layout's drain of the saturated
-    * oversized-bucket channel is on file in SOAK_FULL_r12–r14.jsonl
-    * (`soak_band_width`). */
-  private def nearDupBuckets(dedup: DataFrame): DataFrame = {
-    val scheme = Dedup.GateScheme
-    Dedup.withSimhash(dedup.select(col("doc_id"), col("text")), scheme.simBits)
-      .select(col("doc_id"), col("simhash"),
-        explode(array((0 until scheme.bands).map(c =>
-          expr(s"(simhash div cast(pow(2, ${scheme.width * c}) as bigint)) % ${1L << scheme.width}")
-            .cast("long") * scheme.bands + c): _*)).as("ck"))
-      .select(col("ck"), struct(col("doc_id"), col("simhash")).as("ds"))
-      .groupBy(col("ck"))
-      .agg(sort_array(collect_list(col("ds"))).as("ids")) // sorts by doc_id
-  }
-
   /** Buckets the pipeline's near-dup stage skips (> BucketCap members) —
     * the observable-drops channel, symmetric to Dedup.oversizedLshBuckets;
     * TiersSpec asserts it reads 0 on the fixtures and adds no bucket from
-    * a 3× to a 5× uniform tier. */
+    * a 3× to a 5× uniform tier. The wide layout's drain of the saturated
+    * channel is on file in SOAK_FULL_r12–r14.jsonl (`soak_band_width`). */
   def oversizedBuckets(s: SparkSession, d: String): DataFrame =
-    nearDupBuckets(dedupSurvivors(s, d))
+    Dedup.simhashBucketsRaw(dedupSurvivors(s, d), Dedup.GateScheme)
       .filter(size(col("ids")) > Dedup.BucketCap)
-      .select(col("ck"), size(col("ids")).as("n"))
+      .select(col("c"), col("chunk"), size(col("ids")).as("n"))
 
   /** Survivors of quality gate + exact dedup + near-dup drop + sampling,
     * with (doc_id, text, source, nt). Package-private for the spec. */
@@ -86,16 +68,8 @@ object Pipeline {
     // explosion is map-side after the one groupBy(chunk) shuffle, bounded
     // by BucketCap² per bucket; oversized buckets are skipped (observable
     // above), exactly as the standalone query does.
-    val dropped = nearDupBuckets(dedup)
-      .filter(size(col("ids")).between(2, Dedup.BucketCap))
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1),
-          |  i -> transform(slice(ids, i + 1, size(ids) - i),
-          |    b -> struct(b.doc_id AS doc_id,
-          |      bit_count(element_at(ids, i).simhash ^ b.simhash) AS hamming))))"""
-          .stripMargin.replace("\n", " "))).as("p"))
-      .filter(col("p.hamming") <= HammingMax)
-      .select(col("p.doc_id").as("doc_id")).distinct()
+    val dropped = Dedup.cappedBucketPairs(dedup, Dedup.GateScheme)
+      .select(col("doc_b").as("doc_id")).distinct()
     // merge hint: the dropped set is corpus-sized — never broadcast-safe,
     // and the static planner misestimates post-explode/distinct sizes
     // (see Dedup qd03/qd04).
@@ -137,7 +111,7 @@ object Pipeline {
       |  SELECT DISTINCT y.doc_id
       |  FROM chunks x JOIN chunks y
       |    ON x.ck = y.ck AND x.doc_id < y.doc_id
-      |   AND bit_count(xor(x.simhash, y.simhash)) <= $HammingMax
+      |   AND bit_count(xor(x.simhash, y.simhash)) <= ${Dedup.GateScheme.hammingMax}
       |  JOIN kept_buckets k ON k.ck = x.ck),
       |sampled AS (
       |  SELECT d.source, d.nt FROM dedup d

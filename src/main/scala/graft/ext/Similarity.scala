@@ -609,15 +609,13 @@ object Similarity {
   // partition type inference and key on string.
   // ---------------------------------------------------------------------
   private def ivfIndexDir(d: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft-ivf-index-" + Integer.toHexString(d.hashCode) +
-      "-p" + ProcessHandle.current().pid()
+    graft.store.PartitionedStore.scratchDir("ivf-index", d)
 
   // "build once, serve many" means the build must not re-run on every
   // query invocation (a bench timing of the serve path would otherwise
   // include the full index write — ADVICE r12): the index is built at most
   // once per (process, sf dir). Safe because the dir's parquet is
-  // immutable and the path is pid-scoped, so no cross-process staleness.
+  // immutable and the path is process-scoped, so no cross-process staleness.
   // computeIfAbsent (not a bare keySet.add) so a SECOND thread arriving
   // mid-build BLOCKS until the first finishes rather than serving a
   // partial index, and a failed build leaves no mapping → retried

@@ -142,17 +142,6 @@ object SpanDedup {
   // ---------------------------------------------------------------------
   private val NewMod = 5
 
-  private[graft] def simhashChunks(docs: DataFrame,
-      scheme: Dedup.BandScheme = Dedup.GateScheme): DataFrame =
-    Dedup.withSimhash(docs, scheme.simBits)
-      .select(col("doc_id"), col("simhash"),
-        explode(array((0 until scheme.bands).map(c =>
-          struct(lit(c).as("c"),
-            expr(s"(simhash div cast(pow(2, ${scheme.width * c}) as bigint)) % ${1L << scheme.width}")
-              .as("chunk"))): _*)).as("ck"))
-      .select(col("doc_id"), col("simhash"),
-        col("ck.c").as("c"), col("ck.chunk").as("chunk"))
-
   /** Seen-side (band, chunk) buckets qd13 skips entirely (> BucketCap
     * members): an incoming near-dup whose ONLY match lives in one of these
     * classifies as 'new' — a recall loss, capped by design. This is the
@@ -161,45 +150,20 @@ object SpanDedup {
     * uniform grown tier; the `qd13_seen_bucket_drops` field of
     * SOAK_FULL_r12–r14.jsonl records it at 30×. */
   def incrementalDroppedBuckets(s: SparkSession, d: String): DataFrame =
-    simhashChunks(Tables.documents(s, d))
+    Dedup.simhashChunks(Tables.documents(s, d))
       .filter(col("doc_id") % NewMod =!= 0)
       .groupBy(col("c"), col("chunk"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > Dedup.BucketCap)
 
   /** The qd13 classification over an arbitrary (doc_id, text) frame, split
-    * seen/incoming by doc_id % NewMod — package-private for the spec. */
+    * seen/incoming by doc_id % NewMod — package-private for the spec. The
+    * seen side is recomputed from `docs` where qd18 reads it from its
+    * store; the classification is the same [[classifyAgainstState]]. */
   private[graft] def classifyIncremental(docs: DataFrame): DataFrame = {
-    val hashed = docs.select(col("doc_id"), md5(col("text")).as("h"))
-    val seenH = hashed.filter(col("doc_id") % NewMod =!= 0)
-      .select(col("h")).distinct()
-    val incoming = hashed.filter(col("doc_id") % NewMod === 0)
-    val exact = incoming.join(seenH.hint("merge"), Seq("h"), "left_semi")
-      .select(col("doc_id")).withColumn("is_exact", lit(1L))
-
-    val chunks = simhashChunks(docs)
-    val seenC = chunks.filter(col("doc_id") % NewMod =!= 0)
-    val inC = chunks.filter(col("doc_id") % NewMod === 0)
-    // seen-side bucket cap: per incoming chunk at most BucketCap compares,
-    // whatever the seen-corpus size (cap mirrored in the oracle)
-    val kept = seenC.groupBy(col("c"), col("chunk"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= Dedup.BucketCap)
-      .select(col("c"), col("chunk"))
-    val near = inC.join(
-        seenC.join(kept.hint("merge"), Seq("c", "chunk"), "left_semi")
-          .select(col("c"), col("chunk"), col("simhash").as("seen_sim"))
-          .hint("merge"),
-        Seq("c", "chunk"))
-      .filter(expr("bit_count(simhash ^ seen_sim) <= 12"))
-      .select(col("doc_id")).distinct().withColumn("is_near", lit(1L))
-
-    incoming.select(col("doc_id"))
-      .join(exact.hint("merge"), Seq("doc_id"), "left")
-      .join(near.hint("merge"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("is_exact") === 1, "exact_dup")
-          .when(col("is_near") === 1, "near_dup")
-          .otherwise("new").as("status"))
+    val seen = docs.filter(col("doc_id") % NewMod =!= 0)
+    classifyAgainstState(docs.filter(col("doc_id") % NewMod === 0),
+      seen.select(md5(col("text")).as("h")), Dedup.simhashChunks(seen))
   }
 
   private def qd13(s: SparkSession, d: String): DataFrame =
@@ -225,7 +189,7 @@ object SpanDedup {
        |  FROM in_c i
        |  JOIN kept k ON k.c = i.c AND k.chunk = i.chunk
        |  JOIN seen_c s ON s.c = i.c AND s.chunk = i.chunk
-       |  WHERE bit_count(xor(i.simhash, s.simhash)) <= 12)
+       |  WHERE bit_count(xor(i.simhash, s.simhash)) <= ${Dedup.GateScheme.hammingMax})
        |SELECT i.doc_id,
        |  CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
        |       WHEN n.doc_id IS NOT NULL THEN 'near_dup'
@@ -386,27 +350,35 @@ object SpanDedup {
       lit(IngestBatches.toLong))
     .otherwise(expr(s"doc_id div $NewMod") % IngestBatches)
 
+  /** The seen-side chunk rows of every (c, chunk) bucket within the
+    * seen-side cap, as (c, chunk, seen_sim): per incoming chunk at most
+    * BucketCap compares, whatever the seen-corpus size (cap mirrored in
+    * the oracle). Shared by the batch classifier and qst29's stream. */
+  private[graft] def keptSeenChunks(seenChunks: DataFrame): DataFrame = {
+    val kept = seenChunks.groupBy(col("c"), col("chunk"))
+      .agg(count(lit(1)).as("n")).filter(col("n") <= Dedup.BucketCap)
+      .select(col("c"), col("chunk"))
+    seenChunks.join(kept.hint("merge"), Seq("c", "chunk"), "left_semi")
+      .select(col("c"), col("chunk"), col("simhash").as("seen_sim"))
+  }
+
+  /** Incoming chunk rows with a [[keptSeenChunks]] row in the same bucket
+    * within the gate's Hamming bound — one row per such seen match. */
+  private[graft] def nearSeen(chunks: DataFrame, keptSeen: DataFrame): DataFrame =
+    chunks.join(keptSeen, Seq("c", "chunk"))
+      .filter(expr(s"bit_count(simhash ^ seen_sim) <= ${Dedup.GateScheme.hammingMax}"))
+
   /** Classify a batch against the signature store (stateH: `h`;
-    * stateChunks: `c, chunk, simhash`) — qd13's classification with the
-    * seen side read from the store instead of recomputed. */
+    * stateChunks: `c, chunk, simhash`) — qd13's classification, with the
+    * seen side read from the store (qd18) or recomputed (qd13). */
   private[graft] def classifyAgainstState(batch: DataFrame,
       stateH: DataFrame, stateChunks: DataFrame): DataFrame = {
     val batchH = batch.select(col("doc_id"), md5(col("text")).as("h"))
-    val batchChunks = simhashChunks(batch)
-      .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
     val exact = batchH
       .join(stateH.select(col("h")).distinct().hint("merge"), Seq("h"), "left_semi")
       .select(col("doc_id")).withColumn("is_exact", lit(1L))
-    val kept = stateChunks.groupBy(col("c"), col("chunk"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= Dedup.BucketCap)
-      .select(col("c"), col("chunk"))
-    val near = batchChunks
-      .join(
-        stateChunks.join(kept.hint("merge"), Seq("c", "chunk"), "left_semi")
-          .select(col("c"), col("chunk"), col("simhash").as("seen_sim"))
-          .hint("merge"),
-        Seq("c", "chunk"))
-      .filter(expr("bit_count(simhash ^ seen_sim) <= 12"))
+    val near = nearSeen(Dedup.simhashChunks(batch),
+        keptSeenChunks(stateChunks).hint("merge"))
       .select(col("doc_id")).distinct().withColumn("is_near", lit(1L))
     batchH.select(col("doc_id"))
       .join(exact.hint("merge"), Seq("doc_id"), "left")
@@ -582,7 +554,7 @@ object SpanDedup {
           { cls = clsFrame.localCheckpoint(true) },
           { touched = store.probeTouched(bH) })
         store.merge(bH,
-          simhashChunks(batch)
+          Dedup.simhashChunks(batch)
             .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
           touchedPre = Some(touched)): Unit
         cls
@@ -628,7 +600,7 @@ object SpanDedup {
        |  JOIN kept k ON k.obs_b = i.batch_id AND k.c = i.c AND k.chunk = i.chunk
        |  JOIN seen_c s ON s.c = i.c AND s.chunk = i.chunk
        |    AND s.batch_id < i.batch_id
-       |  WHERE bit_count(xor(i.simhash, s.simhash)) <= 12)
+       |  WHERE bit_count(xor(i.simhash, s.simhash)) <= ${Dedup.GateScheme.hammingMax})
        |SELECT bb.doc_id, bb.batch_id,
        |  CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
        |       WHEN n.doc_id IS NOT NULL THEN 'near_dup'

@@ -907,23 +907,42 @@ object TextAnalysis {
     * (qst11) so both faces screen against the identical benchmark suite. */
   private[graft] val EvalDocCount = 32
 
-  private def qt10(s: SparkSession, d: String): DataFrame = {
-    val grams = Tables.documents(s, d)
-      .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
-      .filter(size(col("tk")) >= 5)
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(tk) - 4), i -> md5(concat_ws(' ', slice(tk, i, 5)))))"))
-        .as("g"))
-    val evalGrams = grams.filter(col("doc_id") < EvalDocCount)
-      .select(col("g")).distinct().withColumn("hit", lit(1L))
-    grams.filter(col("doc_id") >= EvalDocCount)
+  /** (doc_id, g): the distinct lowercased word 5-gram md5s of each
+    * document with at least 5 tokens — the gram rows of qt10, qt19 and
+    * qst11. */
+  private[graft] def fiveGrams(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
+    .filter(size(col("tk")) >= 5)
+    .select(col("doc_id"), explode(expr(
+      "array_distinct(transform(sequence(1, size(tk) - 4), i -> md5(concat_ws(' ', slice(tk, i, 5)))))"))
+      .as("g"))
+
+  /** The eval set's distinct grams, each marked `hit = 1`. */
+  private[graft] def evalGramSet(evalDocs: DataFrame): DataFrame =
+    fiveGrams(evalDocs).select(col("g")).distinct().withColumn("hit", lit(1L))
+
+  /** Per-doc (n_grams, n_contaminated) of `docs` against an [[evalGramSet]]:
+    * one gram explode, one broadcast join, one per-doc rollup. qst11 runs
+    * it per micro-batch over its stream. */
+  private[graft] def contaminationCounts(docs: DataFrame,
+      evalGrams: DataFrame): DataFrame =
+    fiveGrams(docs)
       .join(broadcast(evalGrams), Seq("g"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
-      .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
-        (col("n_contaminated").cast("double") / col("n_grams")).as("contamination_frac"),
-        when(col("n_contaminated") > 0, 1L).otherwise(0L).as("is_contaminated"))
+
+  /** The contamination gate's result columns from per-doc counts. */
+  private[graft] def contaminationFlags(counts: DataFrame): DataFrame =
+    counts.select(col("doc_id"), col("n_grams"), col("n_contaminated"),
+      (col("n_contaminated").cast("double") / col("n_grams")).as("contamination_frac"),
+      when(col("n_contaminated") > 0, 1L).otherwise(0L).as("is_contaminated"))
+
+  private def qt10(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    contaminationFlags(contaminationCounts(
+      docs.filter(col("doc_id") >= EvalDocCount),
+      evalGramSet(docs.filter(col("doc_id") < EvalDocCount))))
   }
 
   private[graft] val qt10Sql =
@@ -1078,12 +1097,8 @@ object TextAnalysis {
     * 100× warm and 1.59× with the OS page cache dropped before every
     * pass. */
   private def qt19(s: SparkSession, d: String): DataFrame = {
-    val grams = Tables.documents(s, d)
-      .select(col("doc_id"), expr(s"transform($toksExpr, t -> lower(t))").as("tk"))
-      .filter(size(col("tk")) >= 5)
-      .select(col("doc_id"), (col("doc_id") % 2).as("side"), explode(expr(
-        "array_distinct(transform(sequence(1, size(tk) - 4), i -> md5(concat_ws(' ', slice(tk, i, 5)))))"))
-        .as("g"))
+    val grams = fiveGrams(Tables.documents(s, d))
+      .withColumn("side", col("doc_id") % 2)
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val shared = grams
       .groupBy(col("g"))

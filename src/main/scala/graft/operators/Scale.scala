@@ -874,9 +874,7 @@ object Scale {
   // LAYOUT_PROBE_r14.json — layout changes results never, IO always.
   // ---------------------------------------------------------------------
   private def zorderDir(d: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft-zorder-lineitem-" + Integer.toHexString(d.hashCode) +
-      "-p" + ProcessHandle.current().pid()
+    graft.store.PartitionedStore.scratchDir("zorder-lineitem", d)
 
   private def qx17(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

@@ -22,14 +22,9 @@ import graft.Q
   */
 object FileSources {
 
-  /** Scratch location for a roundtrip copy: deterministic per (sfDir,
-    * table) within one JVM, but unique per process — two concurrent
-    * sessions (e.g. Verify and Bench on the same sfDir) must not race on
-    * one directory with mode=overwrite. */
-  private def scratchDir(table: String, d: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-$table-" + Integer.toHexString(d.hashCode) +
-      "-p" + ProcessHandle.current().pid()
+  // roundtrip copies: one directory per (table, sfDir) and process, so
+  // two concurrent sessions never race on one with mode=overwrite
+  import graft.store.PartitionedStore.scratchDir
 
   private def csvDir(d: String): String = scratchDir("csv-supplier", d)
 

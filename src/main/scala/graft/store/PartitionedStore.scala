@@ -242,6 +242,15 @@ private[graft] object PartitionedStore {
     p
   }
 
+  /** A gate's scratch directory for its copy of the tables at `d`: the
+    * same path for the same (name, d) within one process, so a gate run
+    * twice reuses it, and unique per process, so two concurrent sessions
+    * never share one. All of them sit under one [[tempRoot]]. */
+  def scratchDir(name: String, d: String): String =
+    s"$scratchRoot/$name-${Integer.toHexString(d.hashCode)}"
+
+  private lazy val scratchRoot = tempRoot("graft-scratch-")
+
   private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   private lazy val tempRootHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => tempRoots.forEach(f => org.apache.hadoop.fs.FileUtil.fullyDelete(f): Unit)))

@@ -63,10 +63,6 @@ import org.apache.spark.util.LongAccumulator
   */
 object NearDupDedup {
 
-  /** Max Hamming distance (of 48 bits) for two docs to count as near-dups
-    * under the GATED band scheme — same threshold as the batch qd07. */
-  val HammingMax: Int = graft.ext.Dedup.GateScheme.hammingMax
-
   final case class ChunkDoc(c: Int, chunk: Long, docId: Long, simhash: Long)
 
   /** One flag row per doc per bucket per trigger. `poisoned = 1` rows are
@@ -150,12 +146,9 @@ object NearDupDedup {
     * carry `scheme.simBits` bits (Dedup.withSimhash(_, scheme.simBits)). */
   private def chunked(sim: DataFrame,
       scheme: graft.ext.Dedup.BandScheme): Dataset[ChunkDoc] =
-    sim.select(explode(array((0 until scheme.bands).map(c =>
-        struct(lit(c).as("c"),
-          expr(s"(simhash div cast(pow(2, ${scheme.width * c}) as bigint)) % ${1L << scheme.width}")
-            .as("chunk"),
-          col("doc_id").as("docId"), col("simhash").as("simhash"))): _*)).as("cd"))
-      .select(col("cd.c"), col("cd.chunk"), col("cd.docId"), col("cd.simhash"))
+    sim.select(explode(scheme.chunks).as("cd"),
+        col("doc_id").as("docId"), col("simhash"))
+      .select(col("cd.c"), col("cd.chunk"), col("docId"), col("simhash"))
       .as[ChunkDoc](Encoders.product[ChunkDoc])
 
   /** Per-chunk duplicate flags for a streaming (doc_id, simhash) frame: one

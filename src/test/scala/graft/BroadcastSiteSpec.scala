@@ -22,8 +22,6 @@ class BroadcastSiteSpec extends SiteLint {
     // ----- streaming -----
     ("streaming/StreamingQueries.scala", ".join(broadcast(bad),") ->
       (1, "qst10 poisoned-bucket frame: bounded by the chunk keyspace (<= 4*2^12 rows), not the corpus"),
-    ("streaming/StreamingQueries.scala", """.join(broadcast(evalGrams), Seq("g"), "left")""") ->
-      (1, "qst11 eval-gram set from a FIXED doc-id range (doc_id < evalN pushed to the scan) - corpus-independent"),
     ("streaming/StreamingQueries.scala", """.join(broadcast(b), Seq("event_type"))""") ->
       (1, "qst27 per-event-type quantile frame: <= |event types| rows (enum-bounded)"),
     // ----- sinks -----
@@ -104,7 +102,7 @@ class BroadcastSiteSpec extends SiteLint {
     ("ext/TextAnalysis.scala", """.join(broadcast(topV), Seq("token"), "left") // ≤ dictCap rows, bounded""") ->
       (1, "dictionary capped at dictCap rows by construction (qt08)"),
     ("ext/TextAnalysis.scala", """.join(broadcast(evalGrams), Seq("g"), "left")""") ->
-      (1, "qt10 eval-gram set from a FIXED doc-id range (doc_id < 32, pushed to scan)"),
+      (1, "qt10/qst11 eval-gram set from a FIXED doc-id range (doc_id < 32, pushed to the scan) - corpus-independent"),
     ("ext/TextAnalysis.scala", """.join(broadcast(topB), Seq("w1", "w2"), "left")""") ->
       (1, "bigram dictionary capped at dictCap rows (qt20)"),
     ("ext/TextAnalysis.scala", """.join(broadcast(topU), Seq("w2"), "left")""") ->

@@ -25,7 +25,7 @@ import graft.ysb.{Gen, Ysb}
 class CheckpointFileManagerSpec extends SparkSpec {
   import CheckpointFileManagerSpec._
 
-  private def tempDir(): NioPath = Files.createTempDirectory("graft-cfm-")
+  private def tempDir(): NioPath = graft.store.PartitionedStore.tempRoot("graft-cfm-")
   private def hadoopConf = spark.sessionState.newHadoopConf()
   private def manager(dir: NioPath): CheckpointFileManager =
     CheckpointFileManager.create(new Path(dir.toUri), hadoopConf)

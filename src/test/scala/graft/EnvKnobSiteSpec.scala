@@ -25,9 +25,7 @@ class EnvKnobSiteSpec extends SiteLint {
     "SPARK_GRAFT_CPUS" -> "local[N] cores when they should differ from the host's",
     "SPARK_GRAFT_ONLY" -> ("gate subset for Verify, Bench and PlanCensus: " +
       "re-running one gate without the suite"),
-    "SPARK_GRAFT_CAL_IDLE_REF" -> "BenchCal's calm probe time on this host",
-    "SPARK_GRAFT_CENSUS_BASELINE" -> ("the checked-in census PlanCensus " +
-      "diffs against (tools/close.sh sets it)"))
+    "SPARK_GRAFT_CAL_IDLE_REF" -> "BenchCal's calm probe time on this host")
 
   test("every SPARK_GRAFT_* name read under src/main is listed with its reason") {
     val name = "SPARK_GRAFT_[A-Z0-9_]+".r

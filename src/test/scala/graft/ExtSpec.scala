@@ -265,7 +265,7 @@ class SimilaritySpec extends SparkSpec {
         (4.0 * lcg(cl * 64 + j) + 0.05 * lcg(100000L + id * 64 + j)).toFloat
       })
     }
-    val dir = "/tmp/graft-qs05-recall"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-qs05-recall-").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     val out = Registry.byName("qs05_ivf_quant_rerank").run(spark, dir).collect()
@@ -381,7 +381,7 @@ class SimilaritySpec extends SparkSpec {
       }
       (id, emb)
     }
-    val dir = "/tmp/graft-ivf-recall"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-ivf-recall-").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     val grid = recallGrid(dir, Seq(16), Seq(1, 2, 4))
@@ -404,7 +404,7 @@ class SimilaritySpec extends SparkSpec {
         (4.0 * lcg(cl * 64 + j) + 0.05 * lcg(100000L + id * 64 + j)).toFloat
       })
     }
-    val dir = "/tmp/graft-lsh-recall"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-lsh-recall-").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     val e = Tables.embeddings(spark, dir)
@@ -637,7 +637,7 @@ class SimilaritySpec extends SparkSpec {
       id -> c
     }
     val df = vecs.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-respq-").toString
+    val dir = graft.store.PartitionedStore.tempRoot("graft-respq-").toString
     df.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val raw = Registry.byName("qe03_product_quantize").run(spark, dir)
       .agg(sum(col("sq_err"))).collect()(0).getDouble(0)
@@ -882,7 +882,7 @@ class TextSpec extends SparkSpec {
       (5L, (1 to 40).map(i => s"u$i").mkString(" ") + " " + run),
       (6L, run + " " + (1 to 40).map(i => s"v$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val dir = "/tmp/graft-qd19-sizefilter"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-qd19-sizefilter-").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     // Scala mini-oracle: the qd19Sql definition verbatim over the fps sets
@@ -1005,7 +1005,7 @@ class TextSpec extends SparkSpec {
     assert(out.filter(col("top2gram_frac") < 0 || col("top2gram_frac") > 1 ||
       col("dup3gram_frac") < 0 || col("dup3gram_frac") > 1).count() === 0)
     val spam = Seq((1L, ("spam " * 10).trim)).toDF("doc_id", "text")
-    val dir = "/tmp/graft-qt09-spam"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-qt09-spam-").toString
     spam.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = Registry.byName("qt09_gopher_repetition").run(spark, dir).collect()(0)
     assert(r.getAs[Double]("top2gram_frac") === 1.0)
@@ -1029,7 +1029,7 @@ class TextSpec extends SparkSpec {
       (1L, "contact me at jane.doe+spam@example.co.uk or 555-867-5309 now"),
       (2L, "two mails a@b.io c@d.org and dotted phone 123.456.7890"),
       (3L, "no pii here at all")).toDF("doc_id", "text")
-    val dir = "/tmp/graft-qt11-pii"
+    val dir = graft.store.PartitionedStore.tempRoot("graft-qt11-pii-").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Registry.byName("qt11_pii_redaction").run(spark, dir)
       .collect().map(r => r.getLong(0) ->
@@ -1784,7 +1784,7 @@ class SpanDedupSpec extends SparkSpec {
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
-        SpanDedup.simhashChunks(docs)
+        Dedup.simhashChunks(docs)
           .select(col("doc_id"), col("c"), col("chunk"), col("simhash")))
     }
     val texts = (1L to 8L).map(i =>
@@ -1824,7 +1824,7 @@ class SpanDedupSpec extends SparkSpec {
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
-        SpanDedup.simhashChunks(docs)
+        Dedup.simhashChunks(docs)
           .select(col("doc_id"), col("c"), col("chunk"), col("simhash")))
     }
     // five appended batches → several files per partition
@@ -1857,7 +1857,7 @@ class SpanDedupSpec extends SparkSpec {
     def sigs(rows: Seq[(Long, String)]) = {
       val docs = rows.toDF("doc_id", "text")
       (docs.select(col("doc_id"), md5(col("text")).as("h")),
-        SpanDedup.simhashChunks(docs)
+        Dedup.simhashChunks(docs)
           .select(col("doc_id"), col("c"), col("chunk"), col("simhash")))
     }
     val (h1, c1) = sigs((1L to 8L).map(i =>
@@ -1900,7 +1900,7 @@ class SpanDedupSpec extends SparkSpec {
       i -> (1 to 30).map(j => s"d${i}w$j").mkString(" ")).toDF("doc_id", "text")
     store.merge(
       docs.select(col("doc_id"), md5(col("text")).as("h")),
-      SpanDedup.simhashChunks(docs)
+      Dedup.simhashChunks(docs)
         .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))): Unit
     val beforeH = store.readH.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -1946,7 +1946,7 @@ class SpanDedupSpec extends SparkSpec {
     // partitions aside leaves the only copy under `path/_txn/old`; the
     // next compaction must restore it instead of failing (or worse,
     // deleting it).
-    val path = s"/tmp/graft-layout-recover-p${ProcessHandle.current().pid()}"
+    val path = s"${graft.store.PartitionedStore.tempRoot("graft-layout-recover-")}/t"
     val ev = sources.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .limit(500)

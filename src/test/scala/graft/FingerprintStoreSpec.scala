@@ -61,9 +61,9 @@ class FingerprintStoreSpec extends SparkSpec {
     val probe = df.filter(col("doc_id") <= 5L)
     val key = (r: org.apache.spark.sql.Row) =>
       r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(4)))
-    val a = StreamingQueries.screenAgainstStore(spark, incDir)(probe)
+    val a = StreamingQueries.screenAgainstStore(st)(probe)
       .collect().map(key).toMap
-    val b = StreamingQueries.screenAgainstStore(spark, oneShotDir)(probe)
+    val b = StreamingQueries.screenAgainstStore(FingerprintStore.open(spark, oneShotDir))(probe)
       .collect().map(key).toMap
     assert(a === b)
   }
@@ -140,16 +140,16 @@ class FingerprintStoreSpec extends SparkSpec {
     val run = (1 to 12).map(i => s"tok$i").mkString(" ")
     val mk = (id: Long, text: String) => Seq((id, text)).toDF("doc_id", "text")
     val st = FingerprintStore.create(spark, s"${tmpRoot("loop")}/fp")
-    val b1 = StreamingQueries.screenAndIngest(spark, st)(
+    val b1 = StreamingQueries.screenAndIngest(st)(
       mk(1L, run + " " + (1 to 10).map(i => s"a$i").mkString(" ")))
     assert(b1.collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap ===
       Map(1L -> false)) // empty store: accepted, fingerprints ingested
-    val b2 = StreamingQueries.screenAndIngest(spark, st)(
+    val b2 = StreamingQueries.screenAndIngest(st)(
       mk(2L, run + " " + (1 to 10).map(i => s"a$i").mkString(" ")))
     assert(b2.collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap ===
       Map(2L -> true)) // duplicate of ACCEPTED content: flagged
     val before = st.rows
-    val b3 = StreamingQueries.screenAndIngest(spark, st)(
+    val b3 = StreamingQueries.screenAndIngest(st)(
       mk(3L, (1 to 20).map(i => s"fresh$i").mkString(" ")))
     assert(b3.collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap ===
       Map(3L -> false))

@@ -22,7 +22,7 @@ class HadoopConfSpec extends SparkSpec {
   private val SparkSource = "Set by Spark from keys starting with 'spark.hadoop'"
 
   test("the trim drops default-only keys and keeps programmatic, spark.hadoop and site keys") {
-    val dir = Files.createTempDirectory("graft-hconf-")
+    val dir = PartitionedStore.tempRoot("graft-hconf-")
     val site = dir.resolve("graft-test-site.xml")
     Files.writeString(site,
       """<?xml version="1.0"?>
@@ -54,7 +54,7 @@ class HadoopConfSpec extends SparkSpec {
 
   test("after parquet, streaming-state and store work the session conf stays small and keeps the nio file system") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hconf-work-")
+    val dir = PartitionedStore.tempRoot("graft-hconf-work-")
     val pq = dir.resolve("pq").toString
     spark.range(0, 100, 1, 2).selectExpr("id", "id % 7 AS k")
       .write.mode("overwrite").parquet(pq)

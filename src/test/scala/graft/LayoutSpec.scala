@@ -8,7 +8,7 @@ import graft.sources.Tables
 class LayoutSpec extends SparkSpec {
 
   test("date-partitioned layout prunes partitions for date predicates") {
-    val path = "/tmp/graft-layout-test/events_by_day"
+    val path = s"${graft.store.PartitionedStore.tempRoot("graft-layout-test-")}/events_by_day"
     Layout.writeDatePartitioned(Tables.events(spark, sf), path, "ts")
     val pruned = Layout.readDatePartitioned(spark, path)
       .filter(col("dt") === "2024-01-05")
@@ -24,7 +24,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("idempotent foreachBatch sink: replayed batch replaces, not duplicates") {
-    val path = "/tmp/graft-layout-test/idempotent"
+    val path = s"${graft.store.PartitionedStore.tempRoot("graft-layout-test-")}/idempotent"
     val b0 = Tables.events(spark, sf).limit(100)
     Layout.writeIdempotent(b0, 0, path)
     Layout.writeIdempotent(Tables.events(spark, sf).limit(50), 1, path)
@@ -40,7 +40,7 @@ class LayoutSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val path = s"/tmp/graft-layout-test/clustered-p${ProcessHandle.current().pid()}"
+    val path = s"${graft.store.PartitionedStore.tempRoot("graft-layout-test-")}/clustered"
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val b0 = ev.filter(col("event_id") % 2 === 0)

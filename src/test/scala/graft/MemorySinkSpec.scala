@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingQueries
 
-/** The run path of every memory-sink streaming gate
-  * (`StreamingQueries.toMemorySink`): the sink's temp view is dropped once
-  * its rows are in the returned frame, and the query is stopped even when
-  * waiting on it throws, so no gate leaves a live stream or a driver-heap
-  * sink behind for the next one. */
+/** The run paths of the streaming gates (`StreamingQueries.toMemorySink`
+  * and `StreamingQueries.drainForeachBatch`): the sink's temp view is
+  * dropped once its rows are in the returned frame, and the query is
+  * stopped even when waiting on it or a batch throws, so no gate leaves a
+  * live stream or a driver-heap sink behind for the next one. */
 class MemorySinkSpec extends SparkSpec {
 
   private def graftViews(): Set[String] =
@@ -45,5 +45,18 @@ class MemorySinkSpec extends SparkSpec {
       docs().select(raise_error(lit("boom"))), "throwing_stream", "append")())
     assert(spark.streams.active.map(_.id).toSet === active)
     assert(graftViews() === before)
+  }
+
+  test("a foreachBatch drain whose batch body throws is stopped") {
+    val active = spark.streams.active.map(_.id).toSet
+    val docs = StreamingQueries.streamTable(spark, sf, "documents")
+      .select(col("doc_id"))
+    val e = intercept[Exception](
+      StreamingQueries.drainForeachBatch(docs, "throwing_batch") { (_, _) =>
+        throw new IllegalStateException("boom")
+      })
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"))
+    assert(spark.streams.active.map(_.id).toSet === active)
   }
 }

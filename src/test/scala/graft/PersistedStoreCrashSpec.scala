@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.SpanDedup
+import graft.ext.{Dedup, SpanDedup}
 import graft.store.{FileOps, PartitionedStore}
 import graft.streaming.FingerprintStore
 
@@ -87,7 +87,7 @@ class PersistedStoreCrashSpec extends SparkSpec {
     import spark.implicits._
     val docs = rows.toDF("doc_id", "text")
     (docs.select(col("doc_id"), md5(col("text")).as("h")),
-      SpanDedup.simhashChunks(docs)
+      Dedup.simhashChunks(docs)
         .select(col("doc_id"), col("c"), col("chunk"), col("simhash")))
   }
   private def doc(i: Long, tag: String = "v1") =

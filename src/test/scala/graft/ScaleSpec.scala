@@ -509,8 +509,7 @@ class ZOrderSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     val total = li.count()
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-zorder-spec-${ProcessHandle.current().pid()}"
+    val base = graft.store.PartitionedStore.tempRoot("graft-zorder-spec-").toString
     // linear = single-column sort on l_orderkey, same file count
     li.repartitionByRange(32, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")
@@ -567,8 +566,7 @@ class ZOrderSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     val total = li.count()
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-hilbert-spec-${ProcessHandle.current().pid()}"
+    val base = graft.store.PartitionedStore.tempRoot("graft-hilbert-spec-").toString
     Layout.writeHilbertOrdered(li, s"$base/hilbert", "l_orderkey", "l_partkey", 32)
     def rows(pred: org.apache.spark.sql.Column): Long =
       scanRows(spark.read.parquet(s"$base/hilbert").filter(pred))

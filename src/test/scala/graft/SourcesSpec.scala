@@ -8,7 +8,7 @@ class SourcesSpec extends SparkSpec {
 
   test("CSV source roundtrip equals parquet source (S6)") {
     val pq = Tables.orders(spark, sf)
-    val dir = "/tmp/graft-csv-test/orders"
+    val dir = s"${graft.store.PartitionedStore.tempRoot("graft-csv-test-")}/orders"
     pq.write.mode("overwrite").option("header", "true")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss").csv(dir)
     val csv = spark.read.schema(pq.schema).option("header", "true")
@@ -70,7 +70,7 @@ class SourcesSpec extends SparkSpec {
 
   test("corrupt JSONL: PERMISSIVE accounts, DROPMALFORMED drops, FAILFAST throws") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val dir = graft.store.PartitionedStore.tempRoot("graft_corrupt").toString
     val lines = Seq(
       """{"doc_id":1,"text":"ok one"}""",
       """{"doc_id":2,"text":"torn""", // unterminated string
@@ -104,7 +104,7 @@ class SourcesSpec extends SparkSpec {
 
   test("text-line codec: limit-2 split keeps tabs inside the payload") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_txt").toString
+    val dir = graft.store.PartitionedStore.tempRoot("graft_txt").toString
     val rows = Seq((7L, "plain payload"), (8L, "payload\twith\ttabs"))
     rows.toDF("doc_id", "text")
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text")).as("value"))
@@ -119,7 +119,7 @@ class SourcesSpec extends SparkSpec {
 
   test("mergeSchema: added columns null-fill; incompatible type drift fails loudly") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mergeschema-").toString
+    val tmp = graft.store.PartitionedStore.tempRoot("graft-mergeschema-").toString
     try {
       // compatible drift: gen 2 adds a column → union schema, null-fill
       Seq((1L, "a")).toDF("id", "text").write.parquet(s"$tmp/ok/gen=1")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, Streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{Sessionize, StreamingQueries}
+import graft.streaming.{FingerprintStore, Sessionize, StreamingQueries}
 import graft.ysb.{Gen, Ysb}
 
 class StreamingSpec extends SparkSpec {
@@ -35,7 +35,7 @@ class StreamingSpec extends SparkSpec {
     // testdata ships one parquet FILE per table; Spark-written corpora
     // (soak tiers) are DIRECTORIES of part files. The same runBounded
     // query must produce the identical result over both layouts.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dirlayout-").toString
+    val tmp = graft.store.PartitionedStore.tempRoot("graft-dirlayout-").toString
     try {
       val docs = graft.sources.Tables.documents(spark, sf).limit(500)
       docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -342,6 +342,15 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count() > 0)
   }
 
+  /** The one-shot fingerprint store of `seen`'s distinct winnowed
+    * fingerprints at `idxDir`, opened. */
+  private def writeIndex(seen: org.apache.spark.sql.DataFrame,
+      idxDir: String): FingerprintStore = {
+    FingerprintStore.write(graft.ext.TextAnalysis.winnowedFingerprints(seen)
+      .select(col("h")).distinct(), idxDir)
+    FingerprintStore.open(spark, idxDir)
+  }
+
   /** Run `body` with the RocksDB state store provider (transformWithState
     * contract), restoring the previous provider afterwards. */
   private def withRocksDB[A](body: => A): A = {
@@ -362,7 +371,7 @@ class StreamingSpec extends SparkSpec {
     withRocksDB {
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[(Long, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-liststate-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-liststate-").toString
       val flags = graft.streaming.NearDupDedup.flagNearDuplicates(
         ms.toDF().toDF("doc_id", "simhash"))
       val q = flags.writeStream.outputMode("update")
@@ -658,7 +667,7 @@ class StreamingSpec extends SparkSpec {
     // the checkpoint. A lost bucket would re-admit doc 30 as dup=0.
     withRocksDB {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ndd-ckpt-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-ndd-ckpt-").toString
       val ms = MemoryStream[(Long, Long)]
       val flags = graft.streaming.NearDupDedup.flagNearDuplicates(
         ms.toDF().toDF("doc_id", "simhash"))
@@ -702,7 +711,7 @@ class StreamingSpec extends SparkSpec {
     // not re-emit.
     withRocksDB {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-crash-ckpt-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-crash-ckpt-").toString
       val ms = MemoryStream[Long]
       val counters = graft.streaming.RunningCounters.countByKey(ms.toDS())
       val got = scala.collection.mutable.Set[(Long, Long, Long)]()
@@ -758,7 +767,7 @@ class StreamingSpec extends SparkSpec {
     // recovery in update mode, so both runs collect through foreachBatch.
     withRocksDB {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-ckpt-").toString
       val ms = MemoryStream[Long]
       val counters = graft.streaming.RunningCounters.countByKey(ms.toDS())
       val got = scala.collection.mutable.Set[(Long, Long, Long)]()
@@ -849,7 +858,7 @@ class StreamingSpec extends SparkSpec {
     // the replay), and committed batch 0 is not re-emitted.
     withRocksDB {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-statecrash-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-statecrash-").toString
       val ms = MemoryStream[Long]
       val counters = CrashInject.countByKey(ms.toDS())
       val got = scala.collection.mutable.Set[(Long, Long)]()
@@ -898,7 +907,7 @@ class StreamingSpec extends SparkSpec {
     // checkpoint (the discovery step an operator on a production checkpoint
     // needs before it can name an operatorId).
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssread-ckpt-").toString
+    val ckpt = graft.store.PartitionedStore.tempRoot("graft-ssread-ckpt-").toString
     val ms = MemoryStream[(String, Long)]
     val agg = ms.toDF().toDF("k", "v")
       .groupBy(col("k")).agg(count(lit(1)).as("cnt"), sum(col("v")).as("s"))
@@ -1104,7 +1113,7 @@ class StreamingSpec extends SparkSpec {
     withRocksDB {
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[Long]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-hh-pin-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-hh-pin-").toString
       val q = graft.streaming.HeavyHitters
         .sketch(ms.toDF().toDF("key"), shards = 1, m = 2)
         .writeStream.outputMode("update").format("memory")
@@ -1142,7 +1151,7 @@ class StreamingSpec extends SparkSpec {
     withRocksDB {
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[Long]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-hh-inv-").toString
+      val ckpt = graft.store.PartitionedStore.tempRoot("graft-hh-inv-").toString
       val keys = (0 until 4500).map(i =>
         if (i % 3 != 0) (i % 7).toLong else 1000L + i)
       val q = graft.streaming.HeavyHitters
@@ -1238,8 +1247,7 @@ class StreamingSpec extends SparkSpec {
 
     val root = graft.store.PartitionedStore.tempRoot("graft-qst43-spec-")
     val idxDir = s"$root/fp"
-    StreamingQueries.writeFingerprintIndex(
-      all.filter(col("doc_id") % 5 =!= 0), idxDir)
+    val store = writeIndex(all.filter(col("doc_id") % 5 =!= 0), idxDir)
     val storeParts = Option(new java.io.File(idxDir).listFiles()).toSeq
       .flatMap(_.toSeq).count(_.getName.startsWith("hp="))
 
@@ -1249,7 +1257,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val perBatch = Seq(Seq(d5), Seq(d10)).map { batch =>
         val b = batch.toDF("doc_id", "text")
-        val res = StreamingQueries.screenAgainstStore(spark, idxDir)(b)
+        val res = StreamingQueries.screenAgainstStore(store)(b)
         val rows = res.collect()
         // pruning contract: the store scan carries a partition filter and
         // reads no more partitions than the probe's prefix set
@@ -1295,15 +1303,15 @@ class StreamingSpec extends SparkSpec {
     val d5 = (5L, run + " " + (1 to 15).map(i => s"x$i").mkString(" "))
     val root = graft.store.PartitionedStore.tempRoot("graft-qst43-cap-spec-")
     val idxDir = s"$root/fp"
-    StreamingQueries.writeFingerprintIndex(seenDocs.toDF("doc_id", "text"), idxDir)
+    val store = writeIndex(seenDocs.toDF("doc_id", "text"), idxDir)
     val b = Seq(d5).toDF("doc_id", "text")
     val distinctH = graft.ext.TextAnalysis.winnowedFingerprints(b)
       .select(col("h")).distinct().count()
     assert(distinctH > 2, "planted batch must exceed the test cap")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val withCap = StreamingQueries.screenAgainstStore(spark, idxDir)(b)
-      val overCap = StreamingQueries.screenAgainstStore(spark, idxDir,
+      val withCap = StreamingQueries.screenAgainstStore(store)(b)
+      val overCap = StreamingQueries.screenAgainstStore(store,
         pushdownCap = 2)(b)
       val rows = overCap.collect()
       val scan = overCap.queryExecution.executedPlan.collect {

@@ -18,7 +18,7 @@ import graft.sources.Tables
   * builds exactly the relation a bare `spark.read.parquet` builds. */
 class TablesSpec extends SparkSpec {
 
-  private def tempDir(): NioPath = Files.createTempDirectory("graft-tables-")
+  private def tempDir(): NioPath = graft.store.PartitionedStore.tempRoot("graft-tables-")
 
   /** Copies `sf`'s `table` into a fresh directory, so its schema is not
     * memoized yet. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,7 +15,7 @@ class TiersSpec extends SparkSpec {
   private val facts = Seq("orders", "lineitem", "events", "documents", "embeddings")
 
   private def tier(zipf: Boolean): String = {
-    val out = Files.createTempDirectory(s"graft-tier-${if (zipf) "zipf" else "uniform"}-")
+    val out = graft.store.PartitionedStore.tempRoot(s"graft-tier-${if (zipf) "zipf" else "uniform"}-")
       .resolve("x3").toString
     Tiers.generate(spark, sf, Mult, zipf, out)
     out
@@ -37,7 +35,7 @@ class TiersSpec extends SparkSpec {
   }
 
   test("the main rejects a missing base dir, a multiple below 1 and an unknown shape") {
-    val missing = Files.createTempDirectory("graft-tier-args-").resolve("absent").toString
+    val missing = graft.store.PartitionedStore.tempRoot("graft-tier-args-").resolve("absent").toString
     for (args <- Seq(Array(missing, "3"), Array(sf, "0"), Array(sf, "x"),
         Array(sf, "3", "skewed"), Array(sf)))
       intercept[IllegalArgumentException](Tiers.main(args))
@@ -107,7 +105,7 @@ class TiersSpec extends SparkSpec {
     // vocabulary concentrates SimHash: 2 chunks pass BucketCap (66 and 71
     // docs) once copy 2 is added, and copies 3 and 4 add none. The cap
     // binds inside one copy, so further copies must add no oversized bucket.
-    val five = Files.createTempDirectory("graft-tier-uniform-").resolve("x5").toString
+    val five = graft.store.PartitionedStore.tempRoot("graft-tier-uniform-").resolve("x5").toString
     Tiers.generate(spark, sf, 5, zipf = false, five)
     assert(ext.Pipeline.oversizedBuckets(spark, sf).count() === 0)
     assert(ext.Pipeline.oversizedBuckets(spark, uniform).count() ===

@@ -60,8 +60,7 @@ for TIER in sf0.01 sf0.1; do
     "$WORK/out_$TIER" --json "$WORK/oracle_$TIER.json"
 done
 step census env SPARK_GRAFT_SF_DIR="$DATA/sf0.01" \
-  SPARK_GRAFT_CENSUS_BASELINE=PLAN_CENSUS_BASELINE.json \
-  tools/run_main.sh graft.PlanCensus
+  tools/run_main.sh graft.PlanCensus PLAN_CENSUS_BASELINE.json
 
 python3 - "$WORK" "$OUT" "$COMMIT" "$SRC_TREE" "$DATA" <<'EOF'
 import hashlib, json, os, re, sys, datetime

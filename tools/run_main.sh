@@ -15,7 +15,7 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS \
+exec java $ADD_OPENS -XX:+ExitOnOutOfMemoryError \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
