@@ -34,41 +34,43 @@ object Tables {
       size > 256
   }
 
-  /** A file version: the qualified path, and for a file its (length,
-    * modification time), for a directory those of every leaf file under
-    * it; plus the session's parquet read confs, which shape the inferred
-    * types (`nanosAsLong` turns a TIMESTAMP(NANOS) column into a long). */
+  /** A file version ([[fileVersion]]) plus the session's parquet read
+    * confs, which shape the inferred types (`nanosAsLong` turns a
+    * TIMESTAMP(NANOS) column into a long). */
   private case class SchemaKey(files: Seq[(String, Long, Long)], conf: Seq[(String, String)])
 
   /** The schema `spark.read.parquet(path)` infers, inferred once per file
-    * version. One `getFileStatus` (a directory: one recursive listing)
-    * per call keys it, so a rewritten table is re-inferred, never served
-    * stale; an entry is kept only when the version read before the
-    * inference still holds after it. */
+    * version. The version read on each call keys it, so a rewritten
+    * table is re-inferred, never served stale; an entry is kept only when
+    * the version read before the inference still holds after it. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
-    def version(): SchemaKey = {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      val leaves =
-        if (!st.isDirectory) Seq(st)
-        else {
-          val it = fs.listFiles(st.getPath, true)
-          val b = Seq.newBuilder[FileStatus]
-          while (it.hasNext) b += it.next()
-          b.result()
-        }
-      SchemaKey(leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted,
-        spark.conf.getAll.toSeq.filter { case (k, _) =>
-          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-        }.sorted)
-    }
+    def version(): SchemaKey =
+      SchemaKey(fileVersion(spark, path), spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted)
     val key = version()
     schemas.synchronized(Option(schemas.get(key))).getOrElse {
       val schema = spark.read.parquet(path).schema
       if (version() == key) schemas.synchronized(schemas.put(key, schema))
       schema
     }
+  }
+
+  /** The version of `path`: (qualified path, length, modification time)
+    * of the file, or of every leaf file under the directory. */
+  def fileVersion(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val leaves =
+      if (!st.isDirectory) Seq(st)
+      else {
+        val it = fs.listFiles(st.getPath, true)
+        val b = Seq.newBuilder[FileStatus]
+        while (it.hasNext) b += it.next()
+        b.result()
+      }
+    leaves.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
@@ -91,8 +93,9 @@ object Tables {
 
   /** Coerce the `ts` column to TimestampType (micros) from whichever
     * physical form the driver generated (nanos-as-long or TIMESTAMP_NTZ).
-    * Applied after both batch and streaming reads of the events table. */
-  def normalizeEvents(df: DataFrame): DataFrame =
+    * Every read of the events table goes through [[events]]; the streaming
+    * replay slices its output. */
+  private def normalizeEvents(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>

@@ -44,8 +44,8 @@ object HeavyHitters {
   final case class SketchEntry(shard: Int, key: Long, est: Long, err: Long)
 
   /** SpaceSaving per shard. Batch rows are processed in sorted key order so
-    * a single-batch bounded replay is bit-deterministic; the correctness
-    * properties above hold under ANY order. */
+    * a bounded replay with fixed batch boundaries is bit-deterministic; the
+    * correctness properties above hold under ANY order. */
   private class SpaceSavingProcessor(m: Int)
       extends StatefulProcessor[Int, KeyEvent, SketchEntry] {
     // resolved driver-side: Encoders.product from executor-side init()

@@ -1,10 +1,14 @@
 package graft.streaming
 
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -12,12 +16,15 @@ import graft.Q
 import graft.sources.Tables
 
 /** Structured Streaming operators, run to completion over bounded input so
-  * the driver's batch oracle can check them: `readStream` on the same
-  * parquet → transform → memory sink → `processAllAvailable()` → final
-  * table. This validates the *streaming* execution path (IncrementalExecution,
-  * state store, update/complete modes) against the batch oracle — the
-  * streaming/batch consistency invariant the reference never tested
-  * (SURVEY.md §5).
+  * the driver's batch oracle can check them: the table replays as
+  * [[ReplayBatches]] key-ordered micro-batches ([[replayTable]]) →
+  * transform → memory sink → `processAllAvailable()` → final table. This
+  * validates the *streaming* execution path (IncrementalExecution, state
+  * store carried across micro-batches, update/complete modes) against the
+  * batch oracle — the streaming/batch consistency invariant the reference
+  * never tested (SURVEY.md §5). Both run paths ([[toMemorySink]],
+  * [[drainForeachBatch]]) require at least 2 data-carrying micro-batches,
+  * so no gate's cross-batch contract holds vacuously.
   *
   * Unbounded-production notes (W3/W8): `withWatermark` bounds state; the
   * reference's Spark path runs update mode with NO watermark
@@ -29,31 +36,60 @@ object StreamingQueries {
 
   private val counter = new AtomicInteger(0)
 
-  /** Streaming source for `$dir/$table.parquet` under BOTH layouts: the
-    * driver's testdata keeps one parquet FILE per table (the file stream
-    * source needs a directory, so stream the sf dir glob-filtered to that
-    * file), while Spark-written corpora (soak tiers) are DIRECTORIES of
-    * part files, streamed directly. The schema is the batch read's
-    * ([[Tables.schemaOf]]), under the session's current parquet confs. */
-  private[graft] def streamTable(spark: SparkSession, dir: String,
-      table: String): DataFrame = {
-    val path = s"$dir/$table.parquet"
-    val schema = Tables.schemaOf(spark, path)
-    if (new java.io.File(path).isDirectory)
-      spark.readStream.schema(schema).parquet(path)
-    else
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  /** The micro-batches every bounded table replay is cut into. */
+  private[graft] val ReplayBatches = 4
+
+  /** The key each streamed table replays in order of: event time for
+    * events, the id for documents and lineitem. Embeddings replay
+    * round-robin by id: every embeddings gate streams only the query
+    * vectors vec_id < 10, which one even-width vec_id range would put all
+    * in batch 0, leaving the other batches nothing to read. */
+  private def replayKey(table: String): Column = table match {
+    case "events" => unix_micros(col("ts"))
+    case "documents" => col("doc_id")
+    case "lineitem" => col("l_orderkey")
+    case "embeddings" => pmod(col("vec_id"), lit(ReplayBatches))
+    case _ => throw new IllegalArgumentException(s"no replay key for table $table")
   }
 
-  /** Stream `table` from sfDir through `transform`, collect the final result
-    * in a memory sink, return it as a batch DataFrame. */
-  def runBounded(spark: SparkSession, dir: String, table: String,
-      mode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    val raw = streamTable(spark, dir, table)
-    val src = if (table == "events") Tables.normalizeEvents(raw) else raw
-    toMemorySink(transform(src), table, mode)()
+  /** Slice directories already written, by (table, file version). */
+  private val replays = mutable.Map.empty[(String, Seq[(String, Long, Long)]), String]
+
+  /** `$dir/$table.parquet` (a file or a directory of part files) as
+    * [[ReplayBatches]] micro-batches: even-WIDTH ranges of the table's
+    * [[replayKey]] ([[writeSlices]]), batch i = range i, in key order. The
+    * split is on the key VALUE, so equal-key rows never straddle a batch
+    * boundary, and no event is late against any watermark (each is later
+    * than every event before its batch), so each gate's oracle stays the
+    * batch oracle; skew across batches changes nothing a contract cares
+    * about. Events are normalized ([[Tables.events]]) first. The slices are
+    * written once per process per (table, file version) and shared by
+    * every gate that streams the table. */
+  private[graft] def replayTable(spark: SparkSession, dir: String,
+      table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val k = replayKey(table).cast("long")
+    val streamDir = replays.synchronized {
+      replays.getOrElseUpdate((table, Tables.fileVersion(spark, path)), {
+        val src = if (table == "events") Tables.events(spark, dir)
+          else Tables.load(spark, dir, table)
+        val bounds = src.agg(min(k), max(k)).collect()(0) // 2 scalars
+        require(!bounds.isNullAt(0), s"cannot replay empty table $path")
+        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+        // pure Long arithmetic: (k-lo) ≤ range ≪ Long.Max/ReplayBatches, so
+        // no overflow; equal k → identical slice; monotone in k; max = n-1
+        val slice = ((k - lit(lo)) * ReplayBatches / lit(hi - lo + 1)).cast("int")
+        writeSlices(src, slice, ReplayBatches)._1
+      })
+    }
+    sliceStream(spark, streamDir)
   }
+
+  /** Replay `table` through `transform` into a memory sink and return the
+    * final result as a batch DataFrame. */
+  def runBounded(spark: SparkSession, dir: String, table: String,
+      mode: String)(transform: DataFrame => DataFrame): DataFrame =
+    toMemorySink(transform(replayTable(spark, dir, table)), table, mode)()
 
   /** Runs `out` into a fresh memory sink named `graft_<tag>_<n>` (with
     * its checkpoint at `checkpoint` if given), waits with `await` — by
@@ -61,33 +97,63 @@ object StreamingQueries {
     * rows as a batch frame. Whether or not `await` throws, the query is
     * stopped and the sink's temp view dropped: the returned frame holds
     * the rows, so nothing of the run stays live in the session or pins
-    * the sink on the driver heap after the frame is gone. */
+    * the sink on the driver heap after the frame is gone. Requires ≥2
+    * data-carrying micro-batches ([[runReplayed]]). */
   private[graft] def toMemorySink[T](out: Dataset[T], tag: String, mode: String,
       checkpoint: Option[String] = None)(
       await: StreamingQuery => Unit = _.processAllAvailable()): DataFrame = {
     val name = s"graft_${tag}_${counter.incrementAndGet()}"
     val writer = out.writeStream.outputMode(mode).format("memory").queryName(name)
-    val q = checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
-    try { await(q); out.sparkSession.table(name) }
-    finally {
-      q.stop()
-      out.sparkSession.catalog.dropTempView(name): Unit
-    }
+    try {
+      runReplayed(out.sparkSession,
+        checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start())(await)
+      out.sparkSession.table(name)
+    } finally out.sparkSession.catalog.dropTempView(name): Unit
   }
 
   /** Runs `body` on every micro-batch of `out` (checkpointed under a fresh
-    * temp root tagged `tag`) until the bounded input is drained, and
-    * returns how many micro-batches carried rows. As in [[toMemorySink]],
-    * the query is stopped whether or not a batch throws. */
+    * temp root tagged `tag`) until the bounded input is drained. As in
+    * [[toMemorySink]], the query is stopped whether or not a batch throws,
+    * and ≥2 data-carrying micro-batches are required. */
   private[graft] def drainForeachBatch(out: DataFrame, tag: String)(
-      body: (DataFrame, Long) => Unit): Int = {
+      body: (DataFrame, Long) => Unit): Unit = {
     val ckpt = graft.store.PartitionedStore.tempRoot(s"graft-$tag-ckpt-")
-    val q = out.writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch(body).start()
+    runReplayed(out.sparkSession, out.writeStream
+      .option("checkpointLocation", ckpt.toString).foreachBatch(body).start())(
+      _.processAllAvailable())
+  }
+
+  /** Starts the query, waits with `await` and stops it whether or not
+    * `await` throws; then requires ≥2 micro-batches that read input rows,
+    * so the state a gate carries from one batch to the next is exercised,
+    * not vacuous. The count is taken from every progress event of the run,
+    * never from `recentProgress`: that keeps only the last 100, and qst19's
+    * processing-time TTL schedules no-data batches for as long as the
+    * query runs. A listener is handed a session's streaming events in
+    * order, so once it has the run's terminated event it has them all. */
+  private def runReplayed(spark: SparkSession, start: => StreamingQuery)(
+      await: StreamingQuery => Unit): Unit = {
+    val dataBatches = new ConcurrentHashMap[UUID, Integer]()
+    val ended = ConcurrentHashMap.newKeySet[UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0)
+          dataBatches.merge(e.progress.runId, 1, (a: Integer, b: Integer) => a + b): Unit
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.runId): Unit
+    }
+    spark.streams.addListener(listener)
     try {
-      q.processAllAvailable()
-      q.recentProgress.count(_.numInputRows > 0)
-    } finally q.stop()
+      val q = start
+      try await(q) finally q.stop()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!ended.contains(q.runId) && System.nanoTime() < deadline) Thread.sleep(10)
+      require(ended.contains(q.runId), s"stream run ${q.runId} not terminated within 60 s")
+      val n = dataBatches.getOrDefault(q.runId, 0)
+      require(n >= 2, s"replay ran $n data-carrying micro-batches; need ≥2 " +
+        "for the cross-batch state-carry contract to be non-vacuous")
+    } finally spark.streams.removeListener(listener)
   }
 
   /** Runs `body` with the session's state store set to RocksDB, restoring
@@ -103,16 +169,13 @@ object StreamingQueries {
     }
   }
 
-  /** Replays `df` as one micro-batch per value of `slice` (an int in
-    * 0 until `n`): one distributed pass writes exactly one parquet file
-    * per non-empty slice (partitionBy keeps a slice in one task, so one
-    * file), places slice i's file in a fresh directory with strictly
-    * increasing modification times, and returns a file stream over it at
-    * `maxFilesPerTrigger=1` — slice i IS micro-batch i — with the number
-    * of files placed. Test-data replay only; a production ingest replaces
-    * it with real arrival. */
-  private def replaySlices(spark: SparkSession, df: DataFrame, slice: Column,
-      n: Int): (DataFrame, Int) = {
+  /** Writes `df` as one parquet file per non-empty value of `slice` (an
+    * int in 0 until `n`): one distributed pass (partitionBy keeps a slice
+    * in one task, so one file), then slice i's file is placed in a fresh
+    * directory with strictly increasing modification times. Returns the
+    * directory and the number of files placed. Test-data replay only; a
+    * production ingest replaces it with real arrival. */
+  private def writeSlices(df: DataFrame, slice: Column, n: Int): (String, Int) = {
     import java.nio.file.{Files, Paths}
     val root = graft.store.PartitionedStore.tempRoot("graft-slices-")
     val staging = s"$root/staging"
@@ -122,58 +185,25 @@ object StreamingQueries {
     val streamDir = s"$root/stream"
     Files.createDirectories(Paths.get(streamDir))
     val placed = (0 until n).flatMap { i =>
-      Option(new java.io.File(s"$staging/__slice=$i").listFiles()).toSeq
+      val parts = Option(new java.io.File(s"$staging/__slice=$i").listFiles()).toSeq
         .flatMap(_.filter(_.getName.endsWith(".parquet")).toSeq)
-        .map { f =>
-          val dst = new java.io.File(streamDir, f"slice_$i%05d.parquet")
-          require(f.renameTo(dst), s"move failed: $f")
-          require(dst.setLastModified((i + 1) * 60000L)) // replay order
-          dst
-        }
+      require(parts.size <= 1, s"slice $i was written as ${parts.size} files")
+      parts.map { f =>
+        val dst = new java.io.File(streamDir, f"slice_$i%05d.parquet")
+        require(f.renameTo(dst), s"move failed: $f")
+        require(dst.setLastModified((i + 1) * 60000L)) // replay order
+        dst
+      }
     }
     require(placed.nonEmpty, s"slicing produced no files under $staging")
-    val schema = Tables.schemaOf(spark, placed.head.getPath)
-    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    (stream, placed.size)
+    (streamDir, placed.size)
   }
 
-  /** Stream `table` through `transform` in `numBatches` EVENT-TIME-ORDERED
-    * micro-batches (VERDICT r14 #2: a single-batch replay makes a
-    * cross-batch state-carry contract hold vacuously — this states it in
-    * the gate). The corpus is sliced into even-WIDTH `ts` ranges — the
-    * split predicate is on the ts VALUE, so equal-ts rows can never
-    * straddle a batch boundary, which is exactly the StreamPit delivery
-    * contract (equal-ts feature/observation pairs in the same
-    * micro-batch) holding by construction — and replayed by
-    * [[replaySlices]], so batches arrive in event-time order.
-    * Requires ≥2 data-carrying micro-batches, so the state-carry path is
-    * provably exercised. The even-width (not even-count) split is fine
-    * for a gate — skew across batches changes nothing the contract cares
-    * about. */
-  private[graft] def runBoundedTsBatches(spark: SparkSession, dir: String,
-      table: String, mode: String, numBatches: Int)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    val raw = Tables.load(spark, dir, table)
-    val src = if (table == "events") Tables.normalizeEvents(raw) else raw
-    val bounds = src.agg(min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi")).collect()(0) // 2 scalars
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    // pure Long arithmetic: (ts-lo) ≤ range ≪ Long.Max/numBatches, so no
-    // overflow; equal ts → identical slice; monotone in ts; max = n-1
-    val slice = ((unix_micros(col("ts")) - lit(lo)) * numBatches
-      / lit(hi - lo + 1)).cast("int")
-    val (stream, files) = replaySlices(spark, src, slice, numBatches)
-    require(files >= 2 && files <= numBatches,
-      s"ts-split produced $files slices (need 2..$numBatches, one file each)")
-    toMemorySink(transform(stream), table, mode) { q =>
-      q.processAllAvailable()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 2,
-        s"replay ran $dataBatches data-carrying micro-batches; need ≥2 " +
-          "for the cross-batch state-carry contract to be non-vacuous")
-    }
-  }
+  /** A file stream over a [[writeSlices]] directory at
+    * `maxFilesPerTrigger=1`: file i IS micro-batch i. */
+  private def sliceStream(spark: SparkSession, streamDir: String): DataFrame =
+    spark.readStream.schema(Tables.schemaOf(spark, streamDir))
+      .option("maxFilesPerTrigger", "1").parquet(streamDir)
 
   // ---------------------------------------------------------------------
   // qst01: streaming tumbling-window aggregation (complete mode) — the W1/A1
@@ -216,10 +246,11 @@ object StreamingQueries {
 
   // ---------------------------------------------------------------------
   // qst04: watermarked append-mode windowed agg — only windows the final
-  // watermark (max event time − 1 h) has closed are emitted. The bounded
-  // file arrives as ONE batch, so the final watermark — and therefore the
-  // emitted window set — is deterministic, and the oracle reproduces the
-  // close condition with the same ms arithmetic.
+  // watermark (max event time − 1 h) has closed are emitted. The replay
+  // is event-time ordered, so no row is ever late and a window a batch's
+  // watermark closes gets no later rows: the emitted window set is the
+  // one the final watermark closes, whatever the split, and the oracle
+  // reproduces that close condition with the same ms arithmetic.
   // ---------------------------------------------------------------------
   private def qst04(s: SparkSession, d: String): DataFrame =
     runBounded(s, d, "events", "append") { ev =>
@@ -295,19 +326,17 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   // qst07: stream-stream interval join — clicks joined to the same user's
   // purchases within [click, click + 1 day]. Two independent streaming
-  // readers over the same bounded file; inner join emits matches as they
+  // readers over the same replay; inner join emits matches as they
   // arrive (the watermark only bounds state eviction), so append-mode
   // memory sink holds every pair at end of stream. Oracle: the equivalent
   // batch self-join. At scale the 1-day bound caps per-key state; the join
   // shuffles both sides on user_id.
   // ---------------------------------------------------------------------
   private def qst07(s: SparkSession, d: String): DataFrame = {
-    def stream(): DataFrame = Tables.normalizeEvents(
-      streamTable(s, d, "events"))
-    val clicks = stream().filter(col("event_type") === "click")
+    val clicks = replayTable(s, d, "events").filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("l_user"),
         col("ts").as("l_ts"))
-    val purchases = stream().filter(col("event_type") === "purchase")
+    val purchases = replayTable(s, d, "events").filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("r_user"),
         col("ts").as("r_ts"))
     toMemorySink(StreamJoin.intervalJoin(clicks, purchases,
@@ -336,12 +365,10 @@ object StreamingQueries {
   // ms-truncated) to have expired their match window.
   // ---------------------------------------------------------------------
   private def qst09(s: SparkSession, d: String): DataFrame = {
-    def stream(): DataFrame = Tables.normalizeEvents(
-      streamTable(s, d, "events"))
-    val clicks = stream().filter(col("event_type") === "click")
+    val clicks = replayTable(s, d, "events").filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("l_user"),
         col("ts").as("l_ts"))
-    val purchases = stream().filter(col("event_type") === "purchase")
+    val purchases = replayTable(s, d, "events").filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("r_user"),
         col("ts").as("r_ts"))
     val joined = clicks.withWatermark("l_ts", "1 day")
@@ -390,7 +417,7 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   private def qst08(s: SparkSession, d: String): DataFrame = {
     withRocksDb(s) {
-      val keys = streamTable(s, d, "events")
+      val keys = replayTable(s, d, "events")
         .select(col("user_id")).as(org.apache.spark.sql.Encoders.scalaLong)
       toMemorySink(RunningCounters.countByKey(keys).toDF(), "counters", "update")()
         .groupBy(col("key")).agg(max(col("total")).as("n"))
@@ -422,7 +449,7 @@ object StreamingQueries {
 
   private def qst10(s: SparkSession, d: String): DataFrame = {
     withRocksDb(s) {
-      val docs = streamTable(s, d, "documents")
+      val docs = replayTable(s, d, "documents")
       val sim = graft.ext.Dedup.withSimhash(docs)
       val t = toMemorySink(NearDupDedup.flagNearDuplicates(sim,
         bucketCap = graft.ext.Dedup.BucketCap), "neardup", "update")()
@@ -484,7 +511,7 @@ object StreamingQueries {
     val evalGrams = TextAnalysis.evalGramSet(
         Tables.documents(s, d).filter(col("doc_id") < evalN))
       .localCheckpoint(true)
-    val stream = streamTable(s, d, "documents")
+    val stream = replayTable(s, d, "documents")
       .filter(col("doc_id") >= evalN)
     TextAnalysis.contaminationFlags(
       toMemorySink(TextAnalysis.contaminationCounts(stream, evalGrams),
@@ -494,37 +521,28 @@ object StreamingQueries {
           max(col("n_contaminated")).as("n_contaminated")))
   }
 
-  /** Documents as a bounded file stream (schema from the batch read). */
-  private def docStream(s: SparkSession, d: String): DataFrame =
-    streamTable(s, d, "documents")
-
-  /** Run a STATELESS per-row transform of the document stream to a memory
-    * sink (append mode — no state, no watermark) and return the sink table:
-    * the ingest-time face of a batch projection, sharing its oracle
-    * verbatim. Stateless streams are the trivially-scalable case (map-only
-    * over arriving files, no state store), which is exactly why the
-    * batch/stream consistency is worth pinning with the same hash gate. */
-  private def statelessStreamed(s: SparkSession, d: String, tag: String)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    toMemorySink(transform(docStream(s, d)), tag, "append")()
-  }
-
+  // qst12/qst13/qst14: STATELESS per-row transforms of the document
+  // stream (append mode — no state, no watermark), the ingest-time faces
+  // of batch projections sharing their oracles verbatim. Stateless streams
+  // are the trivially-scalable case (map-only over arriving files, no
+  // state store), which is exactly why the batch/stream consistency is
+  // worth pinning with the same hash gate.
   // qst12: streaming PII redaction — qt11's projection applied at ingest
-  // time (batch oracle reused verbatim). qst13: streaming stratified
-  // sampling — qx03's deterministic md5-bucket predicate at ingest time
-  // (the reproducibility property is what makes the sample IDENTICAL
-  // whether it runs over the stream or the batch — gate-checked here).
+  // time. qst13: streaming stratified sampling — qx03's deterministic
+  // md5-bucket predicate at ingest time (the reproducibility property is
+  // what makes the sample IDENTICAL whether it runs over the stream or the
+  // batch — gate-checked here).
   private def qst12(s: SparkSession, d: String): DataFrame =
-    statelessStreamed(s, d, "pii")(graft.ext.TextAnalysis.piiRedact)
+    runBounded(s, d, "documents", "append")(graft.ext.TextAnalysis.piiRedact)
 
   private def qst13(s: SparkSession, d: String): DataFrame =
-    statelessStreamed(s, d, "sample")(graft.operators.Scale.stratifiedSample)
+    runBounded(s, d, "documents", "append")(graft.operators.Scale.stratifiedSample)
 
   // qst14: streaming quality filter — qt12's hashed-linear classifier
   // scored at ingest time (the shape real pipelines gate incoming docs
   // with); a pure projection, so the stream face IS the batch face.
   private def qst14(s: SparkSession, d: String): DataFrame =
-    statelessStreamed(s, d, "quality")(graft.ext.TextAnalysis.classifierScore)
+    runBounded(s, d, "documents", "append")(graft.ext.TextAnalysis.classifierScore)
 
   // ---------------------------------------------------------------------
   // qst15: streaming session SEQUENCES — qw07's behavioral-example
@@ -588,9 +606,9 @@ object StreamingQueries {
     // query keeps scheduling no-data ticks (they drive TTL expiry), so
     // processAllAvailable — and even Trigger.AvailableNow — never see
     // a "drained" stream (verified empirically: both wedge). Bounded
-    // completion instead: the file source puts the whole bounded
-    // corpus in batch 0, so once the sink holds a flag for every
-    // document the data is fully absorbed and we stop the query.
+    // completion instead: the replay is doc_id ordered and the memory
+    // sink adds each batch's rows at once, so once the sink holds a flag
+    // for every document the last batch is in and we stop the query.
     def absorbAll(q: StreamingQuery): Unit = {
       val expectDocs = Tables.documents(s, d).count()
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
@@ -600,7 +618,7 @@ object StreamingQueries {
         s"qst19: sink did not absorb all $expectDocs docs within 180s")
     }
     withRocksDb(s) {
-      val docs = streamTable(s, d, "documents")
+      val docs = replayTable(s, d, "documents")
       val await: StreamingQuery => Unit =
         if (ttl == org.apache.spark.sql.streaming.TTLConfig.NONE) _.processAllAvailable()
         else absorbAll
@@ -661,7 +679,7 @@ object StreamingQueries {
     withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst23-ckpt-")
       val ckpt = ckptPath.toString
-      val docs = streamTable(s, d, "documents")
+      val docs = replayTable(s, d, "documents")
       toMemorySink(BlockDedup.flagBlocks(docs), "statereader", "update",
         Some(ckpt))(): Unit
       // per-doc keeper counts from the CHECKPOINT, not the sink.
@@ -712,11 +730,12 @@ object StreamingQueries {
   // 100 TB ingest); WithinWatermark expires a key's state once the
   // watermark passes its event time + delay, so state is bounded by the
   // key arrival rate × the horizon. The trade is re-emission: a duplicate
-  // arriving after its key's state expired is emitted again. The gated
-  // bounded file arrives as ONE batch (no intra-batch expiry), so the
-  // output here is exactly the distinct key set and the oracle is qst03's
-  // batch DISTINCT; the expiry/re-emission semantics are pinned by a
-  // dedicated two-batch MemoryStream test in StreamingSpec. Keys only in the output
+  // arriving after its key's state expired is emitted again, so WHICH
+  // rows the sink holds depends on where the batch boundaries fall. The
+  // gated contract is what does not: the sink's distinct key set, taken
+  // batch-side, is the batch DISTINCT (qst03's oracle) — every key's first
+  // arrival is emitted. The expiry/re-emission semantics are pinned by
+  // dedicated MemoryStream tests in StreamingSpec. Keys only in the output
   // (the first-arrival row's other columns are arrival-order dependent).
   // ---------------------------------------------------------------------
   private def qst18(s: SparkSession, d: String): DataFrame =
@@ -725,7 +744,7 @@ object StreamingQueries {
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-    }
+    }.distinct()
 
   // ---------------------------------------------------------------------
   // qst20: state store reader — a checkpointed streaming aggregation's
@@ -743,15 +762,10 @@ object StreamingQueries {
   // which is exactly what "the checkpoint holds the state you think it
   // holds" means.
   // ---------------------------------------------------------------------
-  /** Recursive delete at JVM exit: the statestore DataFrame reads the
-    * checkpoint LAZILY, so the dir must outlive the query's
-    * materialization — but repeated gate runs must not accumulate
-    * state-store files under /tmp. */
   private def qst20(s: SparkSession, d: String): DataFrame = {
-    val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst20-ckpt-")
-    val ckpt = ckptPath.toString
-    val ev = Tables.normalizeEvents(streamTable(s, d, "events"))
-    toMemorySink(ev.groupBy(col("event_type"))
+    // deleted at JVM exit, not here: the statestore frame reads it LAZILY
+    val ckpt = graft.store.PartitionedStore.tempRoot("graft-qst20-ckpt-").toString
+    toMemorySink(replayTable(s, d, "events").groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("uid_sum")),
       "events", "complete", Some(ckpt))(): Unit
     // the result comes from the CHECKPOINT, not the sink: streaming-agg
@@ -797,19 +811,22 @@ object StreamingQueries {
   // or a downstream batch stage). Oracle: qs02's verbatim — the streamed
   // path must reproduce the batch LSH answer exactly.
   // ---------------------------------------------------------------------
-  private def qst22(s: SparkSession, d: String): DataFrame = {
+  private def qst22(s: SparkSession, d: String): DataFrame =
+    streamedAnn(s, d, Seq("bucket"))
+
+  /** qst22/qst40's probe: the query vectors (vec_id < 10) stream in, join
+    * the static bucketed corpus (vec_id ≥ 10) on `keys`, are scored in
+    * append mode and ranked on read; the output keeps `keys.head`. */
+  private def streamedAnn(s: SparkSession, d: String, keys: Seq[String]): DataFrame = {
     import graft.ext.Similarity
-    val corpus = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-      .withColumn("bucket", Similarity.bucketExpr(Similarity.NumPlanes))
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("bucket"))
+    def side(df: DataFrame, id: String, emb: String): DataFrame =
+      df.withColumn("bucket", Similarity.bucketExpr(Similarity.NumPlanes))
+        .select(Seq(col("vec_id").as(id), col("embedding").as(emb)) ++ keys.map(col): _*)
+    val corpus = side(Tables.embeddings(s, d).filter(col("vec_id") >= 10), "n_id", "n_emb")
     val scored = runBounded(s, d, "embeddings", "append") { emb =>
-      emb.filter(col("vec_id") < 10)
-        .withColumn("bucket", Similarity.bucketExpr(Similarity.NumPlanes))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("bucket"))
-        .join(corpus, Seq("bucket"))
-        .select(col("q_id"), col("bucket"), col("n_id"),
+      side(emb.filter(col("vec_id") < 10), "q_id", "q_emb")
+        .join(corpus, keys)
+        .select(col("q_id"), col(keys.head), col("n_id"),
           graft.functions.Vectors.fastCosine(col("q_emb"), col("n_emb"))
             .as("cos_sim"))
     }
@@ -828,27 +845,8 @@ object StreamingQueries {
   // rank-on-read (qst22's pattern plus the metadata key). Oracle: qs11's
   // SQL verbatim — streaming/batch consistency by construction.
   // ---------------------------------------------------------------------
-  private def qst40(s: SparkSession, d: String): DataFrame = {
-    import graft.ext.Similarity
-    val corpus = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-      .withColumn("bucket", Similarity.bucketExpr(Similarity.NumPlanes))
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("label"), col("bucket"))
-    val scored = runBounded(s, d, "embeddings", "append") { emb =>
-      emb.filter(col("vec_id") < 10)
-        .withColumn("bucket", Similarity.bucketExpr(Similarity.NumPlanes))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("label"), col("bucket"))
-        .join(corpus, Seq("label", "bucket"))
-        .select(col("q_id"), col("label"), col("n_id"),
-          graft.functions.Vectors.fastCosine(col("q_emb"), col("n_emb"))
-            .as("cos_sim"))
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-  }
+  private def qst40(s: SparkSession, d: String): DataFrame =
+    streamedAnn(s, d, Seq("label", "bucket"))
 
   // ---------------------------------------------------------------------
   // qst24: streaming top-k — sort+limit over a streaming aggregation
@@ -897,17 +895,17 @@ object StreamingQueries {
   // streaming face (see [[StreamPit]] for semantics, delivery contract,
   // and the TTL note). One stateful operator carries the latest
   // (click, purchase) per user; each arriving view emits its enriched
-  // row once. The corpus replays through ≥3 event-time-ordered
-  // micro-batches ([[runBoundedTsBatches]]), so the CROSS-BATCH state
-  // carry — the thing that makes this streaming — is what the gate
-  // exercises (VERDICT r14 #2; previously single-batch, where the
-  // delivery contract held vacuously). Oracle: qa04's DuckDB double-ASOF
+  // row once. The corpus replays in event-time order ([[replayTable]]),
+  // so the CROSS-BATCH state carry — the thing that makes this streaming
+  // — is what the gate exercises (VERDICT r14 #2), and equal-ts
+  // feature/observation pairs share a micro-batch, the StreamPit delivery
+  // contract, by construction. Oracle: qa04's DuckDB double-ASOF
   // verbatim — the streaming/batch consistency contract for the feature
   // store's ingest path, the same pairing qst25 gives the SCD2 lookup.
   // ---------------------------------------------------------------------
   private def qst41(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    runBoundedTsBatches(s, d, "events", "update", numBatches = 4) { ev =>
+    runBounded(s, d, "events", "update") { ev =>
       StreamPit.enriched(
         ev.filter(col("event_type").isin("view", "click", "purchase"))
           .select(col("user_id"), col("ts"), col("event_type"),
@@ -930,13 +928,13 @@ object StreamingQueries {
   // the exact age of a STALE match is the one number a TTL'd system has
   // deliberately forgotten (that state is what the TTL drops); the
   // model-visible surface (freshness flag, freshness-gated value) is
-  // hash-exact. Multi-batch ordered replay, same as qst41, so expiry
+  // hash-exact. Event-time-ordered replay, same as qst41, so expiry
   // genuinely fires across batch boundaries (2-day tolerance, ~30-day
-  // corpus, 4 slices ≈ 7.5 days each).
+  // corpus, 4 batches ≈ 7.5 days each).
   // ---------------------------------------------------------------------
   private def qst42(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    runBoundedTsBatches(s, d, "events", "update", numBatches = 4) { ev =>
+    runBounded(s, d, "events", "update") { ev =>
       StreamPit.enrichedTtl(
         ev.withWatermark("ts", "1 hour")
           .filter(col("event_type").isin("view", "click"))
@@ -1024,7 +1022,7 @@ object StreamingQueries {
     withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst26-ckpt-")
       val ckpt = ckptPath.toString
-      val ev = streamTable(s, d, "events")
+      val ev = replayTable(s, d, "events")
       toMemorySink(graft.streaming.HeavyHitters
         .sketch(ev.select(hhKey.as("key")), HhShards, HhCapacity),
         "hh", "update", Some(ckpt))(): Unit
@@ -1188,7 +1186,7 @@ object StreamingQueries {
     withRocksDb(s) {
       val ckptPath = graft.store.PartitionedStore.tempRoot("graft-qst28-ckpt-")
       val ckpt = ckptPath.toString
-      val ev = streamTable(s, d, "events")
+      val ev = replayTable(s, d, "events")
       toMemorySink(graft.streaming.BloomDedup
         .sketch(ev.select((col("event_id") % HhShards).cast("int").as("shard"),
           col("event_id").as("key"))),
@@ -1364,14 +1362,16 @@ object StreamingQueries {
   // state. Oracle: qw12's SQL VERBATIM — streaming/batch consistency by
   // construction (the qst11/qst17/qst29 contract).
   // ---------------------------------------------------------------------
-  private def qst31(s: SparkSession, d: String): DataFrame = {
-    val hourly = runBounded(s, d, "events", "complete") { ev =>
+  private def qst31(s: SparkSession, d: String): DataFrame =
+    graft.operators.Windows.ewmaOverHourly(streamedHourly(s, d))
+
+  /** The streamed per-(type, hour) counts qst31 and qst37 read. */
+  private def streamedHourly(s: SparkSession, d: String): DataFrame =
+    runBounded(s, d, "events", "complete") { ev =>
       ev.groupBy(col("event_type"),
           expr("unix_micros(ts) div 3600000000").as("eh"))
         .agg(count(lit(1)).as("n"))
     }
-    graft.operators.Windows.ewmaOverHourly(hourly)
-  }
 
   // ---------------------------------------------------------------------
   // qst37: streaming CUSUM drift monitor — qw13's closed form over the
@@ -1382,14 +1382,8 @@ object StreamingQueries {
   // runs). Oracle: qw13's SQL verbatim — streaming/batch consistency by
   // construction.
   // ---------------------------------------------------------------------
-  private def qst37(s: SparkSession, d: String): DataFrame = {
-    val hourly = runBounded(s, d, "events", "complete") { ev =>
-      ev.groupBy(col("event_type"),
-          expr("unix_micros(ts) div 3600000000").as("eh"))
-        .agg(count(lit(1)).as("n"))
-    }
-    graft.operators.Windows.cusumOverHourly(hourly)
-  }
+  private def qst37(s: SparkSession, d: String): DataFrame =
+    graft.operators.Windows.cusumOverHourly(streamedHourly(s, d))
 
   // ---------------------------------------------------------------------
   // qst38: streaming data-quality monitor — qp03's single-table
@@ -1608,7 +1602,7 @@ object StreamingQueries {
       store: FingerprintStore, censusKey: String): DataFrame = {
     val outs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     drainForeachBatch(
-        streamTable(s, d, "documents").filter(col("doc_id") % 5 === 0),
+        replayTable(s, d, "documents").filter(col("doc_id") % 5 === 0),
         censusKey) { (b, _) =>
       val res = screenAgainstStore(store)(b)
       // eager: pins this batch's bounded |docs-in-batch|-row result
@@ -1658,22 +1652,20 @@ object StreamingQueries {
     val idxDir = s"$root/fp"
     val store = FingerprintStore.create(s, idxDir)
     // Ingest phase: replay the SEEN corpus in IngestAppendBatches
-    // doc_id-sliced micro-batches ([[replaySlices]]; documents carry no
-    // event time, so the slice key is pmod(doc_id, N) — deterministic,
-    // every slice non-empty at any SF). Each trigger appends its batch's
-    // novel fingerprints.
+    // doc_id-sliced micro-batches ([[writeSlices]]; the slice key is
+    // pmod(doc_id, N), so every slice interleaves the whole id range and
+    // each append lands in a store already holding neighbours — every
+    // slice non-empty at any SF). Each trigger appends its batch's novel
+    // fingerprints.
     val seen = Tables.documents(s, d)
       .filter(col("doc_id") % 5 =!= 0)
-    val (ingest, files) = replaySlices(s, seen,
+    val (slices, files) = writeSlices(seen,
       pmod(col("doc_id"), lit(IngestAppendBatches)).cast("int"), IngestAppendBatches)
     require(files == IngestAppendBatches,
       s"ingest split produced $files/$IngestAppendBatches slices")
-    val dataBatches = drainForeachBatch(ingest, "qst44-ingest") { (b, _) =>
+    drainForeachBatch(sliceStream(s, slices), "qst44-ingest") { (b, _) =>
       store.append(graft.ext.TextAnalysis.winnowedFingerprints(b)): Unit
     }
-    require(dataBatches >= 2,
-      s"ingest ran $dataBatches data-carrying micro-batches; need ≥2 " +
-        "for the append path to be provably incremental")
     // close the ingest epoch: fold append files into one h-sorted file
     // per partition and re-derive fanout from the live row count (also
     // self-heals the meta row count)
@@ -1770,7 +1762,7 @@ object StreamingQueries {
     // fresh table per invocation: a previous run with MORE batches would
     // leave stale batch_id partitions that dynamic overwrite never touches
     val base = graft.store.PartitionedStore.tempRoot("graft-qst36-")
-    val src = Tables.normalizeEvents(streamTable(s, d, "events"))
+    val src = replayTable(s, d, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     drainForeachBatch(src, "qst36") { (b, id) =>
       graft.sinks.Layout.writeClusteredBatch(

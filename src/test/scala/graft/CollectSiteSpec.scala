@@ -45,8 +45,8 @@ class CollectSiteSpec extends SiteLint {
       (1, "per-shard sketch summaries: <= shards x capacity rows (SpaceSaving bound)"),
     ("streaming/StreamingQueries.scala", "qst27Values.put(d, b.collect()") ->
       (1, "per-event-type quantile rows: <= |event types| (enum-bounded)"),
-    ("streaming/StreamingQueries.scala", """max(unix_micros(col("ts"))).as("hi")).collect()(0) // 2 scalars""") ->
-      (1, "1-row global (min ts, max ts) bounds frame for the replay split"),
+    ("streaming/StreamingQueries.scala", """val bounds = src.agg(min(k), max(k)).collect()(0) // 2 scalars""") ->
+      (1, "1-row global (min key, max key) bounds frame for the replay split"),
     ("streaming/StreamingQueries.scala", """java.util.Arrays.asList(built.collect(): _*), built.schema)""") ->
       (1, "bm25 query-term index: one row per derived query (= 3) by construction"),
     ("streaming/FingerprintStore.scala", """.collect().map(_.getInt(0)).sorted.toSeq""") ->

@@ -8,7 +8,9 @@ import graft.streaming.StreamingQueries
   * and `StreamingQueries.drainForeachBatch`): the sink's temp view is
   * dropped once its rows are in the returned frame, and the query is
   * stopped even when waiting on it or a batch throws, so no gate leaves a
-  * live stream or a driver-heap sink behind for the next one. */
+  * live stream or a driver-heap sink behind for the next one. Both require
+  * at least 2 data-carrying micro-batches, so a replay that cannot split
+  * fails instead of passing a cross-batch contract vacuously. */
 class MemorySinkSpec extends SparkSpec {
 
   private def graftViews(): Set[String] =
@@ -31,7 +33,7 @@ class MemorySinkSpec extends SparkSpec {
   test("a stream whose wait throws is stopped and its view dropped") {
     val before = graftViews()
     val active = spark.streams.active.map(_.id).toSet
-    def docs() = StreamingQueries.streamTable(spark, sf, "documents")
+    def docs() = StreamingQueries.replayTable(spark, sf, "documents")
       .select(col("doc_id"))
     // the wait fails while the stream is still live
     val e = intercept[IllegalStateException](
@@ -49,7 +51,7 @@ class MemorySinkSpec extends SparkSpec {
 
   test("a foreachBatch drain whose batch body throws is stopped") {
     val active = spark.streams.active.map(_.id).toSet
-    val docs = StreamingQueries.streamTable(spark, sf, "documents")
+    val docs = StreamingQueries.replayTable(spark, sf, "documents")
       .select(col("doc_id"))
     val e = intercept[Exception](
       StreamingQueries.drainForeachBatch(docs, "throwing_batch") { (_, _) =>
@@ -57,6 +59,24 @@ class MemorySinkSpec extends SparkSpec {
       })
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage == "boom"))
+    assert(spark.streams.active.map(_.id).toSet === active)
+  }
+
+  test("a replay whose slice key holds one value fails both run paths with need ≥2") {
+    val tmp = graft.store.PartitionedStore.tempRoot("graft-onekey-").toString
+    graft.sources.Tables.documents(spark, sf).limit(50)
+      .withColumn("doc_id", lit(7L))
+      .write.parquet(s"$tmp/documents.parquet")
+    val active = spark.streams.active.map(_.id).toSet
+    val viaSink = intercept[IllegalArgumentException](
+      StreamingQueries.runBounded(spark, tmp, "documents", "append")(identity))
+    assert(viaSink.getMessage.contains("ran 1 data-carrying micro-batches; need ≥2"))
+    val viaDrain = intercept[IllegalArgumentException](
+      StreamingQueries.drainForeachBatch(
+        StreamingQueries.replayTable(spark, tmp, "documents"), "one_key") { (b, _) =>
+        b.count(): Unit // a foreachBatch batch counts its input rows once it is read
+      })
+    assert(viaDrain.getMessage.contains("ran 1 data-carrying micro-batches; need ≥2"))
     assert(spark.streams.active.map(_.id).toSet === active)
   }
 }

@@ -23,12 +23,9 @@ class ReadSiteSpec extends SiteLint {
       (1, "the fixture-table loader: reads with the memoized schema"),
     ("sources/Tables.scala", """val schema = spark.read.parquet(path).schema""") ->
       (1, "the schema memo's one inference, once per file version"),
-    ("streaming/StreamingQueries.scala", """spark.readStream.schema(schema).parquet(path)""") ->
-      (1, "stream source with explicit schema (from Tables.schemaOf)"),
-    ("streaming/StreamingQueries.scala", """spark.readStream.schema(schema)""") ->
-      (1, "stream source with explicit schema (from Tables.schemaOf)"),
-    ("streaming/StreamingQueries.scala", """val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")""") ->
-      (1, "test-data replay directory (replaySlices): stream source with explicit schema"),
+    ("streaming/StreamingQueries.scala", """spark.readStream.schema(Tables.schemaOf(spark, streamDir))""") ->
+      (1, "the one stream source: a replay's slice directory (sliceStream), " +
+        "written by this process, with its memoized schema"),
     ("streaming/StreamingQueries.scala", """s.read.parquet(base.toString).drop("batch_id")""") ->
       (1, "reads the clustered sink's own output, written by this gate"),
     ("streaming/FingerprintStore.scala", """s.read.schema(StructType(Seq(""") ->

@@ -31,9 +31,9 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exceptAll(streamed).count() === 0)
   }
 
-  test("streamTable handles directory-layout corpora (Spark-written tables)") {
+  test("replayTable handles directory-layout corpora (Spark-written tables)") {
     // testdata ships one parquet FILE per table; Spark-written corpora
-    // (soak tiers) are DIRECTORIES of part files. The same runBounded
+    // (grown tiers) are DIRECTORIES of part files. The same runBounded
     // query must produce the identical result over both layouts.
     val tmp = graft.store.PartitionedStore.tempRoot("graft-dirlayout-").toString
     try {
